@@ -1702,8 +1702,8 @@ def _reduce_stage(df: DataFrame, args: dict[str, str], pipe) -> DataFrame:
 
     Fallback: any non-associative field (products, string builds,
     order-dependent logic) sends the WHOLE fold to
-    ``operators.fold.pandas_fold`` — a literal per-group sequential
-    fold in one Arrow batch per group.
+    ``operators.fold.pandas_fold`` — a literal sequential fold of each
+    group in pipeline order.
     """
     from ..operators import fold as _fold
 
@@ -1751,7 +1751,7 @@ def _reduce_stage(df: DataFrame, args: dict[str, str], pipe) -> DataFrame:
     if terms is not None:
         return _fold.linear_fold(df, by, terms)
 
-    # general sequential fold (applyInPandas). r._value resolves to
+    # general sequential fold (pandas_fold). r._value resolves to
     # the frame's LIVE slot (r11: a string-building reduce over a
     # string series read f_float and crashed the Python fold with
     # str+float); float-only frames keep the plan-time binding.
@@ -1780,9 +1780,7 @@ def _reduce_stage(df: DataFrame, args: dict[str, str], pipe) -> DataFrame:
            for n in re.findall(r'r\["([^"]+)"\]', src) if _resolve(n) in df.columns}
     )
     pruned = df.select(*dict.fromkeys(needed))
-    return _fold.pandas_fold(
-        pruned, by, [c for c in pipe.order if c in pruned.columns], identity, step
-    )
+    return _fold.pandas_fold(pruned, by, pipe.order, identity, step)
 
 
 def _split_statements(q: str) -> list[str]:

@@ -806,9 +806,7 @@ def _execute_transform(df: DataFrame, ast: InfluxQLQuery, transforms, tag_col) -
 
 def _apply_ta(fn: str, df: DataFrame, src: str, n: int, by: list, alias: str) -> DataFrame:
     """Dispatch an InfluxQL technical-analysis transform to its
-    analytics operator. applyInPandas needs ≥1 group column — merged
-    (ungrouped) queries fall back to the constant measurement column,
-    which is single-valued after the FROM filter."""
+    analytics operator."""
     from ..operators import analytics as an_ops
 
     f = {
@@ -820,7 +818,7 @@ def _apply_ta(fn: str, df: DataFrame, src: str, n: int, by: list, alias: str) ->
         "kaufmans_efficiency_ratio": an_ops.kaufmans_er,
         "kaufmans_adaptive_moving_average": an_ops.kaufmans_ama,
     }[fn]
-    return f(df, n=n, value=src, by=by or ["measurement"], alias=alias)
+    return f(df, n=n, value=src, by=by, alias=alias)
 
 
 def _math_expr(fn: str, col: Column, args: list):

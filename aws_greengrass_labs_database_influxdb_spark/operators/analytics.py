@@ -6,9 +6,8 @@ All closed-form transforms are Spark window functions over
 ``partitionBy(series).orderBy(time)`` — one shuffle on the series key,
 then whole-stage codegen. Only the genuinely recursive family
 (EMA/double/triple EMA, Holt-Winters, KAMA, RSI's smoothed variant)
-drops to a pandas fold per series (``mapInPandas`` over a series-hash
-repartition since r15 — Arrow-batched, parallel across partitions,
-many series folded per task).
+drops to a pandas fold per series, on the shared scaffold in
+``operators/fold.py``.
 """
 
 from __future__ import annotations
@@ -21,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from . import _cfold
+from .fold import fold_groups, fold_series
 
 
 def _orderlist(order) -> list[str]:
@@ -196,86 +196,16 @@ def timed_moving_average(
 
 # ---------------------------------------------------------------- recursive
 
-def _per_series_pandas(df, by, time_ns, out_field, out_type, fn, needed=()):
-    """Shared pandas scaffold for recursive per-series transforms.
-
-    The frame is pruned to the columns the recursion actually touches
-    (group key, time order, tie-break, display time, ``needed`` value
-    columns) BEFORE the Arrow exchange — Catalyst cannot prune through
-    an opaque pandas stage whose declared schema carries every input
-    column, and shipping wide pass-through columns (e.g. a props
-    payload) through Arrow both ways dominated the runtime of the EMA
-    family.
-
-    r15: ``mapInPandas`` over a series-hash repartition instead of
-    ``groupBy().applyInPandas``. applyInPandas ships ONE Arrow batch
-    and one Python call PER GROUP — measured ~6 ms of per-group
-    overhead at 751 series (the skew bench: 5.8 s, of which the actual
-    fold is microseconds). One task now receives a whole partition
-    (many series), finds group boundaries with one factorize pass, and
-    runs the native fold per slice — 4× end-to-end on the skew bench,
-    bit-identical output (same sort order, same per-series fold, same
-    NaN→null warm-ups). The repartition keys on the ``by`` columns
-    with the session's shuffle-partition setting (scale-adaptive,
-    AQE-coalescible) — the same hash shuffle applyInPandas performed.
-    A single hot series still lands in one task, exactly as before.
-
-    r16: the (series, time, tie-break) sort runs JVM-side
-    (``sortWithinPartitions`` — codegen radix sort on the shuffled
-    rows) instead of a pandas mergesort of the whole partition; rows
-    arrive in fold order and Python only concatenates and slices. The
-    r15 pandas sort was the measured single-series regression
-    (ts_ema −16%). Same total order, bit-identical output.
-
-    Memory bound: one task holds its whole hash PARTITION as a single
-    pandas frame (bounded by the AQE advisory partition size), not one
-    group — a skewed series key still lands the entire hot series in
-    one frame, exactly as applyInPandas did. ``out_type`` must be a
-    DoubleType: the fold writes float64 (NaN = warm-up null).
-    """
-    keep, seen = [], set()
-    for c in [*by, time_ns, "ingest_seq", "time", *needed]:
-        if c in df.columns and c not in seen:
-            keep.append(c)
-            seen.add(c)
-    df = df.select(*keep)
-    schema = T.StructType(
-        df.schema.fields + [T.StructField(out_field, out_type, True)]
-    )
-    by = list(by)
-    # total order: ingest_seq tie-break keeps recursions stable when
-    # two points share a timestamp (same rule as the window family)
-    sort_keys = [time_ns] + (["ingest_seq"] if "ingest_seq" in df.columns else [])
-
-    def _apply(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        if not len(pdf):
-            return
-        vals = np.full(len(pdf), np.nan)
-        if not by:  # ungrouped: one global series (old groupBy() shape)
-            codes = np.zeros(len(pdf), dtype=np.int64)
-        elif len(by) == 1:
-            codes, _ = pd.factorize(pdf[by[0]], use_na_sentinel=False)
-        else:
-            codes, _ = pd.factorize(
-                pd.MultiIndex.from_frame(pdf[by]), use_na_sentinel=False
-            )
-        bounds = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1], True])
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            g = pdf.iloc[s:e].reset_index(drop=True)
-            vals[s:e] = np.asarray(fn(g), dtype=float)
-        pdf[out_field] = vals
-        yield pdf
-
-    parts = [F.col(c) for c in by] or [F.lit(1)]
-    return (
-        df.repartition(*parts)
-        .sortWithinPartitions(*by, *sort_keys)
-        .mapInPandas(_apply, schema=schema)
-    )
+def _fold_values(df, by, time_ns, value, alias, fn, keep=()):
+    """Run the value fold ``fn(v) -> array`` per series in
+    ``(time_ns, ingest_seq)`` order — the tie-break keeps recursions
+    stable when two points share a timestamp (same rule as the window
+    family). Only the key, order, display-time and value columns cross
+    the Arrow exchange: Catalyst cannot prune through the opaque pandas
+    stage, and wide pass-through columns dominated the EMA family's
+    runtime."""
+    return fold_series(df, by, [time_ns, "ingest_seq"],
+                       ["time", value, *keep], value, alias, fn)
 
 
 def exponential_moving_average(
@@ -291,8 +221,7 @@ def exponential_moving_average(
 
     EMA_t = EMA_{t−1} + k·(v_t − EMA_{t−1}), k = 2/(n+1); seeded with
     the SMA of the first n points (InfluxDB semantics). Recursive →
-    a pandas fold per series (the shared mapInPandas scaffold); the
-    arithmetic is an explicit sequential
+    a pandas fold per series; the arithmetic is an explicit sequential
     fold (seed = sequential sum / n) so the DuckDB oracle can reproduce
     it bit-for-bit with ``list_reduce`` — see suite/timeseries.EMA_SQL.
 
@@ -307,11 +236,8 @@ def exponential_moving_average(
     bytecode; the Python fold below is the gated fallback and the
     bit-exactness reference (test_analytics_native_parity).
     """
-    def _ema(pdf: pd.DataFrame) -> pd.Series:
-        va = pdf[value].astype(float).to_numpy()
-        return pd.Series(ema_values(va, n), dtype=float)
-
-    out = _per_series_pandas(df, by, time_ns, alias, T.DoubleType(), _ema, needed=(value, *keep))
+    out = _fold_values(df, by, time_ns, value, alias,
+                       lambda v: ema_values(v, n), keep)
     # warm-up rows carry NaN → Arrow null: drop them (stock emission)
     return out.filter(F.col(alias).isNotNull())
 
@@ -433,11 +359,7 @@ def relative_strength_index(df, n, value="f_float", by=("measurement", "field"),
     rows are DROPPED (stock emission: m − n rows — r15; the old form
     kept them with a null indicator beside the live raw value).
     """
-    def _rsi(pdf: pd.DataFrame) -> pd.Series:
-        v = pdf[value].astype(float).to_numpy()
-        return pd.Series(rsi_values(v, n), dtype=float)
-
-    out = _per_series_pandas(df, by, time_ns, alias, T.DoubleType(), _rsi, needed=(value,))
+    out = _fold_values(df, by, time_ns, value, alias, lambda v: rsi_values(v, n))
     return out.filter(F.col(alias).isNotNull())
 
 
@@ -503,11 +425,7 @@ def kaufmans_ama(df, n, value="f_float", by=("measurement", "field"),
     value (row n−1, = v[n−1]) feeds the recursion but is NOT emitted,
     and the warm-up rows are dropped.
     """
-    def _kama(pdf: pd.DataFrame) -> pd.Series:
-        v = pdf[value].astype(float).to_numpy()
-        return pd.Series(kama_values(v, n), dtype=float)
-
-    out = _per_series_pandas(df, by, time_ns, alias, T.DoubleType(), _kama, needed=(value,))
+    out = _fold_values(df, by, time_ns, value, alias, lambda v: kama_values(v, n))
     return out.filter(F.col(alias).isNotNull())
 
 
@@ -634,37 +552,19 @@ def holt_winters(df, n, interval_seconds, seasonality=0, value="f_float",
     emit the in-sample one-step-ahead predictions at each input
     timestamp the recursion predicts (index ≥ 1 non-seasonal, ≥ s
     seasonal), ahead of the n forecast rows.
-
-    r16: partition-batched ``mapInPandas`` over a series-hash
-    repartition (the ``_per_series_pandas`` scaffold shape) instead of
-    ``groupBy().applyInPandas`` — one Arrow exchange and one Python
-    call per PARTITION, not per series, and the frame is pruned to the
-    four columns the recursion reads before the exchange (the old path
-    shipped every input column — including wide payloads like
-    ``props`` — through Arrow both ways). Rows arrive pre-sorted by
-    (series, time, tie-break) via a JVM ``sortWithinPartitions``;
-    per-series forecasts are bit-identical.
     """
     out_schema = T.StructType(
         [T.StructField(c, df.schema[c].dataType, True) for c in by]
         + [T.StructField("time_ns", T.LongType()), T.StructField("hw", T.DoubleType())]
     )
-    keep, seen = [], set()
-    for c in [*by, time_ns, "ingest_seq", value]:
-        if c in df.columns and c not in seen:
-            keep.append(c)
-            seen.add(c)
-    df = df.select(*keep)
     by = list(by)
-    sort_keys = [time_ns] + (["ingest_seq"] if "ingest_seq" in df.columns else [])
 
     def _hw(pdf: pd.DataFrame) -> pd.DataFrame:
-        # rows arrive sorted by (by, time_ns, ingest_seq) — JVM sort
         v = pdf[value].astype(float).to_numpy()
         keys = {c: pdf[c].iloc[0] for c in by}
         m = len(v)
         if m < 2:
-            return pd.DataFrame(columns=[*by, "time_ns", "hw"])
+            return pd.DataFrame()
         t0 = int(pdf[time_ns].iloc[-1])
         step = int(interval_seconds * 1e9)
         s = int(seasonality or 0)
@@ -744,38 +644,7 @@ def holt_winters(df, n, interval_seconds, seasonality=0, value="f_float",
         ]
         return pd.DataFrame(rows)
 
-    out_cols = [*by, "time_ns", "hw"]
-
-    def _apply(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        if not len(pdf):
-            return
-        if not by:
-            codes = np.zeros(len(pdf), dtype=np.int64)
-        elif len(by) == 1:
-            codes, _ = pd.factorize(pdf[by[0]], use_na_sentinel=False)
-        else:
-            codes, _ = pd.factorize(
-                pd.MultiIndex.from_frame(pdf[by]), use_na_sentinel=False
-            )
-        bounds = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1], True])
-        outs = [
-            _hw(pdf.iloc[s:e].reset_index(drop=True))
-            for s, e in zip(bounds[:-1], bounds[1:])
-        ]
-        outs = [o for o in outs if len(o)]
-        if outs:
-            yield pd.concat(outs, ignore_index=True)[out_cols]
-
-    parts = [F.col(c) for c in by] or [F.lit(1)]
-    return (
-        df.repartition(*parts)
-        .sortWithinPartitions(*by, *sort_keys)
-        .mapInPandas(_apply, schema=out_schema)
-    )
+    return fold_groups(df, by, [time_ns, "ingest_seq"], [value], out_schema, _hw)
 
 
 # ---------------------------------------------------------------- state

@@ -101,7 +101,7 @@ def test_long_single_series_native_speed_and_parity():
 
 
 def test_fold_through_spark_unchanged(spark):
-    """End-to-end: the applyInPandas wiring still produces the same
+    """End-to-end: the Spark wiring still produces the same
     rows as before the native path (guards the closure refactor)."""
     from aws_greengrass_labs_database_influxdb_spark.operators import analytics as A
 

@@ -1,39 +1,45 @@
-"""Focused tests for the r15 mapInPandas recursion scaffold
-(operators/analytics._per_series_pandas).
+"""Focused tests for the per-group pandas scaffold
+(operators/fold.group_chunks and its Spark wrappers), which runs the
+recursive TA family, holt_winters and the general Flux ``reduce()``.
 
-The r15 optimization replaced groupBy().applyInPandas (one Arrow batch
-+ one Python call per group) with mapInPandas over a series-hash
-repartition (one task folds many series). These pin the scaffold's
-edge cases directly, independent of the oracle suite:
+Rows reach the Python worker hash-partitioned and sorted by
+(group, time_ns, ingest_seq), as a stream of Arrow batches. These pin
+the scaffold's edge cases directly, independent of the oracle suite:
 
-- a series whose partition arrives as MULTIPLE Arrow batches must be
-  concatenated before the fold (a split series would restart the
-  recursion mid-stream);
+- a group whose rows arrive as SEVERAL Arrow batches must be folded
+  whole (a split group would restart the recursion mid-stream), for
+  every caller of the scaffold;
 - many series in one partition must each fold independently with the
   (time_ns, ingest_seq) total order;
-- NULL group keys form their own group (old groupBy semantics);
-- an empty ``by`` folds the whole frame as one global series.
+- NULL group keys form their own group (Spark groupBy semantics);
+- an empty ``by`` folds the whole frame as one global series;
+- batches are pulled lazily: a complete group is folded before the
+  rest of the partition is read.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+
+SCHEMA = ("measurement string, field string, series string, time_ns long, "
+          "f_float double, ingest_seq long")
 
 
-def _mk_points(spark, n_series: int, n_rows: int):
-    """Interleaved rows: series s0..s{k-1}, times striped so input
-    order is NOT series-contiguous (the scaffold must sort)."""
+def _value(s: int, t: int) -> float:
+    return float(s * 1000 + t) + (t * 37 % 11) * 0.5
+
+
+def _mk_frame(spark, series: list, n_rows: int):
+    """Interleaved rows of the given series keys, times striped so
+    input order is NOT series-contiguous (the scaffold must sort)."""
     rows = []
     seq = 0
     for t in range(n_rows):
-        for s in range(n_series):
-            rows.append((f"s{s}", t * 1000 + s, float(s * 1000 + t), seq))
+        for s, key in enumerate(series):
+            rows.append(("m", "value", key, t * 1000 + s, _value(s, t), seq))
             seq += 1
-    return spark.createDataFrame(
-        rows, "series string, time_ns long, f_float double, ingest_seq long"
-    )
+    return spark.createDataFrame(rows, SCHEMA)
 
 
 def _ema_ref(vals, n):
@@ -51,37 +57,110 @@ def _ema_ref(vals, n):
     return out
 
 
-def test_series_split_across_arrow_batches(spark):
-    """One series larger than the Arrow batch size arrives at the
-    Python worker as several batches; the fold must span them all
-    (concat-before-sort), not restart per batch."""
+def _holt_ref(vals, times, n):
+    """Reference non-seasonal holtWinters (fixed α=β=0.5, 1 s interval):
+    the n forecast rows as (time_ns, hw)."""
+    level, trend = vals[0], vals[1] - vals[0]
+    for x in vals[1:]:
+        prev = level
+        level = 0.5 * x + (1 - 0.5) * (level + trend)
+        trend = 0.5 * (level - prev) + (1 - 0.5) * trend
+    return [(times[-1] + (i + 1) * 10**9, level + (i + 1) * trend)
+            for i in range(n)]
+
+
+def _run_ema(df):
     from aws_greengrass_labs_database_influxdb_spark.operators.analytics import (
         exponential_moving_average,
     )
 
+    out = exponential_moving_average(df, 10, by=("series",)).collect()
+    got = {}
+    for r in sorted(out, key=lambda r: r["time_ns"]):
+        got.setdefault(r["series"], []).append(r["ema"])
+    return got
+
+
+def _ref_ema(vals, times):
+    return [v for v in _ema_ref(vals, 10) if v == v]  # drop warm-ups
+
+
+def _run_holt(df):
+    from aws_greengrass_labs_database_influxdb_spark.operators.analytics import (
+        holt_winters,
+    )
+
+    out = holt_winters(df, 3, 1, by=["series"]).collect()
+    got = {}
+    for r in sorted(out, key=lambda r: r["time_ns"]):
+        got.setdefault(r["series"], []).append((r["time_ns"], r["hw"]))
+    return got
+
+
+def _ref_holt(vals, times):
+    return _holt_ref(vals, times, 3)
+
+
+def _run_reduce(df):
+    """Flux reduce() with a product accumulator: not associative-
+    classifiable, so it takes the general (pandas_fold) path."""
+    from aws_greengrass_labs_database_influxdb_spark.frontends.flux import execute_flux
+
+    out = execute_flux(
+        df,
+        'from(bucket:"b") |> group(columns: ["series"])'
+        " |> reduce(fn: (r, accumulator) =>"
+        " ({prod: accumulator.prod * (1.0 + r._value / 100000.0)}),"
+        " identity: {prod: 1.0})",
+    ).collect()
+    return {r["series"]: [r["prod"]] for r in out}
+
+
+def _ref_reduce(vals, times):
+    p = 1.0
+    for v in vals:
+        p = p * (1.0 + v / 100000.0)
+    return [p]
+
+
+CALLERS = {
+    "ema": (_run_ema, _ref_ema),
+    "holt_winters": (_run_holt, _ref_holt),
+    "reduce": (_run_reduce, _ref_reduce),
+}
+
+INPUTS = {
+    # three series, 400 rows each: every series spans several batches
+    "interleaved": (["s0", "s1", "s2"], 400),
+    # a NULL-key group straddling batch boundaries beside named series
+    "null_key_straddles": ([None, "x", "y"], 120),
+    # one group spanning every batch of its partition
+    "one_group": (["only"], 500),
+}
+
+
+@pytest.mark.parametrize("inputs", sorted(INPUTS))
+@pytest.mark.parametrize("caller", sorted(CALLERS))
+def test_series_split_across_arrow_batches(spark, caller, inputs):
+    """Groups larger than the Arrow batch size arrive at the Python
+    worker as several batches; each caller's fold must span them all,
+    not restart per batch."""
+    run, ref = CALLERS[caller]
+    series, n_rows = INPUTS[inputs]
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "50")
     try:
-        df = _mk_points(spark, n_series=3, n_rows=400)  # 1200 rows ≫ 50
-        out = (
-            exponential_moving_average(df, 10, by=("series",))
-            .orderBy("series", "time_ns")
-            .collect()
-        )
+        got = run(_mk_frame(spark, series, n_rows))
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    # emission contract: n-1 warm-ups dropped per series
-    by_series = {}
-    for r in out:
-        by_series.setdefault(r["series"], []).append(r["ema"])
-    assert set(by_series) == {"s0", "s1", "s2"}
-    for s in range(3):
-        vals = [float(s * 1000 + t) for t in range(400)]
-        ref = [v for v in _ema_ref(vals, 10) if v == v]  # drop NaN
-        got = by_series[f"s{s}"]
-        assert len(got) == len(ref) == 391
-        assert got == pytest.approx(ref, abs=0.0)  # bit-path identical fold
+    assert set(got) == set(series)
+    for s, key in enumerate(series):
+        vals = [_value(s, t) for t in range(n_rows)]
+        times = [t * 1000 + s for t in range(n_rows)]
+        want = ref(vals, times)
+        assert len(got[key]) == len(want)
+        assert got[key] == pytest.approx(want, abs=0.0)  # bit-path identical fold
 
 
 def test_many_series_one_partition_and_tie_break(spark):
@@ -134,24 +213,42 @@ def test_null_group_key_is_its_own_group(spark):
 
 
 def test_empty_by_folds_one_global_series(spark):
-    """by=() matches the old groupBy() shape: one global group."""
-    from pyspark.sql import types as T
-
+    """by=() folds every row as one global series (the groupBy() shape)."""
     from aws_greengrass_labs_database_influxdb_spark.operators.analytics import (
-        _per_series_pandas,
+        exponential_moving_average,
     )
 
     df = spark.createDataFrame(
-        [(i, float(i), i) for i in range(20)],
+        [(i, float(i * i % 7), i) for i in range(20)],
         "time_ns long, f_float double, ingest_seq long",
     )
+    out = exponential_moving_average(df, 3, by=()).orderBy("time_ns").collect()
+    ref = [v for v in _ema_ref([float(i * i % 7) for i in range(20)], 3) if v == v]
+    assert [r["ema"] for r in out] == pytest.approx(ref, abs=0.0)
 
-    def _cumsum(pdf: pd.DataFrame) -> pd.Series:
-        return pdf["f_float"].cumsum()
 
-    out = _per_series_pandas(
-        df, (), "time_ns", "acc", T.DoubleType(), _cumsum, needed=("f_float",)
-    ).orderBy("time_ns").collect()
-    assert [r["acc"] for r in out] == pytest.approx(
-        [sum(range(i + 1)) for i in range(20)], abs=0.0
-    )
+def test_groups_are_folded_before_the_partition_is_read():
+    """The scaffold pulls Arrow batches lazily: the first complete group
+    is yielded before the last batch is pulled, so a worker never holds
+    the whole partition. Groups spanning batches come out whole, once."""
+    from aws_greengrass_labs_database_influxdb_spark.operators.fold import group_chunks
+
+    keys = ["a"] * 5 + [None] * 7 + ["b"] * 2 + ["c"] * 6
+    frame = pd.DataFrame({"series": keys, "i": range(len(keys))})
+    batches = [frame.iloc[i:i + 4].reset_index(drop=True)
+               for i in range(0, len(frame), 4)]
+    pulls = []
+
+    def stream():
+        for i, b in enumerate(batches):
+            pulls.append(i)
+            yield b
+
+    groups, pulled_at_first = [], None
+    for chunk, bounds in group_chunks(stream(), ["series"]):
+        if pulled_at_first is None:
+            pulled_at_first = len(pulls)
+        groups += [list(chunk["i"].iloc[s:e]) for s, e in zip(bounds[:-1], bounds[1:])]
+    assert pulled_at_first < len(batches)
+    assert groups == [list(range(0, 5)), list(range(5, 12)),
+                      list(range(12, 14)), list(range(14, 20))]
