@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from ..frontends.annotated_csv import iter_annotated_csv
 from ..frontends.flux import execute_flux_multi
 from ..frontends.influxql import execute_influxql, parse_influxql
+from ..schema import SLOT_OF_FTYPE
 from ..sources.bucket import BucketMeta
 from ..sources.lineprotocol import parse_lines
 from ..sources.seq import next_seq_base
@@ -316,20 +317,18 @@ def _fluxify_result(df):
             # which slots actually hold data? ftype is authoritative
             # (kept even on legitimately-null values, e.g. createEmpty
             # spines); the distinct is bounded by the 5 field types.
-            slot_of = {"float": "f_float", "int": "f_float", "uint": "f_float",
-                       "string": "f_str", "bool": "f_bool"}
             if "ftype" in df.columns:
                 ftypes = [
                     r[0]
                     for r in df.select("ftype").distinct().collect()
-                    if r[0] in slot_of
+                    if r[0] in SLOT_OF_FTYPE
                 ]
                 live = sorted(
-                    {slot_of[t] for t in ftypes}, key=slots.index
+                    {SLOT_OF_FTYPE[t] for t in ftypes}, key=slots.index
                 )
                 if len(live) > 1:
                     for slot in live:
-                        types = [t for t, s in slot_of.items() if s == slot]
+                        types = [t for t, s in SLOT_OF_FTYPE.items() if s == slot]
                         splits.append(
                             (df.filter(F.col("ftype").isin(types))
                                .withColumnRenamed(slot, "_value"),

@@ -40,8 +40,11 @@ from __future__ import annotations
 
 import calendar
 import contextlib
+import dataclasses
 import datetime as dt
 import re
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -49,6 +52,7 @@ from ..operators.core import ns_to_us
 from ..operators.errors import OperatorValidationError
 from ..operators.windows import duration_ns, duration_parts
 from ..plans.pipeline import Pipeline, from_points, merge_range_bounds
+from ..schema import SLOT_OF_FTYPE
 
 
 class FluxError(ValueError):
@@ -57,8 +61,7 @@ class FluxError(ValueError):
 
 @contextlib.contextmanager
 def flux_runtime_errors():
-    """Uniform Python-API error contract for action time (r14,
-    r13 verdict #4).
+    """Uniform Python-API error contract for action time.
 
     ``execute_flux`` returns a lazy DataFrame, so DATA-DEPENDENT
     rejections — stock's typed conversion failure (``toFloat()`` of a
@@ -160,7 +163,7 @@ def _split_pipeline(q: str) -> list[str]:
 class _StageArgs(dict):
     """Stage-argument dict whose missing-key access is a typed
     FluxError naming the stage — a mis-spelled required argument
-    (``top(n. 2)``) must not escape as a bare KeyError (r6 fuzzer)."""
+    (``top(n. 2)``) must not escape as a bare KeyError."""
 
     def __init__(self, stage_name: str, args: dict):
         super().__init__(args)
@@ -262,7 +265,7 @@ def _shift_bound_ns(bound: int | None, duration: str) -> int | None:
     use Go ``time.AddDate`` day clamping (same as ``_time_to_ns``'s
     relative-month path). A non-Flux duration (SQL interval text) is
     accepted by time_shift but not parseable here — keep the bound
-    unshifted, which is the pre-r14 behavior for every duration.
+    unshifted.
     """
     if bound is None:
         return None
@@ -297,19 +300,17 @@ def _colname(df: DataFrame, name: str) -> str:
         if len(hits) == 1:
             return hits[0]
         # a type-preserving window/aggregate landed its result in a
-        # typed slot (r13: aggregateWindow no longer erases a string
-        # result into a column named f_float) — _value means that slot
+        # typed slot — _value means that slot
         slot_hits = [c for c in ("f_str", "f_bool") if c in df.columns]
         if len(slot_hits) == 1:
             return slot_hits[0]
     return mapped
 
 
-#: resolved live slot per DataFrame OBJECT (r11 ADVICE: every probe —
-#: _reject_non_numeric_agg per numeric stage, each r._value token in a
-#: map(), reduce(), bare min/max — ran its own full-frame distinct at
-#: plan time; a multi-stage script over a mixed bucket paid repeated
-#: scans). Within one stage the frame object is stable, so N probes
+#: resolved live slot per DataFrame OBJECT: every slot consumer
+#: (_reject_non_numeric_agg, each r._value token in a map(), reduce(),
+#: bare min/max) would otherwise run its own full-frame distinct at
+#: plan time. Within one stage the frame object is stable, so N probes
 #: collapse to 1; stages that KNOW the outgoing slot (map retype)
 #: pre-seed the cache for their output frame. Weak keys: entries die
 #: with the frame, no lifetime management.
@@ -318,7 +319,7 @@ import weakref
 _LIVE_SLOT_CACHE: "weakref.WeakKeyDictionary[DataFrame, list]" = (
     weakref.WeakKeyDictionary()
 )
-#: SUPERSET entries (r12 ADVICE #5, second half): stages that can only
+#: SUPERSET entries: stages that can only
 #: REMOVE rows (filter/range) propagate their input's live set here —
 #: a superset of the true live set. Ordering/presence consumers
 #: (sort, selectors, count, fill, conversions) are superset-safe:
@@ -337,8 +338,8 @@ _PROBE_RUNS = 0
 #: catalog class map per frame: {(measurement, field): type-class} —
 #: seeded from the bucket's _field_types.json by seed_live_slots and
 #: propagated alongside the live-slot caches; lets the group-collision
-#: check prove NON-collision from catalog pins with zero jobs (r14,
-#: r13 verdict #5). Sound because pins are a SUPERSET of live rows:
+#: check prove NON-collision from catalog pins with zero jobs. Sound
+#: because pins are a SUPERSET of live rows:
 #: single-class pins at the group granularity → no collision in any
 #: subset. Never used to prove a collision (a pin can outlive its
 #: rows; stock errors on live tables only).
@@ -359,10 +360,7 @@ def _live_slots(df: DataFrame, exact: bool = True) -> list[str]:
     additionally accepts a propagated SUPERSET entry (see
     ``_LIVE_SLOT_SUPERSET``) — callers whose semantics tolerate a
     stale extra slot skip the probe job entirely."""
-    if "ftype" not in df.columns:
-        return ["f_float"]
-    extra = [s for s in ("f_str", "f_bool") if s in df.columns]
-    if not extra:
+    if not _has_typed_slots(df):
         return ["f_float"]
     hit = _LIVE_SLOT_CACHE.get(df)
     if hit is not None:
@@ -371,23 +369,34 @@ def _live_slots(df: DataFrame, exact: bool = True) -> list[str]:
         sup = _LIVE_SLOT_SUPERSET.get(df)
         if sup is not None:
             return sup
-    global _PROBE_RUNS
-    _PROBE_RUNS += 1
-    slot_of = {"float": "f_float", "int": "f_float", "uint": "f_float",
-               "string": "f_str", "bool": "f_bool"}
-    live = sorted({
-        slot_of.get(r[0], "f_float")
-        for r in df.select("ftype").distinct().collect()
-        if r[0] is not None
-    }) or ["f_float"]
-    live = [s for s in live if s in df.columns] or ["f_float"]
+    live = ([s for s in _probe_slots(df, "ftype") if s in df.columns]
+            or ["f_float"])
     _LIVE_SLOT_CACHE[df] = live
     return live
+
+
+def _probe_slots(df: DataFrame, ftype_col: str) -> list[str]:
+    """The slots ``ftype_col`` says are live: one bounded distinct job
+    (≤5 field types), counted in ``_PROBE_RUNS``."""
+    global _PROBE_RUNS
+    _PROBE_RUNS += 1
+    return sorted({
+        SLOT_OF_FTYPE.get(r[0], "f_float")
+        for r in df.select(ftype_col).distinct().collect()
+        if r[0] is not None
+    }) or ["f_float"]
 
 
 def _slot_cols(df: DataFrame) -> list[str]:
     """The frame's physical value slots, canonical order."""
     return [s for s in ("f_float", "f_str", "f_bool") if s in df.columns]
+
+
+def _has_typed_slots(df: DataFrame) -> bool:
+    """Whether the frame carries string/bool slots and the ftype
+    discriminator that says which slot a row populates."""
+    return "ftype" in df.columns and any(
+        s in df.columns for s in ("f_str", "f_bool"))
 
 
 #: group-key tuples proven type-uniform per frame (memo for
@@ -397,16 +406,15 @@ _GROUP_UNIFORM_CACHE: "weakref.WeakKeyDictionary[DataFrame, set]" = (
 )
 
 
-def _reject_group_schema_collision(df: DataFrame, group_key, stage: str) -> None:
+def _reject_group_schema_collision(df: DataFrame, group_key) -> None:
     """Stock Flux cannot materialize a table whose ``_value`` column
     mixes datatypes: a regroup that merges a string series and a float
     series into ONE table (``group(columns: ["host"])`` over a mixed
     measurement) fails with ``schema collision detected``. The engine's
     per-group typed machinery is only correct when each group is
     single-typed, so the consumers that would otherwise silently
-    compute on a franken-table raise the stock error instead (r13
-    probe: ``group(host) |> mode()`` emitted a row with BOTH slots
-    populated).
+    compute on a franken-table (``group(host) |> mode()`` emitting a
+    row with BOTH slots populated) raise the stock error instead.
 
     Cost: plan-time ZERO when the group key carries the type
     discriminators (measurement+field — the overwhelmingly common
@@ -426,7 +434,7 @@ def _reject_group_schema_collision(df: DataFrame, group_key, stage: str) -> None
         return
     cat = _CATALOG_CLASS_CACHE.get(df)
     if cat:
-        # catalog proof of NON-collision (r14): if every group at the
+        # catalog proof of NON-collision: if every group at the
         # key's granularity is single-class per the bucket's type pins,
         # no subset of rows can collide — zero jobs. Field-level keys
         # check per field name, measurement-level per measurement,
@@ -470,9 +478,9 @@ _SUFFIX_SLOT_CACHE: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
 def _suffixed_live_slot(df: DataFrame, name: str) -> str:
     """Resolve a join-suffixed float binding (``f_float_b``) to its
     side's live slot via that side's own discriminator (``ftype_b`` —
-    join outputs carry every per-side column). r13 probe: a map() read
-    of ``r._value_b`` where side b is a string stream bound the dead
-    ``f_float_b`` and nulled every row. Single-typed sides resolve
+    join outputs carry every per-side column), so a map() read of
+    ``r._value_b`` on a string side reads its strings, not the dead
+    ``f_float_b``. Single-typed sides resolve
     (one bounded distinct, memoized per frame+side); mixed sides keep
     the float binding."""
     m = re.match(r"^f_float(_\w+)$", name)
@@ -486,37 +494,24 @@ def _suffixed_live_slot(df: DataFrame, name: str) -> str:
         return name
     memo = _SUFFIX_SLOT_CACHE.setdefault(df, {})
     if sfx not in memo:
-        global _PROBE_RUNS
-        _PROBE_RUNS += 1
-        slot_of = {"float": "f_float", "int": "f_float", "uint": "f_float",
-                   "string": "f_str", "bool": "f_bool"}
-        live = sorted({
-            slot_of.get(r[0], "f_float")
-            for r in df.select(f"ftype{sfx}").distinct().collect()
-            if r[0] is not None
-        }) or ["f_float"]
-        memo[sfx] = live
+        memo[sfx] = _probe_slots(df, f"ftype{sfx}")
     live = memo[sfx]
     cand = f"{live[0]}{sfx}"
     return cand if len(live) == 1 and cand in df.columns else name
 
 
 def _typed_field_pivot(df: DataFrame, grouping, val: str):
-    """Per-type field pivot (r10), shared by the ``pivot`` stage and
-    ``schema.fieldsAsCols`` (r13 — fieldsAsCols bypassed it, so string/
-    bool fields pivoted from the dead float slot into all-NULL columns
-    typed DOUBLE, and a comparison against them ANSI-crashed): on a
-    mixed measurement each output column reads its ftype's slot. The
+    """Per-type field pivot, shared by the ``pivot`` stage and
+    ``schema.fieldsAsCols``: on a mixed measurement each output column
+    reads its ftype's slot (never all-NULL DOUBLE columns pivoted from
+    the dead float slot). The
     (field, ftype) distinct is bounded by field-key cardinality.
     Returns None when the frame is float-only (plain pivot applies)."""
-    if not (val == "f_float" and "ftype" in df.columns
-            and any(s in df.columns for s in ("f_str", "f_bool"))):
+    if not (val == "f_float" and _has_typed_slots(df)):
         return None
-    slot_of = {"float": "f_float", "int": "f_float", "uint": "f_float",
-               "string": "f_str", "bool": "f_bool"}
     fmap: dict = {}
     for r in df.select("field", "ftype").distinct().collect():
-        s = slot_of.get(r[1], "f_float")
+        s = SLOT_OF_FTYPE.get(r[1], "f_float")
         if s not in df.columns:
             s = "f_float"
         if r[0] not in fmap or s == "f_float":
@@ -543,7 +538,7 @@ def _carry_slot_cache(src: DataFrame, dst: DataFrame,
         return
     # the catalog class map stays valid through every ftype-keeping
     # stage (they preserve measurement/field/ftype triples; row
-    # removal only shrinks the superset the pins already cover) — r14
+    # removal only shrinks the superset the pins already cover)
     if carry_catalog:
         cat = _CATALOG_CLASS_CACHE.get(src)
         if cat is not None and dst not in _CATALOG_CLASS_CACHE:
@@ -565,10 +560,9 @@ def _pred_eq_literals(pred_src: str, flux_col: str) -> set | None:
     ``flux_col`` to, or None when unconstrained.
 
     Conservative textual analysis of the Flux predicate source, with
-    FLUX PRECEDENCE — ``and`` binds tighter than ``or`` (r15 ADVICE:
-    the old and-first split read ``m == "cpu" and v > 1 or m ==
-    "logs"`` as constraining to {cpu} while logs rows survive the real
-    filter). Split on top-level ``or`` first: the result is sound only
+    FLUX PRECEDENCE — ``and`` binds tighter than ``or``, so ``m ==
+    "cpu" and v > 1 or m == "logs"`` constrains to {cpu, logs}. Split
+    on top-level ``or`` first: the result is sound only
     if EVERY disjunct constrains the column, and the answer is the
     UNION of the disjuncts' sets. Within a disjunct, split on ``and``:
     constraining conjuncts INTERSECT, non-constraining ones
@@ -646,7 +640,7 @@ def _pred_eq_literals(pred_src: str, flux_col: str) -> set | None:
 def _narrow_catalog_on_filter(src: DataFrame, dst: DataFrame,
                               pred_src: str) -> None:
     """Narrow the catalog class map and live-slot superset through a
-    measurement/field equality filter (r14): ``filter(fn: (r) =>
+    measurement/field equality filter: ``filter(fn: (r) =>
     r._measurement == "m")`` is THE standard Flux idiom, and after it
     the surviving rows can only carry m's pinned classes — so a
     single-class measurement inside a multi-class bucket keeps
@@ -669,13 +663,12 @@ def _narrow_catalog_on_filter(src: DataFrame, dst: DataFrame,
         # landed between the field_types() read and execution):
         # install NOTHING so the runtime probe self-heals — an empty
         # map would falsely prove "no collision" and an f_float
-        # superset default re-binds the dead float slot (r15 ADVICE,
-        # mirrors the seed_live_slots fix)
+        # superset default re-binds the dead float slot (as in
+        # seed_live_slots)
         return
     _CATALOG_CLASS_CACHE[dst] = narrowed
-    slot_of = {"float": "f_float", "string": "f_str", "bool": "f_bool"}
-    live = sorted({slot_of[c] for cls in narrowed.values() for c in cls
-                   if c in slot_of})
+    live = sorted({SLOT_OF_FTYPE[c] for cls in narrowed.values() for c in cls
+                   if c in SLOT_OF_FTYPE})
     live = [s for s in live if s in dst.columns]
     if not live:
         return  # no recognized classes: leave the probe to self-heal
@@ -685,7 +678,7 @@ def _narrow_catalog_on_filter(src: DataFrame, dst: DataFrame,
 
 def seed_live_slots(df: DataFrame, ftypes, exact: bool = False,
                     catalog: dict | None = None) -> None:
-    """Pre-seed the live-slot cache from CATALOG knowledge (r13): a
+    """Pre-seed the live-slot cache from CATALOG knowledge: a
     store-backed session knows the bucket's field-type pins, so the
     from() frame never needs a runtime ftype probe. Catalog pins are a
     SUPERSET of the live data (a pin can outlive its rows — zero-row
@@ -695,18 +688,15 @@ def seed_live_slots(df: DataFrame, ftypes, exact: bool = False,
     ``catalog`` — the bucket's full ``{measurement: {field: ftype}}``
     map (``BucketStore.field_types``) — additionally seeds the
     class-map cache so ``group(columns:)`` collision checks on
-    store-backed frames resolve from the pins with zero probe jobs
-    (r14, r13 verdict #5)."""
-    slot_of = {"float": "f_float", "int": "f_float", "uint": "f_float",
-               "string": "f_str", "bool": "f_bool"}
-    live = sorted({slot_of[t] for t in ftypes if t in slot_of})
+    store-backed frames resolve from the pins with zero probe jobs."""
+    live = sorted({SLOT_OF_FTYPE[t] for t in ftypes if t in SLOT_OF_FTYPE})
     live = [s for s in live if s in df.columns]
     if not live:
         # NO recognized catalog types (deleted types file, incomplete
         # known_types caller): seed NOTHING so the runtime probe runs
         # and self-heals — defaulting to f_float here understated the
         # superset while string/bool rows existed, and superset
-        # consumers silently bound the dead float slot (r14 ADVICE #2)
+        # consumers silently bound the dead float slot
         return
     (_LIVE_SLOT_CACHE if exact else _LIVE_SLOT_SUPERSET)[df] = live
     if catalog:
@@ -726,7 +716,7 @@ def _checked_str_cast(c: Column, spark_type: str, flux_type: str) -> Column:
     "<v>" to <type>`` (stock: strconv parse error) instead of leaking
     Spark's raw ANSI ``NumberFormatException``. try_cast probes
     parseability; assert_true carries the stock-shaped message. NULLs
-    pass through (r13, found by the mixed-union executing fuzzer)."""
+    pass through."""
     tc = c.try_cast(spark_type)
     ok = c.isNull() | tc.isNotNull()
     msg = F.concat(F.lit('cannot convert string "'), c,
@@ -742,9 +732,7 @@ def _value_slot_runtime(df: DataFrame, col: str) -> str:
     Mixed frames (>1 live type) return ``col`` untouched — the ops
     that can handle a mix per-group (count/distinct/unique) consult
     :func:`_live_slots` directly."""
-    if col != "f_float" or "ftype" not in df.columns:
-        return col
-    if not any(s in df.columns for s in ("f_str", "f_bool")):
+    if col != "f_float" or not _has_typed_slots(df):
         return col
     live = _live_slots(df, exact=False)
     if len(live) == 1:
@@ -752,7 +740,7 @@ def _value_slot_runtime(df: DataFrame, col: str) -> str:
     # a SUPERSET entry saying "mixed" may be stale (a filter narrowed
     # the mix to one type) — resolve EXACTLY before declaring the
     # binding ambiguous, so single-slot callers (duplicate, map reads)
-    # never bind the dead float slot of a truly-uniform frame (r13)
+    # never bind the dead float slot of a truly-uniform frame
     live = _live_slots(df)
     return live[0] if len(live) == 1 else col
 
@@ -779,15 +767,12 @@ def _reject_non_numeric_agg(df: DataFrame, col: str, fn: str) -> None:
     float-only frames) and raises the stock-shaped message. A MIXED
     frame (union of a string and a float stream) raises too — stock
     computes per table and the non-numeric table errors the query
-    (r12; previously the float rows silently averaged and the string
-    group emitted a null row).
+    rather than averaging the float rows alone.
 
-    r13: also consults the column's ACTUAL Spark type — a windowed
-    string result (now carried in ``f_str``, or any string/bool column
+    Also consults the column's ACTUAL Spark type — a windowed
+    string result (carried in ``f_str``, or any string/bool column
     named directly, e.g. ``mean(column: "host")``) is the same typed
-    error in stock regardless of the ftype discriminator; previously a
-    type-erased frame leaked a raw NumberFormatException from the
-    executor cast instead."""
+    error in stock regardless of the ftype discriminator."""
     if col in df.columns:
         dt = dict(df.dtypes).get(col)
         if dt == "string":
@@ -822,7 +807,7 @@ _CMP_RX = re.compile(
     r'("(?:[^"\\]|\\.)*"'
     r"|\d{4}-\d{2}-\d{2}(?:T\d{2}:\d{2}:\d{2}(?:\.\d+)?Z)?"  # RFC3339 time
     # numeric incl. scientific notation — without the exponent branch
-    # `r._value > 1e18` silently truncated to `> 1` (r6 probe)
+    # `r._value > 1e18` silently truncated to `> 1`
     r"|-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?|true|false|/[^/]*/)"
 )
 
@@ -841,8 +826,7 @@ def _parse_predicate(df: DataFrame, body: str) -> Column:
     """Boolean combination of r.<col> <op> <literal> comparisons,
     ``[not] exists r.<col>`` null checks, and ``contains()`` — with
     Flux precedence (``and`` binds tighter than ``or``) and
-    parenthesized grouping (both from the r6 probe: the old left-fold
-    evaluated ``A or B and C`` as ``(A or B) and C``)."""
+    parenthesized grouping: ``A or B and C`` is ``A or (B and C)``."""
     body = body.strip()
     pos = 0
     tokens: list = []  # Columns and 'and'/'or'/'('/')'
@@ -852,7 +836,7 @@ def _parse_predicate(df: DataFrame, body: str) -> Column:
         comparisons, in source order. (``not exists`` never reaches
         here — _EXISTS_RX consumes its ``not``.) Any OTHER text in a
         gap is a parse error — silently skipping it turned
-        half-matched literals into wrong filters (r6 probe)."""
+        half-matched literals into wrong filters."""
         residue = re.sub(r"\(|\)|\band\b|\bor\b|\bnot\b|\s+", "", gap)
         if residue:
             raise FluxError(
@@ -887,10 +871,8 @@ def _parse_predicate(df: DataFrame, body: str) -> Column:
         name = m.group(1) or m.group(2)
         op, lit = m.group(3), m.group(4)
         c = _col(df, name)
-        # kind bookkeeping for the cross-type comparison rules (r14
-        # fuzz: `r._value == "ok"` on a bool series ANSI-crashed; a
-        # numeric ordering on a string series silently compared the
-        # dead float slot). Stock Flux: EQUALITY across types is legal
+        # kind bookkeeping for the cross-type comparison rules. Stock
+        # Flux: EQUALITY across types is legal
         # and false; ORDERING comparisons type-conflict; regex matches
         # strings only. `bound` is the physical column the comparison
         # reads (None = derived/unknown → rules don't apply).
@@ -938,13 +920,12 @@ def _parse_predicate(df: DataFrame, body: str) -> Column:
             real = real0
             if real == "f_float" and "f_str" in df.columns:
                 # _value compared to a STRING literal: bind the string
-                # slot (r10 — the f_float binding cast "ok" to double
-                # under ANSI and crashed; stock Flux's _value is typed
-                # per table and a string table compares strings)
+                # slot (stock Flux's _value is typed per table and a
+                # string table compares strings)
                 c, bound_kind = F.col("f_str"), "string"
             elif (real.startswith("f_float_")
                     and "f_str" + real[7:] in df.columns):
-                # join-suffixed _value_<side> vs string literal (r13)
+                # join-suffixed _value_<side> vs string literal
                 c, bound_kind = F.col("f_str" + real[7:]), "string"
         elif lit in ("true", "false"):
             val = lit == "true"
@@ -980,11 +961,10 @@ def _parse_predicate(df: DataFrame, body: str) -> Column:
             if name == "_value" or COLMAP.get(name) == "f_float":
                 val = float(val)
             lit_kind = "int" if isinstance(val, int) else "float"
-        # cross-type comparison rules (stock Flux, r14 fuzz): a
-        # comparison whose operand types conflict is a runtime "type
-        # conflict" error when evaluated (`r._value == "ok"` on a bool
-        # series ANSI-crashed instead; numeric orderings on string
-        # series silently compared the dead float slot). Applied only
+        # cross-type comparison rules (stock Flux): a comparison whose
+        # operand types conflict is a runtime "type conflict" error
+        # when evaluated, never an ANSI cast failure or a read of the
+        # dead float slot. Applied only
         # when the bound column's kind is KNOWABLE: single-typed
         # frames (live-slot resolution above) and tag accesses. Mixed
         # frames keep the documented lenient slot binding — stock
@@ -1087,7 +1067,7 @@ def _unescape_flux_str(s: str) -> str:
 
 
 def _bit_shift(kind: str, a: Column, b: Column) -> Column:
-    """bitwise shift with Go/Flux >= 64 semantics (r10 ADVICE): the
+    """bitwise shift with Go/Flux >= 64 semantics: the
     JVM masks the count mod 64 (shiftleft(a, 64) == a), Go shifts out
     to 0 (or sign-fill for the arithmetic right shift)."""
     a64, bi = a.cast("long"), b.cast("int")
@@ -1115,12 +1095,10 @@ def _lit(v: str):
 
 
 def _int_lit(v: str) -> int:
-    """A stage argument that must be a Flux int literal — typed
-    rejection instead of a raw ValueError leak (r14: the blanket
-    ValueError→FluxError conversion is gone, so every user-input
-    parse must raise the typed error itself). Typed means TYPED (r15
-    ADVICE): ``limit(n: true)`` / ``limit(n: 1.5)`` coerced through
-    Python int() to n=1 where stock type-errors them."""
+    """A stage argument that must be a Flux int literal — a typed
+    FluxError otherwise (every user-input parse raises the typed error
+    itself). ``limit(n: true)`` / ``limit(n: 1.5)`` are type errors in
+    stock, not n=1."""
     parsed = _lit(v)
     if not isinstance(parsed, int) or isinstance(parsed, bool):
         raise FluxError(
@@ -1131,7 +1109,7 @@ def _int_lit(v: str) -> int:
 
 def _float_lit(v: str) -> float:
     """A stage argument that must be a Flux float (or int) literal —
-    bools and strings are typed errors, not 1.0 coercions (r15)."""
+    bools and strings are typed errors, not 1.0 coercions."""
     parsed = _lit(v)
     if not isinstance(parsed, (int, float)) or isinstance(parsed, bool):
         raise FluxError(
@@ -1186,41 +1164,6 @@ def _location_value(expr: str) -> str:
     raise FluxError(f"unsupported location value {expr!r}")
 
 
-AGG_STAGES = {"count", "sum", "mean", "median", "mode", "stddev", "spread", "skew"}
-
-#: stages whose INPUT must be numeric in stock Flux — over a
-#: string/bool series they raise the typed "unsupported input type"
-#: error instead of computing NULLs from the float slot (r11)
-#: stages that cannot change any surviving row's ftype — their output
-#: inherits the input's resolved live-slot set (see the propagation
-#: block at the stage-loop tail). Deliberately absent: map /
-#: conversions / set (they retype and seed their own cache entry),
-#: aggregates & windows (new shape, handled at their branch), union /
-#: join / pivot (new frames).
-_FTYPE_KEEP_STAGES = {
-    "range", "filter", "hourSelection", "keep", "drop", "rename", "sort",
-    "limit", "tail", "group", "window", "timeShift",
-    "truncateTimeColumn", "first", "last", "min", "max", "top", "bottom",
-    "sample", "unique", "fill", "elapsed", "stateCount", "stateDuration",
-    "monitor.check", "monitor.stateChanges",
-}
-#: the subset of the above that can remove rows — and with them, whole
-#: typed tables — so their propagated live set is only a SUPERSET
-#: (selectors keep ≥1 row per non-empty group, so they stay exact)
-_ROW_REMOVING_STAGES = {
-    "range", "filter", "hourSelection", "unique", "sample", "limit",
-    "tail", "elapsed", "monitor.stateChanges",
-}
-
-_NUMERIC_INPUT_STAGES = {
-    "quantile", "integral", "histogram", "histogramQuantile",
-    "derivative", "difference", "increase", "cumulativeSum",
-    "movingAverage", "timedMovingAverage",
-    "exponentialMovingAverage", "doubleEMA", "tripleEMA",
-    "kaufmansAMA", "kaufmansER", "chandeMomentumOscillator",
-    "relativeStrengthIndex", "holtWinters",
-}
-
 _ARITH_TOKEN_RX = re.compile(
     r'r\.\w+|r\["[^"]+"\]'
     r"|\d+(?:ns|us|ms|mo|[smhdwy])\b"  # duration literal (before numbers)
@@ -1228,8 +1171,7 @@ _ARITH_TOKEN_RX = re.compile(
     r'|"(?:[^"\\]|\\.)*"'
     r"|(?:strings|math|date)\.\w+|\b(?:float|int|uint|string)\b|\w+:|[(),+\-*/%]"
     # any other identifier (unknown function name, bare word): tokenized
-    # so the parser can raise a typed FluxError instead of the raw
-    # ValueError the old silently-skipped form produced (r6 probe)
+    # so the parser can raise a typed FluxError, not skip it silently
     r"|[A-Za-z_][A-Za-z0-9_.]*"
 )
 
@@ -1399,8 +1341,7 @@ def _geo_st_fn(df: DataFrame, fn: str, argstr: str) -> Column:
     try:
         radius_km = _float_lit(args["distance"])
     except (TypeError, ValueError):
-        # a column reference or non-numeric literal (r10 ADVICE: the
-        # bare float() raised an untyped ValueError for direct callers)
+        # a column reference or non-numeric literal
         raise FluxError(
             "geo.ST_DWithin distance: must be a numeric literal"
         ) from None
@@ -1434,7 +1375,7 @@ def _parse_map_value(df: DataFrame, s: str) -> Column:
         )
     # boolean-valued map field (`hot: r._value > 10.0`, the Flux
     # threshold-flag idiom) — a comparison operator routes the whole
-    # expression through the predicate parser (r6)
+    # expression through the predicate parser
     if re.search(r"==|!=|>=|<=|[<>]|=~|!~|\bexists\b", s):
         return _parse_predicate(df, s)
     return _parse_arith(df, s)
@@ -1459,7 +1400,7 @@ def _parse_arith(df: DataFrame, s: str) -> Column:
     """Arithmetic over row fields for ``map()``: ``r.col``/``r["col"]``,
     numeric/string literals, ``+ - * / %`` and parens — compiled to a
     Column expression (JVM-side, no UDF). ``+`` with a string operand
-    is Flux string concatenation (r6) — operand string-ness is inferred
+    is Flux string concatenation — operand string-ness is inferred
     from the frame schema / literal form / function table."""
     tokens = _ARITH_TOKEN_RX.findall(s)
     if not tokens:
@@ -1521,14 +1462,12 @@ def _parse_arith(df: DataFrame, s: str) -> Column:
             if name in dtypes:
                 if name == "f_float":
                     # r._value on a string/bool-typed frame means that
-                    # slot (r11: strings.toUpper(v: r._value) read
-                    # f_float and returned NULL; same r10 class as
-                    # the comparison binding)
+                    # slot, as in the comparison binding
                     resolved = _value_slot_runtime(df, name)
                     if (resolved == "f_float"
                             and any(s in dtypes for s in ("f_str", "f_bool"))
                             and len(_live_slots(df)) > 1):
-                        # MIXED frame (r13 probe): an arithmetic read
+                        # MIXED frame: an arithmetic read
                         # of _value cannot bind one slot — stock map
                         # evaluates per table and the op type-errors
                         # the mismatched table, failing the query
@@ -1546,7 +1485,7 @@ def _parse_arith(df: DataFrame, s: str) -> Column:
                     name = resolved
                 elif name.startswith("f_float_"):
                     # join-suffixed _value_<side>: bind the side's own
-                    # live slot (r13 probe — string sides read NULLs)
+                    # live slot
                     name = _suffixed_live_slot(df, name)
                 kind = ("str" if dtypes[name] == "string"
                         else "bool" if dtypes[name] == "boolean" else "num")
@@ -1571,8 +1510,8 @@ def _parse_arith(df: DataFrame, s: str) -> Column:
     def _reject_nonnum(op: str, lk: str, rk: str) -> None:
         # stock map() type-errors arithmetic over string/bool operands
         # ("unsupported binary expression string * float"); the slot
-        # binding previously compiled it and crashed with an ANSI cast
-        # at collect time (r14 fuzzer — homogeneous string frame)
+        # binding would compile it and fail with an ANSI cast at
+        # collect time
         if lk != "num" or rk != "num":
             raise FluxError(
                 "unsupported binary expression "
@@ -1595,7 +1534,7 @@ def _parse_arith(df: DataFrame, s: str) -> Column:
             op = eat()
             r, r_kind = term()
             if op == "+" and "str" in (kind, r_kind):
-                # Flux string concatenation (r6). Lenient divergence:
+                # Flux string concatenation. Lenient divergence:
                 # stock only concats string + string; number operands
                 # are stringified here rather than rejected
                 e, kind = F.concat(e.cast("string"), r.cast("string")), "str"
@@ -1690,7 +1629,7 @@ _MINMAX_FOLD_RX = re.compile(
 )
 
 
-def _reduce_stage(df: DataFrame, args: dict[str, str], pipe) -> DataFrame:
+def _reduce_stage(pipe, df, args, call):
     """Flux ``reduce(fn: (r, accumulator) => ({...}), identity: {...})``.
 
     Fast path: every accumulator field whose update is ``acc + f(r)``
@@ -1749,12 +1688,11 @@ def _reduce_stage(df: DataFrame, args: dict[str, str], pipe) -> DataFrame:
         terms[k] = (identity[k], inc, "sum")
 
     if terms is not None:
-        return _fold.linear_fold(df, by, terms)
+        return pipe._with(_fold.linear_fold(df, by, terms))
 
     # general sequential fold (pandas_fold). r._value resolves to
-    # the frame's LIVE slot (r11: a string-building reduce over a
-    # string series read f_float and crashed the Python fold with
-    # str+float); float-only frames keep the plan-time binding.
+    # the frame's LIVE slot, so a string-building reduce over a string
+    # series reads strings; float-only frames keep the plan-time binding.
     vslot = (_value_slot_runtime(df, "f_float")
              if "f_float" in df.columns else "f_float")
 
@@ -1780,7 +1718,8 @@ def _reduce_stage(df: DataFrame, args: dict[str, str], pipe) -> DataFrame:
            for n in re.findall(r'r\["([^"]+)"\]', src) if _resolve(n) in df.columns}
     )
     pruned = df.select(*dict.fromkeys(needed))
-    return _fold.pandas_fold(pruned, by, pipe.order, identity, step)
+    return pipe._with(
+        _fold.pandas_fold(pruned, by, pipe.order, identity, step))
 
 
 def _split_statements(q: str) -> list[str]:
@@ -1849,8 +1788,8 @@ def _split_toplevel_records(s: str) -> list[str]:
 
 def _record_refs(s: str) -> list[tuple[str, str]]:
     """``{k1: v1, k2: v2}`` → [(k1, v1), ...] (identifier values).
-    Quote/depth-aware via the shared top-level scanner (r10 ADVICE: a
-    quoted value containing a comma used to mis-split on it)."""
+    Quote/depth-aware via the shared top-level scanner: a quoted value
+    may contain a comma."""
     inner = s.strip()
     if inner.startswith("{") and inner.endswith("}"):
         inner = inner[1:-1]
@@ -1995,8 +1934,7 @@ def _remove_tags_from_key(df: DataFrame, names: list[str]) -> DataFrame:
     """Stock keep()/drop() regroup semantics for the tags-map model:
     removing a tag key must merge series that differ only in it, so
     BOTH the tags map and the serialized series_key are rewritten to
-    exclude ``names`` (r8: dropping a tag previously left series_key
-    intact and per-series stages stayed split on the dropped tag)."""
+    exclude ``names``."""
     m = _tags_map_col(df)
     if m is None:
         return df
@@ -2007,9 +1945,8 @@ def _remove_tags_from_key(df: DataFrame, names: list[str]) -> DataFrame:
 
 def _rename_tag_in_key(df: DataFrame, old: str, new: str) -> DataFrame:
     """Stock rename() for a map-resident tag key: rewrite the tags map
-    (and series_key) so the tag keeps grouping under its new name
-    (r8: renaming a tag was a silent no-op — the key wasn't a real
-    column)."""
+    (and series_key) so the tag keeps grouping under its new name (the
+    key is not a real column)."""
     m = _tags_map_col(df)
     if m is None:
         return df
@@ -2024,8 +1961,7 @@ def _series_key_sans_field(df: DataFrame) -> DataFrame:
     ``|``-segment (schema.series_key: measurement|tags|field). Once
     ``_field`` pivots into columns, rows of different fields belong to
     the SAME output series — strip the suffix so the key no longer
-    splits them (r8: fieldsAsCols through the HTTP facade emitted one
-    half-null row per field instead of one merged wide row)."""
+    splits them into one half-null row per field."""
     if "series_key" in df.columns:
         df = df.withColumn(
             "series_key", F.regexp_replace("series_key", r"\|[^|]*$", "")
@@ -2039,9 +1975,8 @@ def _promote_value(pipe, alias: str):
     underlying operators append a named result column instead. Rebind
     that column to ``f_float`` (the ``_value`` mapping) so downstream
     stages — aggregates, ``filter(fn: (r) => r._value …)``, further
-    transforms — see the transformed series, not the raw one (a
-    live-probe r5 divergence: ``derivative() |> mean()`` silently
-    averaged the raw values)."""
+    transforms — see the transformed series, not the raw one
+    (``derivative() |> mean()`` averages the derivative)."""
     df2 = pipe.df.drop("f_float").withColumnRenamed(alias, "f_float")
     return pipe._with(df2)
 
@@ -2144,8 +2079,6 @@ def _http_post_stmt(argstr: str) -> int:
                 'http.post data: must be a string or bytes(v: "...") literal'
             )
         # single-pass unescape of the standard Flux string escapes
-        # (r10 ADVICE: sequential str.replace turned the 2-char source
-        # sequence \\n into a newline and left \t and \\ unconverted)
         body = _unescape_flux_str(_lit(raw)).encode()
     transport = HTTP_POST_TRANSPORT or _default_http_transport
     return int(transport(url, headers, body))
@@ -2168,8 +2101,7 @@ def _execute_flux_script(
     # Options are HOISTED script-wide (Flux semantics): an `option`
     # statement takes effect for every query in the script regardless
     # of where it appears, so pre-scan all statements before running
-    # any pipeline (ADVICE r7 — positional options skewed windows for
-    # queries placed before the option line). Last assignment wins.
+    # any pipeline. Last assignment wins.
     statements = []
     for stmt in _split_statements(query):
         om = re.match(
@@ -2210,10 +2142,10 @@ def _execute_flux_script(
             # plan-time argument validation deep in the operator layer
             # (duration units, calendar window constraints, ...) is
             # USER-INPUT rejection — surface it as the typed error
-            # every frontend consumer handles (r13 fuzzer: raw
-            # ValueErrors leaked for `every: 1mo10d` and period/every
-            # calendar mismatches). ONLY the dedicated validation type
-            # converts (r14 ADVICE #1): a plain ValueError escaping
+            # every frontend consumer handles (e.g. `every: 1mo10d`,
+            # period/every calendar mismatches). ONLY the dedicated
+            # validation type
+            # converts: a plain ValueError escaping
             # here is an engine bug and surfaces as one.
             raise FluxError(str(e)) from None
         if name:
@@ -2254,7 +2186,7 @@ def _source_stage(
         # across from_points' unify projection — the session's
         # catalog-known type set rides the whole pipe via the
         # stage-loop propagation, so catalog-known buckets never pay
-        # a plan-time ftype probe on the hot consumers (r13)
+        # a plan-time ftype probe on the hot consumers
         _carry_slot_cache(points, p.df)
         return p
     if name == "sql.from":
@@ -2276,7 +2208,7 @@ def _source_stage(
     if name == "csv.from":
         if "csv" in args:
             # csv.from(csv: "...") — inline ANNOTATED CSV text (the
-            # Flux stdlib's other form; r6). The literal keeps \n
+            # Flux stdlib's other form). The literal keeps \n
             # escapes from the script text.
             from .annotated_csv import from_annotated_csv
 
@@ -2310,7 +2242,7 @@ def _source_stage(
         acc = pipes[0]
         for p in pipes[1:]:
             acc = acc.union(p)
-        # live-slot seeding (r13): union is THE mixed-frame producer —
+        # live-slot seeding: union is THE mixed-frame producer —
         # when every branch carries a cache entry (catalog seed +
         # stage propagation), the merged set seeds the output so the
         # first slot consumer after union() skips its probe. Exact
@@ -2331,7 +2263,7 @@ def _source_stage(
             (_LIVE_SLOT_CACHE if exact else _LIVE_SLOT_SUPERSET)[acc.df] = merged
         # catalog class maps merge per (measurement, field) — set-union
         # of classes, so conflicting pins across buckets keep BOTH
-        # classes and can never prove a false "no collision" (r14);
+        # classes and can never prove a false "no collision";
         # any branch without a map leaves the union unseeded
         cats = [_CATALOG_CLASS_CACHE.get(p.df) for p in pipes]
         if all(c is not None for c in cats):
@@ -2353,7 +2285,7 @@ def _source_stage(
         on = [COLMAP.get(c, c) for c in _strlist(args["on"])]
         # typed error, not AnalysisException, when a join key is gone
         # (e.g. on: ["_time"] after an aggregate dropped the time
-        # column — r6 fuzzer class)
+        # column)
         for c, flux_name in zip(on, _strlist(args["on"])):
             for side, p in ((lk, left), (rk, right)):
                 if c not in p.df.columns:
@@ -2457,8 +2389,8 @@ def _join_package(kind: str, args: dict, env: dict) -> Pipeline:
             side = mo.group(1)
             nm = mo.group(2) or mo.group(3)
             frame = left.df if side == "l" else right.df
-            # l._value on a string/bool side binds ITS live slot (r13,
-            # the join-pkg twin of the suffixed-binding fix)
+            # l._value on a string/bool side binds ITS live slot, as
+            # the join-suffixed binding does
             real = _value_slot_runtime(frame, _colname(frame, nm))
             return f'r["{side}_{real}"]'
 
@@ -2498,6 +2430,47 @@ def _join_package(kind: str, args: dict, env: dict) -> Pipeline:
                                                     right.range_bounds))
 
 
+@dataclasses.dataclass(frozen=True)
+class Stage:
+    """One Flux pipeline function: its handler and the properties the
+    stage loop acts on. ``run(pipe, df, args, call)`` builds the stage
+    (``df`` is ``pipe.df``) and returns the new Pipeline.
+
+    - ``time_ordered``: orders on ``_time``. A frame that kept only the
+      visible ``_time`` gets its ``time_ns`` twin back; a frame with no
+      time axis (e.g. after a bare aggregate) is a typed error.
+    - ``value_input``: transforms the ``_value`` series; a frame with no
+      resolvable value column (e.g. after pivot) is a typed error.
+    - ``numeric_input``: stock Flux rejects string/bool input with
+      "unsupported input type", instead of computing NULLs from the
+      float slot.
+    - ``keeps_ftype``: cannot change a surviving row's ftype, so the
+      output inherits the input's live-slot and catalog cache entries
+      and an N-stage mixed script probes at most once.
+    - ``removes_rows``: may drop whole typed tables, so the inherited
+      live set is only a superset (see ``_LIVE_SLOT_SUPERSET``).
+    """
+
+    run: Callable
+    time_ordered: bool = False
+    value_input: bool = False
+    numeric_input: bool = False
+    keeps_ftype: bool = False
+    removes_rows: bool = False
+
+
+class _Call(NamedTuple):
+    """What a stage handler reads besides its pipe and arguments."""
+
+    name: str
+    argstr: str
+    now_ns: int
+    location: str
+    sink: Callable | None
+    yields: dict | None
+    src: DataFrame  # the stage's input, before the prechecks
+
+
 def _run_pipeline(
     points: DataFrame,
     body: str,
@@ -2512,1524 +2485,1186 @@ def _run_pipeline(
     if not stages:
         raise FluxError("empty pipeline")
     pipe = _source_stage(points, stages[0], group_key, env)
-
-    #: stages whose semantics order on _time — a typed error when the
-    #: frame lost its time axis (e.g. after a bare aggregate), instead
-    #: of an AnalysisException from deep inside the operator
-    _TIME_ORDERED = {
-        "derivative", "difference", "increase", "cumulativeSum", "elapsed",
-        "movingAverage", "timedMovingAverage", "exponentialMovingAverage",
-        "timeShift", "truncateTimeColumn", "interpolate.linear",
-        "hourSelection", "timeWeightedAvg", "holtWinters", "stateCount",
-        "stateDuration", "integral",
-    }
-    #: stages that transform the default _value series — typed error
-    #: when the frame has no resolvable value column (e.g. after pivot)
-    _VALUE_STAGES = {
-        "derivative", "difference", "increase", "cumulativeSum",
-        "movingAverage", "timedMovingAverage", "exponentialMovingAverage",
-        "doubleEMA", "tripleEMA", "kaufmansER", "kaufmansAMA",
-        "chandeMomentumOscillator", "relativeStrengthIndex", "trix",
-        "holtWinters", "timeWeightedAvg", "integral",
-    }
-
     for stage in stages[1:]:
         name, argstr = _parse_stage(stage)
-        args = _split_args(argstr) if argstr else {}
-        # missing/mis-spelled required arguments (e.g. `top(n. 2)`)
-        # surface as KeyError('n') deep in a stage — make every such
-        # access a typed error without annotating each one (r6 fuzzer)
-        args = _StageArgs(name, args)
-        df = pipe.df
-        _df_in = df  # cache-propagation anchor (see loop tail)
-        if name in _TIME_ORDERED or name in (
-            "window", "aggregateWindow", "first", "last", "events.duration"
-        ):
-            if "time_ns" not in df.columns and "time" in df.columns:
-                # a projection kept only the visible _time column —
-                # re-derive its integer twin (µs precision, the visible
-                # column's own) so time-ordered stages keep working
-                pipe = pipe._with(
-                    df.withColumn("time_ns", F.expr("unix_micros(time) * 1000")),
-                    order=pipe.order if pipe.order else ("time_ns",),
-                )
-                df = pipe.df
-            if name in _TIME_ORDERED and "time_ns" not in df.columns:
-                raise FluxError(f"{name}() requires a _time column")
-        if name in _VALUE_STAGES and _colname(df, "_value") not in df.columns:
-            raise FluxError(f"{name}() has no value column to transform")
-        if name in _NUMERIC_INPUT_STAGES:
-            # numeric-input stages over a string/bool series are typed
-            # errors in stock Flux ("unsupported input type for
-            # derivative: string") — previously they computed NULLs
-            # from the float slot (r11, same class as the mean() fix).
-            # The resolved column is passed so the Spark-dtype check
-            # also covers type-preserving window results carried in
-            # f_str/f_bool (r13)
-            _reject_non_numeric_agg(df, _colname(df, "_value"), name)
-        if name == "range":
-            # start: is required in Flux — a mis-spelled key must not
-            # silently skip the time filter (r6 source-arg hardening)
-            if "start" not in args:
-                args["start"]  # raises the typed missing-argument error
-            start = _time_to_ns(args["start"], now_ns) if "start" in args else None
-            stop = _time_to_ns(args["stop"], now_ns) if "stop" in args else None
-            from ..operators.core import push_time_filter
-
-            # bounds ride the Pipeline (not a _run_pipeline local) so
-            # they survive variable bindings and union()/join() — r14,
-            # the r13 verdict's lead divergence: `base = from |>
-            # range(...)` … `base |> aggregateWindow(createEmpty:
-            # true)` raised "requires a bounded range()" where stock
-            # spines from the stream's _start/_stop
-            pipe = pipe._with(push_time_filter(df, start, stop),
-                              range_bounds=(start, stop))
-        elif name == "filter":
-            # args["fn"] (not raw argstr) so sibling args like
-            # onEmpty: don't leak into the predicate text
-            fn_src = args["fn"] if "fn" in args else argstr
-            pred_src = fn_src.partition("=>")[2].strip()
-            gm = _GEO_ST_RX.match(pred_src)
-            if gm and gm.group(1) in ("ST_Contains", "ST_DWithin"):
-                # boolean geo predicate as the whole filter body (the
-                # geofencing idiom) — ST_Distance needs a comparison,
-                # which belongs in map() + a plain filter
-                pipe = pipe.filter(_geo_st_fn(df, gm.group(1), gm.group(2)))
-            else:
-                pipe = pipe.filter(_parse_predicate(df, pred_src))
-                # measurement/field equality filters narrow the
-                # catalog pins and the live-slot superset (r14) —
-                # a single-class measurement in a multi-class bucket
-                # keeps zero-probe plans downstream
-                _narrow_catalog_on_filter(df, pipe.df, pred_src)
-        elif name == "group":
-            cols = [COLMAP.get(c, c) for c in _strlist(args.get("columns", "[]"))]
-            mode = _lit(args.get("mode", '"by"'))
-            if mode == "by":
-                for c in cols:
-                    if c in df.columns:
-                        continue
-                    if "tags" in df.columns:
-                        # un-promoted tag: materialize it from the map
-                        pipe = pipe._with(df.withColumn(c, F.col("tags")[c]))
-                        df = pipe.df
-                    else:
-                        raise FluxError(
-                            f"group(columns:) references unknown column {c!r}"
-                        )
-            pipe = pipe.group(cols, mode=mode)
-        elif name == "window":
-            if "time_ns" not in df.columns:
-                raise FluxError("window() requires a _time column")
-            pipe = pipe.window(
-                args["every"],
-                period=args.get("period"),
-                offset=args.get("offset", "0"),
-                tz=_location_value(args["location"]) if "location" in args
-                else location,
-            )
-        elif name == "aggregateWindow":
-            if "time_ns" not in df.columns:
-                raise FluxError("aggregateWindow() requires a _time column")
-            from ..operators.aggregates import AGG_FNS
-
-            # createEmpty spines need bounds: stock's range() defaults
-            # its stop to now(), so an open-ended range(start:) spines
-            # to the query's now (r13 fuzzer — the raw AssertionError
-            # leaked); no range at all is the typed error
-            aw_bounds = list(pipe.range_bounds)
-            if _lit(args.get("createEmpty", "false")) is True:
-                if aw_bounds[0] is None:
-                    raise FluxError(
-                        "aggregateWindow(createEmpty: true) requires a "
-                        "bounded range()"
-                    )
-                if aw_bounds[1] is None:
-                    aw_bounds[1] = now_ns
-            fnarg = args.get("fn", "mean").strip()
-            # table-function form: fn: (tables=<-) => tables |> <stage>(...)
-            lm = re.match(
-                r"^\(\s*tables\s*=\s*<-\s*\)\s*=>\s*tables\s*\|>\s*"
-                r"([\w.]+)\s*\((.*)\)\s*$",
-                fnarg, re.DOTALL,
-            )
-            if lm and lm.group(1) in AGG_FNS and not lm.group(2).strip():
-                fnarg, lm = lm.group(1), None  # e.g. tables |> mean()
-            if lm:
-                iname = lm.group(1)
-                iargs = _split_args(lm.group(2)) if lm.group(2).strip() else {}
-                if iname != "quantile":
-                    raise FluxError(
-                        f"aggregateWindow fn: tables |> {iname}() is not "
-                        "supported (named aggregates and quantile are)"
-                    )
-                from ..operators.aggregates import quantile as _qtl
-                from ..operators.windows import aggregate_window_custom
-
-                qv = _float_lit(iargs["q"])
-                meth = _lit(iargs.get("method", '"estimate_tdigest"'))
-                vcol = _colname(df, "_value")
-                # aggregateWindow re-windows: drop stale bounds from an
-                # earlier window() so its own _start_ns/_stop_ns replace
-                # them (mirrors Pipeline.aggregate_window's key reset)
-                by = tuple(
-                    k for k in pipe.group_key if k not in ("_start_ns", "_stop_ns")
-                )
-                out = aggregate_window_custom(
-                    df, args["every"],
-                    lambda d, keys: _qtl(
-                        d, qv, method=meth, column=vcol, by=keys,
-                        alias="_value_agg",
-                    ),
-                    by=by,
-                    create_empty=_lit(args.get("createEmpty", "false")) is True,
-                    range_start=aw_bounds[0],
-                    range_stop=aw_bounds[1],
-                    offset=args.get("offset", "0"),
-                    time_src=_aw_time_src(args),
-                    tz=_location_value(args["location"])
-                    if "location" in args else location,
-                )
-                pipe = pipe._with(out, group_key=by).rename(
-                    {"_value_agg": "f_float"}
-                )
-            else:
-                vcol = _colname(df, _lit(args.get("column", '"_value"')))
-                slots = None
-                had_ftype = "ftype" in df.columns
-                if fnarg in ("first", "last", "count", "mode",
-                             "min", "max"):
-                    # type-generic window fns read the live slot (r10:
-                    # aggregateWindow(fn: last) on a string field
-                    # returned NULLs). min/max are SELECTORS — stock
-                    # Flux compares any orderable type inside
-                    # aggregateWindow exactly as bare min()/max() do
-                    # (r11 ADVICE: routing them through the numeric
-                    # reject made the windowed and bare paths
-                    # inconsistent)
-                    if (vcol == "f_float" and had_ftype
-                            and len(_slot_cols(df)) > 1):
-                        # superset-tolerant: both mixed paths below
-                        # are correct when a stale superset overstates
-                        # the mix (dead slots aggregate to NULL), so
-                        # no exact probe is forced here (r13)
-                        live = _live_slots(df, exact=False)
-                        if len(live) > 1:
-                            _reject_group_schema_collision(
-                                df, pipe.group_key, name)
-                        if len(live) == 1:
-                            vcol = live[0]
-                        elif fnarg == "count":
-                            # MIXED frame: count coalesced presence,
-                            # the windowed twin of the bare count()
-                            # fix (r12)
-                            df = df.withColumn("_vpresent", F.coalesce(*[
-                                F.col(s).cast("string")
-                                for s in _slot_cols(df)
-                            ]))
-                            pipe = pipe._with(df)
-                            vcol = "_vpresent"
-                        else:
-                            # MIXED frame (r13): aggregate every slot —
-                            # each (series, window) group is single-
-                            # typed, so the slot shape preserves every
-                            # table's values; the single-column path
-                            # silently nulled non-float groups
-                            slots = _slot_cols(df)
-                else:
-                    # numeric window fns over string/bool series are a
-                    # typed error in stock Flux (r11)
-                    _reject_non_numeric_agg(df, vcol, fnarg)
-                if slots is None and vcol not in df.columns:
-                    raise FluxError(
-                        f"aggregateWindow() has no value column {vcol!r} "
-                        "to aggregate"
-                    )
-                pipe = pipe.aggregate_window(
-                    args["every"],
-                    fnarg,
-                    column=vcol,
-                    create_empty=_lit(args.get("createEmpty", "false")) is True,
-                    range_start=aw_bounds[0],
-                    range_stop=aw_bounds[1],
-                    alias="_value_agg",
-                    offset=args.get("offset", "0"),
-                    time_src=_aw_time_src(args),
-                    tz=_location_value(args["location"])
-                    if "location" in args else location,
-                    slots=slots,
-                )
-                if slots is None:
-                    # land the result in its SOURCE slot and restamp
-                    # the discriminator (r13): the old unconditional
-                    # rename into f_float erased the type evidence — a
-                    # string window result then leaked a raw executor
-                    # cast error from a downstream mean() instead of
-                    # stock's typed error
-                    dest = (vcol if vcol in ("f_str", "f_bool")
-                            and fnarg != "count" else "f_float")
-                    pipe = pipe.rename({"_value_agg": dest})
-                    if had_ftype:
-                        ft = {"f_str": "string",
-                              "f_bool": "bool"}.get(dest, "float")
-                        pipe = pipe._with(
-                            pipe.df.withColumn("ftype", F.lit(ft)))
-                        _LIVE_SLOT_CACHE[pipe.df] = [dest]
-                else:
-                    # windowing preserves each group's type: the
-                    # output's live set is the input's, at the
-                    # input's confidence (cached — free)
-                    cache = (_LIVE_SLOT_CACHE if df in _LIVE_SLOT_CACHE
-                             else _LIVE_SLOT_SUPERSET)
-                    cache[pipe.df] = _live_slots(df, exact=False)
-        elif name in AGG_STAGES:
-            col = _colname(df, _lit(args.get("column", '"_value"')))
-            if name in ("count", "mode"):
-                # type-generic aggregates read the frame's live slot —
-                # count() of a string field counted f_float NULLs as 0
-                # (r10); numeric aggregates keep the float binding.
-                # The mixed check runs BEFORE single-slot resolution so
-                # a stale superset never forces an exact probe here —
-                # both mixed paths are superset-safe (r13)
-                mixed_agg = (col == "f_float"
-                             and len(_slot_cols(df)) > 1
-                             and len(_live_slots(df, exact=False)) > 1)
-                if mixed_agg:
-                    _reject_group_schema_collision(df, pipe.group_key, name)
-                if not mixed_agg:
-                    col = _value_slot_runtime(df, col)
-                if name == "count" and mixed_agg:
-                    # MIXED frame (e.g. union of a string and a float
-                    # stream): each row populates exactly one slot, so
-                    # count the coalesced presence — the frame-level
-                    # resolution would count only f_float (r12 probe:
-                    # the string group counted 0)
-                    df = df.withColumn("_vpresent", F.coalesce(*[
-                        F.col(s).cast("string") for s in _slot_cols(df)
-                    ]))
-                    pipe = pipe._with(df)
-                    col = "_vpresent"
-                elif name == "mode" and mixed_agg:
-                    # MIXED frame (r13): mode per slot, slot-shaped
-                    # output — each group is single-typed, so its mode
-                    # lands in its own slot and the dead slots stay
-                    # NULL (the f_float binding answered null for
-                    # every non-float group); the wire facade splits
-                    # the result per ftype like any slot frame
-                    gk = [k for k in pipe.group_key if k in df.columns]
-                    out = df.groupBy(*gk).agg(
-                        *[F.mode(F.col(s)).alias(s)
-                          for s in _slot_cols(df)],
-                        F.first("ftype", ignorenulls=True).alias("ftype"),
-                    )
-                    # propagate at the input's confidence: a SUPERSET
-                    # entry (post-filter) must not masquerade as exact
-                    cache = (_LIVE_SLOT_CACHE if df in _LIVE_SLOT_CACHE
-                             else _LIVE_SLOT_SUPERSET)
-                    cache[out] = _live_slots(df, exact=False)
-                    pipe = pipe._with(out)
-                    continue
-            else:
-                # numeric-only aggregate over a string/bool series is a
-                # TYPED error in stock Flux ("unsupported input type
-                # for mean aggregate: string") — r11, the Flux twin of
-                # the v1 empty-series fix; previously a null-mean row
-                _reject_non_numeric_agg(df, col, name)
-            if col not in df.columns:
-                raise FluxError(f"{name}(column:) references unknown column {col!r}")
-            pipe = pipe.aggregate(name, column=col, alias=name)
-        elif name in ("min", "max"):
-            vcol = _colname(df, _lit(args.get("column", '"_value"')))
-            # selectors pick a ROW by value order — Flux compares any
-            # sortable type, so string/bool series select by their live
-            # slot (lexicographic / false<true), like sort() does (r11)
-            if (vcol == "f_float" and len(_slot_cols(df)) > 1
-                    and len(_live_slots(df, exact=False)) > 1):
-                # MIXED frame (r13): order by the slot TUPLE — inside a
-                # group exactly one slot is non-null, so each group
-                # selects by its own typed extremum (the single-column
-                # order voided string/bool groups into an all-NULL
-                # row). Tuple order is also correct when a stale
-                # SUPERSET overstates the mix — dead slots are
-                # constant NULL, so no probe needed either way.
-                _reject_group_schema_collision(df, pipe.group_key, name)
-                vcol = _slot_cols(df)
-            else:
-                vcol = _value_slot_runtime(df, vcol)
-            if isinstance(vcol, str) and vcol not in df.columns:
-                raise FluxError(f"{name}() has no value column to select on")
-            pipe = pipe.min(vcol) if name == "min" else pipe.max(vcol)
-        elif name in ("first", "last"):
-            if "time_ns" not in df.columns:
-                raise FluxError(f"{name}() requires a _time column")
-            # time-based selectors don't read the value slots, but a
-            # regrouped MIXED table can't materialize in stock either
-            # (the helper is plan-time free on discriminating keys)
-            _reject_group_schema_collision(df, pipe.group_key, name)
-            pipe = pipe.first() if name == "first" else pipe.last()
-        elif name in ("top", "bottom"):
-            tcols = (_strlist(args["columns"]) if "columns" in args else ["_value"])
-            # sort-based selectors compare any orderable type: resolve
-            # the LIVE slot (r12 probe — top/bottom over a string/bool
-            # series ranked the dead all-NULL f_float slot, returning
-            # arbitrary rows instead of the lexicographic extremes)
-            real = _colname(df, tcols[0])
-            if (real == "f_float" and len(_slot_cols(df)) > 1
-                    and len(_live_slots(df, exact=False)) > 1):
-                # MIXED frame (r13): rank by the slot tuple — each
-                # group ranks by its own live slot (bottom(n:1)
-                # previously returned the row the dead float slot
-                # happened to rank first)
-                _reject_group_schema_collision(df, pipe.group_key, name)
-                vcol = _slot_cols(df)
-            else:
-                vcol = _value_slot_runtime(df, real)
-            if isinstance(vcol, str) and vcol not in df.columns:
-                raise FluxError(
-                    f"{name}(columns:) references unknown column {vcol!r}"
-                )
-            n = _int_lit(args["n"])
-            pipe = pipe.top(n, vcol) if name == "top" else pipe.bottom(n, vcol)
-        elif name == "derivative":
-            unit_s = duration_ns(args.get("unit", "1s")) / 1e9
-            pipe = _promote_value(
-                pipe.derivative(
-                    unit_seconds=unit_s,
-                    non_negative=_lit(args.get("nonNegative", "false")) is True,
-                ),
-                "derivative",
-            )
-        elif name == "difference":
-            # full stock signature (r15): nonNegative / keepFirst /
-            # initialZero / columns. Each listed column is replaced
-            # in place (columns: ["_value"] → the f_float slot, i.e.
-            # the _promote_value contract for free); the first-row
-            # drop happens ONCE per table, after all columns.
-            from ..operators import difference as _difference
-
-            kf = _lit(args.get("keepFirst", "false")) is True
-            iz = _lit(args.get("initialZero", "false")) is True
-            nn = _lit(args.get("nonNegative", "false")) is True
-            cols = _strlist(args.get("columns", '["_value"]'))
-            order = list(pipe.order) or ["time_ns"]
-            out = df
-            for c in cols:
-                real = _colname(out, c)
-                if real not in out.columns:
-                    raise FluxError(
-                        f"difference(columns:) references unknown "
-                        f"column {c!r}"
-                    )
-                out = _difference(
-                    out, nn, real, by=pipe.group_key, order=order,
-                    alias=real, keep_first=True, initial_zero=iz,
-                )
-            if not kf:
-                from pyspark.sql import Window as _W
-
-                w = _W.partitionBy(*pipe.group_key).orderBy(*order)
-                out = (
-                    out.withColumn(
-                        "_has_prev", F.lag(order[0]).over(w).isNotNull()
-                    )
-                    .filter(F.col("_has_prev"))
-                    .drop("_has_prev")
-                )
-            pipe = pipe._with(out)
-        elif name == "increase":
-            from ..operators import increase
-
-            pipe = _promote_value(
-                pipe._with(increase(df, by=pipe.group_key, order=list(pipe.order))),
-                "increase",
-            )
-        elif name == "cumulativeSum":
-            pipe = _promote_value(pipe.cumulative_sum(), "cumulative_sum")
-        elif name == "elapsed":
-            # Flux elapsed() ADDS the duration column (in unit: counts,
-            # default 1s) and keeps _value; upstream drops each table's
-            # FIRST record (no previous row to diff against) — keeping
-            # it null diverged from the stdlib (r7 probe)
-            from ..operators import elapsed
-
-            unit_s = duration_ns(args.get("unit", "1s")) / 1e9
-            out = elapsed(
-                df, unit_seconds=unit_s, by=pipe.group_key,
-                order=list(pipe.order),
-            )
-            pipe = pipe._with(out.filter(F.col("elapsed").isNotNull()))
-        elif name == "movingAverage":
-            pipe = _promote_value(
-                pipe.moving_average(_int_lit(args["n"])), "moving_average"
-            )
-        elif name == "timedMovingAverage":
-            from ..operators import timed_moving_average
-
-            period_s = int(duration_ns(args["period"]) // 10**9)
-            pipe = _promote_value(
-                pipe._with(timed_moving_average(df, period_s, by=pipe.group_key)),
-                "timed_moving_average",
-            )
-        elif name == "exponentialMovingAverage":
-            pipe = _promote_value(
-                pipe.exponential_moving_average(_int_lit(args["n"])), "ema"
-            )
-        elif name == "fill":
-            # live-slot resolution (r12 probe): fill(value: "na") on a
-            # string series coalesced a string literal into the double
-            # f_float slot — an ANSI cast crash; stock fills the typed
-            # column
-            real = _colname(df, _lit(args.get("column", '"_value"')))
-            mixed = (real == "f_float" and len(_slot_cols(df)) > 1
-                     and len(_live_slots(df, exact=False)) > 1)
-            if mixed:
-                _reject_group_schema_collision(df, pipe.group_key, name)
-            col = real if mixed else _value_slot_runtime(df, real)
-            if not mixed and col not in df.columns:
-                raise FluxError(f"fill(column:) references unknown column {col!r}")
-            if _lit(args.get("usePrevious", "false")) is True:
-                if not pipe.order:
-                    raise FluxError("fill(usePrevious:) needs an ordered frame")
-                if mixed:
-                    # MIXED frame (r13): forward-fill every slot — the
-                    # dead slots of a group are all-NULL, so their
-                    # forward fill stays NULL (no cross-type bleed)
-                    for s in _slot_cols(df):
-                        pipe = pipe.fill(use_previous=True, column=s)
-                else:
-                    pipe = pipe.fill(use_previous=True, column=col)
-            elif mixed:
-                # MIXED frame (r13): the literal's type picks the slot,
-                # and only rows of the MATCHING group type fill — a
-                # float literal stamped into the dead f_float slot of
-                # a string row would surface as data to every
-                # slot-tuple consumer
-                v = _lit(args["value"])
-                if isinstance(v, bool):
-                    slot, types = "f_bool", ("bool",)
-                elif isinstance(v, str):
-                    slot, types = "f_str", ("string",)
-                else:
-                    slot, types = "f_float", ("float", "int", "uint")
-                # the literal's type must be live SOMEWHERE (exact —
-                # a stale superset "mixed" on a truly-uniform frame
-                # must raise the stock type error, not silently no-op;
-                # caught by an order-dependent full-suite run, r13)
-                live_exact = _live_slots(df)
-                if slot not in df.columns or slot not in live_exact:
-                    vt = ("bool" if isinstance(v, bool)
-                          else "string" if isinstance(v, str) else "float")
-                    have = {"f_float": "float", "f_str": "string",
-                            "f_bool": "bool"}
-                    raise FluxError(
-                        f"fill: value type {vt} does not match column "
-                        f"type {have.get(live_exact[0], 'float')}"
-                    )
-                pipe = pipe._with(df.withColumn(
-                    slot,
-                    F.when(F.col("ftype").isin(*types),
-                           F.coalesce(F.col(slot), F.lit(v)))
-                    .otherwise(F.col(slot)),
-                ))
-            else:
-                v = _lit(args["value"])
-                # stock fill type-checks the literal against the
-                # column (r13 fuzzer: fill(value: 0.0) on a bool
-                # series crashed with a raw Spark coalesce type
-                # mismatch; stock raises the typed fill error).
-                # Engine divergence kept: int literals fill float
-                # columns (the float slot IS the int storage).
-                dt = dict(df.dtypes).get(col)
-                vt = ("bool" if isinstance(v, bool)
-                      else "string" if isinstance(v, str)
-                      else "float")
-                ct = {"string": "string", "boolean": "bool"}.get(dt, "float")
-                if dt is not None and vt != ct:
-                    raise FluxError(
-                        f"fill: value type {vt} does not match column "
-                        f"type {ct}"
-                    )
-                pipe = pipe.fill(value=v, column=col)
-        elif name == "sort":
-            # _colname, not raw COLMAP: after an aggregate, _value means
-            # the (single) result column (e.g. `mean`), not f_float;
-            # _value_slot_runtime: on a string/bool-typed frame it means
-            # that slot (r10)
-            cols = []
-            for c in _strlist(args.get("columns", '["_time"]')):
-                real = _colname(df, c)
-                if real == "f_float" and len(_live_slots(df, exact=False)) > 1:
-                    _reject_group_schema_collision(df, pipe.group_key, name)
-                    # MIXED frame: order by the slot TUPLE — inside a
-                    # group only one slot is non-null, so each group
-                    # sorts by its own typed values (the frame-level
-                    # resolution sorted string groups by the all-NULL
-                    # float slot, r12)
-                    cols.extend(s for s in ("f_float", "f_str", "f_bool")
-                                if s in df.columns)
-                else:
-                    cols.append(_value_slot_runtime(df, real))
-            missing = [c for c in cols if c not in df.columns]
-            if missing:
-                # map-resident tag keys: materialize before sorting
-                m = _tags_map_col(df)
-                tag_keys = set(_frame_tag_keys(df)) if m is not None else set()
-                for c in list(missing):
-                    if c in tag_keys:
-                        df = df.withColumn(c, m[c])
-                        missing.remove(c)
-                pipe = pipe._with(df)
-            if missing:
-                raise FluxError(f"sort(columns:) references unknown columns {missing}")
-            pipe = pipe.sort(cols, desc=_lit(args.get("desc", "false")) is True)
-        elif name == "limit":
-            pipe = pipe.limit(_int_lit(args["n"]), _int_lit(args.get("offset", "0")))
-        elif name == "tail":
-            pipe = pipe.tail(_int_lit(args["n"]))
-        elif name in ("keep", "drop"):
-            if "fn" in args:
-                # predicate form: keep/drop(fn: (column) => column <op> lit)
-                # — columns are known at plan time, so evaluate in Python
-                cols = _predicate_columns(df, args["fn"])
-            else:
-                cols = [COLMAP.get(c, c) for c in _strlist(args["columns"])]
-                if "f_float" in cols and (
-                        "f_str" in df.columns or "f_bool" in df.columns):
-                    # keep/drop of _value covers every value slot (+ the
-                    # ftype discriminator on keep, so downstream slot
-                    # resolution and the wire facade still work) — a
-                    # float-only keep silently dropped string/bool
-                    # values (r10)
-                    extra = [s for s in ("f_str", "f_bool")
-                             if s in df.columns]
-                    if name == "keep" and "ftype" in df.columns:
-                        extra.append("ftype")
-                    cols = cols + [c for c in extra if c not in cols]
-            # tag keys live in the tags map / series_key, not as real
-            # columns — keep/drop of a tag must rewrite the series key
-            # (stock regroup) rather than being a no-op projection
-            tag_keys = (
-                _frame_tag_keys(df)
-                if ("tags" in df.columns or "series_key" in df.columns)
-                else []
-            )
-            if name == "drop":
-                # a dropped tag must leave series_key/tags even when it
-                # was materialized as a real column earlier (sort,
-                # distinct, keep — r9 ADVICE fix: series that differ
-                # only in the dropped tag must merge per stock regroup)
-                dropped_tags = [c for c in cols if c in tag_keys]
-                if dropped_tags:
-                    pipe = pipe._with(_remove_tags_from_key(df, dropped_tags))
-                pipe = pipe.drop([c for c in cols if c in pipe.df.columns])
-            else:
-                kept_tags = [
-                    c for c in cols if c in tag_keys and c not in df.columns
-                ]
-                if kept_tags:
-                    # kept tags become real columns and JOIN the group
-                    # key (series_key itself is rarely in the keep list)
-                    tmap = _tags_map_col(df)
-                    for t in kept_tags:
-                        df = df.withColumn(t, tmap[t])
-                    pipe = pipe._with(df)
-                kept_real = [c for c in cols if c in df.columns]
-                pipe = pipe.keep(kept_real)
-                extra_key = tuple(
-                    t for t in kept_tags if t not in pipe.group_key
-                )
-                if extra_key:
-                    pipe = pipe._with(
-                        pipe.df, group_key=(*pipe.group_key, *extra_key)
-                    )
-        elif name == "rename":
-            body = args.get("columns", "{}").strip("{}")
-            mapping = {}
-            for part in body.split(","):
-                if ":" in part:
-                    k, _, v = part.partition(":")
-                    mapping[COLMAP.get(k.strip(), k.strip())] = v.strip().strip('"')
-            if ("f_float" in mapping and "ftype" in df.columns
-                    and any(s in df.columns for s in ("f_str", "f_bool"))):
-                # renaming _value on a slot-typed frame moves the LIVE
-                # slot (r13 probe: the string frame's rename moved the
-                # dead f_float, leaving an all-NULL column under the
-                # new name while the values stayed in f_str). Stock's
-                # rename removes _value from the table, so the other
-                # slots + discriminator drop too. Mixed frames carry
-                # per-table types one physical column can't hold —
-                # documented engine limit, typed error.
-                live = _value_slot_runtime(df, "f_float")
-                if live == "f_float" and len(_live_slots(df)) > 1:
-                    raise FluxError(
-                        "rename: cannot rename _value on a mixed-type "
-                        "frame (tables carry different value types)"
-                    )
-                mapping[live] = mapping.pop("f_float")
-                drop_slots = [s for s in (*_slot_cols(df), "ftype")
-                              if s != live and s in df.columns]
-                if drop_slots:
-                    pipe = pipe._with(df.drop(*drop_slots))
-                    df = pipe.df
-            # map-resident tag keys rename inside the tags map /
-            # series_key (not a real-column rename)
-            tag_renames = {
-                k: v for k, v in mapping.items() if k not in df.columns
-            }
-            if tag_renames and (
-                "tags" in df.columns or "series_key" in df.columns
-            ):
-                keys = set(_frame_tag_keys(df))
-                for k, v in tag_renames.items():
-                    if k in keys:
-                        df = _rename_tag_in_key(df, k, v)
-                        del mapping[k]
-                pipe = pipe._with(df)
-            pipe = pipe.rename(mapping)
-        elif name == "set":
-            # resolve Flux names to engine columns (r12 probe:
-            # set(key: "_measurement", value: "dst") created a NEW
-            # `_measurement` column while the engine's `measurement`
-            # stayed put — a following to() wrote under the OLD
-            # measurement and tripped its type pins)
-            skey = _lit(args["key"])
-            sval = _lit(args["value"])
-            real = _colname(df, skey)
-            if (skey == "_value" and real == "f_float"
-                    and "ftype" in df.columns
-                    and any(s in df.columns for s in ("f_str", "f_bool"))):
-                # set() values are strings (Flux signature): a _value
-                # target on a slot-typed frame retypes the series to
-                # string through the same live-slot write-back map()
-                # uses (r12 ADVICE: the literal previously landed in
-                # the double f_float slot under a stale 'float' ftype)
-                dtypes_m = dict(df.dtypes)
-                out = df
-                for s in ("f_float", "f_bool"):
-                    if s in out.columns:
-                        out = out.withColumn(s, F.lit(None).cast(dtypes_m[s]))
-                out = out.withColumn("f_str", F.lit(sval)).withColumn(
-                    "ftype", F.lit("string"))
-                _LIVE_SLOT_CACHE[out] = ["f_str"]
-                pipe = pipe._with(out)
-            else:
-                pipe = pipe._with(df.withColumn(
-                    real if real in df.columns else skey,
-                    F.lit(sval),
-                ))
-        elif name == "duplicate":
-            # _value on a string/bool-typed frame means that slot (r10)
-            src = _value_slot_runtime(df, _colname(df, _lit(args["column"])))
-            if src not in df.columns:
-                raise FluxError(
-                    f"duplicate(column:) references unknown column {src!r}"
-                )
-            dst = _lit(args["as"])
-            if dst == "_time" and src.endswith("_ns"):
-                # the windowed-agg idiom: duplicate(column: "_stop",
-                # as: "_time") rebinds the window edge as the point
-                # time — refresh BOTH time representations
-                pipe = pipe._with(
-                    df.withColumn("time_ns", F.col(src)).withColumn(
-                        "time", F.timestamp_micros(F.expr(f"{src} div 1000"))
-                    )
-                )
-            elif (dst == "_value" and "ftype" in df.columns
-                    and any(s in df.columns for s in ("f_str", "f_bool"))):
-                # duplicate INTO _value retypes the series to the
-                # source column's type — route through the live-slot
-                # write-back like map()/set() (r13: the bare COLMAP
-                # write put e.g. a tag string into the double f_float
-                # column under a stale ftype)
-                dest, ft = _slot_of_sparktype(df.schema[src].dataType)
-                dtypes_m = dict(df.dtypes)
-                out = df
-                for s in ("f_float", "f_str", "f_bool"):
-                    if s in out.columns and s != dest:
-                        out = out.withColumn(s, F.lit(None).cast(dtypes_m[s]))
-                out = out.withColumn(
-                    dest,
-                    F.col(src).cast("double") if dest == "f_float"
-                    else F.col(src),
-                ).withColumn("ftype", F.lit(ft))
-                _LIVE_SLOT_CACHE[out] = [dest]
-                pipe = pipe._with(out)
-            else:
-                pipe = pipe._with(
-                    df.withColumn(COLMAP.get(dst, dst), F.col(src))
-                )
-        elif name == "pivot":
-            row_key = [COLMAP.get(c, c) for c in _strlist(args["rowKey"])]
-            col_keys = [COLMAP.get(c, c) for c in _strlist(args["columnKey"])]
-            val = _colname(df, _lit(args["valueColumn"]))
-            missing = [c for c in (*row_key, *col_keys, val) if c not in df.columns]
-            if missing:
-                raise FluxError(f"pivot() references unknown columns {missing}")
-            # stock pivot is PER TABLE: the table's group key joins the
-            # user rowKey in the output grouping (r8 — grouping by the
-            # bare rowKey merged rows across series)
-            grouping, _seen = [], set()
-            for c in (*pipe.group_key, *row_key):
-                if (c in df.columns and c not in col_keys and c != val
-                        and c not in _seen):
-                    grouping.append(c)
-                    _seen.add(c)
-            if "field" in col_keys:
-                df = _series_key_sans_field(df)
-            if len(col_keys) > 1:
-                # multi-key pivot: Flux names output columns by joining
-                # the key VALUES with "_" — same effect as pivoting one
-                # concatenated key (r6: extra keys were silently dropped)
-                joined = F.concat_ws("_", *[F.col(c) for c in col_keys])
-                df = df.withColumn("_pivot_key", joined)
-                pipe = pipe._with(df).pivot(grouping, "_pivot_key", val)
-            else:
-                typed = (_typed_field_pivot(df, grouping, val)
-                         if col_keys[0] == "field" else None)
-                if typed is not None:
-                    pipe = pipe._with(
-                        typed,
-                        group_key=tuple(c for c in pipe.group_key
-                                        if c in typed.columns),
-                        order=tuple(c for c in pipe.order
-                                    if c in typed.columns)
-                        or (("time",) if "time" in typed.columns else ()),
-                    )
-                else:
-                    pipe = pipe._with(df).pivot(grouping, col_keys[0], val)
-        elif name == "map":
-            fn_body = argstr.partition("=>")[2].strip()
-            m = re.match(r"^\(?\s*\{(.*)\}\s*\)?$", fn_body, re.DOTALL)
-            if not m:
-                raise FluxError(f"cannot parse map fn {fn_body!r}")
-            inner = m.group(1).strip()
-            extension = inner.startswith("r with")
-            if extension:
-                inner = inner[len("r with"):].strip()
-            # all field expressions see the ORIGINAL record r (Flux
-            # record-extension semantics), hence one withColumns call
-            updates: dict[str, Column] = {}
-            retype_ftype = None
-            value_dest = None
-            for k, expr_src in _split_args(inner).items():
-                target = _colname(df, k)
-                expr_col = _parse_map_value(df, expr_src)
-                if target == "f_float" and "ftype" in df.columns:
-                    # `_value` assignment on a slot-typed frame: land
-                    # in the LIVE slot — the r11 fix bound _value READS
-                    # only, so writes fell into the dead f_float slot
-                    # on string/bool series and serialized as a silent
-                    # no-op (r11 verdict #1). When the compiled
-                    # expression retypes the series (stock map may
-                    # rewrite #datatype: string→float, float→string,
-                    # ...), move the value to the matching slot and
-                    # sync the ftype discriminator the serializer
-                    # dispatches on. The schema probe is plan-time
-                    # analysis only — no Spark job.
-                    live = _live_slots(df, exact=False)
-                    dtype = df.select(expr_col.alias("_t")).schema[0].dataType
-                    dest, ft = _slot_of_sparktype(dtype)
-                    updates[dest] = (expr_col.cast("double")
-                                     if dest == "f_float" else expr_col)
-                    value_dest = dest
-                    if live != [dest]:
-                        # retype: a single-type frame changing slot, or
-                        # a MIXED frame — stock map applies per table
-                        # and retypes EVERY table to the expression's
-                        # type (r12: the float-only write left string
-                        # rows' old values live). Null the other slots
-                        # and sync ftype.
-                        dtypes_m = dict(df.dtypes)
-                        for s in ("f_float", "f_str", "f_bool"):
-                            if s in df.columns and s != dest:
-                                updates.setdefault(
-                                    s, F.lit(None).cast(dtypes_m[s]))
-                        retype_ftype = ft
-                    continue
-                updates[target if target in df.columns else k] = expr_col
-            out = df.withColumns(updates)
-            if retype_ftype is not None and "ftype" in out.columns:
-                out = out.withColumn("ftype", F.lit(retype_ftype))
-            # a rewritten _time must carry its engine twin: stale
-            # time_ns would silently window/sort on the OLD times (r8)
-            if "time" in updates and "time_ns" in out.columns:
-                out = out.withColumn(
-                    "time_ns", F.expr("unix_micros(time) * 1000")
-                )
-            if not extension:
-                # record REPLACEMENT (no `r with`): stock map drops
-                # every non-group-key column not in the new record
-                # (r8: previously all columns survived)
-                keep_cols, seen = [], set()
-                plumbing = {"time_ns", "ingest_seq"} if "time" in (
-                    *updates, *pipe.group_key) else set()
-                for c in (*pipe.group_key, *updates, *plumbing):
-                    if c in out.columns and c not in seen:
-                        keep_cols.append(c)
-                        seen.add(c)
-                out = out.select(*keep_cols)
-            # seed the live-slot cache for the outgoing frame: map
-            # preserves the row set, so the slot is the write target
-            # (if _value was assigned) or the incoming frame's
-            # resolution — downstream stages skip their probe job
-            seed = [value_dest] if value_dest else _LIVE_SLOT_CACHE.get(df)
-            if seed and "ftype" in out.columns:
-                _LIVE_SLOT_CACHE[out] = seed
-            pipe = pipe._with(out)
-        elif name == "reduce":
-            pipe = pipe._with(_reduce_stage(df, args, pipe))
-        elif name == "monitor.check":
-            # monitor package batch check (public Flux stdlib; the
-            # streaming ThresholdCheck in streaming/tasks.py is the
-            # scheduled sibling): _level from crit/warn/info
-            # predicates (crit wins), data: record keys become
-            # literal columns, messageFn compiles through the map
-            # scalar compiler into _message
-            levels = []
-            for lvl in ("crit", "warn", "info"):
-                if lvl in args:
-                    levels.append(
-                        (lvl, _parse_predicate(df, args[lvl].partition("=>")[2]))
-                    )
-            if not levels:
-                raise FluxError(
-                    "monitor.check() needs at least one of crit:/warn:/info:"
-                )
-            level_col = None
-            for lvl, pred in levels:
-                level_col = (F.when(pred, lvl) if level_col is None
-                             else level_col.when(pred, lvl))
-            out = df.withColumn("_level", level_col.otherwise("ok"))
-            if "data" in args:
-                for k, v in _record_refs(args["data"]):
-                    out = out.withColumn(k, F.lit(_lit(v)))
-            if "messageFn" in args:
-                msg_src = args["messageFn"].partition("=>")[2].strip()
-                out = out.withColumn("_message", _parse_map_value(out, msg_src))
-            pipe = pipe._with(out)
-        elif name == "monitor.stateChanges":
-            # status-transition filter (monitor.stateChanges): keep
-            # rows whose per-series _level differs from the previous
-            # status, optionally constrained by fromLevel/toLevel
-            if "_level" not in df.columns:
-                raise FluxError(
-                    "monitor.stateChanges() requires a _level column "
-                    "(pipe through monitor.check() first)"
-                )
-            tcol = pipe.time_ns_col
-            if tcol not in df.columns:
-                raise FluxError("monitor.stateChanges() requires a _time column")
-            from pyspark.sql import Window as _W
-
-            keys = [k for k in pipe.group_key if k in df.columns]
-            w = (_W.partitionBy(*[F.col(k) for k in keys]).orderBy(tcol)
-                 if keys else _W.orderBy(tcol))
-            staged = df.withColumn("_prev_level", F.lag("_level").over(w))
-            prev = F.col("_prev_level")
-            cond = prev.isNotNull() & (prev != F.col("_level"))
-            to_lvl = _lit(args.get("toLevel", '"any"'))
-            from_lvl = _lit(args.get("fromLevel", '"any"'))
-            if to_lvl != "any":
-                cond = cond & (F.col("_level") == to_lvl)
-            if from_lvl != "any":
-                cond = cond & (prev == from_lvl)
-            pipe = pipe._with(staged.filter(cond).drop("_prev_level"))
-        elif name == "monitor.deadman":
-            # public Flux stdlib definition: keep each series' LAST row
-            # and flag dead = _time < t (no data since the threshold);
-            # the scheduled DeadmanCheck in streaming/tasks.py is the
-            # streaming sibling
-            if "t" not in args:
-                raise FluxError("monitor.deadman() missing required t:")
-            if "time_ns" not in df.columns:
-                raise FluxError("monitor.deadman() requires a _time column")
-            t_ns = _time_to_ns(args["t"], now_ns)
-            pipe = pipe.last()
-            pipe = pipe._with(
-                pipe.df.withColumn("dead", F.col("time_ns") < F.lit(t_ns))
-            )
-        elif name == "sql.to":
-            # stdlib sql.to from SCRIPT TEXT (sibling of sql.from):
-            # write the current table to a JDBC target and pass the
-            # stream through unchanged (Flux returns the input tables)
-            from ..sources.aux_sources import sql_to as _sql_to
-
-            drv = _lit(args.get("driverName", '""')) or None
-            if drv == "derby":
-                drv = "org.apache.derby.jdbc.EmbeddedDriver"
-            _sql_to(
-                df,
-                _lit(args["dataSourceName"]),
-                _lit(args["table"]),
-                driver=drv,
-            )
-        elif name == "timeShift":
-            from ..operators.core import time_shift
-
-            # stock shifts _start/_stop along with _time — bounds
-            # consumers downstream (createEmpty spine) see the shifted
-            # interval (r14, part of the Pipeline-carried bounds audit)
-            pipe = pipe._with(
-                time_shift(df, _lit(args["duration"])),
-                range_bounds=tuple(
-                    _shift_bound_ns(b, _lit(args["duration"]))
-                    for b in pipe.range_bounds
-                ),
-            )
-        elif name == "truncateTimeColumn":
-            from ..operators.core import truncate_time
-
-            pipe = pipe._with(truncate_time(df, _lit(args["unit"])))
-        elif name in ("toInt", "toFloat", "toString", "toBool", "toUInt",
-                      "toTime", "toDuration"):
-            # type-conversion stages rebind _value to the cast value
-            # (Flux toInt truncates toward zero, like Spark's cast;
-            # toUInt = toInt here — no unsigned 64-bit column type;
-            # toTime reads epoch-ns ints; toDuration keeps integer ns,
-            # the same documented divergence as duration()).
-            # r12: live-slot + retype routing — the conversion-stage
-            # twin of the map() _value write fix. toString() on a
-            # float series previously stored strings in the double
-            # slot under a stale "float" ftype; toFloat() on a string
-            # series cast the dead NULL slot (a silent no-op).
-            cur = _colname(df, "_value")
-            if cur not in df.columns:
-                raise FluxError(f"{name}() has no _value column to convert")
-            src = _value_slot_runtime(df, cur)
-            if name == "toTime":
-                pipe = pipe._with(df.withColumn(
-                    src, F.timestamp_micros(ns_to_us(F.col(src)))))
-            else:
-                spark_type = {"toInt": "long", "toFloat": "double",
-                              "toString": "string", "toBool": "boolean",
-                              "toUInt": "long", "toDuration": "long"}[name]
-                flux_t = {"toInt": "int", "toFloat": "float",
-                          "toString": "string", "toBool": "boolean",
-                          "toUInt": "uint", "toDuration": "duration"}[name]
-                dtypes_all = dict(df.dtypes)
-
-                def _cast_one(colname):
-                    # string → non-string: stock's runtime conversion
-                    # error, not a raw ANSI cast crash (r13 fuzzer)
-                    if (dtypes_all.get(colname) == "string"
-                            and spark_type != "string"):
-                        return _checked_str_cast(
-                            F.col(colname), spark_type, flux_t)
-                    return F.col(colname).cast(spark_type)
-
-                # slot routing only on frames that CARRY the typed
-                # slots (bucket reads); float-only pipes keep the
-                # in-place retype (f_float becomes the cast type —
-                # the single-slot serializer path reads the Spark
-                # type directly)
-                if (cur == "f_float" and "ftype" in df.columns
-                        and any(s in df.columns
-                                for s in ("f_str", "f_bool"))):
-                    live = _live_slots(df, exact=False)
-                    if len(live) > 1:
-                        # MIXED frame (r13): convert each group's LIVE
-                        # value — exactly one slot is non-null per row,
-                        # so the coalesce of per-slot casts is the
-                        # row's own value converted (the single-slot
-                        # binding cast the dead f_float, destroying
-                        # every non-float row)
-                        conv = F.coalesce(*[_cast_one(s) for s in live])
-                    else:
-                        conv = _cast_one(live[0])
-                    dest, ft = {"string": ("f_str", "string"),
-                                "boolean": ("f_bool", "bool")}.get(
-                        spark_type, ("f_float", "float"))
-                    dtypes_m = dict(df.dtypes)
-                    out = df.withColumn(
-                        dest,
-                        conv.cast("double") if dest == "f_float" else conv)
-                    for s in ("f_float", "f_str", "f_bool"):
-                        if s != dest and s in out.columns:
-                            out = out.withColumn(
-                                s, F.lit(None).cast(dtypes_m[s]))
-                    out = out.withColumn("ftype", F.lit(ft))
-                    _LIVE_SLOT_CACHE[out] = [dest]
-                    pipe = pipe._with(out)
-                else:
-                    pipe = pipe._with(df.withColumn(src, _cast_one(src)))
-        elif name == "columns":
-            # one row per Flux-visible column label
-            rev = {real: flux for flux, real in COLMAP.items()}
-            internal = {"time_ns", "ingest_seq", "_ts_raw", "ftype", "props", "tags"}
-            if "f_float" in df.columns:
-                # the extra typed slots ARE _value (already labeled via
-                # f_float) — r13: they leaked as literal f_str/f_bool
-                # labels on slot frames
-                internal |= {"f_str", "f_bool"}
-            else:
-                # a typed window/aggregate result carried in its source
-                # slot: that slot is the _value label
-                slot_hits = [c for c in ("f_str", "f_bool")
-                             if c in df.columns]
-                if len(slot_hits) == 1:
-                    rev = {**rev, slot_hits[0]: "_value"}
-            labels = [rev.get(c, c) for c in df.columns if c not in internal]
-            out_col = _lit(args.get("column", '"_value"'))
-            pipe = pipe._with(
-                df.sparkSession.createDataFrame(
-                    [(l,) for l in labels], f"`{out_col}` string"
-                )
-            )
-        elif name == "keys":
-            # one row per group-key column label (Flux keys(): the
-            # group key, not every column — columns() does that)
-            rev = {real: flux for flux, real in COLMAP.items()}
-            labels = sorted({rev.get(c, c) for c in pipe.group_key})
-            out_col = _lit(args.get("column", '"_value"'))
-            pipe = pipe._with(
-                df.sparkSession.createDataFrame(
-                    [(l,) for l in labels], f"`{out_col}` string"
-                )
-            )
-        elif name == "keyValues":
-            # (_key, _value) rows: the distinct values of each
-            # requested key column — a union of per-column distincts,
-            # fully distributed (no driver collect)
-            req = _strlist(args["keyColumns"])
-            parts = []
-            for kname in req:
-                # _value requests read the live slot (r13)
-                real = _value_slot_runtime(df, _colname(df, kname))
-                src = (
-                    F.col(real) if real in df.columns
-                    else F.col("tags")[kname] if "tags" in df.columns
-                    else None
-                )
-                if src is None:
-                    raise FluxError(f"keyValues: unknown column {kname!r}")
-                parts.append(
-                    df.select(
-                        F.lit(kname).alias("_key"),
-                        src.cast("string").alias("_value"),
-                    ).distinct()
-                )
-            acc = parts[0]
-            for p in parts[1:]:
-                acc = acc.unionByName(p)
-            pipe = pipe._with(acc)
-        elif name == "unique":
-            from ..operators.selectors import unique as _unique
-
-            col = _value_slot_runtime(
-                df, _colname(df, _lit(args.get("column", '"_value"')))
-            )
-            if col not in df.columns:
-                raise FluxError(f"unique(column:) references unknown column {col!r}")
-            if col == "f_float" and len(_live_slots(df, exact=False)) > 1:
-                _reject_group_schema_collision(df, pipe.group_key, name)
-                # MIXED frame: key on the coalesced value (each row
-                # populates exactly one slot; types are uniform inside
-                # a group, so string representations cannot collide)
-                key = F.coalesce(*[F.col(s).cast("string")
-                                   for s in ("f_float", "f_str", "f_bool")
-                                   if s in df.columns])
-                out = _unique(df.withColumn("_uval", key), "_uval",
-                              by=pipe.group_key).drop("_uval")
-                pipe = pipe._with(out)
-            else:
-                pipe = pipe._with(_unique(df, col, by=pipe.group_key))
-        elif name == "distinct":
-            from ..operators.selectors import distinct_rows
-
-            col = _value_slot_runtime(
-                df, _colname(df, _lit(args.get("column", '"_value"')))
-            )
-            tag_distinct = False
-            if col not in df.columns:
-                # a map-resident tag key: materialize it first (stock
-                # distinct over a tag is the dashboard-variable idiom)
-                m = _tags_map_col(df)
-                if m is not None and col in _frame_tag_keys(df):
-                    df = df.withColumn(col, m[col])
-                    pipe = pipe._with(df)
-                    tag_distinct = True
-                else:
-                    raise FluxError(
-                        f"distinct(column:) references unknown column {col!r}"
-                    )
-            if (not tag_distinct and col == "f_float"
-                    and len(_live_slots(df, exact=False)) > 1):
-                _reject_group_schema_collision(df, pipe.group_key, name)
-                # MIXED frame: distinct over the slot TUPLE (+ ftype
-                # for the serializer's dispatch) — each row populates
-                # exactly one slot, so the tuple distinct equals the
-                # per-type distinct stock computes per table
-                slots = [s for s in ("f_float", "f_str", "f_bool")
-                         if s in df.columns]
-                keep = list(dict.fromkeys(
-                    [*pipe.group_key, "ftype", *slots]))
-                pipe = pipe._with(df.select(*keep).distinct())
-                continue
-            out = distinct_rows(df, col, by=pipe.group_key)
-            if tag_distinct:
-                # stock distinct() rebinds the selected values to
-                # _value — retire the old value slots
-                out = out.drop(
-                    *[s for s in ("f_float", "f_int", "f_uint", "f_bool")
-                      if s in out.columns]
-                ).withColumnRenamed(col, "f_str")
-            pipe = pipe._with(out)
-        elif name == "sample":
-            from ..operators.selectors import sample as _sample
-
-            pipe = pipe._with(_sample(
-                df, _int_lit(args["n"]), by=pipe.group_key,
-                pos=_int_lit(args.get("pos", "-1")),
-            ))
-        elif name == "quantile":
-            from ..operators.aggregates import quantile as _quantile
-
-            vcol = _colname(df, _lit(args.get("column", '"_value"')))
-            if vcol not in df.columns:
-                raise FluxError("quantile() has no value column to aggregate")
-            pipe = pipe._with(_quantile(
-                df, _float_lit(args["q"]),
-                method=_lit(args.get("method", '"estimate_tdigest"')),
-                by=pipe.group_key, alias="quantile", column=vcol,
-            ))
-        elif name == "integral":
-            from ..operators.aggregates import integral as _integral
-
-            pipe = pipe._with(_integral(
-                df, duration_ns(args.get("unit", "1s")) / 1e9, by=pipe.group_key
-            ))
-        elif name in ("stateCount", "stateDuration"):
-            from ..operators import analytics as _an
-
-            pred = _parse_predicate(df, args["fn"].partition("=>")[2])
-            # column: names the OUTPUT (stdlib default = the camelCase
-            # stage name; the old snake_case default diverged — r7)
-            if name == "stateCount":
-                out_col = _lit(args.get("column", '"stateCount"'))
-                pipe = pipe._with(_an.state_count(
-                    df, pred, by=pipe.group_key, order=list(pipe.order),
-                    alias=out_col,
-                ))
-            else:
-                unit_s = duration_ns(args.get("unit", "1s")) / 1e9
-                out_col = _lit(args.get("column", '"stateDuration"'))
-                pipe = pipe._with(_an.state_duration(
-                    df, pred, unit_s, by=pipe.group_key, order=list(pipe.order),
-                    alias=out_col,
-                ))
-        elif name == "histogram":
-            from ..operators.analytics import histogram as _hist
-
-            try:
-                bins = [float(b) for b in _strlist(args["bins"])]
-            except ValueError:
-                raise FluxError(
-                    f"histogram bins: must be numbers, got {args['bins']!r}"
-                ) from None
-            vcol = _colname(df, _lit(args.get("column", '"_value"')))
-            if vcol not in df.columns:
-                raise FluxError("histogram() has no value column to bin")
-            if "le" in df.columns:
-                raise FluxError(
-                    "histogram() output column 'le' already exists in input"
-                )
-            pipe = pipe._with(_hist(df, bins, value=vcol, by=pipe.group_key))
-        elif name == "histogramQuantile":
-            from ..operators.analytics import histogram_quantile as _hq
-
-            pipe = pipe._with(
-                _hq(df, _float_lit(args["quantile"]), by=pipe.group_key)
-            )
-        elif name == "interpolate.linear":
-            from ..operators.windows import interpolate_linear as _interp
-
-            pipe = pipe._with(_interp(
-                df, args["every"], by=pipe.group_key,
-                range_start=pipe.range_bounds[0],
-                range_stop=pipe.range_bounds[1],
-            ))
-        elif name in ("doubleEMA", "tripleEMA", "kaufmansER", "kaufmansAMA",
-                      "chandeMomentumOscillator", "relativeStrengthIndex",
-                      "tripleExponentialDerivative"):
-            from ..operators import analytics as _an
-
-            fn, out_alias = {
-                "doubleEMA": (_an.double_ema, "dema"),
-                "tripleEMA": (_an.triple_ema, "tema"),
-                "kaufmansER": (_an.kaufmans_er, "ker"),
-                "kaufmansAMA": (_an.kaufmans_ama, "kama"),
-                "chandeMomentumOscillator": (
-                    _an.chande_momentum_oscillator, "cmo"),
-                "relativeStrengthIndex": (
-                    _an.relative_strength_index, "rsi"),
-                "tripleExponentialDerivative": (
-                    _an.triple_exponential_derivative, "trix"),
-            }[name]
-            # stock Flux REPLACES _value with the indicator — without
-            # _promote_value a downstream mean()/filter silently
-            # consumed the RAW series (r15, the r14 verdict's lead
-            # wrong answer; mirrors the derivative/difference arm)
-            pipe = _promote_value(
-                pipe._with(fn(df, _int_lit(args["n"]), by=pipe.group_key)),
-                out_alias,
-            )
-        elif name in ("covariance", "pearsonr"):
-            from ..operators import analytics as _an
-
-            cols = [_colname(df, c) for c in _strlist(args.get("columns", '["_value"]'))]
-            if len(cols) != 2:
-                raise FluxError(f"{name} needs columns: [x, y]")
-            for c in cols:
-                # numeric-only statistics: a string/bool input is a
-                # typed error in stock, not a NULL from the dead slot
-                _reject_non_numeric_agg(df, c, name)
-            use_pearson = name == "pearsonr" or _lit(args.get("pearsonr", "false")) is True
-            fn = _an.pearsonr if use_pearson else _an.covariance
-            _dst_name = _lit(args.get("valueDst", '"_value"'))
-            # valueDst is an OUTPUT name: map known Flux names to their
-            # physical columns, keep custom names verbatim (no f_float
-            # fallback — that silently aliased the result to _value)
-            dst = COLMAP.get(_dst_name, _dst_name)
-            pipe = pipe._with(fn(df, cols[0], cols[1], by=pipe.group_key, alias=dst))
-        elif name == "hourSelection":
-            from ..operators.core import hour_selection
-
-            pipe = pipe._with(hour_selection(
-                df, _int_lit(args["start"]), _int_lit(args["stop"]),
-                tz=_location_value(args["location"])
-                if "location" in args else location,
-            ))
-        elif name == "timeWeightedAvg":
-            from ..operators.aggregates import time_weighted_avg as _twa
-
-            pipe = pipe._with(_twa(df, by=pipe.group_key))
-        elif name == "holtWinters":
-            from ..operators.analytics import holt_winters as _hw
-
-            with_fit = _lit(args.get("withFit", "false")) is True
-            hw_out = _hw(
-                df, _int_lit(args["n"]),
-                duration_ns(args["interval"]) / 1e9,
-                seasonality=_int_lit(args.get("seasonality", "0")),
-                by=pipe.group_key,
-                # withFit (public Flux arg): emit in-sample one-step
-                # predictions too; coefficients Nelder-Mead-fitted like
-                # the reference engine (rows-only checkable by nature)
-                fit=with_fit, include_fitted=with_fit,
-            )
-            # the forecast IS the stream's _value in stock — promote
-            # (r15: `holtWinters(...) |> mean()` raised "unknown
-            # column 'f_float'"), and re-derive the display time the
-            # operator's pruned schema dropped
-            hw_out = hw_out.withColumn(
-                "time", F.timestamp_micros(ns_to_us(F.col("time_ns")))
-            )
-            pipe = _promote_value(pipe._with(hw_out), "hw")
-        elif name in ("highestMax", "highestAverage", "highestCurrent",
-                      "lowestMin", "lowestAverage", "lowestCurrent"):
-            from ..operators import selectors as _sel
-
-            fn = {
-                "highestMax": _sel.highest_max, "highestAverage": _sel.highest_average,
-                "highestCurrent": _sel.highest_current, "lowestMin": _sel.lowest_min,
-                "lowestAverage": _sel.lowest_average, "lowestCurrent": _sel.lowest_current,
-            }[name]
-            # live-slot ranking (r12): string/bool series rank by their
-            # actual values (max/current are sort-based selectors);
-            # the mean-based variants are numeric-only in stock
-            if name in ("highestAverage", "lowestAverage"):
-                _reject_non_numeric_agg(df, "f_float", name)
-                vcol = "f_float"
-            else:
-                vcol = _value_slot_runtime(df, "f_float")
-                if vcol not in df.columns:
-                    vcol = "f_float"
-            pipe = pipe._with(fn(df, _int_lit(args["n"]),
-                                 series=pipe.group_key, value=vcol))
-        elif name == "to":
-            # to(bucket: "x") — the task write stage. ``sink`` is the
-            # store-backed callable a facade/task runner provides;
-            # pure points-DF sessions have nowhere to write.
-            if sink is None:
-                raise FluxError("to() requires a store-backed session")
-            sink(pipe.df, _lit(args["bucket"]))
-        elif name == "yield":
-            # named results: every yield registers the pipeline state at
-            # that point (Flux default result name is "_result")
-            if yields is not None:
-                yields[_lit(args.get("name", '"_result"'))] = pipe
-        elif name == "stateTracking":
-            # legacy combined form of stateCount/stateDuration: emits
-            # whichever of countColumn/durationColumn the caller names
-            from ..operators import analytics as _an
-
-            pred = _parse_predicate(df, args["fn"].partition("=>")[2])
-            count_col = args.get("countColumn")
-            dur_col = args.get("durationColumn")
-            if count_col is None and dur_col is None:
-                raise FluxError(
-                    "stateTracking() needs countColumn: and/or durationColumn:"
-                )
-            out = df
-            if count_col is not None:
-                out = _an.state_count(
-                    out, pred, by=pipe.group_key, order=list(pipe.order),
-                    alias=_lit(count_col),
-                )
-            if dur_col is not None:
-                unit_s = duration_ns(args.get("durationUnit", "1s")) / 1e9
-                out = _an.state_duration(
-                    out, pred, unit_s, by=pipe.group_key,
-                    order=list(pipe.order), alias=_lit(dur_col),
-                )
-            pipe = pipe._with(out)
-        elif name == "events.duration":
-            # time until the next event in the same series; the last
-            # event closes against stopColumn/stop:/the range stop
-            from pyspark.sql.window import Window as _W
-
-            if "time_ns" not in df.columns:
-                raise FluxError("events.duration() requires a _time column")
-            unit = duration_ns(args.get("unit", "1ns"))
-            out_col = _lit(args.get("columnName", '"duration"'))
-            w = _W.partitionBy(*pipe.group_key).orderBy(
-                *[F.col(c) for c in (pipe.order or ("time_ns",))]
-            )
-            nxt = F.lead("time_ns").over(w)
-            # resolve stopColumn through COLMAP but FALL BACK TO THE
-            # USER'S NAME, not _stop_ns — a custom stopColumn (e.g.
-            # "myStop") must bind to that column, and an absent explicit
-            # column is a typed error rather than a silent fallback
-            # (ADVICE r6).
-            stop_name = _lit(args.get("stopColumn", '"_stop"'))
-            stop_col = COLMAP.get(stop_name, stop_name)
-            if "stop" in args:
-                tail_stop = F.lit(_time_to_ns(args["stop"], now_ns))
-            elif stop_col in df.columns:
-                tail_stop = F.col(stop_col)
-            elif "stopColumn" in args:
-                raise FluxError(
-                    f"events.duration() stopColumn {stop_name!r} is not a "
-                    "column of the input"
-                )
-            elif pipe.range_bounds[1] is not None:
-                tail_stop = F.lit(pipe.range_bounds[1])
-            else:
-                raise FluxError(
-                    "events.duration() needs stop:, a stop column, or a "
-                    "bounded range()"
-                )
-            diff = F.coalesce(nxt, tail_stop) - F.col("time_ns")
-            out = df.withColumn("_ed_diff", diff).withColumn(
-                out_col, F.expr(f"_ed_diff div {unit}")
-            ).drop("_ed_diff")
-            pipe = pipe._with(out)
-        elif name in ("schema.fieldsAsCols", "v1.fieldsAsCols"):
-            # shorthand for pivot(rowKey:["_time"], columnKey:["_field"],
-            # valueColumn:"_value") within each series table
-            val = _colname(df, "_value")
-            if val not in df.columns:
-                raise FluxError(f"{name}() has no value column to pivot")
-            row_key = [
-                c for c in (*pipe.group_key, "time", "time_ns")
-                if c in df.columns and c != "field"
-            ]
-            if "field" not in df.columns:
-                raise FluxError(f"{name}() requires a _field column")
-            sans = _series_key_sans_field(df)
-            typed = _typed_field_pivot(
-                sans, [c for c in row_key if c in sans.columns], val)
-            if typed is not None:
-                # mixed measurement: per-type pivot (r13 — this path
-                # bypassed the r10 fix and pivoted string/bool fields
-                # from the dead float slot)
-                pipe = pipe._with(
-                    typed,
-                    group_key=tuple(c for c in pipe.group_key
-                                    if c in typed.columns),
-                    order=tuple(c for c in pipe.order
-                                if c in typed.columns)
-                    or (("time",) if "time" in typed.columns else ()),
-                )
-            else:
-                pipe = pipe._with(sans).pivot(row_key, "field", val)
-        elif name in ("getColumn", "findColumn", "getRecord", "findRecord",
-                      "tableFind"):
-            # stream-termination extractors. Flux returns an array /
-            # record to the script; the tabular equivalent here is the
-            # matching column (one column) or record (one row) as a
-            # frame — documented divergence, same values.
-            if name in ("findColumn", "findRecord", "tableFind"):
-                key_body = args["fn"].partition("=>")[2].strip()
-                if key_body not in ("true", "(true)"):
-                    pred = _parse_predicate(
-                        df, re.sub(r"\bkey(?=[.\[])", "r", key_body)
-                    )
-                    df = df.filter(pred)
-            if name in ("getColumn", "findColumn"):
-                # _value extraction reads the live slot (r13 — a
-                # string table's getColumn returned the dead floats)
-                col = _value_slot_runtime(
-                    df, _colname(df, _lit(args.get("column", '"_value"'))))
-                if col not in df.columns:
-                    raise FluxError(
-                        f"{name}(column:) references unknown column {col!r}"
-                    )
-                pipe = pipe._with(df.select(col), group_key=())
-            elif name in ("getRecord", "findRecord"):
-                idx = _int_lit(args.get("idx", "0"))
-                order_cols = [c for c in pipe.order if c in df.columns]
-                if order_cols:
-                    df = df.orderBy(*order_cols)
-                pipe = pipe._with(df.offset(idx).limit(1), group_key=())
-            else:  # tableFind: the filtered tables themselves
-                pipe = pipe._with(df)
-        elif name in ("geo.filterRows", "geo.gridFilter", "geo.strictFilter",
-                      "geo.shapeData", "geo.toRows"):
-            pipe = _geo_stage(pipe, name, args)
-        else:
+        spec = _STAGES.get(name)
+        if spec is None:
             raise FluxError(f"unsupported Flux function {name!r}")
-        # live-slot cache propagation (r12 ADVICE #5, second half):
-        # stages that cannot change a row's ftype hand their input's
-        # resolved live set to the output frame, so an N-stage mixed
-        # script probes AT MOST ONCE instead of once per slot-consuming
-        # stage. Row-REMOVING stages (filter/range/hourSelection) can
-        # only shrink the live set — their entry goes to the SUPERSET
-        # cache, which ordering/presence consumers accept but the
-        # typed-error check does not (stock's filter drops empty
-        # tables, so mean() after filtering a mix down to floats must
-        # not raise on the stale string type).
-        if name in _FTYPE_KEEP_STAGES or (
-            name == "aggregateWindow"
-            and args.get("fn", "mean").strip() in (
-                "first", "last", "min", "max", "mode")
-        ):
-            # aggregateWindow with a type-PRESERVING selector fn keeps
-            # each window's result in its source slot with ftype
-            # restamped (r13), so the live set and catalog pins stay
-            # valid — carrying them keeps e.g. `aggregateWindow(fn:
-            # last) |> min()` zero-probe on catalog-backed frames
-            # (r14; conversion fns like mean retype to float and fall
-            # through to the probe as before). A rename that touches
-            # the measurement/field COLUMNS (either direction — e.g.
-            # a tag renamed INTO "_field") invalidates the (m, f)-
-            # keyed catalog map for the output frame (r14 soundness:
-            # the by-field "no collision" proof would read stale
-            # names); the live-slot entry is name-independent and
-            # still carries.
-            keeps_mf_names = True
-            if name == "rename":
-                ren = _split_args(args.get("columns", "{}").strip("{}") or "")
-                touched = set(ren) | {v.strip().strip('"')
-                                      for v in ren.values()}
-                keeps_mf_names = not (
-                    touched & {"_measurement", "_field",
-                               "measurement", "field"}
-                )
-            _carry_slot_cache(_df_in, pipe.df,
-                              demote=name in _ROW_REMOVING_STAGES,
-                              carry_catalog=keeps_mf_names)
+        src = pipe.df
+        pipe = _precheck(spec, name, pipe)
+        call = _Call(name, argstr, now_ns, location, sink, yields, src)
+        args = _StageArgs(name, _split_args(argstr) if argstr else {})
+        out = spec.run(pipe, pipe.df, args, call)
+        if spec.keeps_ftype:
+            _carry_slot_cache(src, out.df, demote=spec.removes_rows)
+        pipe = out
     return pipe
+
+
+def _precheck(spec: Stage, name: str, pipe: Pipeline) -> Pipeline:
+    """The typed errors a stage's flags promise, raised before any
+    operator runs (instead of an AnalysisException from inside it)."""
+    df = pipe.df
+    if spec.time_ordered:
+        if "time_ns" not in df.columns and "time" in df.columns:
+            # µs precision: the visible column's own
+            pipe = pipe._with(
+                df.withColumn("time_ns", F.expr("unix_micros(time) * 1000")),
+                order=pipe.order if pipe.order else ("time_ns",),
+            )
+            df = pipe.df
+        if "time_ns" not in df.columns:
+            raise FluxError(f"{name}() requires a _time column")
+    if spec.value_input and _colname(df, "_value") not in df.columns:
+        raise FluxError(f"{name}() has no value column to transform")
+    if spec.numeric_input:
+        # the resolved column, so the Spark-dtype check also covers a
+        # window result carried in f_str/f_bool
+        _reject_non_numeric_agg(df, _colname(df, "_value"), name)
+    return pipe
+
+
+def _value_binding(df: DataFrame, col: str, group_key) -> str | list[str]:
+    """The value column(s) a type-generic stage (selector, sort, fill,
+    count, mode) reads for ``col``.
+
+    On a mixed frame the float slot means every slot: each group is
+    single-typed, so exactly one slot per row is non-null and a stage
+    that orders or aggregates the slot list handles each group by its
+    own typed values. A stale superset entry that overstates the mix
+    only adds constant-NULL slots, so no exact probe is forced. Such a
+    frame must not merge types inside one group (stock's schema
+    collision). Otherwise ``col`` resolves to the single live slot."""
+    if col == "f_float" and len(_live_slots(df, exact=False)) > 1:
+        _reject_group_schema_collision(df, group_key)
+        return _slot_cols(df)
+    return _value_slot_runtime(df, col)
+
+
+def _with_presence(pipe: Pipeline) -> Pipeline:
+    """Add ``_vpresent``, the coalesced slots of a mixed frame: each row
+    populates exactly one slot, so counting it counts every typed row."""
+    df = pipe.df
+    return pipe._with(df.withColumn("_vpresent", F.coalesce(*[
+        F.col(s).cast("string") for s in _slot_cols(df)])))
+
+
+def _stage_tz(args, call: _Call) -> str:
+    """A stage's ``location:`` argument, else the script's option."""
+    return (_location_value(args["location"]) if "location" in args
+            else call.location)
+
+
+def _range_stage(pipe, df, args, call):
+    from ..operators.core import push_time_filter
+
+    # start: is required: a mis-spelled key must not skip the filter
+    start = _time_to_ns(args["start"], call.now_ns)
+    stop = _time_to_ns(args["stop"], call.now_ns) if "stop" in args else None
+    # the bounds ride the Pipeline, so they survive variable bindings and
+    # union()/join() to reach a createEmpty spine downstream
+    return pipe._with(push_time_filter(df, start, stop),
+                      range_bounds=(start, stop))
+
+
+def _filter_stage(pipe, df, args, call):
+    # args["fn"], not the raw argstr: sibling args like onEmpty: stay
+    # out of the predicate text
+    fn_src = args["fn"] if "fn" in args else call.argstr
+    pred_src = fn_src.partition("=>")[2].strip()
+    gm = _GEO_ST_RX.match(pred_src)
+    if gm and gm.group(1) in ("ST_Contains", "ST_DWithin"):
+        # a boolean geo predicate as the whole body (geofencing);
+        # ST_Distance needs a comparison, which belongs in map()
+        return pipe.filter(_geo_st_fn(df, gm.group(1), gm.group(2)))
+    out = pipe.filter(_parse_predicate(df, pred_src))
+    # measurement/field equality filters narrow the catalog pins and the
+    # live-slot superset: a single-class measurement in a multi-class
+    # bucket keeps zero-probe plans downstream
+    _narrow_catalog_on_filter(df, out.df, pred_src)
+    return out
+
+
+def _group_stage(pipe, df, args, call):
+    cols = [COLMAP.get(c, c) for c in _strlist(args.get("columns", "[]"))]
+    mode = _lit(args.get("mode", '"by"'))
+    if mode == "by":
+        for c in cols:
+            if c in df.columns:
+                continue
+            if "tags" not in df.columns:
+                raise FluxError(
+                    f"group(columns:) references unknown column {c!r}")
+            # an un-promoted tag: materialize it from the map
+            pipe = pipe._with(df.withColumn(c, F.col("tags")[c]))
+            df = pipe.df
+    return pipe.group(cols, mode=mode)
+
+
+def _window_stage(pipe, df, args, call):
+    return pipe.window(args["every"], period=args.get("period"),
+                       offset=args.get("offset", "0"),
+                       tz=_stage_tz(args, call))
+
+
+def _aggregate_window_stage(pipe, df, args, call):
+    from ..operators.aggregates import AGG_FNS
+
+    create_empty = _lit(args.get("createEmpty", "false")) is True
+    # a createEmpty spine needs bounds: stock's range() defaults its stop
+    # to now(), so an open-ended range(start:) spines to the query's now
+    bounds = list(pipe.range_bounds)
+    if create_empty:
+        if bounds[0] is None:
+            raise FluxError(
+                "aggregateWindow(createEmpty: true) requires a bounded range()")
+        if bounds[1] is None:
+            bounds[1] = call.now_ns
+
+    def spine() -> dict:
+        return dict(create_empty=create_empty, range_start=bounds[0],
+                    range_stop=bounds[1], offset=args.get("offset", "0"),
+                    time_src=_aw_time_src(args), tz=_stage_tz(args, call))
+
+    fnarg = args.get("fn", "mean").strip()
+    # table-function form: fn: (tables=<-) => tables |> <stage>(...)
+    lm = re.match(
+        r"^\(\s*tables\s*=\s*<-\s*\)\s*=>\s*tables\s*\|>\s*"
+        r"([\w.]+)\s*\((.*)\)\s*$",
+        fnarg, re.DOTALL,
+    )
+    if lm and lm.group(1) in AGG_FNS and not lm.group(2).strip():
+        fnarg, lm = lm.group(1), None  # e.g. tables |> mean()
+    if lm:
+        iname = lm.group(1)
+        iargs = _StageArgs(iname, _split_args(lm.group(2))
+                           if lm.group(2).strip() else {})
+        if iname != "quantile":
+            raise FluxError(
+                f"aggregateWindow fn: tables |> {iname}() is not "
+                "supported (named aggregates and quantile are)"
+            )
+        from ..operators.aggregates import quantile as _qtl
+        from ..operators.windows import aggregate_window_custom
+
+        qv = _float_lit(iargs["q"])
+        meth = _lit(iargs.get("method", '"estimate_tdigest"'))
+        vcol = _colname(df, "_value")
+        # aggregateWindow re-windows: an earlier window()'s bounds leave
+        # the key so its own _start_ns/_stop_ns replace them
+        by = tuple(
+            k for k in pipe.group_key if k not in ("_start_ns", "_stop_ns"))
+        out = aggregate_window_custom(
+            df, args["every"],
+            lambda d, keys: _qtl(d, qv, method=meth, column=vcol, by=keys,
+                                 alias="_value_agg"),
+            by=by, **spine(),
+        )
+        return pipe._with(out, group_key=by).rename({"_value_agg": "f_float"})
+    vcol = _colname(df, _lit(args.get("column", '"_value"')))
+    slots = None
+    had_ftype = "ftype" in df.columns
+    if fnarg in ("first", "last", "count", "mode", "min", "max"):
+        # type-generic window fns read the live slot; min/max are
+        # selectors and compare any orderable type, as bare min()/max()
+        bound = _value_binding(df, vcol, pipe.group_key)
+        if isinstance(bound, str):
+            vcol = bound
+        elif fnarg == "count":
+            pipe, vcol = _with_presence(pipe), "_vpresent"
+        else:
+            slots = bound
+    else:
+        _reject_non_numeric_agg(df, vcol, fnarg)
+    if slots is None and vcol not in pipe.df.columns:
+        raise FluxError(
+            f"aggregateWindow() has no value column {vcol!r} to aggregate")
+    pipe = pipe.aggregate_window(args["every"], fnarg, column=vcol,
+                                 alias="_value_agg", slots=slots, **spine())
+    if slots is None:
+        # the result lands in its source slot with ftype restamped, so a
+        # downstream numeric stage still sees the type evidence
+        dest = (vcol if vcol in ("f_str", "f_bool") and fnarg != "count"
+                else "f_float")
+        pipe = pipe.rename({"_value_agg": dest})
+        if had_ftype:
+            ft = {"f_str": "string", "f_bool": "bool"}.get(dest, "float")
+            pipe = pipe._with(pipe.df.withColumn("ftype", F.lit(ft)))
+            _LIVE_SLOT_CACHE[pipe.df] = [dest]
+    else:
+        # windowing preserves each group's type: the output's live set is
+        # the input's, at the input's confidence
+        cache = (_LIVE_SLOT_CACHE if df in _LIVE_SLOT_CACHE
+                 else _LIVE_SLOT_SUPERSET)
+        cache[pipe.df] = _live_slots(df, exact=False)
+    if fnarg in ("first", "last", "min", "max", "mode"):
+        # a type-preserving fn keeps each window's value in its source
+        # slot, so the catalog pins stay valid; conversion fns such as
+        # mean retype to float and are probed again downstream
+        _carry_slot_cache(call.src, pipe.df)
+    return pipe
+
+
+def _aggregate_stage(pipe, df, args, call):
+    name = call.name
+    col = _colname(df, _lit(args.get("column", '"_value"')))
+    if name in ("count", "mode"):
+        # type-generic aggregates read the live slot; numeric ones keep
+        # the float binding
+        bound = _value_binding(df, col, pipe.group_key)
+        if isinstance(bound, str):
+            col = bound
+        elif name == "count":
+            pipe, col = _with_presence(pipe), "_vpresent"
+            df = pipe.df
+        else:
+            # mode per slot: each group's mode lands in its own slot and
+            # the dead slots stay NULL; the wire facade splits the result
+            # per ftype like any slot frame
+            gk = [k for k in pipe.group_key if k in df.columns]
+            out = df.groupBy(*gk).agg(
+                *[F.mode(F.col(s)).alias(s) for s in bound],
+                F.first("ftype", ignorenulls=True).alias("ftype"),
+            )
+            # at the input's confidence: a superset must not pose as exact
+            cache = (_LIVE_SLOT_CACHE if df in _LIVE_SLOT_CACHE
+                     else _LIVE_SLOT_SUPERSET)
+            cache[out] = _live_slots(df, exact=False)
+            return pipe._with(out)
+    else:
+        _reject_non_numeric_agg(df, col, name)
+    if col not in df.columns:
+        raise FluxError(f"{name}(column:) references unknown column {col!r}")
+    return pipe.aggregate(name, column=col, alias=name)
+
+
+def _min_max_stage(pipe, df, args, call):
+    # selectors pick a row by value order: Flux compares any sortable
+    # type (lexicographic strings, false < true)
+    vcol = _value_binding(
+        df, _colname(df, _lit(args.get("column", '"_value"'))),
+        pipe.group_key)
+    if isinstance(vcol, str) and vcol not in df.columns:
+        raise FluxError(f"{call.name}() has no value column to select on")
+    return pipe.min(vcol) if call.name == "min" else pipe.max(vcol)
+
+
+def _first_last_stage(pipe, df, args, call):
+    # time selectors read no value slot, but a regrouped mixed table
+    # cannot materialize in stock either
+    _reject_group_schema_collision(df, pipe.group_key)
+    return pipe.first() if call.name == "first" else pipe.last()
+
+
+def _top_bottom_stage(pipe, df, args, call):
+    tcols = _strlist(args["columns"]) if "columns" in args else ["_value"]
+    vcol = _value_binding(df, _colname(df, tcols[0]), pipe.group_key)
+    if isinstance(vcol, str) and vcol not in df.columns:
+        raise FluxError(
+            f"{call.name}(columns:) references unknown column {vcol!r}")
+    n = _int_lit(args["n"])
+    return pipe.top(n, vcol) if call.name == "top" else pipe.bottom(n, vcol)
+
+
+def _derivative_stage(pipe, df, args, call):
+    unit_s = duration_ns(args.get("unit", "1s")) / 1e9
+    return _promote_value(pipe.derivative(
+        unit_seconds=unit_s,
+        non_negative=_lit(args.get("nonNegative", "false")) is True,
+    ), "derivative")
+
+
+def _difference_stage(pipe, df, args, call):
+    # each listed column is replaced in place (columns: ["_value"] is the
+    # f_float slot, so _value is promoted for free); the first row of a
+    # table is dropped once, after all columns
+    from ..operators import difference as _difference
+
+    kf = _lit(args.get("keepFirst", "false")) is True
+    iz = _lit(args.get("initialZero", "false")) is True
+    nn = _lit(args.get("nonNegative", "false")) is True
+    order = list(pipe.order) or ["time_ns"]
+    out = df
+    for c in _strlist(args.get("columns", '["_value"]')):
+        real = _colname(out, c)
+        if real not in out.columns:
+            raise FluxError(
+                f"difference(columns:) references unknown column {c!r}")
+        out = _difference(out, nn, real, by=pipe.group_key, order=order,
+                          alias=real, keep_first=True, initial_zero=iz)
+    if not kf:
+        from pyspark.sql import Window as _W
+
+        w = _W.partitionBy(*pipe.group_key).orderBy(*order)
+        out = (out.withColumn("_has_prev", F.lag(order[0]).over(w).isNotNull())
+               .filter(F.col("_has_prev")).drop("_has_prev"))
+    return pipe._with(out)
+
+
+def _increase_stage(pipe, df, args, call):
+    from ..operators import increase
+
+    return _promote_value(pipe._with(
+        increase(df, by=pipe.group_key, order=list(pipe.order))), "increase")
+
+
+def _cumulative_sum_stage(pipe, df, args, call):
+    return _promote_value(pipe.cumulative_sum(), "cumulative_sum")
+
+
+def _moving_average_stage(pipe, df, args, call):
+    return _promote_value(
+        pipe.moving_average(_int_lit(args["n"])), "moving_average")
+
+
+def _ema_stage(pipe, df, args, call):
+    return _promote_value(
+        pipe.exponential_moving_average(_int_lit(args["n"])), "ema")
+
+
+def _elapsed_stage(pipe, df, args, call):
+    # elapsed() adds the duration column (in unit: counts) and keeps
+    # _value; each table's first record has no predecessor and is dropped
+    from ..operators import elapsed
+
+    unit_s = duration_ns(args.get("unit", "1s")) / 1e9
+    out = elapsed(df, unit_seconds=unit_s, by=pipe.group_key,
+                  order=list(pipe.order))
+    return pipe._with(out.filter(F.col("elapsed").isNotNull()))
+
+
+def _timed_moving_average_stage(pipe, df, args, call):
+    from ..operators import timed_moving_average
+
+    period_s = int(duration_ns(args["period"]) // 10**9)
+    return _promote_value(pipe._with(
+        timed_moving_average(df, period_s, by=pipe.group_key)),
+        "timed_moving_average")
+
+
+def _fill_stage(pipe, df, args, call):
+    # fill writes the typed column: a string literal never lands in the
+    # double f_float slot
+    col = _value_binding(
+        df, _colname(df, _lit(args.get("column", '"_value"'))),
+        pipe.group_key)
+    mixed = not isinstance(col, str)
+    if not mixed and col not in df.columns:
+        raise FluxError(f"fill(column:) references unknown column {col!r}")
+    if _lit(args.get("usePrevious", "false")) is True:
+        if not pipe.order:
+            raise FluxError("fill(usePrevious:) needs an ordered frame")
+        # a mixed frame forward-fills every slot: a group's dead slots
+        # are all-NULL and stay so (no cross-type bleed)
+        for s in (col if mixed else [col]):
+            pipe = pipe.fill(use_previous=True, column=s)
+        return pipe
+    v = _lit(args["value"])
+    vt = ("bool" if isinstance(v, bool)
+          else "string" if isinstance(v, str) else "float")
+    if mixed:
+        # the literal's type picks the slot and only rows of that type
+        # fill: a literal in a dead slot would surface as data to every
+        # slot-list consumer. The type must be live somewhere, checked
+        # exactly: a stale superset on a uniform frame must raise the
+        # stock type error, not fill nothing.
+        slot = {"bool": "f_bool", "string": "f_str"}.get(vt, "f_float")
+        live_exact = _live_slots(df)
+        if slot not in df.columns or slot not in live_exact:
+            have = {"f_float": "float", "f_str": "string", "f_bool": "bool"}
+            raise FluxError(
+                f"fill: value type {vt} does not match column "
+                f"type {have.get(live_exact[0], 'float')}")
+        types = [t for t, s in SLOT_OF_FTYPE.items() if s == slot]
+        return pipe._with(df.withColumn(
+            slot,
+            F.when(F.col("ftype").isin(*types),
+                   F.coalesce(F.col(slot), F.lit(v)))
+            .otherwise(F.col(slot)),
+        ))
+    # stock type-checks the literal against the column; int literals
+    # fill float columns (the float slot is the int storage)
+    dt = dict(df.dtypes).get(col)
+    ct = {"string": "string", "boolean": "bool"}.get(dt, "float")
+    if dt is not None and vt != ct:
+        raise FluxError(
+            f"fill: value type {vt} does not match column type {ct}")
+    return pipe.fill(value=v, column=col)
+
+
+def _sort_stage(pipe, df, args, call):
+    # _colname, not raw COLMAP: after an aggregate, _value means the
+    # result column
+    cols = []
+    for c in _strlist(args.get("columns", '["_time"]')):
+        bound = _value_binding(df, _colname(df, c), pipe.group_key)
+        cols.extend([bound] if isinstance(bound, str) else bound)
+    missing = [c for c in cols if c not in df.columns]
+    if missing:
+        # map-resident tag keys: materialize before sorting
+        m = _tags_map_col(df)
+        tag_keys = set(_frame_tag_keys(df)) if m is not None else set()
+        for c in list(missing):
+            if c in tag_keys:
+                df = df.withColumn(c, m[c])
+                missing.remove(c)
+        pipe = pipe._with(df)
+    if missing:
+        raise FluxError(f"sort(columns:) references unknown columns {missing}")
+    return pipe.sort(cols, desc=_lit(args.get("desc", "false")) is True)
+
+
+def _limit_stage(pipe, df, args, call):
+    return pipe.limit(_int_lit(args["n"]), _int_lit(args.get("offset", "0")))
+
+
+def _tail_stage(pipe, df, args, call):
+    return pipe.tail(_int_lit(args["n"]))
+
+
+def _keep_drop_stage(pipe, df, args, call):
+    name = call.name
+    if "fn" in args:
+        # keep/drop(fn: (column) => column <op> lit): columns are known
+        # at plan time, so the predicate is evaluated in Python
+        cols = _predicate_columns(df, args["fn"])
+    else:
+        cols = [COLMAP.get(c, c) for c in _strlist(args["columns"])]
+        if "f_float" in cols and (
+                "f_str" in df.columns or "f_bool" in df.columns):
+            # _value covers every value slot, and keep() also keeps the
+            # ftype discriminator for slot resolution and the wire facade
+            extra = [s for s in ("f_str", "f_bool") if s in df.columns]
+            if name == "keep" and "ftype" in df.columns:
+                extra.append("ftype")
+            cols = cols + [c for c in extra if c not in cols]
+    # tag keys live in the tags map / series_key: keeping or dropping one
+    # rewrites the series key (stock regroup), not a column projection
+    tag_keys = (_frame_tag_keys(df)
+                if ("tags" in df.columns or "series_key" in df.columns)
+                else [])
+    if name == "drop":
+        # a dropped tag leaves series_key/tags even when an earlier stage
+        # materialized it as a column: series that differ only in it merge
+        dropped_tags = [c for c in cols if c in tag_keys]
+        if dropped_tags:
+            pipe = pipe._with(_remove_tags_from_key(df, dropped_tags))
+        return pipe.drop([c for c in cols if c in pipe.df.columns])
+    kept_tags = [c for c in cols if c in tag_keys and c not in df.columns]
+    if kept_tags:
+        # kept tags become real columns and join the group key
+        tmap = _tags_map_col(df)
+        for t in kept_tags:
+            df = df.withColumn(t, tmap[t])
+        pipe = pipe._with(df)
+    pipe = pipe.keep([c for c in cols if c in df.columns])
+    extra_key = tuple(t for t in kept_tags if t not in pipe.group_key)
+    if extra_key:
+        pipe = pipe._with(pipe.df, group_key=(*pipe.group_key, *extra_key))
+    return pipe
+
+
+def _rename_stage(pipe, df, args, call):
+    mapping = {}
+    for part in args.get("columns", "{}").strip("{}").split(","):
+        if ":" in part:
+            k, _, v = part.partition(":")
+            mapping[COLMAP.get(k.strip(), k.strip())] = v.strip().strip('"')
+    # renaming measurement/field (in either direction) voids the
+    # (m, f)-keyed catalog map; the live-slot entry is name-independent
+    keeps_mf = not ({*mapping, *mapping.values()}
+                    & {"measurement", "field", "_measurement", "_field"})
+    if "f_float" in mapping and _has_typed_slots(df):
+        # renaming _value on a slot-typed frame moves the live slot; stock
+        # removes _value from the table, so the other slots and the
+        # discriminator go too. A mixed frame's per-table types cannot
+        # share one physical column: a documented engine limit.
+        live = _value_slot_runtime(df, "f_float")
+        if live == "f_float" and len(_live_slots(df)) > 1:
+            raise FluxError(
+                "rename: cannot rename _value on a mixed-type "
+                "frame (tables carry different value types)"
+            )
+        mapping[live] = mapping.pop("f_float")
+        drop_slots = [s for s in (*_slot_cols(df), "ftype")
+                      if s != live and s in df.columns]
+        if drop_slots:
+            pipe = pipe._with(df.drop(*drop_slots))
+            df = pipe.df
+    # map-resident tag keys rename inside the tags map / series_key
+    tag_renames = {k: v for k, v in mapping.items() if k not in df.columns}
+    if tag_renames and ("tags" in df.columns or "series_key" in df.columns):
+        keys = set(_frame_tag_keys(df))
+        for k, v in tag_renames.items():
+            if k in keys:
+                df = _rename_tag_in_key(df, k, v)
+                del mapping[k]
+        pipe = pipe._with(df)
+    pipe = pipe.rename(mapping)
+    _carry_slot_cache(call.src, pipe.df, carry_catalog=keeps_mf)
+    return pipe
+
+
+def _retype_value(df: DataFrame, dest: str, ft: str, value: Column) -> DataFrame:
+    """Write a retyped ``_value`` into slot ``dest``: the other slots
+    are nulled, ftype is restamped and the live-slot cache seeded."""
+    dtypes = dict(df.dtypes)
+    out = df.withColumn(dest, value)  # before the nulling: value may read a slot
+    for s in _slot_cols(df):
+        if s != dest:
+            out = out.withColumn(s, F.lit(None).cast(dtypes[s]))
+    out = out.withColumn("ftype", F.lit(ft))
+    _LIVE_SLOT_CACHE[out] = [dest]
+    return out
+
+
+def _set_stage(pipe, df, args, call):
+    # Flux names resolve to engine columns: set(key: "_measurement")
+    # rewrites `measurement`, so a following to() writes the new name
+    skey = _lit(args["key"])
+    sval = _lit(args["value"])
+    real = _colname(df, skey)
+    if skey == "_value" and real == "f_float" and _has_typed_slots(df):
+        # set() values are strings: a _value target retypes the series
+        return pipe._with(_retype_value(df, "f_str", "string", F.lit(sval)))
+    return pipe._with(df.withColumn(real if real in df.columns else skey,
+                                    F.lit(sval)))
+
+
+def _duplicate_stage(pipe, df, args, call):
+    src = _value_slot_runtime(df, _colname(df, _lit(args["column"])))
+    if src not in df.columns:
+        raise FluxError(
+            f"duplicate(column:) references unknown column {src!r}")
+    dst = _lit(args["as"])
+    if dst == "_time" and src.endswith("_ns"):
+        # duplicate(column: "_stop", as: "_time") rebinds the window edge
+        # as the point time: both time representations follow
+        return pipe._with(df.withColumn("time_ns", F.col(src)).withColumn(
+            "time", F.timestamp_micros(F.expr(f"{src} div 1000"))))
+    if dst == "_value" and _has_typed_slots(df):
+        # duplicating into _value retypes the series to the source's type
+        dest, ft = _slot_of_sparktype(df.schema[src].dataType)
+        value = F.col(src).cast("double") if dest == "f_float" else F.col(src)
+        return pipe._with(_retype_value(df, dest, ft, value))
+    return pipe._with(df.withColumn(COLMAP.get(dst, dst), F.col(src)))
+
+
+def _typed_pivot_pipe(pipe, typed: DataFrame) -> Pipeline:
+    """The pipe over a per-type field pivot: key and order keep only
+    the columns the pivot kept."""
+    return pipe._with(
+        typed,
+        group_key=tuple(c for c in pipe.group_key if c in typed.columns),
+        order=tuple(c for c in pipe.order if c in typed.columns)
+        or (("time",) if "time" in typed.columns else ()),
+    )
+
+
+def _pivot_stage(pipe, df, args, call):
+    row_key = [COLMAP.get(c, c) for c in _strlist(args["rowKey"])]
+    col_keys = [COLMAP.get(c, c) for c in _strlist(args["columnKey"])]
+    val = _colname(df, _lit(args["valueColumn"]))
+    missing = [c for c in (*row_key, *col_keys, val) if c not in df.columns]
+    if missing:
+        raise FluxError(f"pivot() references unknown columns {missing}")
+    # stock pivot is per table: the group key joins the rowKey
+    grouping = list(dict.fromkeys(
+        c for c in (*pipe.group_key, *row_key)
+        if c in df.columns and c not in col_keys and c != val))
+    if "field" in col_keys:
+        df = _series_key_sans_field(df)
+    if len(col_keys) > 1:
+        # Flux names multi-key output columns by joining the key values
+        # with "_": one concatenated key pivots the same
+        joined = F.concat_ws("_", *[F.col(c) for c in col_keys])
+        df = df.withColumn("_pivot_key", joined)
+        return pipe._with(df).pivot(grouping, "_pivot_key", val)
+    typed = (_typed_field_pivot(df, grouping, val)
+             if col_keys[0] == "field" else None)
+    if typed is not None:
+        return _typed_pivot_pipe(pipe, typed)
+    return pipe._with(df).pivot(grouping, col_keys[0], val)
+
+
+def _map_stage(pipe, df, args, call):
+    fn_body = call.argstr.partition("=>")[2].strip()
+    m = re.match(r"^\(?\s*\{(.*)\}\s*\)?$", fn_body, re.DOTALL)
+    if not m:
+        raise FluxError(f"cannot parse map fn {fn_body!r}")
+    inner = m.group(1).strip()
+    extension = inner.startswith("r with")
+    if extension:
+        inner = inner[len("r with"):].strip()
+    # every field expression sees the original record r (Flux record
+    # extension), hence one withColumns call
+    updates: dict[str, Column] = {}
+    retype_ftype = None
+    value_dest = None
+    for k, expr_src in _split_args(inner).items():
+        target = _colname(df, k)
+        expr_col = _parse_map_value(df, expr_src)
+        if target == "f_float" and "ftype" in df.columns:
+            # a _value write on a slot-typed frame lands in the slot of
+            # the expression's type (stock map may retype a table); the
+            # dtype comes from plan-time analysis, no Spark job
+            live = _live_slots(df, exact=False)
+            dtype = df.select(expr_col.alias("_t")).schema[0].dataType
+            dest, ft = _slot_of_sparktype(dtype)
+            updates[dest] = (expr_col.cast("double")
+                             if dest == "f_float" else expr_col)
+            value_dest = dest
+            if live != [dest]:
+                # a retype, or a mixed frame: stock map retypes every
+                # table to the expression's type, so the other slots
+                # are nulled and ftype restamped
+                dtypes_m = dict(df.dtypes)
+                for s in _slot_cols(df):
+                    if s != dest:
+                        updates.setdefault(s, F.lit(None).cast(dtypes_m[s]))
+                retype_ftype = ft
+            continue
+        updates[target if target in df.columns else k] = expr_col
+    out = df.withColumns(updates)
+    if retype_ftype is not None and "ftype" in out.columns:
+        out = out.withColumn("ftype", F.lit(retype_ftype))
+    # a rewritten _time carries its engine twin: a stale time_ns would
+    # window and sort on the old times
+    if "time" in updates and "time_ns" in out.columns:
+        out = out.withColumn("time_ns", F.expr("unix_micros(time) * 1000"))
+    if not extension:
+        # record replacement (no `r with`): stock map drops every
+        # non-group-key column not in the new record
+        plumbing = {"time_ns", "ingest_seq"} if "time" in (
+            *updates, *pipe.group_key) else set()
+        out = out.select(*dict.fromkeys(
+            c for c in (*pipe.group_key, *updates, *plumbing)
+            if c in out.columns))
+    # map keeps the row set, so the outgoing live slot is the write
+    # target, or the input's resolution: downstream stages skip a probe
+    seed = [value_dest] if value_dest else _LIVE_SLOT_CACHE.get(df)
+    if seed and "ftype" in out.columns:
+        _LIVE_SLOT_CACHE[out] = seed
+    return pipe._with(out)
+
+
+def _monitor_check_stage(pipe, df, args, call):
+    # batch twin of streaming/tasks.py ThresholdCheck: _level from the
+    # crit/warn/info predicates (crit wins), data: keys become literal
+    # columns, messageFn compiles through the map scalar compiler
+    levels = [(lvl, _parse_predicate(df, args[lvl].partition("=>")[2]))
+              for lvl in ("crit", "warn", "info") if lvl in args]
+    if not levels:
+        raise FluxError(
+            "monitor.check() needs at least one of crit:/warn:/info:")
+    level_col = None
+    for lvl, pred in levels:
+        level_col = (F.when(pred, lvl) if level_col is None
+                     else level_col.when(pred, lvl))
+    out = df.withColumn("_level", level_col.otherwise("ok"))
+    if "data" in args:
+        for k, v in _record_refs(args["data"]):
+            out = out.withColumn(k, F.lit(_lit(v)))
+    if "messageFn" in args:
+        msg_src = args["messageFn"].partition("=>")[2].strip()
+        out = out.withColumn("_message", _parse_map_value(out, msg_src))
+    return pipe._with(out)
+
+
+def _monitor_state_changes_stage(pipe, df, args, call):
+    # keep rows whose per-series _level differs from the previous
+    # status, optionally constrained by fromLevel/toLevel
+    if "_level" not in df.columns:
+        raise FluxError(
+            "monitor.stateChanges() requires a _level column "
+            "(pipe through monitor.check() first)"
+        )
+    tcol = pipe.time_ns_col
+    if tcol not in df.columns:
+        raise FluxError("monitor.stateChanges() requires a _time column")
+    from pyspark.sql import Window as _W
+
+    keys = [k for k in pipe.group_key if k in df.columns]
+    w = (_W.partitionBy(*[F.col(k) for k in keys]).orderBy(tcol)
+         if keys else _W.orderBy(tcol))
+    staged = df.withColumn("_prev_level", F.lag("_level").over(w))
+    prev = F.col("_prev_level")
+    cond = prev.isNotNull() & (prev != F.col("_level"))
+    to_lvl = _lit(args.get("toLevel", '"any"'))
+    from_lvl = _lit(args.get("fromLevel", '"any"'))
+    if to_lvl != "any":
+        cond = cond & (F.col("_level") == to_lvl)
+    if from_lvl != "any":
+        cond = cond & (prev == from_lvl)
+    return pipe._with(staged.filter(cond).drop("_prev_level"))
+
+
+def _monitor_deadman_stage(pipe, df, args, call):
+    # stock definition: each series' last row, dead = _time < t
+    if "t" not in args:
+        raise FluxError("monitor.deadman() missing required t:")
+    t_ns = _time_to_ns(args["t"], call.now_ns)
+    pipe = pipe.last()
+    return pipe._with(
+        pipe.df.withColumn("dead", F.col("time_ns") < F.lit(t_ns)))
+
+
+def _sql_to_stage(pipe, df, args, call):
+    # writes the table to a JDBC target and passes the stream through
+    from ..sources.aux_sources import sql_to as _sql_to
+
+    drv = _lit(args.get("driverName", '""')) or None
+    if drv == "derby":
+        drv = "org.apache.derby.jdbc.EmbeddedDriver"
+    _sql_to(df, _lit(args["dataSourceName"]), _lit(args["table"]),
+            driver=drv)
+    return pipe
+
+
+def _time_shift_stage(pipe, df, args, call):
+    from ..operators.core import time_shift
+
+    # _start/_stop shift with _time, so a createEmpty spine downstream
+    # sees the shifted interval
+    return pipe._with(
+        time_shift(df, _lit(args["duration"])),
+        range_bounds=tuple(_shift_bound_ns(b, _lit(args["duration"]))
+                           for b in pipe.range_bounds),
+    )
+
+
+def _truncate_time_column_stage(pipe, df, args, call):
+    from ..operators.core import truncate_time
+
+    return pipe._with(truncate_time(df, _lit(args["unit"])))
+
+
+#: conversion stage → (Spark cast type, Flux type name)
+_CONVERSIONS = {
+    "toInt": ("long", "int"), "toFloat": ("double", "float"),
+    "toString": ("string", "string"), "toBool": ("boolean", "boolean"),
+    "toUInt": ("long", "uint"), "toDuration": ("long", "duration"),
+}
+
+
+def _conversion_stage(pipe, df, args, call):
+    # conversions rebind _value to the cast value: toInt truncates toward
+    # zero like Spark's cast; toUInt = toInt (no unsigned 64-bit column);
+    # toTime reads epoch-ns ints; toDuration keeps integer ns
+    cur = _colname(df, "_value")
+    if cur not in df.columns:
+        raise FluxError(f"{call.name}() has no _value column to convert")
+    src = _value_slot_runtime(df, cur)
+    if call.name == "toTime":
+        return pipe._with(df.withColumn(
+            src, F.timestamp_micros(ns_to_us(F.col(src)))))
+    spark_type, flux_t = _CONVERSIONS[call.name]
+    dtypes_all = dict(df.dtypes)
+
+    def _cast_one(colname):
+        # string → non-string: stock's runtime conversion error, not a
+        # raw ANSI cast failure
+        if dtypes_all.get(colname) == "string" and spark_type != "string":
+            return _checked_str_cast(F.col(colname), spark_type, flux_t)
+        return F.col(colname).cast(spark_type)
+
+    # slot routing only on frames that carry the typed slots (bucket
+    # reads); a float-only pipe retypes f_float in place, and the
+    # single-slot serializer reads the Spark type directly
+    if cur != "f_float" or not _has_typed_slots(df):
+        return pipe._with(df.withColumn(src, _cast_one(src)))
+    live = _live_slots(df, exact=False)
+    # on a mixed frame exactly one slot per row is non-null, so the
+    # coalesce of per-slot casts is the row's own value converted
+    conv = (F.coalesce(*[_cast_one(s) for s in live]) if len(live) > 1
+            else _cast_one(live[0]))
+    dest, ft = {"string": ("f_str", "string"),
+                "boolean": ("f_bool", "bool")}.get(
+        spark_type, ("f_float", "float"))
+    value = conv.cast("double") if dest == "f_float" else conv
+    return pipe._with(_retype_value(df, dest, ft, value))
+
+
+def _columns_stage(pipe, df, args, call):
+    # one row per Flux-visible column label
+    rev = {real: flux for flux, real in COLMAP.items()}
+    internal = {"time_ns", "ingest_seq", "_ts_raw", "ftype", "props", "tags"}
+    if "f_float" in df.columns:
+        # the extra typed slots are _value, already labeled via f_float
+        internal |= {"f_str", "f_bool"}
+    else:
+        # a typed window/aggregate result carried in its source slot is
+        # the _value label
+        slot_hits = [c for c in ("f_str", "f_bool") if c in df.columns]
+        if len(slot_hits) == 1:
+            rev = {**rev, slot_hits[0]: "_value"}
+    labels = [rev.get(c, c) for c in df.columns if c not in internal]
+    return _label_rows(pipe, labels, args)
+
+
+def _keys_stage(pipe, df, args, call):
+    # one row per group-key column label (columns() lists every column)
+    rev = {real: flux for flux, real in COLMAP.items()}
+    return _label_rows(
+        pipe, sorted({rev.get(c, c) for c in pipe.group_key}), args)
+
+
+def _label_rows(pipe, labels, args) -> Pipeline:
+    out_col = _lit(args.get("column", '"_value"'))
+    return pipe._with(pipe.df.sparkSession.createDataFrame(
+        [(label,) for label in labels], f"`{out_col}` string"))
+
+
+def _key_values_stage(pipe, df, args, call):
+    # (_key, _value) rows: the distinct values of each requested column,
+    # a union of per-column distincts (no driver collect)
+    parts = []
+    for kname in _strlist(args["keyColumns"]):
+        real = _value_slot_runtime(df, _colname(df, kname))
+        src = (
+            F.col(real) if real in df.columns
+            else F.col("tags")[kname] if "tags" in df.columns
+            else None
+        )
+        if src is None:
+            raise FluxError(f"keyValues: unknown column {kname!r}")
+        parts.append(df.select(
+            F.lit(kname).alias("_key"), src.cast("string").alias("_value"),
+        ).distinct())
+    acc = parts[0]
+    for p in parts[1:]:
+        acc = acc.unionByName(p)
+    return pipe._with(acc)
+
+
+def _unique_stage(pipe, df, args, call):
+    from ..operators.selectors import unique as _unique
+
+    col = _value_slot_runtime(
+        df, _colname(df, _lit(args.get("column", '"_value"'))))
+    if col not in df.columns:
+        raise FluxError(f"unique(column:) references unknown column {col!r}")
+    if col == "f_float" and len(_live_slots(df, exact=False)) > 1:
+        _reject_group_schema_collision(df, pipe.group_key)
+        # a mixed frame keys on the coalesced value: types are uniform
+        # inside a group, so string renderings cannot collide
+        key = F.coalesce(*[F.col(s).cast("string") for s in _slot_cols(df)])
+        return pipe._with(_unique(df.withColumn("_uval", key), "_uval",
+                                  by=pipe.group_key).drop("_uval"))
+    return pipe._with(_unique(df, col, by=pipe.group_key))
+
+
+def _distinct_stage(pipe, df, args, call):
+    from ..operators.selectors import distinct_rows
+
+    col = _value_slot_runtime(
+        df, _colname(df, _lit(args.get("column", '"_value"'))))
+    tag_distinct = False
+    if col not in df.columns:
+        # a map-resident tag key (the dashboard-variable idiom)
+        m = _tags_map_col(df)
+        if m is None or col not in _frame_tag_keys(df):
+            raise FluxError(
+                f"distinct(column:) references unknown column {col!r}")
+        df = df.withColumn(col, m[col])
+        pipe = pipe._with(df)
+        tag_distinct = True
+    if (not tag_distinct and col == "f_float"
+            and len(_live_slots(df, exact=False)) > 1):
+        _reject_group_schema_collision(df, pipe.group_key)
+        # a mixed frame takes the distinct of the slot list (+ ftype for
+        # the serializer): one slot per row is non-null, so it equals
+        # the per-type distinct stock computes per table
+        keep = list(dict.fromkeys([*pipe.group_key, "ftype", *_slot_cols(df)]))
+        return pipe._with(df.select(*keep).distinct())
+    out = distinct_rows(df, col, by=pipe.group_key)
+    if tag_distinct:
+        # stock distinct() rebinds the selected values to _value
+        out = out.drop(*[s for s in ("f_float", "f_int", "f_uint", "f_bool")
+                         if s in out.columns]).withColumnRenamed(col, "f_str")
+    return pipe._with(out)
+
+
+def _sample_stage(pipe, df, args, call):
+    from ..operators.selectors import sample as _sample
+
+    return pipe._with(_sample(df, _int_lit(args["n"]), by=pipe.group_key,
+                              pos=_int_lit(args.get("pos", "-1"))))
+
+
+def _quantile_stage(pipe, df, args, call):
+    from ..operators.aggregates import quantile as _quantile
+
+    vcol = _colname(df, _lit(args.get("column", '"_value"')))
+    if vcol not in df.columns:
+        raise FluxError("quantile() has no value column to aggregate")
+    return pipe._with(_quantile(
+        df, _float_lit(args["q"]),
+        method=_lit(args.get("method", '"estimate_tdigest"')),
+        by=pipe.group_key, alias="quantile", column=vcol,
+    ))
+
+
+def _integral_stage(pipe, df, args, call):
+    from ..operators.aggregates import integral as _integral
+
+    return pipe._with(_integral(
+        df, duration_ns(args.get("unit", "1s")) / 1e9, by=pipe.group_key))
+
+
+def _state_stage(pipe, df, args, call):
+    from ..operators import analytics as _an
+
+    pred = _parse_predicate(df, args["fn"].partition("=>")[2])
+    # column: names the output (default: the stage name)
+    out_col = _lit(args.get("column", f'"{call.name}"'))
+    if call.name == "stateCount":
+        return pipe._with(_an.state_count(
+            df, pred, by=pipe.group_key, order=list(pipe.order),
+            alias=out_col))
+    unit_s = duration_ns(args.get("unit", "1s")) / 1e9
+    return pipe._with(_an.state_duration(
+        df, pred, unit_s, by=pipe.group_key, order=list(pipe.order),
+        alias=out_col))
+
+
+def _state_tracking_stage(pipe, df, args, call):
+    # the legacy combined form of stateCount/stateDuration
+    from ..operators import analytics as _an
+
+    pred = _parse_predicate(df, args["fn"].partition("=>")[2])
+    count_col = args.get("countColumn")
+    dur_col = args.get("durationColumn")
+    if count_col is None and dur_col is None:
+        raise FluxError(
+            "stateTracking() needs countColumn: and/or durationColumn:")
+    out = df
+    if count_col is not None:
+        out = _an.state_count(out, pred, by=pipe.group_key,
+                              order=list(pipe.order), alias=_lit(count_col))
+    if dur_col is not None:
+        unit_s = duration_ns(args.get("durationUnit", "1s")) / 1e9
+        out = _an.state_duration(out, pred, unit_s, by=pipe.group_key,
+                                 order=list(pipe.order), alias=_lit(dur_col))
+    return pipe._with(out)
+
+
+def _histogram_stage(pipe, df, args, call):
+    from ..operators.analytics import histogram as _hist
+
+    try:
+        bins = [float(b) for b in _strlist(args["bins"])]
+    except ValueError:
+        raise FluxError(
+            f"histogram bins: must be numbers, got {args['bins']!r}"
+        ) from None
+    vcol = _colname(df, _lit(args.get("column", '"_value"')))
+    if vcol not in df.columns:
+        raise FluxError("histogram() has no value column to bin")
+    if "le" in df.columns:
+        raise FluxError(
+            "histogram() output column 'le' already exists in input")
+    return pipe._with(_hist(df, bins, value=vcol, by=pipe.group_key))
+
+
+def _histogram_quantile_stage(pipe, df, args, call):
+    from ..operators.analytics import histogram_quantile as _hq
+
+    return pipe._with(
+        _hq(df, _float_lit(args["quantile"]), by=pipe.group_key))
+
+
+def _interpolate_linear_stage(pipe, df, args, call):
+    from ..operators.windows import interpolate_linear as _interp
+
+    return pipe._with(_interp(
+        df, args["every"], by=pipe.group_key,
+        range_start=pipe.range_bounds[0], range_stop=pipe.range_bounds[1],
+    ))
+
+
+#: technical-analysis stage → (operators.analytics function, result column)
+_INDICATORS = {
+    "doubleEMA": ("double_ema", "dema"),
+    "tripleEMA": ("triple_ema", "tema"),
+    "kaufmansER": ("kaufmans_er", "ker"),
+    "kaufmansAMA": ("kaufmans_ama", "kama"),
+    "chandeMomentumOscillator": ("chande_momentum_oscillator", "cmo"),
+    "relativeStrengthIndex": ("relative_strength_index", "rsi"),
+    "tripleExponentialDerivative": ("triple_exponential_derivative", "trix"),
+}
+
+
+def _indicator_stage(pipe, df, args, call):
+    from ..operators import analytics as _an
+
+    fn_name, out_alias = _INDICATORS[call.name]
+    # stock replaces _value with the indicator, so a downstream
+    # mean()/filter reads the indicator, not the raw series
+    return _promote_value(pipe._with(getattr(_an, fn_name)(
+        df, _int_lit(args["n"]), by=pipe.group_key)), out_alias)
+
+
+def _covariance_stage(pipe, df, args, call):
+    from ..operators import analytics as _an
+
+    cols = [_colname(df, c)
+            for c in _strlist(args.get("columns", '["_value"]'))]
+    if len(cols) != 2:
+        raise FluxError(f"{call.name} needs columns: [x, y]")
+    for c in cols:
+        # numeric-only statistics
+        _reject_non_numeric_agg(df, c, call.name)
+    use_pearson = (call.name == "pearsonr"
+                   or _lit(args.get("pearsonr", "false")) is True)
+    fn = _an.pearsonr if use_pearson else _an.covariance
+    # valueDst is an output name: known Flux names map to their physical
+    # columns, custom names stay verbatim
+    dst_name = _lit(args.get("valueDst", '"_value"'))
+    dst = COLMAP.get(dst_name, dst_name)
+    return pipe._with(fn(df, cols[0], cols[1], by=pipe.group_key, alias=dst))
+
+
+def _hour_selection_stage(pipe, df, args, call):
+    from ..operators.core import hour_selection
+
+    return pipe._with(hour_selection(
+        df, _int_lit(args["start"]), _int_lit(args["stop"]),
+        tz=_stage_tz(args, call)))
+
+
+def _time_weighted_avg_stage(pipe, df, args, call):
+    from ..operators.aggregates import time_weighted_avg as _twa
+
+    return pipe._with(_twa(df, by=pipe.group_key))
+
+
+def _holt_winters_stage(pipe, df, args, call):
+    from ..operators.analytics import holt_winters as _hw
+
+    # withFit also emits the in-sample one-step predictions
+    with_fit = _lit(args.get("withFit", "false")) is True
+    hw_out = _hw(
+        df, _int_lit(args["n"]), duration_ns(args["interval"]) / 1e9,
+        seasonality=_int_lit(args.get("seasonality", "0")),
+        by=pipe.group_key, fit=with_fit, include_fitted=with_fit,
+    )
+    # the forecast is the stream's _value; the operator's pruned schema
+    # dropped the display time, so it is derived again
+    hw_out = hw_out.withColumn(
+        "time", F.timestamp_micros(ns_to_us(F.col("time_ns"))))
+    return _promote_value(pipe._with(hw_out), "hw")
+
+
+def _highest_lowest_stage(pipe, df, args, call):
+    from ..operators import selectors as _sel
+
+    # the operator is the stage name in snake case (highestMax → highest_max)
+    fn = getattr(_sel, re.sub(r"([A-Z])", r"_\1", call.name).lower())
+    # max/current rank by the live slot (sort-based selectors); the
+    # mean-based variants are numeric-only in stock
+    if call.name in ("highestAverage", "lowestAverage"):
+        _reject_non_numeric_agg(df, "f_float", call.name)
+        vcol = "f_float"
+    else:
+        vcol = _value_slot_runtime(df, "f_float")
+        if vcol not in df.columns:
+            vcol = "f_float"
+    return pipe._with(fn(df, _int_lit(args["n"]), series=pipe.group_key,
+                         value=vcol))
+
+
+def _to_stage(pipe, df, args, call):
+    # the task write stage: ``sink`` is the store-backed callable a
+    # facade or task runner provides
+    if call.sink is None:
+        raise FluxError("to() requires a store-backed session")
+    call.sink(df, _lit(args["bucket"]))
+    return pipe
+
+
+def _yield_stage(pipe, df, args, call):
+    # every yield registers the pipeline state at that point
+    if call.yields is not None:
+        call.yields[_lit(args.get("name", '"_result"'))] = pipe
+    return pipe
+
+
+def _events_duration_stage(pipe, df, args, call):
+    # time until the next event of the same series; the last event
+    # closes against stop:, the stop column, or the range stop
+    from pyspark.sql.window import Window as _W
+
+    unit = duration_ns(args.get("unit", "1ns"))
+    out_col = _lit(args.get("columnName", '"duration"'))
+    w = _W.partitionBy(*pipe.group_key).orderBy(
+        *[F.col(c) for c in (pipe.order or ("time_ns",))])
+    nxt = F.lead("time_ns").over(w)
+    # an explicit stopColumn binds that column (COLMAP-resolved) and is
+    # a typed error when absent, never a silent fallback to _stop_ns
+    stop_name = _lit(args.get("stopColumn", '"_stop"'))
+    stop_col = COLMAP.get(stop_name, stop_name)
+    if "stop" in args:
+        tail_stop = F.lit(_time_to_ns(args["stop"], call.now_ns))
+    elif stop_col in df.columns:
+        tail_stop = F.col(stop_col)
+    elif "stopColumn" in args:
+        raise FluxError(
+            f"events.duration() stopColumn {stop_name!r} is not a "
+            "column of the input")
+    elif pipe.range_bounds[1] is not None:
+        tail_stop = F.lit(pipe.range_bounds[1])
+    else:
+        raise FluxError(
+            "events.duration() needs stop:, a stop column, or a "
+            "bounded range()")
+    diff = F.coalesce(nxt, tail_stop) - F.col("time_ns")
+    return pipe._with(df.withColumn("_ed_diff", diff).withColumn(
+        out_col, F.expr(f"_ed_diff div {unit}")).drop("_ed_diff"))
+
+
+def _fields_as_cols_stage(pipe, df, args, call):
+    # pivot(rowKey: ["_time"], columnKey: ["_field"], valueColumn:
+    # "_value") within each series table
+    val = _colname(df, "_value")
+    if val not in df.columns:
+        raise FluxError(f"{call.name}() has no value column to pivot")
+    row_key = [c for c in (*pipe.group_key, "time", "time_ns")
+               if c in df.columns and c != "field"]
+    if "field" not in df.columns:
+        raise FluxError(f"{call.name}() requires a _field column")
+    sans = _series_key_sans_field(df)
+    typed = _typed_field_pivot(
+        sans, [c for c in row_key if c in sans.columns], val)
+    if typed is not None:
+        return _typed_pivot_pipe(pipe, typed)
+    return pipe._with(sans).pivot(row_key, "field", val)
+
+
+def _extract_stage(pipe, df, args, call):
+    # stream-termination extractors: Flux returns an array or record to
+    # the script; here the matching column (one column) or record (one
+    # row) comes back as a frame (same values)
+    name = call.name
+    if name in ("findColumn", "findRecord", "tableFind"):
+        key_body = args["fn"].partition("=>")[2].strip()
+        if key_body not in ("true", "(true)"):
+            df = df.filter(_parse_predicate(
+                df, re.sub(r"\bkey(?=[.\[])", "r", key_body)))
+    if name in ("getColumn", "findColumn"):
+        col = _value_slot_runtime(
+            df, _colname(df, _lit(args.get("column", '"_value"'))))
+        if col not in df.columns:
+            raise FluxError(
+                f"{name}(column:) references unknown column {col!r}")
+        return pipe._with(df.select(col), group_key=())
+    if name in ("getRecord", "findRecord"):
+        idx = _int_lit(args.get("idx", "0"))
+        order_cols = [c for c in pipe.order if c in df.columns]
+        if order_cols:
+            df = df.orderBy(*order_cols)
+        return pipe._with(df.offset(idx).limit(1), group_key=())
+    return pipe._with(df)  # tableFind: the filtered tables themselves
 
 
 def _parse_geo_region(src: str) -> dict:
@@ -4061,7 +3696,7 @@ def _parse_geo_region(src: str) -> dict:
     return out
 
 
-def _geo_stage(pipe: Pipeline, name: str, args) -> Pipeline:
+def _geo_stage(pipe, df, args, call):
     """The ``experimental/geo`` pipeline stages. Rows gain lat/lon
     columns via shapeData/toRows (pivoting the lat/lon fields); the
     filters compile to JVM Column predicates (operators/geo.py). The
@@ -4070,7 +3705,7 @@ def _geo_stage(pipe: Pipeline, name: str, args) -> Pipeline:
     ``from |> range |> geo.filterRows(region:)`` works directly."""
     from ..operators import geo as geo_ops
 
-    df = pipe.df
+    name = call.name
 
     def _shaped(level: int = 10, lat_f: str = "lat", lon_f: str = "lon"):
         if "lat" in df.columns and "lon" in df.columns:
@@ -4091,8 +3726,7 @@ def _geo_stage(pipe: Pipeline, name: str, args) -> Pipeline:
     if name == "geo.toRows":
         return _shaped()
     if name == "geo.shapeData":
-        # typed-FluxError arg validation (r10 ADVICE: raw KeyError
-        # bypassed the convention for direct callers)
+        # typed-FluxError arg validation
         for req in ("latField", "lonField"):
             if req not in args:
                 raise FluxError(f"geo.shapeData requires {req}:")
@@ -4119,3 +3753,124 @@ def _geo_stage(pipe: Pipeline, name: str, args) -> Pipeline:
     except OperatorValidationError as e:
         raise FluxError(str(e)) from None
     return shaped.filter(pred)
+
+
+_AGGREGATE = Stage(_aggregate_stage)
+_INDICATOR = Stage(_indicator_stage, value_input=True, numeric_input=True)
+_SERIES_TRANSFORM = dict(time_ordered=True, value_input=True,
+                         numeric_input=True)
+
+#: every Flux function that can follow a pipeline's source, by name. A
+#: new function is one entry here plus its handler.
+_STAGES: dict[str, Stage] = {
+    "range": Stage(_range_stage, keeps_ftype=True, removes_rows=True),
+    "filter": Stage(_filter_stage, keeps_ftype=True, removes_rows=True),
+    "group": Stage(_group_stage, keeps_ftype=True),
+    "window": Stage(_window_stage, time_ordered=True, keeps_ftype=True),
+    "aggregateWindow": Stage(_aggregate_window_stage, time_ordered=True),
+    "count": _AGGREGATE,
+    "sum": _AGGREGATE,
+    "mean": _AGGREGATE,
+    "median": _AGGREGATE,
+    "mode": _AGGREGATE,
+    "stddev": _AGGREGATE,
+    "spread": _AGGREGATE,
+    "skew": _AGGREGATE,
+    "min": Stage(_min_max_stage, keeps_ftype=True),
+    "max": Stage(_min_max_stage, keeps_ftype=True),
+    "first": Stage(_first_last_stage, time_ordered=True, keeps_ftype=True),
+    "last": Stage(_first_last_stage, time_ordered=True, keeps_ftype=True),
+    "top": Stage(_top_bottom_stage, keeps_ftype=True),
+    "bottom": Stage(_top_bottom_stage, keeps_ftype=True),
+    "derivative": Stage(_derivative_stage, **_SERIES_TRANSFORM),
+    "difference": Stage(_difference_stage, **_SERIES_TRANSFORM),
+    "increase": Stage(_increase_stage, **_SERIES_TRANSFORM),
+    "cumulativeSum": Stage(_cumulative_sum_stage, **_SERIES_TRANSFORM),
+    "elapsed": Stage(_elapsed_stage, time_ordered=True, keeps_ftype=True,
+                     removes_rows=True),
+    "movingAverage": Stage(_moving_average_stage, **_SERIES_TRANSFORM),
+    "timedMovingAverage": Stage(_timed_moving_average_stage,
+                                **_SERIES_TRANSFORM),
+    "exponentialMovingAverage": Stage(_ema_stage, **_SERIES_TRANSFORM),
+    "doubleEMA": _INDICATOR,
+    "tripleEMA": _INDICATOR,
+    "kaufmansER": _INDICATOR,
+    "kaufmansAMA": _INDICATOR,
+    "chandeMomentumOscillator": _INDICATOR,
+    "relativeStrengthIndex": _INDICATOR,
+    "tripleExponentialDerivative": Stage(_indicator_stage),
+    "holtWinters": Stage(_holt_winters_stage, **_SERIES_TRANSFORM),
+    "fill": Stage(_fill_stage, keeps_ftype=True),
+    "sort": Stage(_sort_stage, keeps_ftype=True),
+    "limit": Stage(_limit_stage, keeps_ftype=True, removes_rows=True),
+    "tail": Stage(_tail_stage, keeps_ftype=True, removes_rows=True),
+    "keep": Stage(_keep_drop_stage, keeps_ftype=True),
+    "drop": Stage(_keep_drop_stage, keeps_ftype=True),
+    # carries its own cache: a measurement/field rename voids the catalog
+    "rename": Stage(_rename_stage),
+    "set": Stage(_set_stage),
+    "duplicate": Stage(_duplicate_stage),
+    "pivot": Stage(_pivot_stage),
+    "map": Stage(_map_stage),
+    "reduce": Stage(_reduce_stage),
+    "monitor.check": Stage(_monitor_check_stage, keeps_ftype=True),
+    "monitor.stateChanges": Stage(_monitor_state_changes_stage,
+                                  keeps_ftype=True, removes_rows=True),
+    "monitor.deadman": Stage(_monitor_deadman_stage, time_ordered=True),
+    "sql.to": Stage(_sql_to_stage),
+    "timeShift": Stage(_time_shift_stage, time_ordered=True,
+                       keeps_ftype=True),
+    "truncateTimeColumn": Stage(_truncate_time_column_stage,
+                                time_ordered=True, keeps_ftype=True),
+    "toInt": Stage(_conversion_stage),
+    "toFloat": Stage(_conversion_stage),
+    "toString": Stage(_conversion_stage),
+    "toBool": Stage(_conversion_stage),
+    "toUInt": Stage(_conversion_stage),
+    "toTime": Stage(_conversion_stage),
+    "toDuration": Stage(_conversion_stage),
+    "columns": Stage(_columns_stage),
+    "keys": Stage(_keys_stage),
+    "keyValues": Stage(_key_values_stage),
+    "unique": Stage(_unique_stage, keeps_ftype=True, removes_rows=True),
+    "distinct": Stage(_distinct_stage),
+    "sample": Stage(_sample_stage, keeps_ftype=True, removes_rows=True),
+    "quantile": Stage(_quantile_stage, numeric_input=True),
+    "integral": Stage(_integral_stage, **_SERIES_TRANSFORM),
+    "stateCount": Stage(_state_stage, time_ordered=True, keeps_ftype=True),
+    "stateDuration": Stage(_state_stage, time_ordered=True,
+                           keeps_ftype=True),
+    "stateTracking": Stage(_state_tracking_stage),
+    "histogram": Stage(_histogram_stage, numeric_input=True),
+    "histogramQuantile": Stage(_histogram_quantile_stage,
+                               numeric_input=True),
+    "interpolate.linear": Stage(_interpolate_linear_stage,
+                                time_ordered=True),
+    "covariance": Stage(_covariance_stage),
+    "pearsonr": Stage(_covariance_stage),
+    "hourSelection": Stage(_hour_selection_stage, time_ordered=True,
+                           keeps_ftype=True, removes_rows=True),
+    "timeWeightedAvg": Stage(_time_weighted_avg_stage, time_ordered=True,
+                             value_input=True),
+    "highestMax": Stage(_highest_lowest_stage),
+    "highestAverage": Stage(_highest_lowest_stage),
+    "highestCurrent": Stage(_highest_lowest_stage),
+    "lowestMin": Stage(_highest_lowest_stage),
+    "lowestAverage": Stage(_highest_lowest_stage),
+    "lowestCurrent": Stage(_highest_lowest_stage),
+    "to": Stage(_to_stage),
+    "yield": Stage(_yield_stage),
+    "events.duration": Stage(_events_duration_stage, time_ordered=True),
+    "schema.fieldsAsCols": Stage(_fields_as_cols_stage),
+    "v1.fieldsAsCols": Stage(_fields_as_cols_stage),
+    "getColumn": Stage(_extract_stage),
+    "findColumn": Stage(_extract_stage),
+    "getRecord": Stage(_extract_stage),
+    "findRecord": Stage(_extract_stage),
+    "tableFind": Stage(_extract_stage),
+    "geo.filterRows": Stage(_geo_stage),
+    "geo.gridFilter": Stage(_geo_stage),
+    "geo.strictFilter": Stage(_geo_stage),
+    "geo.shapeData": Stage(_geo_stage),
+    "geo.toRows": Stage(_geo_stage),
+}

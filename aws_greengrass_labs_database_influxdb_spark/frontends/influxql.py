@@ -54,6 +54,7 @@ from ..operators import aggregates as agg_ops
 from ..operators import selectors as sel_ops
 from ..operators import sortlimit as sl_ops
 from ..operators.windows import duration_ns, window_spine, window_start_ns
+from ..schema import SLOT_OF_FTYPE
 
 
 class InfluxQLError(ValueError):
@@ -1368,7 +1369,7 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
         for m in metas:
             for f, t in (field_types.get(m) or {}).items():
                 if f in refs:
-                    s = _SLOT_OF_FTYPE.get(t, "f_float")
+                    s = SLOT_OF_FTYPE.get(t, "f_float")
                     if f not in slots or s == "f_float":
                         slots[f] = s
         ast.field_slots = {k: v for k, v in slots.items()
@@ -1866,7 +1867,7 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
                     for r in pairs:
                         if not _key_ok(r[0]):
                             continue
-                        s = _SLOT_OF_FTYPE.get(r[1], "f_float")
+                        s = SLOT_OF_FTYPE.get(r[1], "f_float")
                         if s not in df.columns:
                             s = "f_float"
                         if r[0] not in fmap or s == "f_float":
@@ -2088,12 +2089,6 @@ def _cmp_cond(c: Column, op: str, val):
             "=": c == val, "!=": c != val}[op]
 
 
-# ftype discriminator → the slot a query reads. int/uint map to
-# f_float because unify_numeric_value folds them at query entry.
-_SLOT_OF_FTYPE = {"float": "f_float", "int": "f_float", "uint": "f_float",
-                  "string": "f_str", "bool": "f_bool"}
-
-
 def _resolve_field_slots(df: DataFrame, names: set, force: bool = False) -> dict:
     """field key → value slot, from the frame's ``ftype`` column.
 
@@ -2119,7 +2114,7 @@ def _resolve_field_slots(df: DataFrame, names: set, force: bool = False) -> dict
     )
     out: dict = {}
     for r in rows:
-        slot = _SLOT_OF_FTYPE.get(r[1], "f_float")
+        slot = SLOT_OF_FTYPE.get(r[1], "f_float")
         if r[0] not in out or slot == "f_float":
             out[r[0]] = slot
     return {k: v for k, v in out.items() if v in df.columns}
@@ -2301,7 +2296,7 @@ def _expand_star_aggs(ast, df: DataFrame, field_types) -> None:
         for f in eligible:
             if (f not in ast.field_slots and f not in df.columns
                     and "field" in df.columns):
-                slot = _SLOT_OF_FTYPE.get(fmap[f], "f_float")
+                slot = SLOT_OF_FTYPE.get(fmap[f], "f_float")
                 if slot in df.columns:
                     ast.field_slots[f] = slot
     ast.fields = new_fields

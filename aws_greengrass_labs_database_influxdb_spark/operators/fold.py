@@ -89,8 +89,9 @@ def pandas_fold(
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         acc = dict(ident)
-        for row in pdf.itertuples(index=False):
-            acc = step(acc, row._asdict())
+        cols = list(pdf.columns)
+        for row in pdf.itertuples(index=False, name=None):
+            acc = step(acc, dict(zip(cols, row)))
         out = {c: [pdf[c].iloc[0]] for c in by}
         out.update({k: [v] for k, v in acc.items()})
         return pd.DataFrame(out)

@@ -47,11 +47,12 @@ POINTS_SCHEMA = T.StructType(
 
 POINTS_COLUMNS = [f.name for f in POINTS_SCHEMA.fields]
 
-# The value column a numeric operator reads, by ftype slot.
-VALUE_SLOTS = {
+# ftype discriminator → the slot a query reads it from. int/uint map to
+# f_float because unify_numeric_value folds them at query entry.
+SLOT_OF_FTYPE = {
     FT_FLOAT: "f_float",
-    FT_INT: "f_int",
-    FT_UINT: "f_uint",
+    FT_INT: "f_float",
+    FT_UINT: "f_float",
     FT_STR: "f_str",
     FT_BOOL: "f_bool",
 }

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..schema import FT_FLOAT
+from ..schema import FT_FLOAT, SLOT_OF_FTYPE
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -167,10 +167,9 @@ def result_to_points(result: DataFrame, measurement: str,
         F.array(*[F.col(t).cast("string") for t in tags]),
     ).cast("map<string,string>") if tags else F.lit(None).cast(
         "map<string,string>")
-    slot_of = {"string": "f_str", "bool": "f_bool"}
     parts = []
     for c, ft in field_cols:
-        slot = slot_of.get(ft, "f_float")
+        slot = SLOT_OF_FTYPE.get(ft, "f_float")
         vals = {
             "f_float": F.col(c).cast("double") if slot == "f_float" else nd,
             "f_str": F.col(c).cast("string") if slot == "f_str" else ns_,

@@ -2503,11 +2503,8 @@ def test_flux_numeric_agg_on_string_bool_is_typed_error(mixed_pts):
     ).collect()
     assert out[0]["mean"] == 2.5
 
-    # the numeric-input stage family rejects string series too (r11):
-    # quantile/derivative/increase/histogram/cumulativeSum/EMA/...
-    for stage in ("quantile(q: 0.5)", "derivative()", "increase()",
-                  "histogram(bins: [0.0, 1.0])", "cumulativeSum()",
-                  "movingAverage(n: 2)", "exponentialMovingAverage(n: 2)"):
+    # every numeric-input stage rejects a string series too
+    for stage in NUMERIC_INPUT_STAGES:
         with _pt.raises(FluxError) as e:
             execute_flux(
                 mixed_pts,
@@ -2525,6 +2522,86 @@ def test_flux_numeric_agg_on_string_bool_is_typed_error(mixed_pts):
         '({acc: accumulator.acc + r._value}), identity: {acc: ""})',
     ).collect()
     assert out[0]["acc"] == "okbadok"  # time order
+
+
+#: one call per Flux stage whose input must be numeric
+NUMERIC_INPUT_STAGES = (
+    "quantile(q: 0.5)", "integral()", "histogram(bins: [0.0, 1.0])",
+    "histogramQuantile(quantile: 0.5)", "derivative()", "difference()",
+    "increase()", "cumulativeSum()", "movingAverage(n: 2)",
+    "timedMovingAverage(period: 2s)", "exponentialMovingAverage(n: 2)",
+    "doubleEMA(n: 2)", "tripleEMA(n: 2)", "kaufmansAMA(n: 2)",
+    "kaufmansER(n: 2)", "chandeMomentumOscillator(n: 2)",
+    "relativeStrengthIndex(n: 2)", "holtWinters(n: 2, interval: 1s)",
+)
+
+#: one call per Flux stage that orders on _time
+TIME_ORDERED_STAGES = (
+    "derivative()", "difference()", "increase()", "cumulativeSum()",
+    "elapsed()", "movingAverage(n: 2)", "timedMovingAverage(period: 2s)",
+    "exponentialMovingAverage(n: 2)", "timeShift(duration: 1s)",
+    "truncateTimeColumn(unit: 1s)", "interpolate.linear(every: 1s)",
+    "hourSelection(start: 0, stop: 1)", "timeWeightedAvg(unit: 1s)",
+    "holtWinters(n: 2, interval: 1s)",
+    "stateCount(fn: (r) => r._value > 0)",
+    "stateDuration(fn: (r) => r._value > 0)", "integral()",
+    "window(every: 1s)", "aggregateWindow(every: 1s, fn: mean)",
+    "first()", "last()", "events.duration()",
+    "monitor.deadman(t: 1970-01-02T00:00:00Z)",
+)
+
+#: one call per Flux stage that transforms the _value series
+VALUE_INPUT_STAGES = (
+    "derivative()", "difference()", "increase()", "cumulativeSum()",
+    "movingAverage(n: 2)", "timedMovingAverage(period: 2s)",
+    "exponentialMovingAverage(n: 2)", "doubleEMA(n: 2)", "tripleEMA(n: 2)",
+    "kaufmansER(n: 2)", "kaufmansAMA(n: 2)",
+    "chandeMomentumOscillator(n: 2)", "relativeStrengthIndex(n: 2)",
+    "holtWinters(n: 2, interval: 1s)", "timeWeightedAvg(unit: 1s)",
+    "integral()",
+)
+
+_TEMP = 'from(bucket:"b") |> filter(fn: (r) => r._field == "temp")'
+
+
+@pytest.mark.parametrize(
+    "script, needle",
+    [(f"{_TEMP} |> mean() |> {s}", "requires a _time column")
+     for s in TIME_ORDERED_STAGES]
+    + [('from(bucket:"b") |> pivot(rowKey: ["_time"], columnKey: '
+        f'["_field"], valueColumn: "_value") |> {s}', "has no value column")
+       for s in VALUE_INPUT_STAGES]
+    + [(f"{_TEMP} |> noSuchStage()", "unsupported Flux function")],
+)
+def test_stage_prechecks_are_typed_errors(mixed_pts, script, needle):
+    """A stage that orders on _time after a bare aggregate, a stage
+    that transforms _value after pivot, and an unknown stage name each
+    raise a FluxError that says why, before any operator runs."""
+    with pytest.raises(FluxError, match=needle):
+        execute_flux(mixed_pts, script)
+
+
+def test_aggregate_window_table_fn_missing_argument_is_typed(mixed_pts):
+    with pytest.raises(FluxError, match="missing required argument 'q'"):
+        execute_flux(
+            mixed_pts,
+            f"{_TEMP} |> aggregateWindow(every: 1s, fn: (tables=<-) => "
+            'tables |> quantile(method: "exact_mean"))',
+        )
+
+
+def test_stage_lists_match_the_stage_table_flags():
+    """The precheck tests above call exactly the stages whose flag is
+    set in the Flux stage table."""
+    from aws_greengrass_labs_database_influxdb_spark.frontends.flux import (
+        _STAGES,
+    )
+
+    for calls, flag in ((NUMERIC_INPUT_STAGES, "numeric_input"),
+                        (TIME_ORDERED_STAGES, "time_ordered"),
+                        (VALUE_INPUT_STAGES, "value_input")):
+        assert {c.split("(")[0] for c in calls} == {
+            n for n, st in _STAGES.items() if getattr(st, flag)}, flag
 
 
 def test_fill_linear_skips_non_numeric_aggregate_columns(mixed_pts):

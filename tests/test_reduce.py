@@ -154,3 +154,23 @@ def test_bracket_field_ref_survives_column_pruning(points):
     assert all(v and set(v) for v in out.values())
     for et, s in out.items():
         assert s == et * (len(s) // len(et))
+
+
+def test_general_fold_reads_non_identifier_columns(spark):
+    # a product accumulator takes the sequential pandas fold; its rows
+    # must keep column names that are not Python identifiers
+    rates = [("a", 2.0), ("a", 3.0), ("a", 0.5), ("b", 4.0), ("b", 1.5),
+             ("b", 2.0)]
+    df = spark.createDataFrame(
+        [("m", "v", h, (i + 1) * 10**9, i, 1.0, r)
+         for i, (h, r) in enumerate(rates)],
+        "measurement string, field string, host string, time_ns long, "
+        "ingest_seq long, f_float double, `dev-rate` double",
+    )
+    out = execute_flux(
+        df,
+        'from(bucket:"b") |> group(columns: ["host"])'
+        ' |> reduce(fn: (r, accumulator) =>'
+        ' ({p: accumulator.p * r["dev-rate"]}), identity: {p: 1.0})',
+    ).collect()
+    assert {r.host: r.p for r in out} == {"a": 3.0, "b": 12.0}

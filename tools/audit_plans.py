@@ -19,10 +19,12 @@ declares a time range shows NO pushed range filter.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
@@ -55,6 +57,10 @@ PRUNE_QUERIES = {
 
 
 def main() -> int:
+    # Spark's Python workers import the engine from the working
+    # directory: it must be this script's checkout, as on the driver
+    sf_dir = os.path.abspath(SF_DIR)
+    os.chdir(ROOT)
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
@@ -74,7 +80,7 @@ def main() -> int:
     failures = []
     for name in names:
         try:
-            df = qs[name](spark, SF_DIR)
+            df = qs[name](spark, sf_dir)
             # formatted explain, NOT executedPlan().toString(): the
             # latter truncates long PushedFilters lists mid-list, which
             # made range-pushdown detection depend on filter order

@@ -10,6 +10,7 @@ Usage: python tools/check_correctness.py [sf_dir] [query_name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -18,7 +19,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
@@ -74,11 +76,15 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
 
 
 def main():
+    # Spark's Python workers import the engine from the working
+    # directory: it must be this script's checkout, as on the driver
+    sf_dir = os.path.abspath(SF_DIR)
+    os.chdir(ROOT)
     import __spark_entry__ as entry_mod
     from aws_greengrass_labs_database_influxdb_spark.session import get_spark
 
     spark = get_spark(app_name="check_correctness")
-    con = duck_con(SF_DIR)
+    con = duck_con(sf_dir)
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 
@@ -88,7 +94,7 @@ def main():
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, sf_dir)
             spark_pdf = sdf.toPandas()
         except Exception:
             print(f"FAIL {name}: SPARK ERROR\n{traceback.format_exc()}")
