@@ -201,7 +201,7 @@ def _iter_v1_json(results: list[dict], batch_rows: int = 500):
 
 
 def _iter_v1_json_chunked(results: list[dict], chunk_size: int):
-    """v1 ``chunked=true`` wire shape (r9 probe): a sequence of
+    """v1 ``chunked=true`` wire shape: a sequence of
     newline-delimited COMPLETE ``{"results": [...]}`` documents, each
     carrying at most ``chunk_size`` rows of one series. A series split
     across documents marks every non-final piece ``"partial": true``
@@ -251,81 +251,73 @@ def _iter_v1_json_chunked(results: list[dict], chunk_size: int):
             cur = nxt
 
 
-def _fluxify_result(df):
+#: the frame's tag map, kept while the catalog superset stands in for
+#: its keys
+_TAGS_M = "_tags_m"
+
+
+def _fluxify_result(df, tag_keys=(), keep_map=False):
     """Rename engine-internal result columns to the Flux WIRE names a
     stock client parses (``_measurement``/``_field``/``_value``/
-    ``_time``/``_start``/``_stop``) and materialize the ``tags`` map
-    as one column per tag key — the stock annotated-CSV shape (r8:
-    the facade leaked internal names like ``f_float``/``time_ns``/
-    ``series_key``, which no influxdb-client reader expects).
+    ``_time``/``_start``/``_stop``) and materialize the tag map as one
+    column per key in ``tag_keys`` — the stock annotated-CSV shape.
+    ``keep_map`` keeps the map itself as ``_tags_m``.
 
-    Column work only — the streaming shape of the CSV writer is
-    untouched. The tag-key discovery is one small distinct job bounded
-    by tag-KEY cardinality (not values).
+    Column work only, apart from one ``ftype`` distinct (bounded by the
+    5 field types) when the catalog allows more than one value slot.
 
     Returns a list of ``(df, wire_group_key)`` splits — one per result
     datatype (usually a single entry). The key drives the stock
     ``#group`` annotation and per-table numbering in the CSV; each
     split gets its own annotation block (schema change = new header,
     per the annotated-CSV spec)."""
-    from pyspark.sql import functions as F
+    from ..frontends.flux import (
+        _VALUE_RESULT_ALIASES, _tags_map_col, cached_live_slots,
+    )
 
-    from ..frontends.flux import _VALUE_RESULT_ALIASES
-
+    result = df
     tag_cols: list[str] = []
-    tags_map = None
-    if "tags" in df.columns:
-        tags_map = F.col("tags")
-    elif "series_key" in df.columns:
-        # aggregated frames carry the serialized key, not the map —
-        # recover the tag set from its middle |-segment
-        # (measurement|k=v,k=v|field, or measurement|k=v,… once the
-        # field segment was pivoted away)
-        tags_map = F.str_to_map(
-            F.split(F.col("series_key"), r"\|").getItem(1), F.lit(","), F.lit("=")
-        )
+    tags_map = _tags_map_col(df)
     if tags_map is not None:
-        df = df.withColumn("_tags_m", tags_map)
-        keys = [
-            r[0]
-            for r in df.select(
-                F.explode(F.map_keys("_tags_m")).alias("k")
-            ).distinct().collect()
-        ]
-        for k in sorted(keys):
+        df = df.withColumn(_TAGS_M, tags_map)
+        for k in sorted(tag_keys):
             if k and k not in df.columns:
-                df = df.withColumn(k, F.col("_tags_m")[k])
-        df = df.drop("_tags_m")
-        tag_cols = [k for k in sorted(keys) if k and k in df.columns]
+                df = df.withColumn(k, F.col(_TAGS_M)[k])
+        if not keep_map:
+            df = df.drop(_TAGS_M)
+        tag_cols = [k for k in sorted(tag_keys) if k and k in df.columns]
     for src, dst in (("_start_ns", "_start"), ("_stop_ns", "_stop")):
         if src in df.columns and dst not in df.columns:
             df = df.withColumn(
                 dst, F.timestamp_micros(F.expr(f"`{src}` div 1000"))
             )
     # the typed value slot → _value. unify_numeric_value guarantees an
-    # f_float column on every frame (null for string/bool points), so a
-    # fixed f_float-first preference silently discarded string/bool
-    # field values (r9 ADVICE-high fix): pick the slot the frame's
-    # ``ftype`` discriminator says is populated, and when a frame mixes
-    # datatypes, split it into one table per type (stock emits a fresh
-    # annotation block per schema — handled by the caller iterating the
-    # returned splits).
+    # f_float column on every frame (null for string/bool points), so
+    # the slot is the one the frame's ``ftype`` discriminator says is
+    # populated, and a frame that mixes datatypes splits into one table
+    # per type (stock emits a fresh annotation block per schema —
+    # handled by the caller iterating the returned splits).
     splits: list = []
     if "_value" not in df.columns:
         slots = [s for s in ("f_float", "f_str", "f_bool") if s in df.columns]
         if len(slots) > 1:
             # which slots actually hold data? ftype is authoritative
             # (kept even on legitimately-null values, e.g. createEmpty
-            # spines); the distinct is bounded by the 5 field types.
+            # spines). The catalog's type pins are a superset of the
+            # live types: when they allow floats only, no job runs;
+            # otherwise one distinct, bounded by the 5 field types.
             if "ftype" in df.columns:
-                ftypes = [
-                    r[0]
-                    for r in df.select("ftype").distinct().collect()
-                    if r[0] in SLOT_OF_FTYPE
-                ]
-                live = sorted(
-                    {SLOT_OF_FTYPE[t] for t in ftypes}, key=slots.index
-                )
+                if cached_live_slots(result) == ["f_float"]:
+                    live = ["f_float"]
+                else:
+                    ftypes = [
+                        r[0]
+                        for r in df.select("ftype").distinct().collect()
+                        if r[0] in SLOT_OF_FTYPE
+                    ]
+                    live = sorted(
+                        {SLOT_OF_FTYPE[t] for t in ftypes}, key=slots.index
+                    )
                 if len(live) > 1:
                     for slot in live:
                         types = [t for t, s in SLOT_OF_FTYPE.items() if s == slot]
@@ -400,6 +392,73 @@ def _fluxify_result(df):
     if splits:
         return [_finish(frame) for frame, _slot in splits]
     return [_finish(df)]
+
+
+def _observed(obs) -> dict:
+    """``obs.get``, or {} when the optimizer proved the observed plan
+    empty and removed the observing node with it (Spark then reports
+    a metrics row without a schema)."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return obs.get
+    except Py4JJavaError:
+        return {}
+
+
+def _flux_blocks(df, tag_keys=None) -> list:
+    """The wire blocks of one Flux result: ``(frame, wire_key, rows)``
+    per datatype split, ``rows`` already in wire order, or None when
+    the block is larger than ``annotated_csv.BOUND`` and must stream.
+
+    A small split costs one Spark job (:func:`sorted_rows`). With the
+    bucket's catalog superset of tag keys (``tag_keys``), that same job
+    observes which of the keys the answer really carries; the absent
+    ones (all-NULL, so they never changed the order) are dropped
+    before any header is written. A key outside the catalog — a writer
+    that raced the catalog read, or a tag map rewritten by the query —
+    or a missing observation on a non-empty answer falls back to the
+    exact path. Without a usable superset, one exact
+    ``map_keys`` distinct finds the keys and counts the answer's rows,
+    so a large answer streams with no top-K attempt."""
+    from pyspark.sql import Observation
+
+    from ..frontends import annotated_csv
+    from ..frontends.flux import _tags_map_col
+
+    tags = _tags_map_col(df)
+    if tags is None:
+        return [(frame, key, annotated_csv.sorted_rows(frame, key))
+                for frame, key in _fluxify_result(df)]
+    if tag_keys is None or set(tag_keys) & set(df.columns):
+        obs = Observation()
+        keys = [r[0] for r in df.observe(obs, F.count(F.lit(1)).alias("n"))
+                .select(F.explode(F.map_keys(tags)).alias("k"))
+                .distinct().collect()]
+        small = _observed(obs).get("n", 0) <= annotated_csv.BOUND
+        return [(frame, key, annotated_csv.sorted_rows(frame, key) if small else None)
+                for frame, key in _fluxify_result(df, keys)]
+    keys = F.map_keys(F.col(_TAGS_M))
+    allowed = F.array(*[F.lit(k) for k in ("", *tag_keys)])
+    probes = [F.count_if(F.array_contains(keys, k)).alias(f"k{i}")
+              for i, k in enumerate(tag_keys)]
+    probes.append(F.count_if(F.size(F.array_except(keys, allowed)) > 0)
+                  .alias("other"))
+    seen: set = set()
+    blocks = []
+    for frame, key in _fluxify_result(df, tag_keys, keep_map=True):
+        obs = Observation()
+        rows = annotated_csv.sorted_rows(frame, key, observe=(obs, *probes),
+                                         drop=(_TAGS_M,))
+        got = _observed(obs)
+        if got.get("other") or (not got and rows != []):
+            return _flux_blocks(df)
+        seen |= {k for i, k in enumerate(tag_keys) if got.get(f"k{i}")}
+        blocks.append((frame, key, rows))
+    absent = [k for k in tag_keys if k not in seen]
+    return [(frame.drop(_TAGS_M, *absent),
+             tuple(c for c in key if c not in absent), rows)
+            for frame, key, rows in blocks]
 
 
 def _parse_delete_predicate(pred: str):
@@ -606,8 +665,7 @@ class HttpApi:
                 q2["precision"] = {"n": "ns", "u": "us", "µ": "us"}.get(prec, prec)
                 # m/h pass through: InfluxDB 1.x accepts minute/hour
                 # precision (timestamps scale ×60e9 / ×3600e9 in the
-                # line-protocol parser) — rejecting them broke legacy
-                # clients (ADVICE r6)
+                # line-protocol parser), as legacy clients expect
                 self._handle_write(handler, q2, body, v1=True)
             elif route == ("POST", "/api/v2/query"):
                 self._handle_query_flux(handler, q, body)
@@ -726,10 +784,9 @@ class HttpApi:
         out, so plan-time and first-batch errors still surface as a
         proper 400/500. An error after streaming began cannot change
         the status — stock InfluxDB appends an annotated-CSV *error
-        table* and terminates the chunk stream, and so do we (r8: the
-        old path let the dispatcher write a second "HTTP/1.0 400"
-        status line INTO the chunk stream, corrupting the transfer —
-        found by the facade fuzz)."""
+        table* and terminates the chunk stream, and so do we — a second
+        status line written into the chunk stream would corrupt the
+        transfer."""
         import itertools
 
         it = iter(chunks)
@@ -752,8 +809,8 @@ class HttpApi:
                 _write(chunk)
         except Exception as exc:  # noqa: BLE001 — mid-stream: emit typed error
             # the error fragment must match the stream's content type
-            # (r9 ADVICE fix: CSV error text inside a JSON envelope left
-            # clients with unparseable output) — CSV gets the stock
+            # (CSV error text inside a JSON envelope leaves clients
+            # with unparseable output) — CSV gets the stock
             # annotated error table; JSON gets a JSON error object the
             # client can detect after its truncated envelope.
             raw = str(exc).split("\n", 1)[0][:500]
@@ -778,8 +835,7 @@ class HttpApi:
         # own precision set is ns/us/ms/s (public API contract). The v1
         # marker is a function argument, NOT a query-dict sentinel — q
         # comes straight from the client's query string, so a sentinel
-        # there would let ?precision=h&_v1=1 bypass the v2 contract
-        # (ADVICE r7).
+        # there would let ?precision=h&_v1=1 bypass the v2 contract.
         if not v1 and precision not in ("ns", "us", "ms", "s"):
             raise ApiError(
                 400, "invalid",
@@ -807,12 +863,14 @@ class HttpApi:
         from ..sources.bucket import FieldTypeConflict
 
         try:
-            # line protocol is parsed driver-side — the type pins are
-            # already known, so the write runs a single Spark job (r11)
+            # line protocol is parsed driver-side — the type pins and
+            # tag keys are already known, so the write runs a single
+            # Spark job
             self.engine.store.write_points(
                 org, bucket, df,
                 known_types={(r["measurement"], r["field"], r["ftype"])
                              for r in rows},
+                tag_keys={k for r in rows for k in r["tags"]},
             )
         except FieldTypeConflict as e:
             # stock partial-write contract: valid points landed, the
@@ -905,8 +963,8 @@ class HttpApi:
         ctype = handler.headers.get("Content-Type", "")
         text = body.decode()
         # v2 dialect object: which annotation rows + header to emit,
-        # plus delimiter / commentPrefix / dateTimeFormat (r9 probe:
-        # stock honors all five; dateTimeFormat defaults RFC3339 —
+        # plus delimiter / commentPrefix / dateTimeFormat (stock
+        # honors all five; dateTimeFormat defaults RFC3339 —
         # which DROPS fractional seconds — vs RFC3339Nano)
         annotations: tuple = ("group", "datatype", "default")
         csv_header = True
@@ -934,18 +992,18 @@ class HttpApi:
         bucket = m.group(1)
         self._authorize(handler, "read", org, bucket)
         points = self.engine.store.read_points(org, bucket)
-        # catalog-seeded live slots (r13): the bucket's field-type pins
+        # the bucket's catalog, read AFTER read_points listed the files,
+        # is a superset of what those files hold. The field-type pins
         # bound which value slots can be live, so ordering/presence
-        # consumers (sort, selectors, count, conversions, map) skip
-        # their plan-time ftype probe entirely; only the typed-error
-        # check still probes (a pin can outlive its rows, and stock
-        # errors on live tables, not catalog entries)
+        # consumers (sort, selectors, count, conversions, map) and the
+        # numeric-input check on float-only data skip their ftype
+        # probe; the full map lets group(columns:) collision checks
+        # resolve from the pins. The tag keys stand in for the tag-key
+        # distinct (see _flux_blocks).
         from ..frontends.flux import seed_live_slots
 
         cat = self.engine.store.field_types(org, bucket)
-        # the full catalog also rides along so group(columns:)
-        # collision checks resolve from the type pins with zero probe
-        # jobs on store-backed frames (r14)
+        tag_keys = self.engine.store.tag_keys(org, bucket)
         seed_live_slots(
             points,
             {t for fields in cat.values() for t in fields.values()},
@@ -953,11 +1011,10 @@ class HttpApi:
         )
         # Flux from() tables are keyed by measurement + TAG SET + field
         # (stock InfluxDB: each series is its own table). The stored
-        # bucket schema carries the serialized tag set as series_key —
+        # bucket schema carries the serialized tag set as series_key;
         # without it in the group key, per-series stages (sum, mean,
-        # derivative, aggregateWindow, …) silently merged every series
-        # of a measurement into one stream (r8 facade fix; the DSL
-        # path's from_bucket always grouped this way).
+        # derivative, aggregateWindow, …) would merge every series of
+        # a measurement into one stream.
         gk = (
             ("measurement", "series_key", "field")
             if "series_key" in points.columns
@@ -980,11 +1037,14 @@ class HttpApi:
         else:
             results = execute_flux_multi(points, text, group_key=gk)
 
-        # stream: chunked encoding over toLocalIterator — an
-        # un-aggregated range() over a big bucket never materializes
-        # in facade memory. Multi-yield scripts emit one CSV block per
-        # yield, each tagged with its result name and separated by an
-        # empty row (InfluxDB multi-result annotated-CSV framing).
+        # chunked encoding; each result block is one bounded Spark job,
+        # or a toLocalIterator stream when it is larger (see
+        # annotated_csv), so facade memory stays bounded. Multi-yield
+        # scripts emit one CSV block per yield, each tagged with its
+        # result name and separated by an empty row (InfluxDB
+        # multi-result annotated-CSV framing).
+        from ..frontends.annotated_csv import stream_rows
+
         def _gen():
             for i, (name, df) in enumerate(results.items()):
                 if i:
@@ -993,7 +1053,8 @@ class HttpApi:
                 # one result (shared table_ids dict); each split emits
                 # its own annotation block (schema changed).
                 table_ids: dict = {}
-                for j, (wire_df, wire_key) in enumerate(_fluxify_result(df)):
+                for j, (wire_df, wire_key, rows) in enumerate(
+                        _flux_blocks(df, tag_keys)):
                     if j:
                         yield "\r\n"
                     yield from iter_annotated_csv(
@@ -1002,6 +1063,8 @@ class HttpApi:
                         table_ids=table_ids, delimiter=delimiter,
                         comment_prefix=comment_prefix,
                         datetime_format=datetime_format,
+                        rows=(stream_rows(wire_df, wire_key)
+                              if rows is None else rows),
                     )
 
         self._respond_chunks(handler, _gen())
@@ -1029,7 +1092,7 @@ class HttpApi:
         if q.get("chunked") in ("true", "1"):
             # stock v1 chunked mode: newline-delimited complete JSON
             # documents of at most chunk_size rows each, with partial
-            # flags while a series/statement has more data (r9 probe)
+            # flags while a series/statement has more data
             try:
                 chunk_size = max(1, int(q.get("chunk_size", 10000)))
             except ValueError:
@@ -1325,7 +1388,9 @@ class HttpApi:
         if im:
             from pyspark.sql import Observation
 
-            from ..sources.io import into_type_triples, result_to_points
+            from ..sources.io import (
+                into_tag_keys, into_type_triples, result_to_points,
+            )
 
             self._authorize(handler, "write", org, db)
             points = self.engine.store.read_points(org, db)
@@ -1334,7 +1399,7 @@ class HttpApi:
                 points, inner_q,
                 field_types=self.engine.store.field_types(org, db),
             )
-            # INTO tag/field provenance (r12, stock semantics): the
+            # INTO tag/field provenance (stock semantics): the
             # query's GROUP BY tags stay TAGS in the destination;
             # every other result column becomes a FIELD of its own
             # type (string fields stay string fields; ungrouped tags
@@ -1342,9 +1407,9 @@ class HttpApi:
             # all-strings-are-tags downsample mapping.
             gt = list(parse_influxql(inner_q).group_tags)
             into_tags = None if "*" in gt else gt
-            # single-execution write (r11): the written-row count rides
-            # the write job as an observation; type pins come from the
-            # result schema — one job, not three
+            # single-execution write: the written-row count rides the
+            # write job as an observation; type pins and tag keys come
+            # from the result schema — one job
             obs = Observation()
             new_pts = result_to_points(
                 result, im.group(2), tag_cols=into_tags
@@ -1356,6 +1421,7 @@ class HttpApi:
                     org, db, new_pts,
                     known_types=into_type_triples(result, im.group(2),
                                                   tag_cols=into_tags),
+                    tag_keys=into_tag_keys(result, tag_cols=into_tags),
                 )
             except FieldTypeConflict as e:
                 # v1 returns the conflict as a statement-level error
@@ -1367,7 +1433,7 @@ class HttpApi:
         self._authorize(handler, "read", org, db)
         points = self.engine.store.read_points(org, db)
         # the store's field-type catalog resolves field slots
-        # driver-side — no per-query distinct job (r10)
+        # driver-side — no per-query distinct job
         result = execute_influxql(
             points, text,
             field_types=self.engine.store.field_types(org, db),
@@ -1429,25 +1495,27 @@ class HttpApi:
         synth_time = is_agg and "time" not in cols
         t0_cell = (0 if div else _ns_to_rfc3339(0)) if synth_time else None
 
-        # rows reach the driver one partition at a time (mirrors the
-        # v2 annotated-CSV path) — a raw SELECT * over a big
-        # measurement never materializes in facade memory; the JSON
-        # envelope is emitted incrementally by _iter_v1_json
         # series splitters: a retained `measurement` column (multi-
         # measurement FROM lists / regexes — stock emits one series
-        # PER MEASUREMENT, named by it) plus the GROUP BY tags
+        # PER MEASUREMENT, named by it) plus the GROUP BY tags. Sorted
+        # rows arrive as the v2 annotated-CSV path delivers them: one
+        # bounded job, or a toLocalIterator stream for a large answer,
+        # so a raw SELECT * over a big measurement never materializes
+        # in facade memory; the JSON envelope is emitted incrementally
+        # by _iter_v1_json
         split_meas = "measurement" in cols
         splitters = (["measurement"] if split_meas else []) + gtags
         if splitters:
+            from ..frontends.annotated_csv import ordered_rows
+
             order = splitters + (["time"] if "time" in cols else [])
-            frozen = result.orderBy(*order)
             data_cols = [c for c in cols if c not in splitters]
             out_cols = (["time"] if synth_time else []) + data_cols
 
             def _series_gen():
                 import itertools
 
-                it = frozen.toLocalIterator(prefetchPartitions=True)
+                it = ordered_rows(result, order)
                 for key, rows in itertools.groupby(
                     it, key=lambda r: tuple(r[t] for t in splitters)
                 ):

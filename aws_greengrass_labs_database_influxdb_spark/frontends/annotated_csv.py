@@ -6,19 +6,63 @@ group key), ``#datatype``, ``#default`` — then the header and data rows,
 with a ``table`` index column numbering tables within the result
 (public InfluxDB 2.0 annotated-CSV spec).
 
-Serialization is the result-delivery edge, but it must not be a
-driver-memory bottleneck: an un-aggregated ``from() |> range()`` over a
-big bucket can be arbitrarily large. So the core is a *generator* over
-``toLocalIterator()`` — driver memory stays O(one partition); the
-group-key sort happens in Spark (``orderBy``), not driver-side. The
-string-returning wrapper remains for small dashboard responses.
+Delivery is one Spark pass for a dashboard-sized answer and stays
+O(one partition) of driver memory for any answer:
+
+- :func:`sorted_rows` runs ONE bounded top-K job,
+  ``orderBy(group key, frame row order).limit(BOUND + 1).collect()``.
+  The frame's own row order (``monotonically_increasing_id`` taken
+  before the sort) is the tiebreak, so rows inside a table keep the
+  order the query gave them; top-K alone is not stable.
+- An answer of more than ``BOUND`` rows is streamed instead
+  (:func:`stream_rows`): the same order as a Spark ``orderBy``, read
+  through ``toLocalIterator()`` one partition at a time.
+
+Both paths emit the same bytes. ``BOUND`` is a fixed row count, not an
+option: it caps the driver memory of the one-job path.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
+
+#: Largest answer, in rows, delivered by the one-job path.
+BOUND = 10_000
+
+#: The frame-order tiebreak column (never part of an answer).
+_ORDER = "__row_order"
+
+
+def sorted_rows(df: DataFrame, key=(), observe=None, drop=()) -> list | None:
+    """The rows of ``df`` ordered by ``key`` then the frame's own row
+    order, from ONE Spark job — or None when there are more than
+    ``BOUND`` of them. ``observe`` is an ``(Observation, *exprs)``
+    tuple evaluated over every row of that same job; the ``drop``
+    columns do not reach the driver."""
+    src = df.observe(*observe) if observe else df
+    out = (src.withColumn(_ORDER, F.monotonically_increasing_id())
+           .orderBy(*key, _ORDER)
+           .drop(_ORDER, *drop)
+           .limit(BOUND + 1).collect())
+    return out if len(out) <= BOUND else None
+
+
+def stream_rows(df: DataFrame, key=()) -> Iterable:
+    """The large-answer path of :func:`sorted_rows`: the same order,
+    pulled one partition at a time."""
+    if key:
+        df = (df.withColumn(_ORDER, F.monotonically_increasing_id())
+              .orderBy(*key, _ORDER).drop(_ORDER))
+    return df.toLocalIterator(prefetchPartitions=True)
+
+
+def ordered_rows(df: DataFrame, key=()) -> Iterable:
+    """:func:`sorted_rows`, falling back to :func:`stream_rows`."""
+    rows = sorted_rows(df, key)
+    return stream_rows(df, key) if rows is None else rows
+
 
 _DTYPES = {
     T.StringType(): "string",
@@ -71,24 +115,23 @@ def iter_annotated_csv(
     delimiter: str = ",",
     comment_prefix: str = "#",
     datetime_format: str | None = None,
+    rows: Iterable | None = None,
 ) -> Iterator[str]:
     """Stream a result DataFrame as Flux annotated-CSV chunks.
 
     Tables split on the group key; ``table`` numbers them in sorted
-    group-key order. The sort is a Spark job (``orderBy``); rows reach
-    the driver one partition at a time via ``toLocalIterator()`` — the
-    facade never holds the full result. ``annotations``/``header``/
-    ``delimiter``/``comment_prefix``/``datetime_format`` mirror the v2
-    dialect object (r6; delimiter/commentPrefix/dateTimeFormat r9):
-    annotation rows are emitted only when requested, cells join on the
-    dialect delimiter (values containing it get quoted), annotation
-    markers use the dialect comment prefix, and timestamps honor
-    RFC3339 (stock: fractional seconds dropped) vs RFC3339Nano
+    group-key order. ``rows`` are the frame's rows already in that
+    order (see :func:`ordered_rows`, which runs when they are not
+    given). ``annotations``/``header``/``delimiter``/
+    ``comment_prefix``/``datetime_format`` mirror the v2 dialect
+    object: annotation rows are emitted only when requested, cells
+    join on the dialect delimiter (values containing it get quoted),
+    annotation markers use the dialect comment prefix, and timestamps
+    honor RFC3339 (stock: fractional seconds dropped) vs RFC3339Nano
     (fraction with trailing zeros trimmed). ``datetime_format=None``
     keeps the engine's lossless isoformat (micros kept) for internal
     round-trips. Pass a shared ``table_ids`` dict to continue table
-    numbering across multiple blocks of one result (datatype splits,
-    r9).
+    numbering across multiple blocks of one result (datatype splits).
     """
     d, p = delimiter, comment_prefix
     cols = df.columns
@@ -108,12 +151,12 @@ def iter_annotated_csv(
         head += d + "result" + d + "table" + d + d.join(cols) + "\r\n"
     if head:
         yield head
-    if group_key:
-        df = df.orderBy(*group_key)
+    if rows is None:
+        rows = ordered_rows(df, group_key)
     if table_ids is None:
         table_ids = {}
     buf: list[str] = []
-    for r in df.toLocalIterator(prefetchPartitions=True):
+    for r in rows:
         key = tuple(str(r[k]) for k in group_key) if group_key else ()
         tid = table_ids.setdefault(key, len(table_ids))
         buf.append(

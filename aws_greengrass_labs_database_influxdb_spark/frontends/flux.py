@@ -375,6 +375,13 @@ def _live_slots(df: DataFrame, exact: bool = True) -> list[str]:
     return live
 
 
+def cached_live_slots(df: DataFrame) -> list[str] | None:
+    """The live-slot entry already known for ``df`` — exact, else the
+    catalog superset — or None. Never runs a job."""
+    hit = _LIVE_SLOT_CACHE.get(df)
+    return hit if hit is not None else _LIVE_SLOT_SUPERSET.get(df)
+
+
 def _probe_slots(df: DataFrame, ftype_col: str) -> list[str]:
     """The slots ``ftype_col`` says are live: one bounded distinct job
     (≤5 field types), counted in ``_PROBE_RUNS``."""
@@ -784,6 +791,11 @@ def _reject_non_numeric_agg(df: DataFrame, col: str, fn: str) -> None:
                 f"unsupported input type for {fn} aggregate: bool"
             )
     if col != "f_float" or "ftype" not in df.columns:
+        return
+    # a superset entry (the catalog's type pins) can prove the string
+    # and bool slots absent; only a superset naming one of them needs
+    # the exact probe (a pin can outlive its rows)
+    if not {"f_str", "f_bool"} & set(_live_slots(df, exact=False)):
         return
     bad = [s for s in _live_slots(df) if s in ("f_str", "f_bool")]
     if bad:

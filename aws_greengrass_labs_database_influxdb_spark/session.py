@@ -7,8 +7,14 @@ cluster-safe (AQE, Arrow, UTC) — only ``master``/memory change.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: The directory that holds this package. Spark's Python workers import
+#: the engine's UDF code through their own path, which starts with the
+#: working directory, not through the driver's ``sys.path``.
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 
 def fresh_persist(df: DataFrame) -> DataFrame:
@@ -40,6 +46,8 @@ def get_spark(
     Defaults honor ``SPARK_GRAFT_CPUS`` for local parallelism. AQE is on
     so skewed series keys and small shuffles re-plan at runtime; Arrow is
     on for the pandas-UDF operators (EMA, Holt-Winters, multimodal).
+    The package root goes on the Python workers' path before the JVM
+    starts, so the engine runs from any working directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -51,6 +59,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Let data volume, not a fixed constant, pick reduce-task
@@ -66,7 +75,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
                 str(8 * int(cpus) if str(cpus).isdigit() else 256))
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-        # r15: let the advisory size actually govern coalescing. With
+        # Let the advisory size actually govern coalescing. With
         # the default parallelismFirst=true, AQE only shrinks to
         # defaultParallelism and ignores the advisory target — small
         # shuffles ran all 8×CPUs initial partitions (observed: 256
@@ -77,7 +86,7 @@ def get_spark(
         # parallelism is unaffected.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
                 "false")
-        # r16: let AQE re-optimize CACHED plan fragments too. With the
+        # Let AQE re-optimize CACHED plan fragments too. With the
         # default (false), a persisted aggregate's InMemoryRelation is
         # built with the initial 8×CPU shuffle partitions and no
         # coalescing — dsir's doc_bucket cache build ran 256 near-empty
@@ -92,7 +101,7 @@ def get_spark(
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # r16: skip PySpark's per-Column-call origin capture. With the
+        # Skip PySpark's per-Column-call origin capture. With the
         # default (true), EVERY wrapped Column operation pays a Python
         # stack walk plus THREE extra py4j round trips (conf.get +
         # PySparkCurrentOrigin.set/clear, ~0.2 ms each here) purely to

@@ -149,6 +149,18 @@ class BucketStore:
     def _types_path(self, org: str, name: str) -> Path:
         return self.root / org / name / "_field_types.json"
 
+    def _tag_keys_path(self, org: str, name: str) -> Path:
+        return self.root / org / name / "_tag_keys.json"
+
+    @staticmethod
+    def _write_json(path: Path, obj) -> None:
+        """Replace a catalog file atomically: lock-free readers see the
+        old or the new content, never a torn write."""
+        path.parent.mkdir(parents=True, exist_ok=True)
+        tmp = path.with_name(path.name + ".tmp")
+        tmp.write_text(json.dumps(obj))
+        tmp.replace(path)
+
     def field_types(self, org: str, name: str) -> dict:
         """The bucket's field-type catalog: {measurement: {field:
         ftype}} — maintained by write_points, the authority for stock's
@@ -159,6 +171,32 @@ class BucketStore:
             return {}
         return json.loads(p.read_text())
 
+    def tag_keys(self, org: str, name: str) -> list[str] | None:
+        """The bucket's tag-key catalog: a sorted SUPERSET of the tag
+        keys its rows carry, or None when unknown.
+
+        write_points records every write's keys before its rows land,
+        so a reader that lists the bucket's files first and reads this
+        catalog second holds a superset of the keys in the files it
+        read. Deletes and drops only remove rows, so keys that no row
+        carries any more stay listed. The set is unknown (None) once a
+        writer could not name its keys, and for data written before
+        the catalog existed."""
+        p = self._tag_keys_path(org, name)
+        if p.exists():
+            return json.loads(p.read_text())
+        return None if self._data_dir(org, name).exists() else []
+
+    def _record_tag_keys(self, org: str, name: str, keys) -> None:
+        """Union ``keys`` into the tag-key catalog (``None``: the writer
+        cannot name its keys, so the catalog turns unknown). The caller
+        holds the bucket's mutation lock."""
+        have = self.tag_keys(org, name)
+        new = (None if keys is None or have is None
+               else sorted(set(have) | {k for k in keys if k}))
+        if new != have or not self._tag_keys_path(org, name).exists():
+            self._write_json(self._tag_keys_path(org, name), new)
+
     def forget_measurement_types(self, org: str, name: str,
                                  measurement: str) -> None:
         """DROP MEASUREMENT resets its fields' type pins (stock: the
@@ -167,49 +205,43 @@ class BucketStore:
             cat = self.field_types(org, name)
             if measurement in cat:
                 del cat[measurement]
-                self._types_path(org, name).write_text(json.dumps(cat))
+                self._write_json(self._types_path(org, name), cat)
 
     # ---------------------------------------------------------------- write
 
     def write_points(self, org: str, name: str, points: DataFrame,
-                     known_types=None) -> None:
+                     known_types=None, tag_keys=None) -> None:
         """Append points (canonical schema). Adds ``series_key`` and the
         ``day`` partition column; never rewrites existing data.
 
-        Field-type enforcement (r10, stock parity): each (measurement,
-        field) is pinned to the first ftype ever written; points whose
-        ftype conflicts are EXCLUDED from the append and reported by
-        raising :class:`FieldTypeConflict` AFTER the valid rows land —
-        the stock partial-write-then-422 contract.
+        Field types: each (measurement, field) is pinned to the first
+        ftype ever written. Points whose ftype conflicts are EXCLUDED
+        from the append and reported by raising
+        :class:`FieldTypeConflict` AFTER the valid rows land — stock's
+        partial-write-then-422 contract.
 
-        Single-execution contract (r11): callers that know their
-        (measurement, field, ftype) triples driver-side (HTTP writes
-        parse line protocol on the driver; SELECT INTO / CQ fields are
-        schema-derived) pass ``known_types`` and the write runs ONE
-        Spark job — no type-pin distinct. Callers with data-dependent
-        types (streaming ingest, Flux to()) leave it None: the input is
-        persisted for the write's duration so the distinct job and the
-        append both read the cache instead of re-executing the
-        upstream pipeline (the r10 verdict's 2-3× write-cost finding).
+        Catalog: the type pins and the tag keys are recorded in one
+        locked update BEFORE the append, so the catalog is always a
+        superset of the committed rows.
 
-        ``known_types`` COMPLETENESS CONTRACT (r11 ADVICE): the caller
-        promises the set covers EVERY (measurement, field, ftype)
-        triple present in ``points`` — an uncovered triple lands
-        un-pinned and un-conflict-checked. Both producers satisfy it
-        by construction: HTTP writes pass the driver-parsed triples of
-        the exact lines written; INTO/CQ derive them from the result
-        schema that also generates the rows (sources/io.py keeps the
-        two in one helper). A schema-derived triple whose rows are all
-        null still pins — harmless, because the triple's ftype comes
-        from the SAME result schema that typed the rows (since r12,
-        INTO provenance can emit string/bool triples too — the pin is
-        whatever type the column would have carried had rows landed,
-        so a later write of that field at that type is accepted and a
-        conflicting type is correctly rejected, exactly as if one row
-        had landed); checking non-nullness driver-side would cost the
-        very count job this path removes. Set
-        ``SPARK_GRAFT_VERIFY_KNOWN_TYPES=1`` to assert the contract
-        (debug runs only: it re-adds the distinct job).
+        - Callers that know their (measurement, field, ftype) triples
+          on the driver pass ``known_types`` (HTTP writes parse line
+          protocol on the driver; SELECT INTO / CQ triples come from
+          the result schema) and their ``tag_keys`` the same way; the
+          write is then ONE Spark job. ``known_types`` must cover
+          EVERY triple in ``points``: an uncovered triple lands
+          un-pinned and un-conflict-checked. A schema-derived triple
+          whose rows are all null still pins the type its rows would
+          have had. ``SPARK_GRAFT_VERIFY_KNOWN_TYPES=1`` asserts the
+          contract (debug runs only: it adds a distinct job).
+        - Callers with data-dependent types (streaming ingest, Flux
+          ``to()``) leave ``known_types`` None: the input is persisted
+          for the write, and one distinct job over the cache finds the
+          triples and the tag keys before the append reads the same
+          cache.
+        - ``known_types`` given without ``tag_keys`` means the caller
+          cannot name its keys: the bucket's tag-key catalog turns
+          unknown (see :meth:`tag_keys`).
         """
         import os
 
@@ -218,6 +250,7 @@ class BucketStore:
         df = points
         cached = None
         conflicts: list[tuple[str, str, str, str]] = []
+        new: list = []
         if "ftype" in df.columns:
             if known_types is not None:
                 new = sorted(set(known_types))
@@ -235,31 +268,32 @@ class BucketStore:
             else:
                 cached = df.persist(StorageLevel.MEMORY_AND_DISK)
                 df = cached
-                new = [
-                    (r[0], r[1], r[2])
-                    for r in df.select("measurement", "field", "ftype")
-                    .distinct().collect()
-                ]
-            with self._mutation_lock(org, name):
+                key = (F.explode_outer(F.map_keys("tags"))
+                       if "tags" in df.columns else F.lit(None).cast("string"))
+                found = (df.select("measurement", "field", "ftype",
+                                   key.alias("k"))
+                         .distinct().collect())
+                new = sorted({(r[0], r[1], r[2]) for r in found})
+                tag_keys = {r[3] for r in found}
+        with self._mutation_lock(org, name):
+            if new:
                 cat = self.field_types(org, name)
-                for m, f, t in sorted(new):
+                for m, f, t in new:
                     have = cat.get(m, {}).get(f)
                     if have is None:
                         cat.setdefault(m, {})[f] = t
                     elif have != t:
                         conflicts.append((m, f, have, t))
-                self._types_path(org, name).parent.mkdir(
-                    parents=True, exist_ok=True
-                )
-                self._types_path(org, name).write_text(json.dumps(cat))
-            if conflicts:
-                # drop only the conflicting (measurement, field,
-                # incoming-type) triples — a literal isin over one
-                # concatenated key keeps it a single codegen'd predicate
-                key = F.concat_ws("\x1f", "measurement", "field", "ftype")
-                bad_keys = ["\x1f".join((m, f, t))
-                            for m, f, _h, t in conflicts]
-                df = df.filter(~key.isin(bad_keys))
+                self._write_json(self._types_path(org, name), cat)
+            self._record_tag_keys(org, name, tag_keys)
+        if conflicts:
+            # drop only the conflicting (measurement, field,
+            # incoming-type) triples — a literal isin over one
+            # concatenated key keeps it a single codegen'd predicate
+            key = F.concat_ws("\x1f", "measurement", "field", "ftype")
+            bad_keys = ["\x1f".join((m, f, t))
+                        for m, f, _h, t in conflicts]
+            df = df.filter(~key.isin(bad_keys))
         if "series_key" not in df.columns:
             df = series_key(df)
         if "ingest_seq" not in df.columns or df.schema["ingest_seq"].nullable:
@@ -316,10 +350,10 @@ class BucketStore:
         if not data.exists():
             # provisioned-but-never-written bucket: queryable-empty
             # (a query racing ahead of the first write is a normal
-            # concurrent-client pattern, not an error — r6)
+            # concurrent-client pattern, not an error)
             return self.spark.createDataFrame([], self._stored_schema())
         df = self.spark.read.schema(self._stored_schema()).parquet(str(data))
-        # provenance mark (r10 ADVICE): push_time_filter prunes on the
+        # provenance mark: push_time_filter prunes on the
         # `day` partition column ONLY when this metadata flag says the
         # column is the store's time_ns-derived directory key — a
         # user-computed column that merely shares the name must not be
@@ -330,7 +364,7 @@ class BucketStore:
         # `day` is redundant in the key (determined by time_ns) but
         # listing it makes it a PARTITION COLUMN of the window, so a
         # downstream day-range filter (push_time_filter's partition-
-        # pruning superset, r9) pushes below the dedup instead of
+        # pruning superset) pushes below the dedup instead of
         # LWW-shuffling the bucket's entire history first.
         w = W.partitionBy("measurement", "day", "series_key", "time_ns").orderBy(
             F.desc("ingest_seq")

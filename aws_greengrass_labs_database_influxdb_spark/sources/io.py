@@ -93,7 +93,7 @@ def _into_split_cols(result: DataFrame, tag_cols=None):
     * ``tag_cols=None`` (GROUP BY * / callers without query
       provenance): every string column is a TAG, numeric columns are
       float fields — the CQ downsample shape.
-    * explicit ``tag_cols`` (r12, from the query's GROUP BY list):
+    * explicit ``tag_cols`` (from the query's GROUP BY list):
       exactly those columns are tags; EVERY other non-time column of a
       writable type becomes a FIELD with its own type — stock keeps
       selected string fields as string fields and converts ungrouped
@@ -126,10 +126,16 @@ def into_type_triples(result: DataFrame, measurement: str,
                       tag_cols=None) -> list:
     """The (measurement, field, ftype) triples ``result_to_points``
     will write — derived from the result SCHEMA alone, so write_points
-    can skip its type-pin distinct job entirely (r11 single-execution
+    can skip its type-pin distinct job entirely (single-execution
     writes)."""
     _tags, field_cols = _into_split_cols(result, tag_cols)
     return [(measurement, c, t) for c, t in field_cols]
+
+
+def into_tag_keys(result: DataFrame, tag_cols=None) -> list[str]:
+    """The tag keys ``result_to_points`` will write, from the result
+    SCHEMA alone (the write's tag-key catalog entry)."""
+    return _into_split_cols(result, tag_cols)[0]
 
 
 def result_to_points(result: DataFrame, measurement: str,
@@ -140,7 +146,7 @@ def result_to_points(result: DataFrame, measurement: str,
 
     Column mapping (InfluxDB 1.x INTO semantics): ``time`` is
     required; tags are the query's GROUP BY tags when the caller
-    passes them (``tag_cols``, r12 — every other column becomes a
+    passes them (``tag_cols`` — every other column becomes a
     FIELD of its own type, so selected string fields stay string
     fields and ungrouped tags convert to fields, like stock), else
     every string column (the GROUP BY * downsample shape). One tall
@@ -161,7 +167,7 @@ def result_to_points(result: DataFrame, measurement: str,
     # an EMPTY tag list must still write a map<string,string> — a bare
     # map_from_arrays(array(), array()) infers void element types and
     # parquet then records boolean keys, breaking every later read of
-    # the measurement's directory (r12 probe)
+    # the measurement's directory
     tags_col = F.map_from_arrays(
         F.array(*[F.lit(t) for t in tags]),
         F.array(*[F.col(t).cast("string") for t in tags]),
@@ -225,7 +231,7 @@ def canonicalize_result(df: DataFrame) -> DataFrame:
             "time", F.timestamp_micros(F.expr("time_ns div 1000"))
         )
     # a typed window result arrives slot-shaped (f_str/f_bool + ftype,
-    # no f_float — r13): missing slots fill with NULLs and a present
+    # no f_float): missing slots fill with NULLs and a present
     # ftype discriminator is preserved; the FT_FLOAT default only
     # applies to the float-only task shape
     ft_default = FT_FLOAT

@@ -91,7 +91,7 @@ class CQRegistry:
         # and rejects it with a parse error — validate here with the
         # same parser run_due will use (INTO stripped, exactly as the
         # run path rewrites it), so an invalid body can never register
-        # silently and first fail at its scheduled run (r9 DDL fuzz)
+        # silently and first fail at its scheduled run
         from ..frontends.influxql import parse_influxql
 
         parse_influxql(_INTO_RX.sub("FROM", inner))
@@ -137,7 +137,7 @@ class CQRegistry:
 
         from ..frontends.influxql import execute_influxql
         from ..operators.core import push_time_filter
-        from ..sources.io import into_type_triples, result_to_points
+        from ..sources.io import into_tag_keys, into_type_triples, result_to_points
 
         written: dict[str, int] = {}
         for (db, name), cq in self._cqs.items():
@@ -150,18 +150,18 @@ class CQRegistry:
                 windowed, sel,
                 field_types=self.store.field_types(self.org, db),
             )
-            # INTO tag provenance (r12): GROUP BY tags stay tags in
+            # INTO tag provenance: GROUP BY tags stay tags in
             # the target; GROUP BY * keeps the all-strings-are-tags
             # downsample mapping (see sources/io._into_split_cols)
             from ..frontends.influxql import parse_influxql
 
             gt = list(parse_influxql(sel).group_tags)
             into_tags = None if "*" in gt else gt
-            # single-execution write (r11, verdict #2): the row count
-            # rides the WRITE job as an observation metric, and the
-            # type pins come from the result schema — one Spark job per
-            # CQ run instead of three (write + pin-distinct + count all
-            # re-ran the unpersisted aggregate).
+            # single-execution write: the row count rides the WRITE job
+            # as an observation metric, and the type pins and tag keys
+            # come from the result schema — one Spark job per CQ run
+            # instead of three (write + pin-distinct + count would each
+            # re-run the unpersisted aggregate).
             obs = Observation()
             pts = result_to_points(
                 result, cq.target, tag_cols=into_tags
@@ -170,6 +170,7 @@ class CQRegistry:
                 self.org, db, pts,
                 known_types=into_type_triples(result, cq.target,
                                               tag_cols=into_tags),
+                tag_keys=into_tag_keys(result, tag_cols=into_tags),
             )
             written[name] = obs.get["n"]
         return written

@@ -57,22 +57,16 @@ PRUNE_QUERIES = {
 
 
 def main() -> int:
-    # Spark's Python workers import the engine from the working
-    # directory: it must be this script's checkout, as on the driver
     sf_dir = os.path.abspath(SF_DIR)
-    os.chdir(ROOT)
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from aws_greengrass_labs_database_influxdb_spark.session import get_spark
 
     # AQE off: the pre-execution adaptive plan hides WholeStageCodegen
     # wrapping; the static plan shows the real codegen spans. (AQE
     # stays ON in production sessions — this is a read-only audit.)
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="audit_plans", master="local[4]", shuffle_partitions=4,
+        extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
     qs = entry.queries()
     names = [n for n in qs if not ONLY or n in ONLY]

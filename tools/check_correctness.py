@@ -76,10 +76,7 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
 
 
 def main():
-    # Spark's Python workers import the engine from the working
-    # directory: it must be this script's checkout, as on the driver
     sf_dir = os.path.abspath(SF_DIR)
-    os.chdir(ROOT)
     import __spark_entry__ as entry_mod
     from aws_greengrass_labs_database_influxdb_spark.session import get_spark
 
