@@ -57,7 +57,9 @@ from pyspark.sql import functions as F
 
 from ..frontends.annotated_csv import iter_annotated_csv
 from ..frontends.flux import execute_flux_multi
-from ..frontends.influxql import execute_influxql, parse_influxql
+from ..frontends.influxql import (
+    execute_influxql, parse_delete, parse_statement, select_into, split_into,
+)
 from ..schema import SLOT_OF_FTYPE
 from ..sources.bucket import BucketMeta
 from ..sources.lineprotocol import parse_lines
@@ -1350,92 +1352,40 @@ class HttpApi:
                 for d, v in sorted(by_db.items())
             ] or [{"name": db, "columns": ["name", "query"], "values": []}]}
 
-        # v1 DELETE statement (Grafana/CLI compat): DELETE FROM m WHERE ...
-        # DROP SERIES FROM m [WHERE tag=...] is the same store operation
-        # with no time bounds (v1 docs: both delete points; DROP SERIES
-        # additionally drops the series key — equivalent here, where a
-        # series with no points no longer exists)
-        dm = re.match(
-            r'(?is)^\s*(?:DELETE|DROP\s+SERIES)\s+FROM\s+"?([\w.\-]+)"?'
-            r"(?:\s+WHERE\s+(.+))?\s*$",
-            text,
-        )
-        if dm:
-            from ..frontends.influxql import InfluxQLQuery, _parse_where
-
+        # v1 DELETE FROM m / DROP SERIES FROM m [WHERE ...]: one store
+        # delete; the WHERE clause compiles like SELECT's, so a field
+        # condition is an error that deletes nothing
+        delete = parse_delete(text)
+        if delete is not None:
             self._authorize(handler, "write", org, db)
-            flt = InfluxQLQuery(fields=[], measurement="")
-            if dm.group(2):
-                _parse_where(dm.group(2), flt)
-            pred = F.col("measurement") == dm.group(1)
-            for name, op, val in flt.tag_filters:
-                c = F.col("tags")[name]
-                pred = pred & (c == val) if op == "=" else pred & (c != val)
-            self.engine.store.delete_predicate(
-                org, db,
-                flt.time_start_ns or 0,
-                flt.time_stop_ns if flt.time_stop_ns is not None else 2**62,
-                pred,
-            )
+            self.engine.store.delete_predicate(org, db, *delete)
             return {}
 
         # SELECT ... INTO <target> FROM ... — the v1 continuous-query
         # idiom: run the query, write its rows back as points
-        im = re.match(
-            r'(?is)^\s*(SELECT\s+.+?)\s+INTO\s+"?([\w.\-]+)"?\s+(FROM\s+.+)$',
-            text,
-        )
-        if im:
-            from pyspark.sql import Observation
-
-            from ..sources.io import (
-                into_tag_keys, into_type_triples, result_to_points,
-            )
-
-            self._authorize(handler, "write", org, db)
-            points = self.engine.store.read_points(org, db)
-            inner_q = f"{im.group(1)} {im.group(3)}"
-            result = execute_influxql(
-                points, inner_q,
-                field_types=self.engine.store.field_types(org, db),
-            )
-            # INTO tag/field provenance (stock semantics): the
-            # query's GROUP BY tags stay TAGS in the destination;
-            # every other result column becomes a FIELD of its own
-            # type (string fields stay string fields; ungrouped tags
-            # convert to fields). GROUP BY * keeps the legacy
-            # all-strings-are-tags downsample mapping.
-            gt = list(parse_influxql(inner_q).group_tags)
-            into_tags = None if "*" in gt else gt
-            # single-execution write: the written-row count rides the
-            # write job as an observation; type pins and tag keys come
-            # from the result schema — one job
-            obs = Observation()
-            new_pts = result_to_points(
-                result, im.group(2), tag_cols=into_tags
-            ).observe(obs, F.count(F.lit(1)).alias("n"))
+        if split_into(text) is not None:
             from ..sources.bucket import FieldTypeConflict
 
+            self._authorize(handler, "write", org, db)
             try:
-                self.engine.store.write_points(
-                    org, db, new_pts,
-                    known_types=into_type_triples(result, im.group(2),
-                                                  tag_cols=into_tags),
-                    tag_keys=into_tag_keys(result, tag_cols=into_tags),
-                )
+                written = select_into(self.engine.store, org, db, text,
+                                      self.engine.store.read_points(org, db))
             except FieldTypeConflict as e:
                 # v1 returns the conflict as a statement-level error
                 return {"error": str(e)}
             return {"series": [{"name": "result",
                                 "columns": ["time", "written"],
-                                "values": [[0, obs.get["n"]]]}]}
+                                "values": [[0, written]]}]}
 
         self._authorize(handler, "read", org, db)
         points = self.engine.store.read_points(org, db)
+        # parsed once: the executor resolves the statement in place, and
+        # the series framing below reads its GROUP BY back from it
+        stmt = parse_statement(text)
         # the store's field-type catalog resolves field slots
         # driver-side — no per-query distinct job
         result = execute_influxql(
-            points, text,
+            points, text if stmt is None else stmt,
             field_types=self.engine.store.field_types(org, db),
         )
         div = {"ns": 1, "u": 1000, "us": 1000, "ms": 10**6, "s": 10**9}.get(epoch)
@@ -1463,32 +1413,17 @@ class HttpApi:
         # aliasing). The split stays streaming: rows arrive sorted by
         # the tag columns and itertools.groupby cuts series boundaries
         # without buffering more than one row group's pull-ahead.
+        # SHOW, EXPLAIN and subquery results carry no GROUP BY tags.
         gtags: list[str] = []
         is_agg = False
-        try:
-            from ..frontends.influxql import _NON_TAG_COLS, _map_tag_keys
-
-            _ast = parse_influxql(text)
-            gt = _ast.group_tags
-            is_agg = bool(
-                any(fn for fn, _f, _a in _ast.fields)
-                or _ast.nested or _ast.arith
-            )
-            if "*" in gt:
-                # GROUP BY *: the executed frame carries every tag as a
-                # materialized column — recover the list the same way
-                # the frontend expanded it
-                keys = {
-                    c for c in points.columns
-                    if c not in _NON_TAG_COLS and not c.startswith("_")
-                }
-                if "tags" in points.columns:
-                    keys |= set(_map_tag_keys(points))
-                gtags = sorted(k for k in keys if k in cols)
-            else:
-                gtags = [t for t in gt if t != "*" and t in cols]
-        except Exception:  # SHOW/DDL forms handled elsewhere
-            gtags = []
+        if stmt is not None:
+            # the executed GROUP BY: GROUP BY * already expanded to the
+            # queried rows' tag keys; a multi-measurement read leads
+            # with `measurement`, which splits series by name below
+            gtags = [t for t in stmt.group_tags
+                     if t != "measurement" and t in cols]
+            is_agg = bool(any(fn for fn, _f, _a in stmt.fields)
+                          or stmt.nested or stmt.arith)
 
         # stock v1: an aggregate without GROUP BY time still carries a
         # leading time column pinned to epoch 0

@@ -52,7 +52,7 @@ from ..operators.core import ns_to_us
 from ..operators.errors import OperatorValidationError
 from ..operators.windows import duration_ns, duration_parts
 from ..plans.pipeline import Pipeline, from_points, merge_range_bounds
-from ..schema import SLOT_OF_FTYPE
+from ..schema import SLOT_OF_FTYPE, tag_set_key
 
 
 class FluxError(ValueError):
@@ -1923,13 +1923,7 @@ def _with_tags_map(df: DataFrame, newmap: Column) -> DataFrame:
         df = df.withColumn("tags", newmap)
         newmap = F.col("tags")
     if "series_key" in df.columns:
-        key = F.concat_ws(
-            ",",
-            F.transform(
-                F.array_sort(F.map_keys(newmap)),
-                lambda k: F.concat_ws("=", k, F.element_at(newmap, k)),
-            ),
-        )
+        key = tag_set_key(newmap)
         meas = (
             F.col("measurement") if "measurement" in df.columns
             else F.split(F.col("series_key"), r"\|").getItem(0)

@@ -33,7 +33,7 @@ The parser is a small regex/recursive-descent over this grammar; the
 compiled plan is pure DataFrame composition (one groupBy per query +
 the window-spine join for fill).
 
-Field typing (r10): every read resolves a field's value slot
+Field typing: every read resolves a field's value slot
 (f_float / f_str / f_bool) from the frame's ``ftype`` discriminator —
 string and bool field values flow through raw selects, star selects,
 WHERE (incl. OR groups, per-POINT for cross-field conditions),
@@ -44,9 +44,11 @@ non-numeric field yield empty results (stock), never cast errors.
 
 from __future__ import annotations
 
+import operator
 import re
 from collections.abc import Sequence
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -54,7 +56,8 @@ from ..operators import aggregates as agg_ops
 from ..operators import selectors as sel_ops
 from ..operators import sortlimit as sl_ops
 from ..operators.windows import duration_ns, window_spine, window_start_ns
-from ..schema import SLOT_OF_FTYPE
+from ..operators.core import push_time_filter
+from ..schema import SLOT_OF_FTYPE, tag_set_key, unify_numeric_value
 
 
 class InfluxQLError(ValueError):
@@ -64,7 +67,7 @@ class InfluxQLError(ValueError):
 _DURATION_RX = re.compile(r"^(\d+)(ns|u|µ|ms|s|m|h|d|w)$")
 # field-position regex selections (`SELECT /val/`, `mean(/val/)`)
 # carry their pattern behind this marker through the (fn, fld, alias)
-# tuples — expanded like `*` restricted to matching keys (r11)
+# tuples — expanded like `*` restricted to matching keys
 _RE_FLD = "\x00re:"
 _AGGS = {
     "count": "count", "sum": "sum", "mean": "mean", "median": "median",
@@ -144,12 +147,11 @@ class InfluxQLQuery:
     # resolved at execution from the frame's ftype discriminator —
     # empty on float-only frames (the lookup is gated on the string/
     # bool slots existing at all, so suite/subquery frames never pay
-    # the small distinct job). r10: this is what lets string and bool
-    # field VALUES flow through /query (stock parity — previously
-    # every read hardcoded f_float and returned NULL for them).
+    # the small distinct job). Every read takes a field's value from
+    # this slot, so string and bool field values flow through /query.
     field_slots: dict = field(default_factory=dict)
     # SELECT *::field — stock star variant that pivots ONLY fields
-    # (tags stay off the row); plain * rides tags along (r11)
+    # (tags stay off the row); plain * rides tags along
     star_fields_only: bool = False
     # set when star expansion finds no eligible field: the statement
     # answers with no series (stock), enforced by _execute_aggregate's
@@ -253,11 +255,35 @@ def _parse_select_arith(src: str):
     return tree
 
 
+def _tree_leaves(tree):
+    """The atoms of an expression tree, left to right."""
+    if tree[0] == "bin":
+        yield from _tree_leaves(tree[2])
+        yield from _tree_leaves(tree[3])
+    else:
+        yield tree
+
+
 def _tree_atom_kinds(tree) -> set[str]:
     """Atom kinds ('agg'/'field'/'num') present in an expression tree."""
-    if tree[0] == "bin":
-        return _tree_atom_kinds(tree[2]) | _tree_atom_kinds(tree[3])
-    return {tree[0]}
+    return {leaf[0] for leaf in _tree_leaves(tree)}
+
+
+def _tree_fields(tree) -> set[str]:
+    """Field keys an expression tree reads: its bare field atoms and
+    the fields its aggregate calls read."""
+    return {leaf[1] if leaf[0] == "field" else leaf[2]
+            for leaf in _tree_leaves(tree) if leaf[0] != "num"}
+
+
+def _selected_fields(ast: InfluxQLQuery) -> set[str]:
+    """Every field key the selection reads: plain and function
+    selections, nested transforms and both kinds of arithmetic."""
+    out = {f for _fn, f, _a in ast.fields if f}
+    out.update(fld for _o, _i, fld, _a in ast.nested)
+    for tree, _a in (*ast.arith, *ast.raw_arith):
+        out |= _tree_fields(tree)
+    return out
 
 
 def _default_arith_alias(tree) -> str:
@@ -278,9 +304,8 @@ _QUOTED_SPAN_RX = re.compile(
 
 def _sub_outside_quotes(pattern: str, repl: str, text: str) -> str:
     """``re.sub`` that leaves single-quoted string literals and
-    double-quoted identifiers untouched — blind text rewrites were
-    corrupting conditions like ``tag = 'a<>b'`` and values containing
-    ``'::tag'`` (ADVICE r6)."""
+    double-quoted identifiers untouched, so conditions like
+    ``tag = 'a<>b'`` and values containing ``'::tag'`` survive."""
     out, pos = [], 0
     for m in _QUOTED_SPAN_RX.finditer(text):
         out.append(re.sub(pattern, repl, text[pos:m.start()]))
@@ -316,10 +341,10 @@ def _mask_quotes_and_regex(text: str) -> str:
 
 
 def _sub_outside_quotes_and_regex(pattern: str, repl: str, text: str) -> str:
-    """``re.sub`` skipping quoted spans AND /regex/ literals — the
-    namespace strip was corrupting a regex field selection whose
-    pattern literally contains ``::field``/``::tag`` (r11 ADVICE).
-    ``repl`` must be a plain string (no group refs)."""
+    """``re.sub`` skipping quoted spans AND /regex/ literals, so the
+    namespace strip leaves a regex field selection whose pattern
+    contains ``::field``/``::tag`` intact. ``repl`` must be a plain
+    string (no group refs)."""
     masked = _mask_quotes_and_regex(text)
     out, last = [], 0
     for m in re.finditer(pattern, masked):
@@ -347,10 +372,9 @@ def _parse_where(where: str, out: InfluxQLQuery, now_ns: int | None = None) -> N
         cond = cond.strip()
         if not cond:
             continue
-        # fullmatch: a prefix match silently swallowed trailing tokens
-        # (`time < now() ZZGARBAGEZZ` parsed as `time < now()` — the
-        # r9 DDL-fuzz escape; stock rejects trailing garbage on every
-        # statement form)
+        # fullmatch: a prefix match would swallow trailing tokens
+        # (`time < now() ZZGARBAGEZZ` as `time < now()`); stock rejects
+        # trailing garbage on every statement form
         tm = _TIME_RX.fullmatch(cond)
         if tm:
             op = tm.group(1)
@@ -391,9 +415,8 @@ def _parse_where(where: str, out: InfluxQLQuery, now_ns: int | None = None) -> N
             else cond
         )
         if re.search(r"(?i)\s+OR\s+", bare):
-            # OR disjunction of tag conditions — parenthesized or bare
-            # (r6: the bare form used to prefix-match the first
-            # condition and silently DROP the rest)
+            # OR disjunction of tag conditions — parenthesized or bare;
+            # every member is kept
             group: list[tuple[str, str, object]] = []
             for sub in re.split(r"(?i)\s+OR\s+", bare):
                 sub = sub.strip()
@@ -404,7 +427,7 @@ def _parse_where(where: str, out: InfluxQLQuery, now_ns: int | None = None) -> N
                 fm = _FIELD_RX.match(sub)
                 if fm:
                     # numeric member: a FIELD condition (stock supports
-                    # `(v > 5 OR v < 1)` — r10; previously a parse error)
+                    # `(v > 5 OR v < 1)`)
                     group.append(
                         (fm.group(1), fm.group(2), float(fm.group(3)))
                     )
@@ -414,9 +437,8 @@ def _parse_where(where: str, out: InfluxQLQuery, now_ns: int | None = None) -> N
             continue
         fm2 = _FIELD_RX.match(cond)
         if fm2:
-            # numeric RHS ⇒ field comparison (v1 tags are strings);
-            # = / != included (r6 — they previously fell through to a
-            # typed parse error)
+            # numeric RHS ⇒ field comparison (v1 tags are strings),
+            # = and != included
             out.field_filters.append((fm2.group(1), fm2.group(2), float(fm2.group(3))))
             continue
         bm = _BOOL_WHERE_RX.fullmatch(cond)
@@ -469,9 +491,8 @@ def parse_influxql(q: str, now_ns: int | None = None) -> InfluxQLQuery:
         _search_outside_quotes_and_regex(r"\*\s*::field\b", text)
     )
     # `*::tag` expands to ALL tag keys as selected columns — replaced
-    # with a marker BEFORE the namespace strip (r11 ADVICE: the old
-    # whole-query strip silently turned `SELECT *::tag, v` into a raw
-    # `*`, fields AND tags; only the exact bare spelling was caught).
+    # with a marker BEFORE the namespace strip, which would otherwise
+    # turn `SELECT *::tag, v` into a raw `*` (fields AND tags).
     # A select of ONLY `*::tag` has no field — stock's typed error,
     # checked after the select list is parsed. Both rewrites skip
     # /regex/ literals so a pattern containing `::field`/`::tag`
@@ -514,8 +535,8 @@ def parse_influxql(q: str, now_ns: int | None = None) -> InfluxQLQuery:
 
     # SELECT list
     # duplicate output names get stock's _N suffix (`SELECT
-    # mean(a), mean(b)` → mean, mean_1) — duplicate columns made every
-    # later by-name reference ambiguous (r11 fuzz escape)
+    # mean(a), mean(b)` → mean, mean_1), so every later by-name
+    # reference is unambiguous
     _alias_seen: dict[str, int] = {}
 
     def _uniq(alias: str) -> str:
@@ -591,7 +612,7 @@ def parse_influxql(q: str, now_ns: int | None = None) -> InfluxQLQuery:
             continue
         # fn(/re/): the regex literal may itself contain parens
         # (mean(/^(a|b)/)), which the generic fm regex below cannot
-        # bracket-match — recognize the regex-argument call first (r11)
+        # bracket-match — recognize the regex-argument call first
         fr = re.match(
             r"(?i)^(\w+)\s*\(\s*/(.+)/\s*(?:,\s*([^)]*))?\)"
             r'(?:\s+AS\s+"?(\w+)"?)?$',
@@ -668,8 +689,7 @@ def parse_influxql(q: str, now_ns: int | None = None) -> InfluxQLQuery:
         if tg:
             out.group_time_ns = _parse_duration(tg.group(1))
             if out.group_time_ns <= 0:
-                # stock's exact wording (r14 ADVICE #4: clients match
-                # error text)
+                # stock's exact wording: clients match error text
                 raise InfluxQLError("time dimension must have positive width")
             if tg.group(2):
                 off = tg.group(2)
@@ -684,8 +704,7 @@ def parse_influxql(q: str, now_ns: int | None = None) -> InfluxQLQuery:
         # a GROUP BY item must be one identifier (bare word, or quoted
         # — quotes may carry spaces); two space-separated tokens like
         # `GROUP BY junk time(1h)` are a missing-comma syntax error in
-        # stock InfluxQL, not a tag key (r9 DDL fuzz: that shape used
-        # to register as a never-matching tag and silently succeed)
+        # stock InfluxQL, not a never-matching tag key
         if not re.match(r'^"[^"]+"$|^[\w.\-]+$', g):
             raise InfluxQLError(f"bad GROUP BY expression {g!r}")
         out.group_tags.append(g.strip('"'))
@@ -721,18 +740,18 @@ def _execute_transform(df: DataFrame, ast: InfluxQLQuery, transforms, tag_col) -
 
     def one(fn: str, fld: str, alias: str, df: DataFrame = df) -> DataFrame:
         # prefer a physical column of that name — subquery pseudo-points
-        # carry their aliases ('value', 'n') as real columns (r6 fix);
-        # any other name is a FIELD: read the value slot restricted to
-        # that field's own rows (multi-field frames interleave — r6;
-        # an unknown field then correctly yields no rows, like v1)
+        # carry their aliases ('value', 'n') as real columns; any other
+        # name is a FIELD: read the value slot restricted to that
+        # field's own rows (multi-field frames interleave; an unknown
+        # field then yields no rows, like v1)
         src = fld if fld in df.columns else "f_float"
         if src == "f_float" and _null_dispatched(fn, fld, df,
                                                  ast.field_slots):
             # numeric-only transform over a string/bool slot field:
-            # stock answers with no series (r12 matrix audit — the
-            # NULL float slot previously leaked null rows out of
-            # CUMULATIVE_SUM and fed the TA kernels garbage; ELAPSED
-            # is any-type and skips this via _ANYTYPE_AGGS)
+            # stock answers with no series (the NULL float slot would
+            # leak null rows out of CUMULATIVE_SUM and feed the TA
+            # kernels garbage; ELAPSED is any-type and skips this via
+            # _ANYTYPE_AGGS)
             df = df.limit(0)
         if src != "f_float":
             from pyspark.sql import types as _T
@@ -742,7 +761,7 @@ def _execute_transform(df: DataFrame, ast: InfluxQLQuery, transforms, tag_col) -
                 # string/bool) column: stock computes nothing — an
                 # empty frame with the column re-typed double keeps
                 # the output schema and avoids the ANSI cast crash
-                # / lag-arithmetic AnalysisException (r11)
+                # / lag-arithmetic AnalysisException
                 df = df.limit(0).withColumn(src, F.lit(None).cast("double"))
         if src == "f_float" and fld != "*" and "field" in df.columns:
             df = df.filter(F.col("field") == fld)
@@ -870,16 +889,57 @@ def _extract_subquery(text: str) -> tuple[str, str] | None:
     raise InfluxQLError("unbalanced parens in FROM subquery")
 
 
-# columns of the canonical points schema that are NOT promoted tags —
-# anything else on a points DF is treated as a promoted tag column by
-# the SHOW meta-queries (sources/io promotes hot tags to plain columns).
+# Columns of the canonical points schema and of a bucket scan
+# (``series_key``, ``day``) that are not tags. Every other column of a
+# points frame whose name does not start with "_" (engine-internal, such
+# as the raw scan-time companion) is a promoted tag column.
 _NON_TAG_COLS = frozenset(
     {"measurement", "time", "time_ns", "tags", "field", "ftype", "ingest_seq",
      "f_float", "f_int", "f_uint", "f_str", "f_bool", "props",
-     # storage-layer columns of a bucket scan — never tags (r8: they
-     # leaked into SELECT * / GROUP BY * output)
      "series_key", "day"}
 )
+
+
+def _promoted_tags(columns) -> list[str]:
+    """The promoted tag columns among ``columns``, in frame order."""
+    return [c for c in columns
+            if c not in _NON_TAG_COLS and not c.startswith("_")]
+
+
+def _tag_col(name: str, columns) -> Column:
+    """A tag's value: its promoted column when the frame has one, else
+    its entry in the tags map."""
+    return F.col(name) if name in columns else F.col("tags")[name]
+
+
+def _tag_cond(columns, name: str, op: str, val) -> Column:
+    """One tag condition (``=``, ``!=``, ``=~``, ``!~``) as a boolean
+    Column — the compiler every statement's tag conditions go through."""
+    return _cmp_cond(_tag_col(name, columns), op, val)
+
+
+def _tag_conditions(where: InfluxQLQuery, columns, statement: str) -> list[Column]:
+    """The WHERE clause of a statement that may only name tags (SHOW,
+    SHOW CARDINALITY, DELETE, DROP SERIES) as conjuncts: one Column per
+    tag condition and one disjunction per OR group. A field or
+    arithmetic condition raises, naming ``statement``, before anything
+    runs."""
+    if where.field_filters or any(
+        isinstance(v, float) for g in where.or_tag_groups for _n, _o, v in g
+    ):
+        raise InfluxQLError(f"{statement} does not support field conditions")
+    conds = [_tag_cond(columns, *c) for c in where.tag_filters]
+    for group in where.or_tag_groups:
+        conds.append(reduce(operator.or_,
+                            [_tag_cond(columns, *c) for c in group]))
+    return conds
+
+
+def _parse_where_only(where: str | None) -> InfluxQLQuery:
+    """A bare WHERE clause parsed on its own (SHOW, DELETE)."""
+    out = InfluxQLQuery(fields=[], measurement="")
+    _parse_where(where or "", out)
+    return out
 
 
 def _map_tag_keys(df: DataFrame) -> list[str]:
@@ -891,6 +951,95 @@ def _map_tag_keys(df: DataFrame) -> list[str]:
         .distinct()
         .collect()
     )
+
+
+_TEXT_FORM_RX = re.compile(r"(?is)^\s*(?:SHOW|EXPLAIN)\b")
+
+
+def parse_statement(text: str, now_ns: int | None = None) -> InfluxQLQuery | None:
+    """Parse one v1 data statement, once. A SELECT comes back as the
+    InfluxQLQuery that :func:`execute_influxql` runs without parsing it
+    again (and resolves in place, so the caller reads the executed
+    GROUP BY back from it). None for the forms execute_influxql compiles
+    from their text: SHOW, EXPLAIN and ``SELECT … FROM (subquery)``."""
+    if (_TEXT_FORM_RX.match(text)
+            or _extract_subquery(text.strip().rstrip(";")) is not None):
+        return None
+    return parse_influxql(text, now_ns)
+
+
+_INTO_RX = re.compile(
+    r'(?is)^\s*(SELECT\s+.+?)\s+INTO\s+"?([\w.\-]+)"?\s+(FROM\s+.+)$'
+)
+
+
+def split_into(text: str) -> tuple[str, str] | None:
+    """``SELECT … INTO <target> FROM …`` → (the SELECT without INTO,
+    target measurement); None for any other statement."""
+    m = _INTO_RX.match(text)
+    return (f"{m.group(1)} {m.group(3)}", m.group(2)) if m else None
+
+
+def select_into(store, org: str, db: str, statement: str,
+                points: DataFrame) -> int:
+    """Run ``SELECT … INTO <target> FROM …`` over ``points`` and write
+    its rows back into bucket ``db`` as points of ``target``; returns
+    the number of rows written. The v1 façade and the continuous-query
+    runner both write back through here.
+
+    The query's GROUP BY tags stay tags in the target and every other
+    result column becomes a field of its own type; GROUP BY * writes
+    every string column as a tag (``sources.io._into_split_cols``). One
+    Spark job: the row count rides the write as an observation, and the
+    type pins and tag keys come from the result schema. A field-type
+    conflict raises the store's ``FieldTypeConflict``."""
+    from pyspark.sql import Observation
+
+    from ..sources.io import into_tag_keys, into_type_triples, result_to_points
+
+    select, target = split_into(statement)
+    ast = parse_influxql(select)
+    into_tags = None if "*" in ast.group_tags else list(ast.group_tags)
+    result = execute_influxql(points, ast,
+                              field_types=store.field_types(org, db))
+    obs = Observation()
+    store.write_points(
+        org, db,
+        result_to_points(result, target, tag_cols=into_tags)
+        .observe(obs, F.count(F.lit(1)).alias("n")),
+        known_types=into_type_triples(result, target, tag_cols=into_tags),
+        tag_keys=into_tag_keys(result, tag_cols=into_tags),
+    )
+    return obs.get["n"]
+
+
+_DELETE_RX = re.compile(
+    r'(?is)^\s*(?P<kw>DELETE|DROP\s+SERIES)\s+FROM\s+"?(?P<meas>[\w.\-]+)"?'
+    r"(?:\s+WHERE\s+(?P<where>.+))?\s*$"
+)
+
+
+def parse_delete(text: str) -> tuple[int, int, Column] | None:
+    """``DELETE FROM m [WHERE …]`` / ``DROP SERIES FROM m [WHERE …]`` →
+    the store delete's ``(start_ns, stop_ns, predicate)``; None for any
+    other statement. Both delete points (a series without points no
+    longer exists here), DROP SERIES without time bounds.
+
+    The WHERE clause goes through the same tag-condition compiler as
+    SELECT and SHOW, over the stored tags map: a row is deleted exactly
+    when SELECT with that WHERE clause returns it. A field or arithmetic
+    condition raises, so nothing is deleted (stock rejects fields in a
+    delete)."""
+    m = _DELETE_RX.match(text)
+    if not m:
+        return None
+    where = _parse_where_only(m.group("where"))
+    kw = re.sub(r"\s+", " ", m.group("kw").upper())
+    pred = reduce(operator.and_, _tag_conditions(where, (), kw),
+                  F.col("measurement") == m.group("meas"))
+    stop = where.time_stop_ns if where.time_stop_ns is not None else 2**62
+    return where.time_start_ns or 0, stop, pred
+
 
 # v1 SHOW FIELD KEYS type names differ from our ftype discriminators
 _V1_FIELD_TYPES = {"float": "float", "int": "integer", "uint": "unsigned",
@@ -908,6 +1057,57 @@ _SHOW_RX = re.compile(
     r"(?:\s+WHERE\s+(?P<where>.+?))?"
     r"(?:\s+LIMIT\s+(?P<limit>\d+))?\s*$"
 )
+
+
+def _show_scope(points: DataFrame, m: re.Match, statement: str):
+    """The rows a SHOW statement reads: FROM and WITH MEASUREMENT narrow
+    the measurements, WHERE narrows time and tags (OR groups included).
+    Returns the frame, its promoted tag columns and whether it carries
+    a tags map."""
+    g = m.groupdict()
+    df = points
+    for rx, eq in ((g["measrx"], g["meas"]), (g.get("wmrx"), g.get("wmeq"))):
+        if rx:
+            df = df.filter(F.col("measurement").rlike(rx))
+        elif eq:
+            df = df.filter(F.col("measurement") == eq)
+    where = _parse_where_only(g["where"])
+    conds = _tag_conditions(where, df.columns, statement)
+    df = push_time_filter(df, where.time_start_ns, where.time_stop_ns)
+    for c in conds:
+        df = df.filter(c)
+    return df, _promoted_tags(df.columns), "tags" in df.columns
+
+
+def _tag_key_rows(df: DataFrame, promoted, has_map, *lead) -> DataFrame:
+    """One ``tagKey`` row per tag each row carries — the promoted
+    columns it has a value in, then its tags-map keys — after the
+    ``lead`` columns."""
+    parts = [df.filter(F.col(c).isNotNull()).select(*lead, F.lit(c).alias("tagKey"))
+             for c in promoted]
+    if has_map:
+        parts.append(df.select(*lead, F.explode(F.map_keys("tags")).alias("tagKey")))
+    if not parts:
+        raise InfluxQLError("points DF has no tag columns")
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _series_key(promoted, has_map) -> Column:
+    """A row's SHOW SERIES key: the measurement, then its sorted
+    ``k=v`` tag pairs, comma-joined."""
+    pairs = [
+        F.when(F.col(c).isNotNull(),
+               F.concat(F.lit(c), F.lit("="), F.col(c).cast("string")))
+        for c in promoted
+    ]
+    arr = F.array_compact(F.array(*pairs)) if pairs else F.array()
+    if has_map:
+        map_pairs = F.transform(
+            F.map_entries(F.coalesce(F.col("tags"), F.create_map())),
+            lambda e: F.concat(e["key"], F.lit("="), e["value"]),
+        )
+        arr = F.concat(arr, map_pairs)
+    return F.concat_ws(",", F.concat(F.array("measurement"), F.array_sort(arr)))
 
 
 def execute_show(points: DataFrame, query: str) -> DataFrame:
@@ -931,61 +1131,14 @@ def execute_show(points: DataFrame, query: str) -> DataFrame:
     if not m:
         raise InfluxQLError(f"cannot parse SHOW query: {query!r}")
     what = re.sub(r"\s+", " ", m.group("what").upper())
-
-    df = points
-    if m.group("measrx"):
-        df = df.filter(F.col("measurement").rlike(m.group("measrx")))
-    elif m.group("meas"):
-        df = df.filter(F.col("measurement") == m.group("meas"))
-    # SHOW ... WITH MEASUREMENT =~ /re/ | = name (v1 spec, r6)
-    if m.group("wmrx"):
-        df = df.filter(F.col("measurement").rlike(m.group("wmrx")))
-    elif m.group("wmeq"):
-        df = df.filter(F.col("measurement") == m.group("wmeq"))
-
-    # WHERE: time bounds + tag predicates (field filters rejected — v1
-    # SHOW only supports tag/time conditions)
-    flt = InfluxQLQuery(fields=[], measurement="")
-    _parse_where(m.group("where") or "", flt)
-    if flt.field_filters:
-        raise InfluxQLError("SHOW does not support field conditions")
-    from ..operators.core import push_time_filter
-
-    df = push_time_filter(df, flt.time_start_ns, flt.time_stop_ns)
-
-    def tag_expr(name):
-        return F.col(name) if name in df.columns else F.col("tags")[name]
-
-    for name, op, val in flt.tag_filters:
-        c = tag_expr(name)
-        df = df.filter({"=": c == val, "!=": c != val,
-                        "=~": c.rlike(val), "!~": ~c.rlike(val)}[op])
-
-    # underscore-prefixed columns are engine-internal (e.g. the raw
-    # scan-time companion), never tags
-    promoted = [c for c in df.columns
-                if c not in _NON_TAG_COLS and not c.startswith("_")]
-    has_map = "tags" in df.columns
+    df, promoted, has_map = _show_scope(points, m, "SHOW")
 
     if what == "MEASUREMENTS":
         out = df.select(F.col("measurement").alias("name")).distinct().orderBy("name")
 
     elif what == "TAG KEYS":
-        parts = [
-            df.filter(tag_expr(c).isNotNull())
-            .select("measurement", F.lit(c).alias("tagKey"))
-            for c in promoted
-        ]
-        if has_map:
-            parts.append(
-                df.select("measurement", F.explode(F.map_keys("tags")).alias("tagKey"))
-            )
-        if not parts:
-            raise InfluxQLError("points DF has no tag columns")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out = out.distinct().orderBy("measurement", "tagKey")
+        out = (_tag_key_rows(df, promoted, has_map, "measurement")
+               .distinct().orderBy("measurement", "tagKey"))
 
     elif what == "TAG VALUES":
         keyrx = m.group("keyrx")
@@ -999,7 +1152,8 @@ def execute_show(points: DataFrame, query: str) -> DataFrame:
         else:
             raise InfluxQLError("SHOW TAG VALUES requires WITH KEY")
         parts = [
-            df.select(F.lit(k).alias("key"), tag_expr(k).cast("string").alias("value"))
+            df.select(F.lit(k).alias("key"),
+                      _tag_col(k, df.columns).cast("string").alias("value"))
             for k in keys
         ]
         if has_map and keyrx:
@@ -1009,10 +1163,8 @@ def execute_show(points: DataFrame, query: str) -> DataFrame:
             )
         if not parts:
             raise InfluxQLError("SHOW TAG VALUES matched no keys")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out = out.filter(F.col("value").isNotNull()).distinct().orderBy("key", "value")
+        out = (reduce(DataFrame.unionByName, parts)
+               .filter(F.col("value").isNotNull()).distinct().orderBy("key", "value"))
 
     elif what == "FIELD KEYS":
         v1_type = F.element_at(
@@ -1027,20 +1179,8 @@ def execute_show(points: DataFrame, query: str) -> DataFrame:
         )
 
     else:  # SERIES
-        pairs = [
-            F.when(tag_expr(c).isNotNull(),
-                   F.concat(F.lit(c), F.lit("="), tag_expr(c).cast("string")))
-            for c in promoted
-        ]
-        arr = F.array_compact(F.array(*pairs)) if pairs else F.array()
-        if has_map:
-            map_pairs = F.transform(
-                F.map_entries(F.coalesce(F.col("tags"), F.create_map())),
-                lambda e: F.concat(e["key"], F.lit("="), e["value"]),
-            )
-            arr = F.concat(arr, map_pairs)
-        key = F.concat_ws(",", F.concat(F.array("measurement"), F.array_sort(arr)))
-        out = df.select(key.alias("key")).distinct().orderBy("key")
+        out = (df.select(_series_key(promoted, has_map).alias("key"))
+               .distinct().orderBy("key"))
 
     if m.group("limit"):
         out = out.limit(int(m.group("limit")))
@@ -1075,31 +1215,7 @@ def execute_show_cardinality(points: DataFrame, query: str) -> DataFrame:
         raise InfluxQLError(f"cannot parse SHOW CARDINALITY query: {query!r}")
     what = re.sub(r"\s+", " ", m.group("what").upper())
     exact = m.group("exact") is not None
-
-    df = points
-    if m.group("measrx"):
-        df = df.filter(F.col("measurement").rlike(m.group("measrx")))
-    elif m.group("meas"):
-        df = df.filter(F.col("measurement") == m.group("meas"))
-    flt = InfluxQLQuery(fields=[], measurement="")
-    _parse_where(m.group("where") or "", flt)
-    if flt.field_filters:
-        raise InfluxQLError("SHOW CARDINALITY does not support field conditions")
-    from ..operators.core import push_time_filter
-
-    df = push_time_filter(df, flt.time_start_ns, flt.time_stop_ns)
-
-    def tag_expr(name):
-        return F.col(name) if name in df.columns else F.col("tags")[name]
-
-    for name, op, val in flt.tag_filters:
-        c = tag_expr(name)
-        df = df.filter({"=": c == val, "!=": c != val,
-                        "=~": c.rlike(val), "!~": ~c.rlike(val)}[op])
-
-    promoted = [c for c in df.columns
-                if c not in _NON_TAG_COLS and not c.startswith("_")]
-    has_map = "tags" in df.columns
+    df, promoted, has_map = _show_scope(points, m, "SHOW CARDINALITY")
 
     def count_distinct_of(frame: DataFrame, col) -> DataFrame:
         agg = (F.count_distinct(col) if exact
@@ -1113,40 +1229,14 @@ def execute_show_cardinality(points: DataFrame, query: str) -> DataFrame:
             df, F.concat_ws("\u001f", "measurement", "field")
         )
     if what == "TAG KEY":
-        parts = [
-            df.filter(tag_expr(c).isNotNull()).select(F.lit(c).alias("tagKey"))
-            for c in promoted
-        ]
-        if has_map:
-            parts.append(df.select(F.explode(F.map_keys("tags")).alias("tagKey")))
-        if not parts:
-            raise InfluxQLError("points DF has no tag columns")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return count_distinct_of(out, F.col("tagKey"))
+        return count_distinct_of(_tag_key_rows(df, promoted, has_map),
+                                 F.col("tagKey"))
     if what == "TAG VALUES":
         if not m.group("key"):
             raise InfluxQLError("SHOW TAG VALUES CARDINALITY requires WITH KEY")
-        return count_distinct_of(
-            df.filter(tag_expr(m.group("key")).isNotNull()),
-            tag_expr(m.group("key")),
-        )
-    # SERIES: same key construction as SHOW SERIES
-    pairs = [
-        F.when(tag_expr(c).isNotNull(),
-               F.concat(F.lit(c), F.lit("="), tag_expr(c).cast("string")))
-        for c in promoted
-    ]
-    arr = F.array_compact(F.array(*pairs)) if pairs else F.array()
-    if has_map:
-        map_pairs = F.transform(
-            F.map_entries(F.coalesce(F.col("tags"), F.create_map())),
-            lambda e: F.concat(e["key"], F.lit("="), e["value"]),
-        )
-        arr = F.concat(arr, map_pairs)
-    key = F.concat_ws(",", F.concat(F.array("measurement"), F.array_sort(arr)))
-    return count_distinct_of(df, key)
+        value = _tag_col(m.group("key"), df.columns)
+        return count_distinct_of(df.filter(value.isNotNull()), value)
+    return count_distinct_of(df, _series_key(promoted, has_map))
 
 
 def _execute_multi_row(
@@ -1166,21 +1256,20 @@ def _execute_multi_row(
     ):
         # stock TOP/BOTTOM support int64/float64 only: over a string
         # or bool field the statement answers with NO series, never
-        # lexicographic rows (r11 verdict #2 — the MIN/MAX/PERCENTILE
-        # short-circuit never reached this branch). Covers the
-        # TOP(field, tag_key..., N) variant too.
+        # lexicographic rows. Covers the TOP(field, tag_key..., N)
+        # variant too.
         df = df.limit(0)
-    # TOP/BOTTOM/SAMPLE may carry companion FIELDS too (r10):
+    # TOP/BOTTOM/SAMPLE may carry companion FIELDS too:
     # SELECT TOP(value, 3), status — same per-point stitch as the
     # selector-row path
     df = _attach_companion_fields(df, ast, extras)
     if fld != "*" and fld in df.columns:
         src = fld
     else:
-        # ftype-resolved slot (r10: DISTINCT/SAMPLE of string fields)
+        # ftype-resolved slot (DISTINCT/SAMPLE of string fields)
         src = ast.field_slots.get(fld, "f_float")
         if fld != "*" and "field" in df.columns:
-            # named field → its own rows only (multi-field frames, r6)
+            # named field → its own rows only (multi-field frames)
             df = df.filter(F.col("field") == fld)
     args = ast.fn_args.get(alias) or []
     if ast.group_time_ns:
@@ -1248,29 +1337,14 @@ def _execute_multi_row(
     return out
 
 
-def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = (),
-                     now_ns: int | None = None,
-                     field_types: dict | None = None) -> DataFrame:
-    """Compile + run an InfluxQL query against a canonical points DF.
-
-    ``tag_cols`` names promoted tag columns available for GROUP BY /
-    WHERE (a tags-map fallback covers the rest). ``FROM (SELECT ...)``
-    subqueries run the inner query first and treat its result as the
-    outer query's measurement (DataFrame composition — the inner plan
-    feeds the outer directly, no materialization).
-
-    ``field_types`` is the bucket store's field-type catalog
-    ``{measurement: {field: ftype}}`` (BucketStore.field_types) — when
-    provided, field→slot resolution reads it driver-side with ZERO
-    Spark jobs; without it, mixed-type frames run one bounded distinct
-    job on the ftype discriminator (r10).
-    """
+def _execute_text_form(points: DataFrame, query: str, tag_cols, now_ns,
+                       field_types) -> DataFrame:
+    """The statements compiled from their text: SHOW, EXPLAIN and
+    ``SELECT … FROM (subquery)``."""
     if re.match(r"(?is)^\s*SHOW\b", query):
         if re.search(r"(?i)\bCARDINALITY\b", query):
             return execute_show_cardinality(points, query)
         return execute_show(points, query)
-    from ..schema import unify_numeric_value
-
     points = unify_numeric_value(points)  # int/uint slots → value column
     em = re.match(r"(?is)^\s*EXPLAIN(\s+ANALYZE)?\s+(.+)$", query.strip())
     if em:
@@ -1294,20 +1368,56 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
             "line int, plan string",
         )
     sub = _extract_subquery(query.strip().rstrip(";"))
-    if sub is not None:
-        inner_text, outer_text = sub
-        inner = execute_influxql(points, inner_text, tag_cols,
-                                 field_types=field_types)
-        if "time" not in inner.columns:
-            # aggregate rows without time grouping carry timestamp 0 in
-            # InfluxQL (SELECT mean(m) FROM (SELECT mean(v) .. GROUP BY tag))
-            inner = inner.withColumn("time", F.timestamp_micros(F.lit(0)))
-        pseudo = inner.withColumn(
-            "time_ns", F.expr("unix_micros(time) * 1000")
-        ).withColumn("measurement", F.lit(_SUBQUERY_MEAS))
-        return execute_influxql(pseudo, outer_text, tag_cols, now_ns)
+    if sub is None:
+        raise InfluxQLError(f"cannot parse: {query!r}")
+    inner_text, outer_text = sub
+    inner = execute_influxql(points, inner_text, tag_cols,
+                             field_types=field_types)
+    if "time" not in inner.columns:
+        # aggregate rows without time grouping carry timestamp 0 in
+        # InfluxQL (SELECT mean(m) FROM (SELECT mean(v) .. GROUP BY tag))
+        inner = inner.withColumn("time", F.timestamp_micros(F.lit(0)))
+    pseudo = inner.withColumn(
+        "time_ns", F.expr("unix_micros(time) * 1000")
+    ).withColumn("measurement", F.lit(_SUBQUERY_MEAS))
+    return execute_influxql(pseudo, outer_text, tag_cols, now_ns)
 
-    ast = parse_influxql(query, now_ns)
+
+def _queried_measurements(ast: InfluxQLQuery, field_types: dict) -> list[str]:
+    """The catalog measurements a SELECT reads (FROM list or regex)."""
+    if ast.measurement_regex is not None:
+        return [m for m in field_types if re.search(ast.measurement_regex, m)]
+    return ast.measurements or [ast.measurement]
+
+
+def execute_influxql(points: DataFrame, query: str | InfluxQLQuery,
+                     tag_cols: tuple[str, ...] = (),
+                     now_ns: int | None = None,
+                     field_types: dict | None = None) -> DataFrame:
+    """Compile + run an InfluxQL query against a canonical points DF.
+
+    ``query`` is the statement text, or a SELECT that
+    :func:`parse_statement` already parsed: that one runs without a
+    second parse and is resolved in place — afterwards ``group_tags``
+    names the columns the result's series are keyed by (GROUP BY *
+    expanded, ``measurement`` first on a multi-measurement read).
+
+    ``tag_cols`` names promoted tag columns available for GROUP BY /
+    WHERE (a tags-map fallback covers the rest). ``FROM (SELECT ...)``
+    subqueries run the inner query first and treat its result as the
+    outer query's measurement (DataFrame composition — the inner plan
+    feeds the outer directly, no materialization).
+
+    ``field_types`` is the bucket store's field-type catalog
+    ``{measurement: {field: ftype}}`` (BucketStore.field_types) — when
+    provided, field→slot resolution reads it driver-side with ZERO
+    Spark jobs; without it, a frame carrying string or bool slots runs
+    one bounded distinct job on the ftype discriminator.
+    """
+    ast = parse_statement(query, now_ns) if isinstance(query, str) else query
+    if ast is None:
+        return _execute_text_form(points, query, tag_cols, now_ns, field_types)
+    points = unify_numeric_value(points)  # int/uint slots → value column
     multi_meas = ast.measurement_regex is not None or len(ast.measurements) > 1
     if ast.measurement_regex is not None:
         df = points.filter(F.col("measurement").rlike(ast.measurement_regex))
@@ -1315,8 +1425,6 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
         df = points.filter(F.col("measurement").isin(ast.measurements))
     else:
         df = points.filter(F.col("measurement") == ast.measurement)
-
-    from ..operators.core import push_time_filter
 
     df = push_time_filter(df, ast.time_start_ns, ast.time_stop_ns)
 
@@ -1326,47 +1434,19 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
     # never run the lookup job. WHERE names are included so a string
     # condition like status = 'ok' can be recognized as a FIELD
     # condition (stock resolves bare identifiers field-first).
-    refs: set = set()
-    for _fn, _fld, _a in ast.fields:
-        if _fld and _fld != "*":
-            refs.add(_fld)
-    for _tr, _ag, _fld, _a in ast.nested:
-        refs.add(_fld)
-    for _nm, _op, _v in ast.field_filters:
-        if not _nm.startswith("__expr__"):
-            refs.add(_nm)
-    for _nm, _op, _v in ast.tag_filters:
-        refs.add(_nm)
-    for _grp in ast.or_tag_groups:
-        for _nm, _op, _v in _grp:
-            refs.add(_nm)
-
-    def _tree_ref_walk(tree):
-        if tree[0] == "field":
-            refs.add(tree[1])
-        elif tree[0] == "agg":
-            refs.add(tree[2])
-        elif tree[0] == "bin":
-            _tree_ref_walk(tree[2])
-            _tree_ref_walk(tree[3])
-
-    for _tree, _a in ast.arith:
-        _tree_ref_walk(_tree)
-    for _tree, _a in ast.raw_arith:
-        _tree_ref_walk(_tree)
+    refs = _selected_fields(ast)
+    refs.update(n for n, _o, _v in ast.field_filters
+                if not n.startswith("__expr__"))
+    refs.update(n for n, _o, _v in ast.tag_filters)
+    refs.update(n for group in ast.or_tag_groups for n, _o, _v in group)
     refs = {r for r in refs if r and r != "*" and r not in df.columns
             and not r.startswith(_RE_FLD)}
     if field_types is not None:
         # catalog-driven: zero Spark jobs. Only the QUERIED
         # measurements' maps apply (a field name may type differently
         # across measurements; float wins on a cross-measurement mix).
-        if ast.measurement_regex is not None:
-            metas = [m for m in field_types
-                     if re.search(ast.measurement_regex, m)]
-        else:
-            metas = [m for m in (ast.measurements or [ast.measurement])]
         slots: dict = {}
-        for m in metas:
+        for m in _queried_measurements(ast, field_types):
             for f, t in (field_types.get(m) or {}).items():
                 if f in refs:
                     s = SLOT_OF_FTYPE.get(t, "f_float")
@@ -1382,7 +1462,7 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
     # string/bool conditions parse as tag-shaped (quoted RHS); when the
     # name is a known string/bool FIELD KEY of this frame, reroute it
     # to the field-condition path below (a tags-map read would be NULL
-    # and silently drop every row — the r9 verdict's open defect)
+    # and silently drop every row)
     if ast.field_slots:
         kept = []
         for name, op, val in ast.tag_filters:
@@ -1394,18 +1474,7 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
         ast.tag_filters = kept
 
     def tag_col(name):
-        if name in df.columns:
-            return F.col(name)
-        return F.col("tags")[name]
-
-    def tag_cond(name: str, op: str, val: str):
-        c = tag_col(name)
-        return {
-            "=": lambda: c == val,
-            "!=": lambda: c != val,
-            "=~": lambda: c.rlike(val),
-            "!~": lambda: ~c.rlike(val),
-        }[op]()
+        return _tag_col(name, df.columns)
 
     def _point_semi(frame: DataFrame, cond: Column) -> DataFrame:
         """Keep every row of POINTS where ``cond`` holds on any of the
@@ -1415,19 +1484,9 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
         the predicate is selective."""
         ident = [c for c in ("measurement", "time_ns") if c in frame.columns]
         if "tags" in frame.columns:
-            tagkey = F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.map_keys(F.col("tags"))),
-                    lambda k: F.concat_ws(
-                        "=", k, F.element_at(F.col("tags"), k)
-                    ),
-                ),
-            )
+            tagkey = tag_set_key(F.col("tags"))
         else:
-            promoted = [c for c in frame.columns
-                        if c not in _NON_TAG_COLS
-                        and not c.startswith("_")]
+            promoted = _promoted_tags(frame.columns)
             tagkey = F.concat_ws(
                 ",", *[F.col(c).cast("string") for c in promoted]
             ) if promoted else F.lit("")
@@ -1446,10 +1505,10 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
         return (F.col("field") == name) & _cmp_cond(F.col(slot), op, rhs)
 
     for name, op, val in ast.tag_filters:
-        df = df.filter(tag_cond(name, op, val))
+        df = df.filter(_tag_cond(df.columns, name, op, val))
     for group in ast.or_tag_groups:
         # OR groups may mix tag conditions with string/bool FIELD
-        # conditions (r10): any field member makes the whole group
+        # conditions: any field member makes the whole group
         # point-level (a field's value lives on one row of the point,
         # so a row-local OR would drop the point's other-field rows)
         conds = []
@@ -1477,11 +1536,12 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
                 any_field = True
                 conds.append(_field_cond(name, op, val))
             else:
-                conds.append(tag_cond(name, op, val))
-        acc = conds[0]
-        for c in conds[1:]:
-            acc = acc | c
+                conds.append(_tag_cond(df.columns, name, op, val))
+        acc = reduce(operator.or_, conds)
         df = _point_semi(df, acc) if any_field else df.filter(acc)
+    # every field the selection reads: a field condition on exactly
+    # those fields stays a row-local (scan-level) filter
+    sel_fields = _selected_fields(ast)
     for name, op, val in ast.field_filters:
         if name.startswith("__expr__"):
             # arithmetic condition. Identifiers followed by '(' are
@@ -1489,16 +1549,14 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
             # set, reject the rest (a blind swap would produce
             # nonsense like f_float(f_float)).
             #
-            # Field idents (r12): stock evaluates WHERE arithmetic per
-            # POINT — the old unconditional f_float swap read whatever
-            # field owned the row, so `WHERE v * 2 > 100` gated OTHER
-            # fields' rows on their own values, and a string/bool
-            # field crashed the ANSI cast. Fast path kept: when the
-            # condition references one float field and the selection
-            # reads only that field, the row-local filter is identical
-            # (the selection keeps only that field's rows) and stays
-            # scan-level. Otherwise attach the referenced fields'
-            # per-point values and evaluate on those.
+            # Field identifiers: stock evaluates WHERE arithmetic per
+            # POINT, so the referenced fields' per-point values are
+            # attached and the arithmetic reads those (a string/bool
+            # field reads NULL). Fast path: when the condition
+            # references one float field and the selection reads only
+            # that field (arithmetic selections included), the
+            # row-local filter is identical — the selection keeps only
+            # that field's rows — and stays scan-level.
             raw = name[len("__expr__"):]
             idents = []
             for mo in re.finditer(r"\b[A-Za-z_]\w*\b", raw):
@@ -1506,28 +1564,6 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
                     continue
                 if mo.group(0) not in df.columns and mo.group(0) not in idents:
                     idents.append(mo.group(0))
-            sel_fields = {f for _fn, f, _a in ast.fields if f}
-            for _tr2, _ag2, _fld2, _a2 in ast.nested:
-                sel_fields.add(_fld2)
-
-            # arithmetic selections reference fields too (r12 ADVICE:
-            # `SELECT v1 + v2 ... WHERE v1 * 2 > 100` built an EMPTY
-            # sel_fields, took the fast path, and the scan-level
-            # filter gated v2's rows on their own values — exactly the
-            # per-point bug the fast path is an optimization of)
-            def _sel_tree_fields(tree):
-                if tree[0] == "field":
-                    sel_fields.add(tree[1])
-                elif tree[0] == "agg":
-                    sel_fields.add(tree[2])
-                elif tree[0] == "bin":
-                    _sel_tree_fields(tree[2])
-                    _sel_tree_fields(tree[3])
-
-            for _tr3, _a3 in ast.arith:
-                _sel_tree_fields(_tr3)
-            for _tr3, _a3 in ast.raw_arith:
-                _sel_tree_fields(_tr3)
             fast = (
                 len(idents) <= 1
                 and all(ast.field_slots.get(i, "f_float") == "f_float"
@@ -1555,7 +1591,7 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
                     if not isinstance(target.schema[ident].dataType,
                                       _T.NumericType):
                         # numeric arithmetic over a string/bool field:
-                        # stock computes nothing (r12 matrix audit)
+                        # stock computes nothing
                         return "CAST(NULL AS DOUBLE)"
                     return f"`{ident}`"
                 return "f_float"
@@ -1593,27 +1629,6 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
             df = df.filter(_cmp_cond(F.col(slot), op, rhs))
             continue
         cond = (F.col("field") == name) & _cmp_cond(F.col(slot), op, rhs)
-        # every field the SELECTION reads — including aggregate
-        # arithmetic, nested transforms, and raw arithmetic trees
-        # (r10: an empty ast.fields for mean(a)+mean(b) wrongly
-        # routed a cross-field condition row-local, dropping b's rows)
-        sel_fields = {f for _fn, f, _a in ast.fields if f}
-        for _tr2, _ag2, _fld2, _a2 in ast.nested:
-            sel_fields.add(_fld2)
-
-        def _sel_walk(tree):
-            if tree[0] == "field":
-                sel_fields.add(tree[1])
-            elif tree[0] == "agg":
-                sel_fields.add(tree[2])
-            elif tree[0] == "bin":
-                _sel_walk(tree[2])
-                _sel_walk(tree[3])
-
-        for _tree2, _a2 in ast.arith:
-            _sel_walk(_tree2)
-        for _tree2, _a2 in ast.raw_arith:
-            _sel_walk(_tree2)
         if sel_fields <= {name}:
             # self-referential single-field condition (SELECT v WHERE
             # v > 5): row-local filter, fully pushdown-able — the
@@ -1628,11 +1643,9 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
     by = list(ast.group_tags)
     if "*" in by:
         # GROUP BY *: every promoted tag column, plus (for stored
-        # buckets carrying a tags MAP) the discovered map keys — one
-        # small distinct job bounded by tag-key cardinality (r8: the
-        # map variant previously fell through and grouped by nothing)
-        by = [c for c in df.columns
-              if c not in _NON_TAG_COLS and not c.startswith("_")]
+        # buckets carrying a tags MAP) the map keys the queried rows
+        # carry — one small distinct job bounded by tag-key cardinality
+        by = _promoted_tags(df.columns)
         if "tags" in df.columns:
             by = sorted(set(by) | set(_map_tag_keys(df)))
         ast.group_tags = by
@@ -1694,22 +1707,13 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
 
     if not has_agg:
         if ast.group_time_ns:
-            # stock v1 rejects raw projections windowed by time —
-            # previously the clause was silently ignored (r11 probe)
+            # stock v1 rejects raw projections windowed by time
             raise InfluxQLError(
                 "GROUP BY requires at least one aggregate function"
             )
         # named slot fields read only their OWN rows (multi-field
-        # frames interleave fields in the tall schema — r6 fix): drop
-        # other-field rows, and make each projection conditional
-        def _tree_fields(tree, acc):
-            if tree[0] == "field":
-                acc.add(tree[1])
-            elif tree[0] == "bin":
-                _tree_fields(tree[2], acc)
-                _tree_fields(tree[3], acc)
-            return acc
-
+        # frames interleave fields in the tall schema): drop other-field
+        # rows, and make each projection conditional
         slot_fields: set = set()
         for fn, fld, alias in ast.fields:
             if (fld != "*" and fld != _STARTAG
@@ -1717,10 +1721,8 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
                     and fld not in df.columns):
                 slot_fields.add(fld)
         for tree, _alias in ast.raw_arith:
-            slot_fields = {
-                f for f in _tree_fields(tree, slot_fields)
-                if f != "*" and f not in df.columns
-            }
+            slot_fields |= {f for f in _tree_fields(tree)
+                            if f != "*" and f not in df.columns}
         if slot_fields and "field" in df.columns:
             df = df.filter(F.col("field").isin(sorted(slot_fields)))
         if len(slot_fields) >= 2 and "field" in df.columns:
@@ -1735,24 +1737,11 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
                           if c in df.columns]
             carry = []
             if "tags" in df.columns:
-                df = df.withColumn(
-                    "_pt_tags",
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.array_sort(F.map_keys(F.col("tags"))),
-                            lambda k: F.concat_ws(
-                                "=", k, F.element_at(F.col("tags"), k)
-                            ),
-                        ),
-                    ),
-                )
+                df = df.withColumn("_pt_tags", tag_set_key(F.col("tags")))
                 group_keys.append("_pt_tags")
                 carry.append(F.first("tags").alias("tags"))
-            group_keys += [c for c in df.columns
-                           if c not in _NON_TAG_COLS
-                           and not c.startswith("_")
-                           and c not in group_keys]
+            group_keys += [c for c in _promoted_tags(df.columns)
+                           if c not in group_keys]
             if "ingest_seq" in df.columns:
                 carry.append(F.min("ingest_seq").alias("ingest_seq"))
             df = (
@@ -1781,12 +1770,10 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
             return {"+": lc + rc, "-": lc - rc,
                     "*": lc * rc, "/": lc / rc}[op]
 
-        # r12 matrix audit: when EVERY selected item consumes a
-        # string/bool field numerically (math fns, raw arithmetic),
-        # stock answers with no series — previously null rows (and a
-        # raw ANSI cast crash for slot-typed fields, fixed in
-        # _numeric_value_col). A numeric or any-type sibling keeps the
-        # statement alive with the null column riding along.
+        # when EVERY selected item consumes a string/bool field
+        # numerically (math fns, raw arithmetic), stock answers with no
+        # series, never null rows. A numeric or any-type sibling keeps
+        # the statement alive with the null column riding along.
         nd_items = []
         for fn, fld, _a in ast.fields:
             nd_items.append(
@@ -1794,7 +1781,7 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
                 and _null_dispatched(fn, fld, df, ast.field_slots)
             )
         for tree, _a in ast.raw_arith:
-            tfs = _tree_fields(tree, set())
+            tfs = _tree_fields(tree)
             nd_items.append(bool(tfs) and all(
                 _null_dispatched("mean", f, df, ast.field_slots)
                 for f in tfs
@@ -1809,9 +1796,8 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
                 # directly, tags-map keys materialized) — the TAG half
                 # of the `*` branch below, with no field pivot. Field
                 # columns the multi-field pivot promoted are NOT tags.
-                for t in df.columns:
-                    if (t not in _NON_TAG_COLS and not t.startswith("_")
-                            and t not in by and t not in slot_fields):
+                for t in _promoted_tags(df.columns):
+                    if t not in by and t not in slot_fields:
                         sel.append(F.col(t))
                 if "tags" in df.columns:
                     for t in _map_tag_keys(df):
@@ -1821,21 +1807,19 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
             if (fld == "*" or fld.startswith(_RE_FLD)) and fn is None:
                 # SELECT *: every tag rides along with the field value
                 # (InfluxDB 1.x star semantics) — promoted columns
-                # directly, tags-map keys materialized (r8; previously
-                # the map variant leaked storage columns instead).
-                # SELECT *::field (r11): fields only — tags stay off
+                # directly, tags-map keys materialized, storage columns
+                # never. SELECT *::field: fields only — tags stay off
                 # the row, matching stock's namespace-restricted star.
-                # SELECT /re/ (r11): star restricted to keys matching
-                # the pattern — stock matches field AND tag keys.
+                # SELECT /re/: star restricted to keys matching the
+                # pattern — stock matches field AND tag keys.
                 rx = fld[len(_RE_FLD):] if fld.startswith(_RE_FLD) else None
 
                 def _key_ok(k: str) -> bool:
                     return rx is None or re.search(rx, k) is not None
 
                 if not ast.star_fields_only:
-                    for t in df.columns:
-                        if (t not in _NON_TAG_COLS and not t.startswith("_")
-                                and t not in by and _key_ok(t)):
+                    for t in _promoted_tags(df.columns):
+                        if t not in by and _key_ok(t):
                             sel.append(F.col(t))
                     if "tags" in df.columns:
                         for t in _map_tag_keys(df):
@@ -1845,8 +1829,8 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
                 if "field" in df.columns:
                     # stock star shape: one column per FIELD KEY per
                     # timestamp, named by the field, each TYPED by its
-                    # ftype slot (r10 — the old f_float-only pivot
-                    # returned NULL for string/bool fields). The
+                    # ftype slot (string/bool fields are not read from
+                    # f_float). The
                     # conditional-first aggregation groups on the row
                     # identity already in `sel`, so series stay intact;
                     # the (field, ftype) distinct is bounded by
@@ -1899,7 +1883,7 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
                                             soffset=ast.soffset)
                     # the pivot's groupBy destroyed row order — stock
                     # returns time-ascending (or DESC) values always,
-                    # not only under LIMIT (r9 ADVICE fix)
+                    # not only under LIMIT
                     tcol = (F.col("time").desc() if ast.order_desc
                             else F.col("time"))
                     return out.orderBy(*[c for c in by if c in out.columns],
@@ -1924,13 +1908,12 @@ def execute_influxql(points: DataFrame, query: str, tag_cols: tuple[str, ...] = 
             out = sl_ops.limit(out, ast.limit, ast.offset, by=by,
                                order=order_cols, desc=ast.order_desc)
         if ast.slimit is not None and by:
-            # raw selects honor SLIMIT/SOFFSET too (r8: only the
-            # aggregate path ranked series)
+            # raw selects honor SLIMIT/SOFFSET too
             out = sl_ops.slimit(out, ast.slimit, series=by,
                                 soffset=ast.soffset)
         # stock emits raw values time-ascending (or DESC) always — a
         # bare `SELECT f FROM m` with no LIMIT must not leak partition
-        # concat order (r9 probe 2)
+        # concat order
         tcol = F.col("time").desc() if ast.order_desc else F.col("time")
         ties = [c for c in ("ingest_seq",) if c in out.columns]
         return out.orderBy(*[c for c in by if c in out.columns], tcol, *ties)
@@ -1945,8 +1928,8 @@ def _attach_companion_fields(df: DataFrame, ast: InfluxQLQuery, bare) -> DataFra
     ``SELECT LAST(value), status`` returns the PICKED point's other
     field values (stock v1) — in the tall frame those live on sibling
     rows, so stitch them on with one window over the point identity
-    (r10: they previously fell through to a tags-map read and came
-    back NULL). Which bare names are fields comes from the ftype slot
+    (a tags-map read would come back NULL). Which bare names are
+    fields comes from the ftype slot
     map; when the frame is float-only (slot lookup skipped at query
     entry) a forced lookup resolves just the bare names — one distinct
     job bounded by field-key cardinality, only on this query shape.
@@ -1968,16 +1951,7 @@ def _attach_companion_fields(df: DataFrame, ast: InfluxQLQuery, bare) -> DataFra
         return df
     from pyspark.sql import Window as W
 
-    if "tags" in df.columns:
-        pt_tags = F.concat_ws(
-            ",",
-            F.transform(
-                F.array_sort(F.map_keys(F.col("tags"))),
-                lambda k: F.concat_ws("=", k, F.element_at(F.col("tags"), k)),
-            ),
-        )
-    else:
-        pt_tags = F.lit("")
+    pt_tags = tag_set_key(F.col("tags")) if "tags" in df.columns else F.lit("")
     df = df.withColumn("_pt_tags", pt_tags)
     wpt = W.partitionBy(
         *[c for c in ("measurement", "time_ns") if c in df.columns],
@@ -2016,11 +1990,11 @@ def _execute_selector_row(
     if fld != "*" and fld in df.columns:
         src = fld
     else:
-        # ftype-resolved slot (r10: FIRST/LAST/PERCENTILE of a string
-        # field used to read f_float and return NULL)
+        # ftype-resolved slot: FIRST/LAST/PERCENTILE of a string field
+        # read the string slot, not f_float
         src = ast.field_slots.get(fld, "f_float")
         if fld != "*" and "field" in df.columns:
-            # named field → its own rows only (multi-field frames, r6)
+            # named field → its own rows only (multi-field frames)
             df = df.filter(F.col("field") == fld)
     if ast.group_time_ns:
         df = df.withColumn(
@@ -2123,9 +2097,9 @@ def _resolve_field_slots(df: DataFrame, names: set, force: bool = False) -> dict
 def _numeric_value_col(fld: str, df: DataFrame, slots: dict | None = None):
     """Value column for NUMERIC consumption (math fns, arithmetic):
     a non-numeric physical column (subquery-promoted string/bool)
-    reads NULL instead of crashing the ANSI cast at runtime (r11 —
-    stock computes nothing for them); slot-typed string/bool fields
-    already read NULL through f_float."""
+    reads NULL instead of crashing the ANSI cast at runtime (stock
+    computes nothing for them); slot-typed string/bool fields read
+    NULL too."""
     if fld != "*" and fld in df.columns:
         from pyspark.sql import types as _T
 
@@ -2133,9 +2107,9 @@ def _numeric_value_col(fld: str, df: DataFrame, slots: dict | None = None):
             return F.lit(None).cast("double")
     elif fld != "*" and (slots or {}).get(fld, "f_float") != "f_float":
         # slot-typed string/bool field consumed numerically (abs(s),
-        # s * 2): the typed slot read crashed the ANSI cast at runtime
-        # (r12 matrix audit) — stock computes nothing; NULL here, and
-        # the raw-select path empties the statement when EVERY item is
+        # s * 2): the typed slot read would crash the ANSI cast at
+        # runtime — stock computes nothing; NULL here, and the
+        # raw-select path empties the statement when EVERY item is
         # null-dispatched
         return F.lit(None).cast("double")
     return _field_value_col(fld, df, slots)
@@ -2146,11 +2120,10 @@ def _field_value_col(fld: str, df: DataFrame, slots: dict | None = None):
     name (promoted / subquery alias), else the TYPED value slot
     RESTRICTED to rows of that field — on a multi-field measurement
     every field's rows share the tall frame, so an unconditional slot
-    read mixes fields (r6 probe: ``mean(c)`` averaged c AND u). The
-    slot comes from ``slots`` (ftype-resolved, r10 — string/bool
-    fields previously read f_float and came back NULL). One
-    conditional projection — aggregation stays single-pass, no extra
-    shuffle."""
+    read would mix fields (``mean(c)`` averaging c AND u). The slot
+    comes from ``slots`` (ftype-resolved, so string/bool fields read
+    their own slot). One conditional projection — aggregation stays
+    single-pass, no extra shuffle."""
     if fld != "*" and fld in df.columns:
         return F.col(fld)
     if fld != "*" and "field" in df.columns:
@@ -2170,7 +2143,7 @@ def _field_value_sql(fld: str, df: DataFrame, slots: dict | None = None) -> str:
     return "f_float"
 
 
-# THE v1 FUNCTION TYPING TABLE (r12 one-sweep audit; stock 1.8 docs).
+# THE v1 FUNCTION TYPING TABLE (stock 1.8 docs).
 # Functions that accept ANY field type (int64/float64/string/boolean):
 #   COUNT, COUNT(DISTINCT), DISTINCT, MODE, FIRST, LAST, SAMPLE,
 #   ELAPSED (time deltas — value type irrelevant).
@@ -2198,13 +2171,8 @@ def _star_field_map(df: DataFrame, ast, field_types) -> dict:
     pseudo-frames (no ``field`` column) expose their numeric physical
     columns as float fields, like stock's subquery field set."""
     if field_types is not None:
-        if ast.measurement_regex is not None:
-            metas = [m for m in field_types
-                     if re.search(ast.measurement_regex, m)]
-        else:
-            metas = ast.measurements or [ast.measurement]
         out: dict = {}
-        for m in metas:
+        for m in _queried_measurements(ast, field_types):
             for f, t in (field_types.get(m) or {}).items():
                 if f not in out or t in _NUMERIC_FTYPES:
                     out[f] = t
@@ -2214,9 +2182,9 @@ def _star_field_map(df: DataFrame, ast, field_types) -> dict:
 
         # subquery pseudo-frame: promoted physical columns ARE the
         # field set — including string/bool ones with their actual
-        # ftype (r11 ADVICE: count(*)/first(*)/last(*) over a subquery
-        # omitted promoted non-numeric columns; the _ANYTYPE_AGGS /
-        # numeric-only split downstream filters eligibility per fn)
+        # ftype, so count(*)/first(*)/last(*) over a subquery see
+        # them; the _ANYTYPE_AGGS / numeric-only split downstream
+        # filters eligibility per fn
         out = {}
         for f in df.schema.fields:
             if (f.name in ("time", "time_ns", "measurement", "tags",
@@ -2247,12 +2215,12 @@ def _expand_star_aggs(ast, df: DataFrame, field_types) -> None:
     """``agg(*)`` → one aggregate per field (stock v1: ``SELECT
     mean(*) FROM m`` answers columns ``mean_<field>`` for every
     eligible field — ALL fields for the any-type aggregates, numeric
-    fields only for the rest; r11 — previously * read the raw float
-    slot across all of a multi-field measurement's interleaved rows).
+    fields only for the rest — never the raw float slot across a
+    multi-field measurement's interleaved rows).
     Expansion happens once at query entry so every downstream path
     (aggregate, selector-row, nested) sees ordinary named fields.
     Regex selections (``mean(/val/)``, marked ``_RE_FLD``) expand the
-    same way over the matching field keys (r11)."""
+    same way over the matching field keys."""
 
     def _is_star(fld: str) -> bool:
         return fld == "*" or fld.startswith(_RE_FLD)
@@ -2305,13 +2273,12 @@ def _expand_star_aggs(ast, df: DataFrame, field_types) -> None:
 def _null_dispatched(fn, fld, df: DataFrame, slots: dict | None) -> bool:
     """True when this aggregate call reads the NULL dispatch column: a
     numeric-only aggregate over a string/bool-typed field slot, or over
-    a non-numeric PHYSICAL column (subquery-promoted string/bool —
-    r11: ``mean(status)`` over a subquery's string column was an ANSI
-    runtime cast crash). Used by :func:`_execute_aggregate` to
-    short-circuit to stock's EMPTY series when every selected
-    aggregate is null-dispatched (r10 verdict #1: ``SELECT
-    mean(status) FROM m`` must answer with no series, not one
-    null-valued row)."""
+    a non-numeric PHYSICAL column (subquery-promoted string/bool, which
+    an ANSI cast would crash on at runtime). Used by
+    :func:`_execute_aggregate` to short-circuit to stock's EMPTY series
+    when every selected aggregate is null-dispatched (``SELECT
+    mean(status) FROM m`` answers with no series, not one null-valued
+    row)."""
     if fn is None or fn in _ANYTYPE_AGGS:
         return False
     if fld == "*":
@@ -2400,11 +2367,7 @@ def _agg_expr(fn: str, fld: str, alias: str, args: list, df: DataFrame,
 
 
 def _walk_agg_nodes(tree):
-    if tree[0] == "agg":
-        yield tree
-    elif tree[0] == "bin":
-        yield from _walk_agg_nodes(tree[2])
-        yield from _walk_agg_nodes(tree[3])
+    return (leaf for leaf in _tree_leaves(tree) if leaf[0] == "agg")
 
 
 def _tree_col(tree, names: dict):
@@ -2527,10 +2490,10 @@ def _execute_aggregate(df: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame
 
             for c in value_cols:
                 # numeric fill literal applies to NUMERIC columns only
-                # (r10: coalesce(string_col, 0.0) casts the strings to
-                # double under ANSI and crashes at runtime on the first
-                # non-numeric value; string/bool aggregates keep null
-                # for empty windows)
+                # (coalesce(string_col, 0.0) casts the strings to double
+                # under ANSI and crashes at runtime on the first
+                # non-numeric value); string/bool aggregates keep null
+                # for empty windows
                 if isinstance(out.schema[c].dataType, _T.NumericType):
                     out = out.withColumn(
                         c, F.coalesce(F.col(c), F.lit(ast.fill))
@@ -2548,9 +2511,9 @@ def _execute_aggregate(df: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame
 
             for c in value_cols:
                 # linear interpolation is numeric-only (stock: string/
-                # bool columns keep null in empty windows) — the lerp
-                # arithmetic on a boolean `last(flag)` column was an
-                # AnalysisException escape (r11 extended fuzz)
+                # bool columns keep null in empty windows); lerp
+                # arithmetic on a boolean `last(flag)` column would be
+                # an AnalysisException
                 if not isinstance(out.schema[c].dataType, _T.NumericType):
                     continue
                 wp = W.partitionBy(*by).orderBy("_ws").rowsBetween(W.unboundedPreceding, 0)
@@ -2650,10 +2613,10 @@ def _execute_nested(df: DataFrame, ast: InfluxQLQuery, by: list, tag_col) -> Dat
                 and not isinstance(aggd.schema[src].dataType,
                                    _T.NumericType)):
             # numeric-only outer transform over an any-type inner's
-            # string/bool output — MOVING_AVERAGE(FIRST(s), 2) crashed
-            # the ANSI cast (r12 matrix audit); stock answers no
-            # series. NULL input: the rows drop via the row-align
-            # keep filter below. ELAPSED is any-type (time deltas).
+            # string/bool output (MOVING_AVERAGE(FIRST(s), 2) would
+            # crash the ANSI cast): stock answers no series. NULL
+            # input: the rows drop via the row-align keep filter
+            # below. ELAPSED is any-type (time deltas).
             aggd = aggd.withColumn(src, F.lit(None).cast("double"))
         if outer in ("derivative", "non_negative_derivative"):
             unit_s = _parse_duration(args[0]) / 1e9 if args else 1.0

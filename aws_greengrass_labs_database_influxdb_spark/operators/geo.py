@@ -34,6 +34,8 @@ from typing import Sequence
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
+
+from ..schema import tag_set_key
 from .errors import OperatorValidationError
 
 EARTH_RADIUS_KM = 6371.0088
@@ -67,10 +69,10 @@ def _xyz_to_face_uv(x: np.ndarray, y: np.ndarray, z: np.ndarray):
     v = np.empty_like(x)
     # denominator is the SIGNED dominant component on every face (the
     # public ValidFaceXYZtoUV: face 3 u=z/x v=y/x with x<0, face 4
-    # u=z/y v=-x/y, face 5 u=-y/z v=-x/z). r10 ADVICE fix: dividing by
-    # the positive magnitude on faces 3-5 negated both u and v —
-    # internally consistent, but diverging from real S2 ids for any
-    # point whose dominant axis is negative. Pinned by the
+    # u=z/y v=-x/y, face 5 u=-y/z v=-x/z). Dividing by the positive
+    # magnitude on faces 3-5 would negate both u and v — internally
+    # consistent, but diverging from real S2 ids for any point whose
+    # dominant axis is negative. Pinned by the
     # FaceUVtoXYZ roundtrip + face-center golden tests.
     for f, (uexpr, vexpr, dexpr) in enumerate((
         (lambda: y, lambda: z, lambda: x),
@@ -329,13 +331,7 @@ def shape_data(
     # observation differ exactly in field, and must merge). Any
     # incoming series_key (which embeds the field) is replaced.
     if "tags" in df.columns:
-        tag_ser = F.concat_ws(
-            ",",
-            F.transform(
-                F.array_sort(F.map_keys(F.col("tags"))),
-                lambda k: F.concat_ws("=", k, F.element_at(F.col("tags"), k)),
-            ),
-        )
+        tag_ser = tag_set_key(F.col("tags"))
         mcol = F.col("measurement") if "measurement" in df.columns else F.lit("")
         df = df.withColumn("series_key", F.concat_ws("|", mcol, tag_ser))
     elif "series_key" in df.columns:

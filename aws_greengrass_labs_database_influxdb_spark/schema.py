@@ -18,7 +18,7 @@ see SURVEY.md §7 "hard parts".
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 # Field-type discriminator values for the `ftype` column.
 FT_FLOAT = "float"
@@ -64,8 +64,8 @@ def unify_numeric_value(df: DataFrame) -> DataFrame:
     The tall schema stores each field value in its typed slot
     (``f_float``/``f_int``/``f_uint``); every numeric operator reads
     ``f_float``. Without this fold, integer line-protocol fields
-    (``c=5i`` — counters, the most common telemetry shape) silently
-    aggregate to NULL (r6 probe). The fold is a per-row coalesce —
+    (``c=5i`` — counters, the most common telemetry shape) would
+    aggregate to NULL. The fold is a per-row coalesce —
     one map-side projection, no shuffle — and is applied only when an
     integer slot exists, so float-only frames (and their plan
     fingerprints) are untouched.
@@ -87,6 +87,20 @@ def unify_numeric_value(df: DataFrame) -> DataFrame:
     return df.withColumn("f_float", F.coalesce(*parts))
 
 
+def tag_set_key(tags: Column) -> Column:
+    """A tags map serialized as its key-sorted ``k=v`` pairs joined by
+    commas — the one string form of a tag set. Spark cannot group on a
+    map, so every grouping, join or window over series identity keys on
+    this string instead."""
+    return F.concat_ws(
+        ",",
+        F.transform(
+            F.array_sort(F.map_keys(tags)),
+            lambda k: F.concat_ws("=", k, F.element_at(tags, k)),
+        ),
+    )
+
+
 def series_key(df: DataFrame, tag_cols: list[str] | None = None) -> DataFrame:
     """Add a deterministic ``series_key`` string column.
 
@@ -98,13 +112,7 @@ def series_key(df: DataFrame, tag_cols: list[str] | None = None) -> DataFrame:
         parts = [F.concat_ws("=", F.lit(c), F.col(c).cast("string")) for c in tag_cols]
         key = F.concat_ws(",", *parts)
     else:
-        key = F.concat_ws(
-            ",",
-            F.transform(
-                F.array_sort(F.map_keys(F.col("tags"))),
-                lambda k: F.concat_ws("=", k, F.element_at(F.col("tags"), k)),
-            ),
-        )
+        key = tag_set_key(F.col("tags"))
     return df.withColumn(
         "series_key", F.concat_ws("|", F.col("measurement"), key, F.col("field"))
     )

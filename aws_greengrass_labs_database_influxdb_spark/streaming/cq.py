@@ -28,7 +28,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from ..frontends.influxql import InfluxQLError, _parse_duration
+from ..frontends.influxql import (
+    InfluxQLError, _parse_duration, parse_influxql, select_into, split_into,
+)
 
 _CREATE_RX = re.compile(
     r'(?is)^\s*CREATE\s+CONTINUOUS\s+QUERY\s+"?([\w\-]+)"?\s+ON\s+"?([\w\-]+)"?'
@@ -39,7 +41,6 @@ _DROP_RX = re.compile(
     r'(?is)^\s*DROP\s+CONTINUOUS\s+QUERY\s+"?([\w\-]+)"?\s+ON\s+"?([\w\-]+)"?\s*$'
 )
 _GROUP_TIME_RX = re.compile(r"(?is)GROUP\s+BY\s+.*?time\s*\(\s*(\w+)\s*[,)]")
-_INTO_RX = re.compile(r"(?is)\bINTO\s+\"?([\w.\-]+)\"?\s+FROM\b")
 
 
 @dataclass
@@ -49,11 +50,6 @@ class ContinuousQuery:
     statement: str  # SELECT ... INTO <target> FROM ... GROUP BY time(...)
     every_ns: int  # run grain (RESAMPLE EVERY, else GROUP BY time)
     for_ns: int  # recompute window width (RESAMPLE FOR, else 2×every)
-
-    @property
-    def target(self) -> str:
-        m = _INTO_RX.search(self.statement)
-        return m.group(1) if m else ""
 
 
 class CQRegistry:
@@ -71,7 +67,8 @@ class CQRegistry:
         if not m:
             raise InfluxQLError(f"cannot parse CREATE CONTINUOUS QUERY: {text!r}")
         name, db, every_tok, for_tok, inner = m.groups()
-        if not _INTO_RX.search(inner):
+        into = split_into(inner)
+        if into is None:
             raise InfluxQLError("continuous query body must be SELECT ... INTO")
         gt = _GROUP_TIME_RX.search(inner)
         if every_tok:
@@ -89,12 +86,9 @@ class CQRegistry:
         for_ns = _parse_duration(for_tok) if for_tok else 2 * every_ns
         # stock InfluxDB parses the FULL inner statement at CREATE time
         # and rejects it with a parse error — validate here with the
-        # same parser run_due will use (INTO stripped, exactly as the
-        # run path rewrites it), so an invalid body can never register
-        # silently and first fail at its scheduled run
-        from ..frontends.influxql import parse_influxql
-
-        parse_influxql(_INTO_RX.sub("FROM", inner))
+        # same parser each run uses, so an invalid body can never
+        # register silently and first fail at its scheduled run
+        parse_influxql(into[0])
         cq = ContinuousQuery(name, db, inner.strip(), every_ns, for_ns)
         if (db, name) in self._cqs:
             raise InfluxQLError(f"continuous query {name!r} already exists on {db!r}")
@@ -132,45 +126,14 @@ class CQRegistry:
         stream's foreachBatch, or a test): re-running is idempotent, so
         "run at least every ``every``" is the only contract.
         """
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        from ..frontends.influxql import execute_influxql
         from ..operators.core import push_time_filter
-        from ..sources.io import into_tag_keys, into_type_triples, result_to_points
 
         written: dict[str, int] = {}
         for (db, name), cq in self._cqs.items():
             stop_ns = now_ns // cq.every_ns * cq.every_ns
             start_ns = stop_ns - max(cq.for_ns, cq.every_ns)
-            points = self.store.read_points(self.org, db)
-            windowed = push_time_filter(points, start_ns, stop_ns)
-            sel = _INTO_RX.sub("FROM", cq.statement)
-            result = execute_influxql(
-                windowed, sel,
-                field_types=self.store.field_types(self.org, db),
-            )
-            # INTO tag provenance: GROUP BY tags stay tags in
-            # the target; GROUP BY * keeps the all-strings-are-tags
-            # downsample mapping (see sources/io._into_split_cols)
-            from ..frontends.influxql import parse_influxql
-
-            gt = list(parse_influxql(sel).group_tags)
-            into_tags = None if "*" in gt else gt
-            # single-execution write: the row count rides the WRITE job
-            # as an observation metric, and the type pins and tag keys
-            # come from the result schema — one Spark job per CQ run
-            # instead of three (write + pin-distinct + count would each
-            # re-run the unpersisted aggregate).
-            obs = Observation()
-            pts = result_to_points(
-                result, cq.target, tag_cols=into_tags
-            ).observe(obs, F.count(F.lit(1)).alias("n"))
-            self.store.write_points(
-                self.org, db, pts,
-                known_types=into_type_triples(result, cq.target,
-                                              tag_cols=into_tags),
-                tag_keys=into_tag_keys(result, tag_cols=into_tags),
-            )
-            written[name] = obs.get["n"]
+            windowed = push_time_filter(self.store.read_points(self.org, db),
+                                        start_ns, stop_ns)
+            written[name] = select_into(self.store, self.org, db,
+                                        cq.statement, windowed)
         return written

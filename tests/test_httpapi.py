@@ -249,6 +249,147 @@ def test_v1_drop_series(served):
     assert len(vals) == 1 and vals[0][-1] == 2.0  # only host=b survives
 
 
+def _v1(base, token, stmt):
+    """One v1 statement → its ``results[0]`` dict."""
+    q = urllib.parse.quote(stmt)
+    _, body = _req(base, f"/query?db=greengrass-telemetry&q={q}&epoch=ns",
+                   token=token)
+    return json.loads(body)["results"][0]
+
+
+def _meas(prefix, *key):
+    """A measurement name of its own for one parametrized case."""
+    import hashlib
+
+    return prefix + hashlib.md5(repr(key).encode()).hexdigest()[:10]
+
+
+def _write_hosts(base, tokens, meas):
+    """Three series (web1/a, web2/b, db1/c), three points each."""
+    lines = [f"{meas},host={h},region={r} v={i + 1}.5 {T0 + i * 60_000_000_000}"
+             for h, r in (("web1", "a"), ("web2", "b"), ("db1", "c"))
+             for i in range(3)]
+    _req(base, "/api/v2/write?bucket=greengrass-telemetry", "POST",
+         token=tokens["RW"], body="\n".join(lines), ctype="text/plain")
+
+
+def _series_rows(res):
+    """{(host, time, v)} of a ``SELECT v … GROUP BY *`` result."""
+    return {(s["tags"]["host"], t, v)
+            for s in res.get("series", []) for t, v in s["values"]}
+
+
+@pytest.mark.parametrize("where, kept", [
+    ("host =~ /web1/", {"web2", "db1"}),
+    ("host !~ /^web/", {"web1", "web2"}),
+    ("(host = 'web1' OR host = 'db1')", {"web2"}),
+    ("host = 'web2' OR region = 'c'", {"web1"}),
+])
+@pytest.mark.parametrize("verb", ["DELETE", "DROP SERIES"])
+def test_v1_delete_where_regex_and_or(served, verb, where, kept):
+    """DELETE / DROP SERIES compile WHERE like SELECT: =~ and !~ are
+    regex matches and an OR group deletes its union — never the whole
+    measurement."""
+    base, _, tokens = served
+    meas = _meas("dl_", verb, where)
+    _write_hosts(base, tokens, meas)
+    assert _v1(base, tokens["RW"], f"{verb} FROM {meas} WHERE {where}") \
+        == {"statement_id": 0}
+    left = _v1(base, tokens["RO"], f"SELECT v FROM {meas} GROUP BY host")
+    assert {s["tags"]["host"] for s in left["series"]} == kept
+
+
+@pytest.mark.parametrize("where", [
+    "v > 1", "v * 2 > 1", "(host = 'web1' OR v > 1)",
+])
+def test_v1_delete_field_condition_is_an_error(served, where):
+    """Stock rejects field conditions in a delete; ignoring them used to
+    delete the whole measurement."""
+    base, _, tokens = served
+    meas = _meas("dlf_", where)
+    _write_hosts(base, tokens, meas)
+    stmt = urllib.parse.quote(f"DELETE FROM {meas} WHERE {where}")
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _req(base, f"/query?db=greengrass-telemetry&q={stmt}", token=tokens["RW"])
+    assert e.value.code == 400
+    assert "field" in json.loads(e.value.read().decode())["message"]
+    left = _v1(base, tokens["RO"], f"SELECT v FROM {meas} GROUP BY *")
+    assert len(_series_rows(left)) == 9
+
+
+_OR = "(region = 'a' OR region = 'b')"
+
+
+@pytest.mark.parametrize("stmt, present, absent", [
+    (f"SHOW MEASUREMENTS WHERE {_OR}", {("shor",)}, {("shorc",)}),
+    (f"SHOW TAG KEYS FROM shor WHERE {_OR}", {("host",), ("region",)},
+     {("rack",)}),
+    (f'SHOW TAG VALUES FROM shor WITH KEY = "host" WHERE {_OR}',
+     {("host", "web1"), ("host", "web2")}, {("host", "db1")}),
+    (f"SHOW FIELD KEYS FROM shor WHERE {_OR}", {("v", "float")},
+     {("temp", "float")}),
+    (f"SHOW SERIES FROM shor WHERE {_OR}",
+     {("shor,host=web1,region=a",), ("shor,host=web2,region=b",)},
+     {("shor,host=db1,rack=r1,region=c",)}),
+    (f"SHOW SERIES EXACT CARDINALITY FROM shor WHERE {_OR}", {(2,)}, set()),
+    (f'SHOW TAG VALUES EXACT CARDINALITY FROM shor WITH KEY = "host" '
+     f"WHERE {_OR}", {(2,)}, set()),
+    (f"SHOW TAG KEY EXACT CARDINALITY FROM shor WHERE {_OR}", {(2,)}, set()),
+])
+def test_v1_show_where_or_group(served, stmt, present, absent):
+    """Every SHOW form applies a WHERE OR group; db1 (region c, the only
+    series with a rack tag and a temp field) and the region-c-only
+    measurement shorc stay out."""
+    base, _, tokens = served
+    _req(base, "/api/v2/write?bucket=greengrass-telemetry", "POST",
+         token=tokens["RW"], ctype="text/plain", body="\n".join([
+             f"shor,host=web1,region=a v=1.0 {T0}",
+             f"shor,host=web2,region=b v=2.0 {T0}",
+             f"shor,host=db1,region=c,rack=r1 v=3.0,temp=9.0 {T0}",
+             f"shorc,host=x,region=c v=1.0 {T0}",
+         ]))
+    res = _v1(base, tokens["RO"], stmt)
+    rows = {tuple(v) for s in res["series"] for v in s["values"]}
+    assert present <= rows and not absent & rows, rows
+
+
+_T1 = "'2024-01-01T00:01:00Z'"
+_T2 = "'2024-01-01T00:02:00Z'"
+
+
+@pytest.mark.parametrize("where, series", [
+    ("host = 'web1'", {"web1"}),
+    ("host != 'web1'", {"web2", "db1"}),
+    ("host =~ /^web/", {"web1", "web2"}),
+    ("host !~ /^web/", {"db1"}),
+    ("(host = 'web1' OR region = 'c')", {"web1", "db1"}),
+    (f"time >= {_T1} AND time < {_T2} AND host =~ /web/", {"web1", "web2"}),
+])
+def test_v1_where_compiles_alike_for_select_show_and_delete(served, where, series):
+    """One condition compiler: SELECT … GROUP BY *, SHOW SERIES and its
+    exact cardinality select the same series, and DELETE removes exactly
+    the rows SELECT returned."""
+    base, _, tokens = served
+    meas = _meas("cmp_", where)
+    _write_hosts(base, tokens, meas)
+    region = {"web1": "a", "web2": "b", "db1": "c"}
+    sel = _v1(base, tokens["RO"], f"SELECT v FROM {meas} WHERE {where} GROUP BY *")
+    assert [s["tags"] for s in sel["series"]] == [
+        {"host": h, "region": region[h]} for h in sorted(series)]
+    show = _v1(base, tokens["RO"], f"SHOW SERIES FROM {meas} WHERE {where}")
+    assert {v[0] for v in show["series"][0]["values"]} == {
+        f"{meas},host={h},region={region[h]}" for h in series}
+    card = _v1(base, tokens["RO"],
+               f"SHOW SERIES EXACT CARDINALITY FROM {meas} WHERE {where}")
+    assert card["series"][0]["values"] == [[len(series)]]
+
+    before = _series_rows(_v1(base, tokens["RO"], f"SELECT v FROM {meas} GROUP BY *"))
+    _v1(base, tokens["RW"], f"DELETE FROM {meas} WHERE {where}")
+    after = _series_rows(_v1(base, tokens["RO"], f"SELECT v FROM {meas} GROUP BY *"))
+    assert len(before) == 9
+    assert before - after == _series_rows(sel) and after <= before
+
+
 def test_v1_multi_statement(served):
     """Semicolon-batched statements → one results entry each with
     sequential statement_ids (Grafana's init batch)."""

@@ -119,6 +119,22 @@ def test_influxql_group_by_time_and_tag_runs_one_pass(spark, panel_served):
     assert n == 3, f"{n} Spark jobs per request"
 
 
+def test_influxql_group_by_star_finds_tag_keys_once(spark, panel_served):
+    # GROUP BY * needs the queried rows' tag keys: the executor finds
+    # them with one distinct, and the façade frames the series from the
+    # executed statement instead of repeating that over the bucket
+    base, _, tokens = panel_served
+    q = ("SELECT mean(f1) FROM tele WHERE time >= '2024-01-01T00:00:00Z' "
+         "AND time < '2024-01-01T06:00:00Z' GROUP BY time(1h), *")
+    _influxql(base, tokens, q)
+    n, doc = _jobs(spark, lambda: _influxql(base, tokens, q))
+    series = doc["results"][0]["series"]
+    assert [s["tags"] for s in series] == [
+        {"device": f"d{d}", "site": f"s{d % 2}"} for d in range(8)]
+    assert all(len(s["values"]) == 6 for s in series)
+    assert n <= 6, f"{n} Spark jobs per request"
+
+
 # ------------------------------------------------------- catalog staleness
 
 
