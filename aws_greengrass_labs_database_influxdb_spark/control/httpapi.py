@@ -42,6 +42,7 @@ collected except final query results (post-aggregation row counts).
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 import json
 import os
 import re
@@ -55,7 +56,7 @@ from urllib.parse import parse_qs, urlsplit
 
 from pyspark.sql import functions as F
 
-from ..frontends.annotated_csv import iter_annotated_csv
+from ..frontends.annotated_csv import iter_annotated_csv, ordered_rows
 from ..frontends.flux import execute_flux_multi
 from ..frontends.influxql import (
     execute_influxql, parse_delete, parse_statement, select_into, split_into,
@@ -211,14 +212,11 @@ def _iter_v1_json_chunked(results: list[dict], chunk_size: int):
     result entry partial too — exactly the stock v1 contract clients
     like influxdb-python's chunked reader parse.
 
-    Streaming shape: rows are pulled lazily (``_StreamedValues`` pass
-    through ``toLocalIterator``) — facade memory stays O(chunk_size).
+    Streaming shape: rows are pulled lazily (``_StreamedValues``) —
+    facade memory stays O(chunk_size).
     """
     for res in results:
         sid = res.get("statement_id", 0)
-        # one-series look-ahead tells whether the statement has more
-        # data (drives the result-level partial flag) without
-        # materializing a lazy per-tag-set series generator
         sit = iter(res.get("series", []))
         cur = next(sit, None)
         if cur is None:
@@ -227,10 +225,10 @@ def _iter_v1_json_chunked(results: list[dict], chunk_size: int):
             yield json.dumps({"results": [doc]}) + "\n"
             continue
         while cur is not None:
-            nxt = next(sit, None)
             vals = cur.get("values", [])
             rows_iter = vals.rows if isinstance(vals, _StreamedValues) else iter(vals)
             pending = next(rows_iter, None)
+            nxt = None
             first_batch = True
             while first_batch or pending is not None:
                 batch = []
@@ -238,6 +236,11 @@ def _iter_v1_json_chunked(results: list[dict], chunk_size: int):
                     batch.append(pending)
                     pending = next(rows_iter, None)
                 series_more = pending is not None
+                if not series_more:
+                    # one-series look-ahead for the result-level partial
+                    # flag, taken only once this series is read out: the
+                    # series of a lazy generator share one row stream
+                    nxt = next(sit, None)
                 s_doc = {"name": cur.get("name")}
                 if cur.get("tags"):
                     s_doc["tags"] = cur["tags"]
@@ -789,8 +792,6 @@ class HttpApi:
         table* and terminates the chunk stream, and so do we — a second
         status line written into the chunk stream would corrupt the
         transfer."""
-        import itertools
-
         it = iter(chunks)
         try:
             first = next(it)
@@ -1407,13 +1408,14 @@ class HttpApi:
         name = re.search(r'FROM\s+"?(\w+)"?', text, re.IGNORECASE)
         sname = name.group(1) if name else db
 
-        # stock v1 framing: GROUP BY <tag,...> emits ONE SERIES PER TAG
-        # SET, each tagged with {"tags": {...}} and the tag columns
-        # removed from "columns" (Grafana reads the tags dict for
-        # aliasing). The split stays streaming: rows arrive sorted by
-        # the tag columns and itertools.groupby cuts series boundaries
-        # without buffering more than one row group's pull-ahead.
-        # SHOW, EXPLAIN and subquery results carry no GROUP BY tags.
+        # stock v1 framing: one series per set of splitter values — a
+        # retained `measurement` column (multi-measurement FROM lists /
+        # regexes: one series PER MEASUREMENT, named by it), then the
+        # GROUP BY tags, each series tagged with {"tags": {...}} and the
+        # tag columns removed from "columns" (Grafana reads the tags
+        # dict for aliasing). An answer without a tag is the
+        # zero-splitter case: one series. SHOW, EXPLAIN and subquery
+        # results carry no GROUP BY tags.
         gtags: list[str] = []
         is_agg = False
         if stmt is not None:
@@ -1430,80 +1432,49 @@ class HttpApi:
         synth_time = is_agg and "time" not in cols
         t0_cell = (0 if div else _ns_to_rfc3339(0)) if synth_time else None
 
-        # series splitters: a retained `measurement` column (multi-
-        # measurement FROM lists / regexes — stock emits one series
-        # PER MEASUREMENT, named by it) plus the GROUP BY tags. Sorted
-        # rows arrive as the v2 annotated-CSV path delivers them: one
-        # bounded job, or a toLocalIterator stream for a large answer,
-        # so a raw SELECT * over a big measurement never materializes
-        # in facade memory; the JSON envelope is emitted incrementally
-        # by _iter_v1_json
+        # rows arrive sorted by the splitters, then by time in the
+        # statement's direction (other statements keep their own
+        # order), as the v2 annotated-CSV path delivers them: one
+        # bounded job, or a stream for a large answer, so a raw SELECT *
+        # over a big measurement never materializes in facade memory.
+        # itertools.groupby cuts series boundaries without buffering;
+        # the JSON envelope is emitted incrementally by _iter_v1_json
         split_meas = "measurement" in cols
         splitters = (["measurement"] if split_meas else []) + gtags
-        if splitters:
-            from ..frontends.annotated_csv import ordered_rows
+        order = list(splitters)
+        if "time" in cols and stmt is not None:
+            order.append(F.desc("time") if stmt.order_desc else F.col("time"))
+        data_cols = [c for c in cols if c not in splitters]
+        out_cols = (["time"] if synth_time else []) + data_cols
 
-            order = splitters + (["time"] if "time" in cols else [])
-            data_cols = [c for c in cols if c not in splitters]
-            out_cols = (["time"] if synth_time else []) + data_cols
+        def _series_gen():
+            for key, rows in itertools.groupby(
+                ordered_rows(result, order),
+                key=lambda r: tuple(r[t] for t in splitters),
+            ):
+                tags = dict(zip(splitters, key))
+                meas_name = tags.pop("measurement", None)
+                series = {
+                    "name": meas_name if split_meas else sname,
+                    "columns": out_cols,
+                    "values": _StreamedValues(
+                        ([t0_cell] if synth_time else [])
+                        + [cell(r, c) for c in data_cols]
+                        for r in rows
+                    ),
+                }
+                if tags:
+                    series["tags"] = tags
+                yield series
 
-            def _series_gen():
-                import itertools
-
-                it = ordered_rows(result, order)
-                for key, rows in itertools.groupby(
-                    it, key=lambda r: tuple(r[t] for t in splitters)
-                ):
-                    tags = dict(zip(splitters, key))
-                    meas_name = tags.pop("measurement", None)
-                    series = {
-                        "name": meas_name if split_meas else sname,
-                        "columns": out_cols,
-                        "values": _StreamedValues(
-                            ([t0_cell] if synth_time else [])
-                            + [cell(r, c) for c in data_cols]
-                            for r in rows
-                        ),
-                    }
-                    if tags:
-                        series["tags"] = tags
-                    yield series
-
-            # stock v1: a data query with no rows answers with NO
-            # series key at all ({"statement_id": 0}) — one-series
-            # look-ahead, then the generator resumes streaming
-            import itertools as _it
-
-            gen = _series_gen()
-            head = next(gen, None)
-            if head is None:
-                return {}
-            return {"series": _it.chain([head], gen)}
-
-        frozen = result
-        out_cols = (["time"] if synth_time else []) + cols
-
-        def _rows():
-            for r in frozen.toLocalIterator(prefetchPartitions=True):
-                yield (
-                    ([t0_cell] if synth_time else [])
-                    + [cell(r, c) for c in cols]
-                )
-
-        # stock v1: empty data result → no series key (one-row
-        # look-ahead; the iterator then resumes streaming untouched)
-        import itertools as _it
-
-        row_it = _rows()
-        head = next(row_it, None)
+        # stock v1: a data query with no rows answers with NO series key
+        # at all ({"statement_id": 0}) — one-series look-ahead, then the
+        # generator resumes streaming
+        gen = _series_gen()
+        head = next(gen, None)
         if head is None:
             return {}
-        series = {
-            "name": sname,
-            "columns": out_cols,
-            "values": _StreamedValues(_it.chain([head], row_it)),
-        }
-        return {"series": [series]}
+        return {"series": itertools.chain([head], gen)}
 
     def _handle_delete(self, handler, q: dict, body: bytes) -> None:
         org = q.get("org") or self.engine.config.org

@@ -57,7 +57,7 @@ from ..operators import selectors as sel_ops
 from ..operators import sortlimit as sl_ops
 from ..operators.windows import duration_ns, window_spine, window_start_ns
 from ..operators.core import push_time_filter
-from ..schema import SLOT_OF_FTYPE, tag_set_key, unify_numeric_value
+from ..schema import SLOT_OF_FTYPE, promoted_tags, tag_set_key, unify_numeric_value
 
 
 class InfluxQLError(ValueError):
@@ -717,7 +717,7 @@ def parse_influxql(q: str, now_ns: int | None = None) -> InfluxQLQuery:
     return out
 
 
-def _execute_transform(df: DataFrame, ast: InfluxQLQuery, transforms, tag_col) -> DataFrame:
+def _execute_transform(df: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame:
     """DERIVATIVE / DIFFERENCE / CUMULATIVE_SUM / MOVING_AVERAGE /
     ELAPSED (+ NON_NEGATIVE_*): per-point windowed transforms.
 
@@ -728,14 +728,12 @@ def _execute_transform(df: DataFrame, ast: InfluxQLQuery, transforms, tag_col) -
     """
     from ..operators import analytics as an_ops
 
+    transforms = [(fn, fld, al) for fn, fld, al in ast.fields
+                  if fn in _TRANSFORMS or fn in _TA_FNS]
     if ast.group_time_ns:
         raise InfluxQLError("transform functions do not support GROUP BY time()")
     if len(transforms) != len(ast.fields):
         raise InfluxQLError("cannot mix transform functions with other select items")
-    by = list(ast.group_tags)
-    for t in by:
-        if t not in df.columns:
-            df = df.withColumn(t, tag_col(t))
     order = ["time_ns", "ingest_seq"] if "ingest_seq" in df.columns else None
 
     def one(fn: str, fld: str, alias: str, df: DataFrame = df) -> DataFrame:
@@ -800,28 +798,20 @@ def _execute_transform(df: DataFrame, ast: InfluxQLQuery, transforms, tag_col) -
 
     if len(transforms) == 1:
         fn, fld, alias = transforms[0]
-        out = one(fn, fld, alias).select("time", *by, alias)
-    else:
-        # InfluxQL multi-transform: each computed independently per
-        # series, rows aligned on time — a row appears when ANY column
-        # is defined (full outer join on the point identity).
-        keys = [*by, "time_ns"] + (["ingest_seq"] if "ingest_seq" in df.columns else [])
-        acc = None
-        for fn, fld, alias in transforms:
-            o = one(fn, fld, alias).select(*keys, alias)
-            acc = o if acc is None else acc.join(o, on=keys, how="full")
-        out = acc.select(
-            F.timestamp_micros(F.expr("time_ns div 1000")).alias("time"),
-            *by,
-            *[alias for _, _, alias in transforms],
-        )
-    if ast.order_desc:
-        out = out.orderBy(F.desc("time"))
-    if ast.limit is not None:
-        order_cols = ["time"] + (["ingest_seq"] if "ingest_seq" in out.columns else [])
-        out = sl_ops.limit(out, ast.limit, ast.offset, by=by, order=order_cols,
-                           desc=ast.order_desc)
-    return out
+        return one(fn, fld, alias).select("time", *by, alias)
+    # InfluxQL multi-transform: each computed independently per series,
+    # rows aligned on time — a row appears when ANY column is defined
+    # (full outer join on the point identity).
+    keys = [*by, "time_ns"] + (["ingest_seq"] if "ingest_seq" in df.columns else [])
+    acc = None
+    for fn, fld, alias in transforms:
+        o = one(fn, fld, alias).select(*keys, alias)
+        acc = o if acc is None else acc.join(o, on=keys, how="full")
+    return acc.select(
+        F.timestamp_micros(F.expr("time_ns div 1000")).alias("time"),
+        *by,
+        *[alias for _, _, alias in transforms],
+    )
 
 
 def _apply_ta(fn: str, df: DataFrame, src: str, n: int, by: list, alias: str) -> DataFrame:
@@ -887,23 +877,6 @@ def _extract_subquery(text: str) -> tuple[str, str] | None:
                 outer = text[: m.start()] + f"FROM {_SUBQUERY_MEAS}" + text[i + 1 :]
                 return inner, outer
     raise InfluxQLError("unbalanced parens in FROM subquery")
-
-
-# Columns of the canonical points schema and of a bucket scan
-# (``series_key``, ``day``) that are not tags. Every other column of a
-# points frame whose name does not start with "_" (engine-internal, such
-# as the raw scan-time companion) is a promoted tag column.
-_NON_TAG_COLS = frozenset(
-    {"measurement", "time", "time_ns", "tags", "field", "ftype", "ingest_seq",
-     "f_float", "f_int", "f_uint", "f_str", "f_bool", "props",
-     "series_key", "day"}
-)
-
-
-def _promoted_tags(columns) -> list[str]:
-    """The promoted tag columns among ``columns``, in frame order."""
-    return [c for c in columns
-            if c not in _NON_TAG_COLS and not c.startswith("_")]
 
 
 def _tag_col(name: str, columns) -> Column:
@@ -1076,7 +1049,7 @@ def _show_scope(points: DataFrame, m: re.Match, statement: str):
     df = push_time_filter(df, where.time_start_ns, where.time_stop_ns)
     for c in conds:
         df = df.filter(c)
-    return df, _promoted_tags(df.columns), "tags" in df.columns
+    return df, promoted_tags(df.columns), "tags" in df.columns
 
 
 def _tag_key_rows(df: DataFrame, promoted, has_map, *lead) -> DataFrame:
@@ -1239,9 +1212,7 @@ def execute_show_cardinality(points: DataFrame, query: str) -> DataFrame:
     return count_distinct_of(df, _series_key(promoted, has_map))
 
 
-def _execute_multi_row(
-    df: DataFrame, ast: InfluxQLQuery, sel, tag_col, extras=()
-) -> DataFrame:
+def _execute_multi_row(df: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame:
     """TOP / BOTTOM / DISTINCT / SAMPLE — InfluxQL functions that emit
     multiple rows per group (so they can't join the single-row
     aggregate list). TOP/BOTTOM/SAMPLE keep the source point's
@@ -1249,8 +1220,15 @@ def _execute_multi_row(
     from the selected rows (``SELECT TOP(value, 3), event_type``);
     DISTINCT emits the window start (or no time column when
     ungrouped)."""
-    fn, fld, alias = sel
-    by = list(ast.group_tags)
+    multi = [f for f in ast.fields if f[0] in _MULTI_ROW]
+    extras = [f for f in ast.fields if f not in multi]
+    if len(multi) > 1 or any(fn2 is not None for fn2, _, _ in extras):
+        raise InfluxQLError(
+            "TOP/BOTTOM/DISTINCT/SAMPLE must be the only function selection"
+        )
+    if extras and multi[0][0] == "distinct":
+        raise InfluxQLError("DISTINCT must be the only selection")
+    fn, fld, alias = multi[0]
     if fn in ("top", "bottom") and _null_dispatched(
         fn, fld, df, ast.field_slots
     ):
@@ -1263,28 +1241,9 @@ def _execute_multi_row(
     # SELECT TOP(value, 3), status — same per-point stitch as the
     # selector-row path
     df = _attach_companion_fields(df, ast, extras)
-    if fld != "*" and fld in df.columns:
-        src = fld
-    else:
-        # ftype-resolved slot (DISTINCT/SAMPLE of string fields)
-        src = ast.field_slots.get(fld, "f_float")
-        if fld != "*" and "field" in df.columns:
-            # named field → its own rows only (multi-field frames)
-            df = df.filter(F.col("field") == fld)
+    df, src = _value_source(df, ast, fld)
     args = ast.fn_args.get(alias) or []
-    if ast.group_time_ns:
-        df = df.withColumn(
-            "_ws",
-            window_start_ns(_window_src_ns(ast), ast.group_time_ns,
-                            ast.group_time_offset_ns),
-        )
-        keys = [*by, "_ws"]
-    else:
-        keys = by
-    # group tags may live in the tags map — materialize them as columns
-    for t in by:
-        if t not in df.columns:
-            df = df.withColumn(t, tag_col(t))
+    df, keys = _window_keys(df, ast, by)
 
     def _with_extras(picked: DataFrame, also: Sequence[str] = ()) -> DataFrame:
         cols = [F.col("time"), *[F.col(t) for t in by], F.col(src).alias(alias)]
@@ -1292,10 +1251,8 @@ def _execute_multi_row(
             if t not in by:
                 cols.append(F.col(t))
         for _fn, f2, a2 in extras:
-            if f2 in by:
-                continue
-            c2 = F.col(f2) if f2 in picked.columns else tag_col(f2)
-            cols.append(c2.alias(a2))
+            if f2 not in by:
+                cols.append(_tag_col(f2, picked.columns).alias(a2))
         return picked.select(*cols)
 
     if fn in ("top", "bottom"):
@@ -1309,7 +1266,7 @@ def _execute_multi_row(
             # self-join (reference semantics: N distinct tag values)
             for t in tag_keys:
                 if t not in df.columns:
-                    df = df.withColumn(t, tag_col(t))
+                    df = df.withColumn(t, _tag_col(t, df.columns))
             per_tag = sel(df, 1, by=[*keys, *tag_keys], value=src)
             picked = sel(per_tag, int(args[-1]), by=keys, value=src)
             out = _with_extras(picked, also=tag_keys)
@@ -1325,15 +1282,6 @@ def _execute_multi_row(
         out = df.select(*keys, F.col(src).alias(alias)).distinct()
         if ast.group_time_ns:
             out = out.withColumn("time", _ws_time_expr(ast)).drop("_ws")
-
-    if ast.order_desc and "time" in out.columns:
-        out = out.orderBy(F.desc("time"))
-    if ast.slimit is not None and by:
-        out = sl_ops.slimit(out, ast.slimit, series=by, soffset=ast.soffset)
-    if ast.limit is not None:
-        order = "time" if "time" in out.columns else alias
-        out = sl_ops.limit(out, ast.limit, ast.offset, by=by, order=order,
-                           desc=ast.order_desc)
     return out
 
 
@@ -1413,27 +1361,38 @@ def execute_influxql(points: DataFrame, query: str | InfluxQLQuery,
     provided, field→slot resolution reads it driver-side with ZERO
     Spark jobs; without it, a frame carrying string or bool slots runs
     one bounded distinct job on the ftype discriminator.
+
+    A SELECT runs in four steps: scope (measurements, time range, field
+    slots), WHERE, GROUP BY, then one shape function whose unfinished
+    answer :func:`_finish` orders and limits.
     """
     ast = parse_statement(query, now_ns) if isinstance(query, str) else query
     if ast is None:
         return _execute_text_form(points, query, tag_cols, now_ns, field_types)
+    df = _scope(points, ast, field_types)
+    df = _apply_where(df, ast)
+    df, by = _group_by(df, ast)
+    shape = _select_shape(ast)
+    return _finish(shape(df, ast, by), ast, by, raw=shape is _execute_raw)
+
+
+def _scope(points: DataFrame, ast: InfluxQLQuery, field_types) -> DataFrame:
+    """The rows a SELECT reads — its measurements inside its time range —
+    with ``ast.field_slots`` resolved for every name the statement uses
+    and ``agg(*)`` expanded against them."""
     points = unify_numeric_value(points)  # int/uint slots → value column
-    multi_meas = ast.measurement_regex is not None or len(ast.measurements) > 1
     if ast.measurement_regex is not None:
         df = points.filter(F.col("measurement").rlike(ast.measurement_regex))
     elif len(ast.measurements) > 1:
         df = points.filter(F.col("measurement").isin(ast.measurements))
     else:
         df = points.filter(F.col("measurement") == ast.measurement)
-
     df = push_time_filter(df, ast.time_start_ns, ast.time_stop_ns)
 
-    # ftype-resolved slot map for every referenced name that is not a
-    # physical column — gated inside _resolve_field_slots on the frame
-    # actually carrying string/bool slots, so float-only suite frames
-    # never run the lookup job. WHERE names are included so a string
-    # condition like status = 'ok' can be recognized as a FIELD
-    # condition (stock resolves bare identifiers field-first).
+    # every referenced name that is not a physical column, WHERE names
+    # included, so a string condition like status = 'ok' can be
+    # recognized as a FIELD condition (stock resolves bare identifiers
+    # field-first)
     refs = _selected_fields(ast)
     refs.update(n for n, _o, _v in ast.field_filters
                 if not n.startswith("__expr__"))
@@ -1456,470 +1415,351 @@ def execute_influxql(points: DataFrame, query: str | InfluxQLQuery,
                            if v in df.columns}
     else:
         ast.field_slots = _resolve_field_slots(df, refs)
-
     _expand_star_aggs(ast, df, field_types)
+    return df
 
-    # string/bool conditions parse as tag-shaped (quoted RHS); when the
-    # name is a known string/bool FIELD KEY of this frame, reroute it
-    # to the field-condition path below (a tags-map read would be NULL
-    # and silently drop every row)
-    if ast.field_slots:
-        kept = []
-        for name, op, val in ast.tag_filters:
-            slot = ast.field_slots.get(name)
-            if slot in ("f_str", "f_bool") and name not in df.columns:
-                ast.field_filters.append((name, op, val))
-            else:
-                kept.append((name, op, val))
-        ast.tag_filters = kept
 
-    def tag_col(name):
-        return _tag_col(name, df.columns)
+def _field_cond(columns, slots: dict, name: str, op: str, val) -> tuple[Column, bool]:
+    """One field condition as a row-local Column, and whether it reads a
+    field's value slot on a tall frame (then it holds on one row of the
+    point only, and a per-point WHERE needs :func:`_point_semi`).
 
-    def _point_semi(frame: DataFrame, cond: Column) -> DataFrame:
-        """Keep every row of POINTS where ``cond`` holds on any of the
-        point's rows — v1's per-point WHERE over the tall frame. One
-        left-semi join on the point identity (measurement, serialized
-        series tags, timestamp); AQE broadcasts the passing side when
-        the predicate is selective."""
-        ident = [c for c in ("measurement", "time_ns") if c in frame.columns]
-        if "tags" in frame.columns:
-            tagkey = tag_set_key(F.col("tags"))
-        else:
-            promoted = _promoted_tags(frame.columns)
-            tagkey = F.concat_ws(
-                ",", *[F.col(c).cast("string") for c in promoted]
-            ) if promoted else F.lit("")
-        frame = frame.withColumn("_pt_tags", tagkey)
-        passing = (frame.filter(cond)
-                   .select(*ident, "_pt_tags").distinct())
-        return (frame.join(passing, on=[*ident, "_pt_tags"], how="leftsemi")
-                .drop("_pt_tags"))
+    A physical column of that name compares directly. Otherwise the
+    field's typed slot is read on that field's rows: a bool field takes
+    a ``true``/``false`` literal, and a type mismatch (a number against
+    a string/bool field, a string range against a number) matches no
+    row, like stock, without an ANSI cast error."""
+    if name in columns:
+        return _cmp_cond(F.col(name), op, val), False
+    slot = slots.get(name, "f_float")
+    if slot == "f_bool" and isinstance(val, str):
+        val = val.strip().lower() in ("true", "t", "1")
+    elif slot in ("f_str", "f_bool") and isinstance(val, float):
+        return F.lit(False), False
+    elif (slot == "f_float" and isinstance(val, str)
+          and op in (">", ">=", "<", "<=")):
+        return F.lit(False), False
+    cond = _cmp_cond(F.col(slot), op, val)
+    if "field" not in columns:
+        return cond, False
+    return (F.col("field") == name) & cond, True
 
-    def _field_cond(name: str, op: str, val) -> Column:
-        """Row-local condition for a known string/bool FIELD key."""
-        slot = ast.field_slots[name]
-        rhs = val
-        if slot == "f_bool" and isinstance(val, str):
-            rhs = val.strip().lower() in ("true", "t", "1")
-        return (F.col("field") == name) & _cmp_cond(F.col(slot), op, rhs)
 
+def _apply_where(df: DataFrame, ast: InfluxQLQuery) -> DataFrame:
+    """The SELECT WHERE clause (the time range is already in the scope).
+
+    Tag conditions and a field condition on the only field selected are
+    row-local filters that keep their scan-level plan. v1 evaluates
+    every other field condition per POINT: the point's rows are kept
+    when the condition holds on any of them (:func:`_point_semi`)."""
+    slots = ast.field_slots
+    # string/bool conditions parse as tag-shaped (quoted RHS); a known
+    # string/bool FIELD key of this frame is a field condition (a
+    # tags-map read would be NULL and silently drop every row)
+    moved = [c for c in ast.tag_filters
+             if slots.get(c[0]) in ("f_str", "f_bool") and c[0] not in df.columns]
+    ast.tag_filters = [c for c in ast.tag_filters if c not in moved]
+    ast.field_filters += moved
     for name, op, val in ast.tag_filters:
         df = df.filter(_tag_cond(df.columns, name, op, val))
     for group in ast.or_tag_groups:
-        # OR groups may mix tag conditions with string/bool FIELD
-        # conditions: any field member makes the whole group
-        # point-level (a field's value lives on one row of the point,
-        # so a row-local OR would drop the point's other-field rows)
-        conds = []
-        any_field = False
+        # any field member makes the whole group point-level (a field's
+        # value lives on one row of the point, so a row-local OR would
+        # drop the point's other-field rows)
+        conds, per_point = [], False
         for name, op, val in group:
-            if isinstance(val, float):
-                # numeric member ⇒ field condition (v1: tags are strings)
-                if name in df.columns:
-                    conds.append(_cmp_cond(F.col(name), op, val))
-                elif "field" in df.columns:
-                    any_field = True
-                    slot = ast.field_slots.get(name, "f_float")
-                    if slot in ("f_str", "f_bool"):
-                        conds.append(F.lit(False))  # type mismatch: no rows
-                    else:
-                        conds.append(
-                            (F.col("field") == name)
-                            & _cmp_cond(F.col(slot), op, val)
-                        )
-                else:
-                    conds.append(_cmp_cond(F.col("f_float"), op, val))
-            elif (name in ast.field_slots and name not in df.columns
-                    and "field" in df.columns
-                    and ast.field_slots[name] in ("f_str", "f_bool")):
-                any_field = True
-                conds.append(_field_cond(name, op, val))
+            # a numeric member is a field condition (v1 tags are
+            # strings), and so is a string/bool field key
+            if isinstance(val, float) or (
+                    name not in df.columns and "field" in df.columns
+                    and slots.get(name) in ("f_str", "f_bool")):
+                cond, tall = _field_cond(df.columns, slots, name, op, val)
+                per_point |= tall
             else:
-                conds.append(_tag_cond(df.columns, name, op, val))
+                cond = _tag_cond(df.columns, name, op, val)
+            conds.append(cond)
         acc = reduce(operator.or_, conds)
-        df = _point_semi(df, acc) if any_field else df.filter(acc)
-    # every field the selection reads: a field condition on exactly
-    # those fields stays a row-local (scan-level) filter
+        df = _point_semi(df, acc) if per_point else df.filter(acc)
     sel_fields = _selected_fields(ast)
     for name, op, val in ast.field_filters:
         if name.startswith("__expr__"):
-            # arithmetic condition. Identifiers followed by '(' are
-            # function calls, not field refs — allow the InfluxQL math
-            # set, reject the rest (a blind swap would produce
-            # nonsense like f_float(f_float)).
-            #
-            # Field identifiers: stock evaluates WHERE arithmetic per
-            # POINT, so the referenced fields' per-point values are
-            # attached and the arithmetic reads those (a string/bool
-            # field reads NULL). Fast path: when the condition
-            # references one float field and the selection reads only
-            # that field (arithmetic selections included), the
-            # row-local filter is identical — the selection keeps only
-            # that field's rows — and stays scan-level.
-            raw = name[len("__expr__"):]
-            idents = []
-            for mo in re.finditer(r"\b[A-Za-z_]\w*\b", raw):
-                if raw[mo.end():].lstrip().startswith("("):
-                    continue
-                if mo.group(0) not in df.columns and mo.group(0) not in idents:
-                    idents.append(mo.group(0))
-            fast = (
-                len(idents) <= 1
-                and all(ast.field_slots.get(i, "f_float") == "f_float"
-                        for i in idents)
-                and sel_fields <= set(idents)
-            )
-            target, added = df, []
-            if idents and not fast and "field" in df.columns:
-                target = _attach_companion_fields(
-                    df, ast, [(None, i, i) for i in idents])
-                added = [c for c in target.columns if c not in df.columns]
+            df = _apply_arith_where(df, ast, name[len("__expr__"):], op, val,
+                                    sel_fields)
+            continue
+        cond, tall = _field_cond(df.columns, slots, name, op, val)
+        # SELECT v WHERE v > 5 stays row-local and pushdown-able;
+        # SELECT value WHERE status = 'ok' is per point
+        df = (_point_semi(df, cond) if tall and not sel_fields <= {name}
+              else df.filter(cond))
+    return df
 
-            def _swap(mo, target=target):
-                ident = mo.group(0)
-                rest = raw[mo.end():]
-                if rest.lstrip().startswith("("):
-                    if ident.lower() in _EXPR_FNS:
-                        return ident
-                    raise InfluxQLError(
-                        f"unsupported function {ident}() in WHERE condition"
-                    )
-                if ident in target.columns:
-                    from pyspark.sql import types as _T
 
-                    if not isinstance(target.schema[ident].dataType,
-                                      _T.NumericType):
-                        # numeric arithmetic over a string/bool field:
-                        # stock computes nothing
-                        return "CAST(NULL AS DOUBLE)"
-                    return f"`{ident}`"
-                return "f_float"
+def _apply_arith_where(df: DataFrame, ast: InfluxQLQuery, raw: str, op: str,
+                       val, sel_fields: set) -> DataFrame:
+    """An arithmetic WHERE condition (``value * 2 > 100``). Identifiers
+    followed by '(' are calls of the InfluxQL math set; the others are
+    fields, read per POINT (their per-point values are attached, and a
+    string/bool field reads NULL). One float field that is also the
+    only field selected stays a row-local, scan-level filter."""
+    idents = []
+    for mo in re.finditer(r"\b[A-Za-z_]\w*\b", raw):
+        if raw[mo.end():].lstrip().startswith("("):
+            continue
+        if mo.group(0) not in df.columns and mo.group(0) not in idents:
+            idents.append(mo.group(0))
+    fast = (
+        len(idents) <= 1
+        and all(ast.field_slots.get(i, "f_float") == "f_float" for i in idents)
+        and sel_fields <= set(idents)
+    )
+    target = df
+    if idents and not fast and "field" in df.columns:
+        target = _attach_companion_fields(df, ast, [(None, i, i) for i in idents])
 
-            sql = re.sub(r"\b[A-Za-z_]\w*\b", _swap, raw)
-            cond = _cmp_cond(F.expr(sql), op, val)
-            if target is df:
-                df = df.filter(cond)
-            else:
-                # per-point semantics: keep every row of points whose
-                # attached field values satisfy the arithmetic, then
-                # drop the helper columns so selection/pivot machinery
-                # sees the untouched tall shape
-                df = _point_semi(target, cond).drop(*added)
-            continue
-        if name in df.columns:
-            df = df.filter(_cmp_cond(F.col(name), op, val))
-            continue
-        slot = ast.field_slots.get(name, "f_float")
-        rhs = val
-        if slot == "f_bool" and isinstance(val, str):
-            rhs = val.strip().lower() in ("true", "t", "1")
-        elif slot in ("f_str", "f_bool") and isinstance(val, (int, float)):
-            # numeric comparison against a string/bool field: stock
-            # yields no rows; never let ANSI cast errors surface
-            df = df.filter(F.lit(False))
-            continue
-        elif slot == "f_float" and op in (">", ">=", "<", "<=") \
-                and isinstance(val, str):
-            # string-literal range compare against a numeric field —
-            # same stock no-rows contract
-            df = df.filter(F.lit(False))
-            continue
-        if "field" not in df.columns:
-            df = df.filter(_cmp_cond(F.col(slot), op, rhs))
-            continue
-        cond = (F.col("field") == name) & _cmp_cond(F.col(slot), op, rhs)
-        if sel_fields <= {name}:
-            # self-referential single-field condition (SELECT v WHERE
-            # v > 5): row-local filter, fully pushdown-able — the
-            # common dashboard shape keeps its scan-level plan
-            df = df.filter(cond)
-        else:
-            # cross-field / star condition (SELECT value WHERE
-            # status = 'ok'): stock v1 evaluates WHERE per POINT —
-            # keep every row of points whose named field passes.
-            df = _point_semi(df, cond)
+    def _swap(mo):
+        ident = mo.group(0)
+        if raw[mo.end():].lstrip().startswith("("):
+            if ident.lower() in _EXPR_FNS:
+                return ident
+            raise InfluxQLError(
+                f"unsupported function {ident}() in WHERE condition")
+        if ident in target.columns:
+            from pyspark.sql import types as _T
 
+            if not isinstance(target.schema[ident].dataType, _T.NumericType):
+                # numeric arithmetic over a string/bool field: stock
+                # computes nothing
+                return "CAST(NULL AS DOUBLE)"
+            return f"`{ident}`"
+        return "f_float"
+
+    cond = _cmp_cond(F.expr(re.sub(r"\b[A-Za-z_]\w*\b", _swap, raw)), op, val)
+    if target is df:
+        return df.filter(cond)
+    # the helper columns go again, so the shapes see the untouched tall frame
+    added = [c for c in target.columns if c not in df.columns]
+    return _point_semi(target, cond).drop(*added)
+
+
+def _group_by(df: DataFrame, ast: InfluxQLQuery) -> tuple[DataFrame, list[str]]:
+    """Resolve the GROUP BY in place and return the series key columns:
+    ``*`` becomes every promoted tag column plus the tags-map keys the
+    queried rows carry (one small distinct job bounded by tag-key
+    cardinality), and a multi-measurement read (comma list / regex)
+    leads with ``measurement`` — it never merges points across
+    measurements, like InfluxDB's per-measurement series. Each group tag
+    living in the tags map becomes a column here, once for every
+    shape."""
     by = list(ast.group_tags)
     if "*" in by:
-        # GROUP BY *: every promoted tag column, plus (for stored
-        # buckets carrying a tags MAP) the map keys the queried rows
-        # carry — one small distinct job bounded by tag-key cardinality
-        by = _promoted_tags(df.columns)
+        by = promoted_tags(df.columns)
         if "tags" in df.columns:
             by = sorted(set(by) | set(_map_tag_keys(df)))
-        ast.group_tags = by
+    multi_meas = ast.measurement_regex is not None or len(ast.measurements) > 1
     if multi_meas and "measurement" not in by:
-        # multi-measurement queries (comma list / regex) never merge
-        # points across measurements — one output series each, like
-        # InfluxDB's per-measurement result blocks
         by = ["measurement", *by]
-        ast.group_tags = by
-    # group tags living in the tags map become real columns once, for
-    # every downstream path (aggregate, transform, multi-row, nested)
+    ast.group_tags = by
     for t in by:
         if t not in df.columns:
-            df = df.withColumn(t, tag_col(t))
-    transforms = [(fn, fld, al) for fn, fld, al in ast.fields
-                  if fn in _TRANSFORMS or fn in _TA_FNS]
-    if transforms:
-        return _execute_transform(df, ast, transforms, tag_col)
+            df = df.withColumn(t, _tag_col(t, df.columns))
+    return df, by
 
-    multi = [(fn, fld, al) for fn, fld, al in ast.fields if fn in _MULTI_ROW]
-    if multi:
-        extras = [f for f in ast.fields if f not in multi]
-        if len(multi) > 1 or any(fn2 is not None for fn2, _, _ in extras):
-            raise InfluxQLError(
-                "TOP/BOTTOM/DISTINCT/SAMPLE must be the only function selection"
-            )
-        if extras and multi[0][0] == "distinct":
-            raise InfluxQLError("DISTINCT must be the only selection")
-        return _execute_multi_row(df, ast, multi[0], tag_col, extras=extras)
 
+def _select_shape(ast: InfluxQLQuery):
+    """The shape function that answers a resolved SELECT: transform,
+    multi-row (TOP/BOTTOM/DISTINCT/SAMPLE), nested, selector row, raw or
+    aggregate. Each takes ``(df, ast, by)`` and returns the answer
+    before ORDER BY and the limits."""
+    fns = [fn for fn, _f, _a in ast.fields]
+    if any(fn in _TRANSFORMS or fn in _TA_FNS for fn in fns):
+        return _execute_transform
+    if any(fn in _MULTI_ROW for fn in fns):
+        return _execute_multi_row
     if ast.nested:
-        return _execute_nested(df, ast, by, tag_col)
-
+        return _execute_nested
     # single selector + accompanying bare columns: InfluxDB selector
     # queries return the SELECTED POINT, so named tags/fields ride
     # along (SELECT LAST(value), event_type ... / SELECT
     # PERCENTILE(value, 95), event_type ... GROUP BY event_type)
-    bare = [f for f in ast.fields if f[0] is None]
-    fn_fields = [f for f in ast.fields if f[0] is not None]
-    if (
-        bare
-        and len(fn_fields) == 1
-        and fn_fields[0][0] in ("first", "last", "max", "min", "percentile")
-        and not ast.arith
-        and not ast.raw_arith
-    ):
-        return _execute_selector_row(df, ast, fn_fields[0], bare, by, tag_col)
-
-    has_agg = (
-        any(fn and fn not in _MATH_FNS for fn, _, _ in ast.fields)
-        or bool(ast.arith)
-    )
+    fn_fields = [fn for fn in fns if fn is not None]
+    if (None in fns and len(fn_fields) == 1
+            and fn_fields[0] in ("first", "last", "max", "min", "percentile")
+            and not ast.arith and not ast.raw_arith):
+        return _execute_selector_row
+    has_agg = any(fn and fn not in _MATH_FNS for fn in fns) or bool(ast.arith)
     if ast.raw_arith and has_agg:
         # InfluxQL rejects mixing raw projections with aggregates
         # query-wide; dropping either silently would be worse
         raise InfluxQLError(
             "cannot mix raw field expressions with aggregate selections"
         )
+    return _execute_aggregate if has_agg else _execute_raw
 
-    if not has_agg:
-        if ast.group_time_ns:
-            # stock v1 rejects raw projections windowed by time
-            raise InfluxQLError(
-                "GROUP BY requires at least one aggregate function"
-            )
-        # named slot fields read only their OWN rows (multi-field
-        # frames interleave fields in the tall schema): drop other-field
-        # rows, and make each projection conditional
-        slot_fields: set = set()
-        for fn, fld, alias in ast.fields:
-            if (fld != "*" and fld != _STARTAG
-                    and not fld.startswith(_RE_FLD)
-                    and fld not in df.columns):
-                slot_fields.add(fld)
-        for tree, _alias in ast.raw_arith:
-            slot_fields |= {f for f in _tree_fields(tree)
-                            if f != "*" and f not in df.columns}
-        if slot_fields and "field" in df.columns:
-            df = df.filter(F.col("field").isin(sorted(slot_fields)))
-        if len(slot_fields) >= 2 and "field" in df.columns:
-            # multi-field raw select: stock v1 merges the fields of one
-            # point into ONE row ([time, a, b]); the tall frame holds
-            # one row per field. Pivot per point identity FIRST so every
-            # downstream projection (math fns, cross-field raw
-            # arithmetic like a + b) reads physical per-point columns —
-            # single-field selects (the common dashboard shape) skip
-            # this and keep their scan-level plan.
-            group_keys = [c for c in ("measurement", "time", "time_ns")
-                          if c in df.columns]
-            carry = []
-            if "tags" in df.columns:
-                df = df.withColumn("_pt_tags", tag_set_key(F.col("tags")))
-                group_keys.append("_pt_tags")
-                carry.append(F.first("tags").alias("tags"))
-            group_keys += [c for c in _promoted_tags(df.columns)
-                           if c not in group_keys]
+
+def _execute_raw(df: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame:
+    """Raw selections — fields, ``*``, ``*::tag``, ``/regex/``, math
+    functions and per-row arithmetic: one row per point.
+
+    Named fields read only their OWN rows of the tall frame. Two or more
+    of them are pivoted per point first (stock v1 merges the fields of
+    one point into ONE row), so every projection, cross-field
+    arithmetic included, reads physical per-point columns; a
+    single-field select keeps its scan-level plan."""
+    if ast.group_time_ns:
+        # stock v1 rejects raw projections windowed by time
+        raise InfluxQLError("GROUP BY requires at least one aggregate function")
+    slot_fields = {fld for _fn, fld, _a in ast.fields
+                   if fld not in ("*", _STARTAG) and not fld.startswith(_RE_FLD)
+                   and fld not in df.columns}
+    for tree, _alias in ast.raw_arith:
+        slot_fields |= {f for f in _tree_fields(tree)
+                        if f != "*" and f not in df.columns}
+    if slot_fields and "field" in df.columns:
+        df = df.filter(F.col("field").isin(sorted(slot_fields)))
+        if len(slot_fields) >= 2:
+            df, key = _with_point_key(df)
+            carry = [F.first("tags").alias("tags")] if "tags" in df.columns else []
             if "ingest_seq" in df.columns:
                 carry.append(F.min("ingest_seq").alias("ingest_seq"))
-            df = (
-                df.groupBy(*group_keys)
-                .agg(*carry, *[
-                    F.first(
-                        F.when(
-                            F.col("field") == f,
-                            F.col(ast.field_slots.get(f, "f_float")),
-                        ),
-                        ignorenulls=True,
-                    ).alias(f)
-                    for f in sorted(slot_fields)
-                ])
-                .drop("_pt_tags")
-            )
+            df = _pivot_fields(
+                df, [*key, "time"], carry,
+                {f: ast.field_slots.get(f, "f_float") for f in slot_fields},
+            ).drop("_pt_tags")
 
-        def _raw_col(tree):
-            kind = tree[0]
-            if kind == "num":
-                return F.lit(tree[1])
-            if kind == "field":
-                return _numeric_value_col(tree[1], df, ast.field_slots)
-            _, op, l, r = tree
-            lc, rc = _raw_col(l), _raw_col(r)
-            return {"+": lc + rc, "-": lc - rc,
-                    "*": lc * rc, "/": lc / rc}[op]
+    def _raw_col(tree):
+        kind = tree[0]
+        if kind == "num":
+            return F.lit(tree[1])
+        if kind == "field":
+            return _numeric_value_col(tree[1], df, ast.field_slots)
+        _, op, l, r = tree
+        lc, rc = _raw_col(l), _raw_col(r)
+        return {"+": lc + rc, "-": lc - rc, "*": lc * rc, "/": lc / rc}[op]
 
-        # when EVERY selected item consumes a string/bool field
-        # numerically (math fns, raw arithmetic), stock answers with no
-        # series, never null rows. A numeric or any-type sibling keeps
-        # the statement alive with the null column riding along.
-        nd_items = []
-        for fn, fld, _a in ast.fields:
-            nd_items.append(
-                fn in _MATH_FNS
-                and _null_dispatched(fn, fld, df, ast.field_slots)
-            )
-        for tree, _a in ast.raw_arith:
-            tfs = _tree_fields(tree)
-            nd_items.append(bool(tfs) and all(
-                _null_dispatched("mean", f, df, ast.field_slots)
-                for f in tfs
-            ))
-        if nd_items and all(nd_items):
-            df = df.limit(0)
+    # when EVERY selected item consumes a string/bool field numerically
+    # (math fns, raw arithmetic), stock answers with no series, never
+    # null rows. A numeric or any-type sibling keeps the statement
+    # alive with the null column riding along.
+    nd_items = [fn in _MATH_FNS and _null_dispatched(fn, fld, df, ast.field_slots)
+                for fn, fld, _a in ast.fields]
+    for tree, _a in ast.raw_arith:
+        tfs = _tree_fields(tree)
+        nd_items.append(bool(tfs) and all(
+            _null_dispatched("mean", f, df, ast.field_slots) for f in tfs))
+    if nd_items and all(nd_items):
+        df = df.limit(0)
 
-        sel = [F.col("time"), *[tag_col(t).alias(t) for t in by]]
-        for fn, fld, alias in ast.fields:
-            if fld == _STARTAG and fn is None:
-                # `*::tag`: every tag key as a column (promoted columns
-                # directly, tags-map keys materialized) — the TAG half
-                # of the `*` branch below, with no field pivot. Field
-                # columns the multi-field pivot promoted are NOT tags.
-                for t in _promoted_tags(df.columns):
-                    if t not in by and t not in slot_fields:
-                        sel.append(F.col(t))
-                if "tags" in df.columns:
-                    for t in _map_tag_keys(df):
-                        if t not in df.columns and t not in by:
-                            sel.append(F.col("tags")[t].alias(t))
-                continue
-            if (fld == "*" or fld.startswith(_RE_FLD)) and fn is None:
-                # SELECT *: every tag rides along with the field value
-                # (InfluxDB 1.x star semantics) — promoted columns
-                # directly, tags-map keys materialized, storage columns
-                # never. SELECT *::field: fields only — tags stay off
-                # the row, matching stock's namespace-restricted star.
-                # SELECT /re/: star restricted to keys matching the
-                # pattern — stock matches field AND tag keys.
-                rx = fld[len(_RE_FLD):] if fld.startswith(_RE_FLD) else None
+    sel = [F.col("time"), *[F.col(t) for t in by]]
+    for fn, fld, alias in ast.fields:
+        if fld == _STARTAG and fn is None:
+            # `*::tag`: every tag key as a column, no field pivot. Field
+            # columns the multi-field pivot promoted are NOT tags.
+            sel += _tag_columns(df, by, slot_fields, None)
+            continue
+        if (fld == "*" or fld.startswith(_RE_FLD)) and fn is None:
+            # SELECT *: every tag rides along with the field values
+            # (InfluxDB 1.x star semantics), SELECT *::field only the
+            # fields; SELECT /re/ is the star restricted to keys
+            # matching the pattern (stock matches field AND tag keys)
+            rx = fld[len(_RE_FLD):] if fld.startswith(_RE_FLD) else None
+            if not ast.star_fields_only:
+                sel += _tag_columns(df, by, (), rx)
+            if "field" in df.columns:
+                return _star_pivot(df, sel, rx)
+            sel.append(F.col("f_float").alias(alias))
+            continue
+        if fn in _MATH_FNS:
+            col = _math_expr(fn, _numeric_value_col(fld, df, ast.field_slots),
+                             ast.fn_args.get(alias, []))
+        else:
+            col = _field_value_col(fld, df, ast.field_slots)
+        sel.append(col.alias(alias))
+    for tree, alias in ast.raw_arith:
+        # per-row field arithmetic (SELECT value * 8 / 1024 ...) — a
+        # plain Column projection, whole-stage-codegen'd
+        sel.append(_raw_col(tree).alias(alias))
+    return df.select(*sel)
 
-                def _key_ok(k: str) -> bool:
-                    return rx is None or re.search(rx, k) is not None
 
-                if not ast.star_fields_only:
-                    for t in _promoted_tags(df.columns):
-                        if t not in by and _key_ok(t):
-                            sel.append(F.col(t))
-                    if "tags" in df.columns:
-                        for t in _map_tag_keys(df):
-                            if (t not in df.columns and t not in by
-                                    and _key_ok(t)):
-                                sel.append(F.col("tags")[t].alias(t))
-                if "field" in df.columns:
-                    # stock star shape: one column per FIELD KEY per
-                    # timestamp, named by the field, each TYPED by its
-                    # ftype slot (string/bool fields are not read from
-                    # f_float). The
-                    # conditional-first aggregation groups on the row
-                    # identity already in `sel`, so series stay intact;
-                    # the (field, ftype) distinct is bounded by
-                    # field-key cardinality.
-                    # NOTE: deliberately NOT read from the field-type
-                    # catalog — stock star columns are the fields with
-                    # points IN THE QUERIED RANGE, which only the
-                    # filtered frame knows (the catalog lists every
-                    # field ever written)
-                    if "ftype" in df.columns:
-                        pairs = df.select("field", "ftype").distinct().collect()
-                    else:
-                        pairs = [
-                            (r[0], "float")
-                            for r in df.select("field").distinct().collect()
-                        ]
-                    fmap: dict = {}
-                    for r in pairs:
-                        if not _key_ok(r[0]):
-                            continue
-                        s = SLOT_OF_FTYPE.get(r[1], "f_float")
-                        if s not in df.columns:
-                            s = "f_float"
-                        if r[0] not in fmap or s == "f_float":
-                            fmap[r[0]] = s
-                    if not fmap:
-                        # regex matched no FIELD key (tags-only or
-                        # nothing): stock answers with no series
-                        return df.select(*sel).limit(0)
-                    row_ident = df.select(*sel).columns
-                    slot_cols = [c for c in ("f_float", "f_str", "f_bool")
-                                 if c in df.columns]
-                    out = (
-                        df.select(*sel, F.col("field"), *slot_cols)
-                        .groupBy(*row_ident)
-                        .agg(*[
-                            F.first(
-                                F.when(F.col("field") == f, F.col(s)),
-                                ignorenulls=True,
-                            ).alias(f)
-                            for f, s in sorted(fmap.items())
-                        ])
-                    )
-                    if ast.limit is not None:
-                        out = sl_ops.limit(
-                            out, ast.limit, ast.offset, by=by,
-                            order=["time"], desc=ast.order_desc)
-                    if ast.slimit is not None and by:
-                        out = sl_ops.slimit(out, ast.slimit, series=by,
-                                            soffset=ast.soffset)
-                    # the pivot's groupBy destroyed row order — stock
-                    # returns time-ascending (or DESC) values always,
-                    # not only under LIMIT
-                    tcol = (F.col("time").desc() if ast.order_desc
-                            else F.col("time"))
-                    return out.orderBy(*[c for c in by if c in out.columns],
-                                       tcol)
-                sel.append(F.col("f_float").alias(alias))
-                continue
-            if fn in _MATH_FNS:
-                col = _math_expr(fn, _numeric_value_col(fld, df, ast.field_slots),
-                                 ast.fn_args.get(alias, []))
-            else:
-                col = _field_value_col(fld, df, ast.field_slots)
-            sel.append(col.alias(alias))
-        for tree, alias in ast.raw_arith:
-            # per-row field arithmetic (SELECT value * 8 / 1024 ...) —
-            # a plain Column projection, whole-stage-codegen'd
-            sel.append(_raw_col(tree).alias(alias))
-        out = df.select(*sel)
-        if ast.limit is not None:
-            order_cols = ["time"] + (
-                ["ingest_seq"] if "ingest_seq" in out.columns else []
-            )
-            out = sl_ops.limit(out, ast.limit, ast.offset, by=by,
-                               order=order_cols, desc=ast.order_desc)
-        if ast.slimit is not None and by:
-            # raw selects honor SLIMIT/SOFFSET too
-            out = sl_ops.slimit(out, ast.slimit, series=by,
-                                soffset=ast.soffset)
-        # stock emits raw values time-ascending (or DESC) always — a
-        # bare `SELECT f FROM m` with no LIMIT must not leak partition
-        # concat order
-        tcol = F.col("time").desc() if ast.order_desc else F.col("time")
-        ties = [c for c in ("ingest_seq",) if c in out.columns]
-        return out.orderBy(*[c for c in by if c in out.columns], tcol, *ties)
+def _tag_columns(df: DataFrame, by: list, skip, rx: str | None) -> list[Column]:
+    """Every tag of ``df`` outside ``by`` and ``skip`` (whose key matches
+    ``rx``) as a column: promoted columns directly, tags-map keys
+    materialized, storage columns never."""
+    cols = [F.col(t) for t in promoted_tags(df.columns)
+            if t not in by and t not in skip
+            and (rx is None or re.search(rx, t))]
+    if "tags" in df.columns:
+        cols += [F.col("tags")[t].alias(t) for t in _map_tag_keys(df)
+                 if t not in df.columns and t not in by
+                 and (rx is None or re.search(rx, t))]
+    return cols
 
-    # aggregate / selector path (+ arithmetic over aggregates)
-    return _finish(_execute_aggregate(df, ast, by), ast, by)
+
+def _star_pivot(df: DataFrame, sel: list, rx: str | None) -> DataFrame:
+    """The stock ``SELECT *`` shape: one column per FIELD KEY (matching
+    ``rx``) per row identity ``sel``, named by the field and typed by its
+    slot. Deliberately NOT read from the field-type catalog: stock star
+    columns are the fields with points IN THE QUERIED RANGE, which only
+    the filtered frame knows — one (field, ftype) distinct bounded by
+    field-key cardinality."""
+    if "ftype" in df.columns:
+        pairs = df.select("field", "ftype").distinct().collect()
+    else:
+        pairs = [(r[0], "float")
+                 for r in df.select("field").distinct().collect()]
+    fmap: dict = {}
+    for f, ftype in pairs:
+        if rx is not None and not re.search(rx, f):
+            continue
+        s = SLOT_OF_FTYPE.get(ftype, "f_float")
+        if s not in df.columns:
+            s = "f_float"
+        if f not in fmap or s == "f_float":
+            fmap[f] = s
+    if not fmap:
+        # regex matched no FIELD key (tags-only or nothing): stock
+        # answers with no series
+        return df.select(*sel).limit(0)
+    slot_cols = [c for c in ("f_float", "f_str", "f_bool") if c in df.columns]
+    return _pivot_fields(df.select(*sel, F.col("field"), *slot_cols),
+                         df.select(*sel).columns, [], fmap)
+
+
+def _pivot_fields(df: DataFrame, keys: list, carry: list, slots: dict) -> DataFrame:
+    """One row per ``keys`` group with one column per field of ``slots``
+    (field → value slot): the field's value from its own row of the tall
+    frame. ``carry`` are further aggregate Columns kept alongside."""
+    return df.groupBy(*keys).agg(*carry, *[
+        F.first(F.when(F.col("field") == f, F.col(s)), ignorenulls=True).alias(f)
+        for f, s in sorted(slots.items())
+    ])
+
+
+def _with_point_key(frame: DataFrame) -> tuple[DataFrame, list[str]]:
+    """``frame`` with its rows' v1 point identity, and the identity's
+    columns: measurement, timestamp and the series tag set — the tags
+    map as its ``tag_set_key`` string ``_pt_tags``, and every promoted
+    tag column. The rows of one point (one per field) share it."""
+    key = [c for c in ("measurement", "time_ns") if c in frame.columns]
+    if "tags" in frame.columns:
+        frame = frame.withColumn("_pt_tags", tag_set_key(F.col("tags")))
+        key.append("_pt_tags")
+    return frame, key + promoted_tags(frame.columns)
+
+
+def _point_semi(frame: DataFrame, cond: Column) -> DataFrame:
+    """Keep every row of the POINTS where ``cond`` holds on any of the
+    point's rows — v1's per-point WHERE over the tall frame. One
+    left-semi join on the point identity (null-safe: a promoted tag may
+    be NULL); AQE broadcasts the passing side when the predicate is
+    selective."""
+    frame, key = _with_point_key(frame)
+    passing = (frame.filter(cond)
+               .select(*[F.col(k).alias(f"_pk{i}") for i, k in enumerate(key)])
+               .distinct())
+    on = reduce(operator.and_, [frame[k].eqNullSafe(passing[f"_pk{i}"])
+                                for i, k in enumerate(key)])
+    return frame.join(passing, on, how="leftsemi").drop("_pt_tags")
 
 
 def _attach_companion_fields(df: DataFrame, ast: InfluxQLQuery, bare) -> DataFrame:
@@ -1951,12 +1791,8 @@ def _attach_companion_fields(df: DataFrame, ast: InfluxQLQuery, bare) -> DataFra
         return df
     from pyspark.sql import Window as W
 
-    pt_tags = tag_set_key(F.col("tags")) if "tags" in df.columns else F.lit("")
-    df = df.withColumn("_pt_tags", pt_tags)
-    wpt = W.partitionBy(
-        *[c for c in ("measurement", "time_ns") if c in df.columns],
-        "_pt_tags",
-    )
+    df, key = _with_point_key(df)
+    wpt = W.partitionBy(*key)
     for f2 in comp:
         df = df.withColumn(
             f2,
@@ -1968,9 +1804,18 @@ def _attach_companion_fields(df: DataFrame, ast: InfluxQLQuery, bare) -> DataFra
     return df.drop("_pt_tags")
 
 
-def _execute_selector_row(
-    df: DataFrame, ast: InfluxQLQuery, sel, bare, by: list, tag_col
-) -> DataFrame:
+def _value_source(df: DataFrame, ast: InfluxQLQuery, fld: str) -> tuple[DataFrame, str]:
+    """The column a selector reads for ``fld``: a physical column of that
+    name, else the field's typed slot (FIRST/LAST/DISTINCT of a string
+    field read the string slot) over that field's own rows."""
+    if fld != "*" and fld in df.columns:
+        return df, fld
+    if fld != "*" and "field" in df.columns:
+        df = df.filter(F.col("field") == fld)
+    return df, ast.field_slots.get(fld, "f_float")
+
+
+def _execute_selector_row(df: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame:
     """Single selector with accompanying bare columns — a row-pick per
     group (window rank), NOT an aggregate: the output carries the
     selected point's timestamp and its tag/field values. Selector tie
@@ -1979,7 +1824,8 @@ def _execute_selector_row(
     point at nearest-rank max(1, ⌈n·p/100⌉) in value order."""
     from pyspark.sql import Window as W
 
-    fn, fld, alias = sel
+    bare = [f for f in ast.fields if f[0] is None]
+    fn, fld, alias = next(f for f in ast.fields if f[0] is not None)
     if fn in ("min", "max", "percentile") and _null_dispatched(
         fn, fld, df, ast.field_slots
     ):
@@ -1987,36 +1833,12 @@ def _execute_selector_row(
         # answers with no series even when companions are selected
         df = df.limit(0)
     df = _attach_companion_fields(df, ast, bare)
-    if fld != "*" and fld in df.columns:
-        src = fld
-    else:
-        # ftype-resolved slot: FIRST/LAST/PERCENTILE of a string field
-        # read the string slot, not f_float
-        src = ast.field_slots.get(fld, "f_float")
-        if fld != "*" and "field" in df.columns:
-            # named field → its own rows only (multi-field frames)
-            df = df.filter(F.col("field") == fld)
-    if ast.group_time_ns:
-        df = df.withColumn(
-            "_ws",
-            window_start_ns(_window_src_ns(ast), ast.group_time_ns,
-                            ast.group_time_offset_ns),
-        )
-        keys = [*by, "_ws"]
-    else:
-        keys = by
+    df, src = _value_source(df, ast, fld)
+    df, keys = _window_keys(df, ast, by)
     part = W.partitionBy(*keys) if keys else W.partitionBy(F.lit(1))
     seq = ["ingest_seq"] if "ingest_seq" in df.columns else []
     tie_asc = [F.asc("time_ns"), *[F.asc(c) for c in seq]]
-    if fn == "first":
-        ob = tie_asc
-    elif fn == "last":
-        ob = [F.desc("time_ns"), *[F.desc(c) for c in seq]]
-    elif fn == "max":
-        ob = [F.desc(src), *tie_asc]
-    elif fn == "min":
-        ob = [F.asc(src), *tie_asc]
-    else:  # percentile
+    if fn == "percentile":
         args = ast.fn_args.get(alias) or []
         if not args:
             raise InfluxQLError("PERCENTILE needs (field, p)")
@@ -2028,29 +1850,23 @@ def _execute_selector_row(
             F.col("_rn")
             == F.greatest(F.lit(1), F.ceil(F.lit(qv) * F.col("_cnt")).cast("int"))
         )
-        return _selector_row_project(picked, ast, src, alias, bare, by, tag_col)
-    picked = df.withColumn("_rn", F.row_number().over(part.orderBy(*ob))).filter(
-        F.col("_rn") == 1
-    )
-    return _selector_row_project(picked, ast, src, alias, bare, by, tag_col)
-
-
-def _selector_row_project(
-    picked: DataFrame, ast: InfluxQLQuery, src: str, alias: str, bare, by, tag_col
-) -> DataFrame:
-    cols = []
+    else:
+        ob = {
+            "first": tie_asc,
+            "last": [F.desc("time_ns"), *[F.desc(c) for c in seq]],
+            "max": [F.desc(src), *tie_asc],
+            "min": [F.asc(src), *tie_asc],
+        }[fn]
+        picked = df.withColumn("_rn", F.row_number().over(part.orderBy(*ob))).filter(
+            F.col("_rn") == 1
+        )
     if ast.group_time_ns:
         picked = picked.withColumn("time", _ws_time_expr(ast))
-    cols.append(F.col("time"))
-    cols.extend(F.col(t) for t in by)
-    cols.append(F.col(src).alias(alias))
+    cols = [F.col("time"), *[F.col(t) for t in by], F.col(src).alias(alias)]
     for _fn, f2, a2 in bare:
-        if f2 in by:
-            continue  # group key already projected
-        c2 = F.col(f2) if f2 in picked.columns else tag_col(f2)
-        cols.append(c2.alias(a2))
-    out = picked.select(*cols)
-    return _finish(out, ast, by)
+        if f2 not in by:  # a group key is already projected
+            cols.append(_tag_col(f2, picked.columns).alias(a2))
+    return picked.select(*cols)
 
 
 def _cmp_cond(c: Column, op: str, val):
@@ -2410,6 +2226,16 @@ def _ws_time_expr(ast: InfluxQLQuery) -> Column:
     return F.to_utc_timestamp(t, ast.tzname) if ast.tzname else t
 
 
+def _window_keys(df: DataFrame, ast: InfluxQLQuery, by: list) -> tuple[DataFrame, list]:
+    """A shape's group keys: the series tags, then the GROUP BY time()
+    window start ``_ws`` (added to ``df``) when the statement has one."""
+    if not ast.group_time_ns:
+        return df, list(by)
+    return df.withColumn("_ws", window_start_ns(
+        _window_src_ns(ast), ast.group_time_ns, ast.group_time_offset_ns,
+    )), [*by, "_ws"]
+
+
 def _execute_aggregate(df: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame:
     """The aggregate/selector/arithmetic SELECT core: one groupBy over
     (tags[, window start]), arithmetic combined post-agg, fill over the
@@ -2432,15 +2258,7 @@ def _execute_aggregate(df: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame
 
         df = df.limit(0)
         ast = _dc.replace(ast, fill=None)
-    if ast.group_time_ns:
-        df = df.withColumn(
-            "_ws",
-            window_start_ns(_window_src_ns(ast), ast.group_time_ns,
-                            ast.group_time_offset_ns),
-        )
-        keys = [*by, "_ws"]
-    else:
-        keys = by
+    df, keys = _window_keys(df, ast, by)
 
     aggs = [
         _agg_expr(fn, fld, alias, ast.fn_args.get(alias) or [], df,
@@ -2544,7 +2362,7 @@ def _execute_aggregate(df: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame
     return out
 
 
-def _execute_nested(df: DataFrame, ast: InfluxQLQuery, by: list, tag_col) -> DataFrame:
+def _execute_nested(df: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame:
     """Transform-over-aggregate nesting — the classic Grafana InfluxQL
     shape ``SELECT DERIVATIVE(MEAN(v), 1s) ... GROUP BY time(10s)``:
     aggregate per window first (full fill/spine semantics), then run
@@ -2557,16 +2375,10 @@ def _execute_nested(df: DataFrame, ast: InfluxQLQuery, by: list, tag_col) -> Dat
         raise InfluxQLError("transform(aggregate(..)) needs GROUP BY time()")
     if ast.fields:
         raise InfluxQLError("cannot mix nested transforms with plain selections")
-    for t in by:
-        if t not in df.columns:
-            df = df.withColumn(t, tag_col(t))
     inner_fields = [
         (inner, fld, f"__n{i}") for i, (_o, inner, fld, _a) in enumerate(ast.nested)
     ]
-    inner_ast = dataclasses.replace(
-        ast, fields=inner_fields, nested=[], arith=[],
-        limit=None, offset=0, slimit=None, order_desc=False,
-    )
+    inner_ast = dataclasses.replace(ast, fields=inner_fields, nested=[], arith=[])
     aggd = _execute_aggregate(df, inner_ast, by).withColumn(
         "time_ns", F.expr("unix_micros(time) * 1000")
     )
@@ -2598,12 +2410,11 @@ def _execute_nested(df: DataFrame, ast: InfluxQLQuery, by: list, tag_col) -> Dat
             value="__n0", by=by,
             fit=with_fit, include_fitted=with_fit,
         )
-        out = (
+        return (
             out.withColumn("time", F.timestamp_micros(F.expr("time_ns div 1000")))
             .withColumnRenamed("hw", alias)
             .select("time", *by, alias)
         )
-        return _finish(out, ast, by)
     aliases = []
     from pyspark.sql import types as _T
 
@@ -2653,26 +2464,30 @@ def _execute_nested(df: DataFrame, ast: InfluxQLQuery, by: list, tag_col) -> Dat
     for a in aliases:
         c = F.col(a).isNotNull()
         keep = c if keep is None else (keep | c)
-    return _finish(aggd.filter(keep).select("time", *by, *aliases), ast, by)
+    return aggd.filter(keep).select("time", *by, *aliases)
 
 
-def _finish(out: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame:
-    # ORDER BY time is a no-op when the result has no time column
-    # (bare aggregate per tag) — InfluxDB accepts the clause silently
+def _finish(out: DataFrame, ast: InfluxQLQuery, by: list, raw: bool) -> DataFrame:
+    """ORDER BY, SLIMIT/SOFFSET and LIMIT/OFFSET of every SELECT shape.
+
+    SLIMIT keeps whole series (ranked by key); LIMIT keeps the first
+    rows of each series in time order (in the statement's direction),
+    or in value order when the answer has no time column. A ``raw``
+    answer (one row per point) comes out sorted by series, then time,
+    even without ORDER BY; the other shapes sort only for ORDER BY
+    time DESC, before the limits."""
     has_time = "time" in out.columns
-    if ast.order_desc and has_time:
+    ties = [c for c in ("ingest_seq",) if c in out.columns]
+    order = (["time", *ties] if has_time
+             else [c for c in out.columns if c not in by])
+    if ast.order_desc and has_time and not raw:
         out = out.orderBy(F.desc("time"))
     if ast.slimit is not None and by:
         out = sl_ops.slimit(out, ast.slimit, series=by, soffset=ast.soffset)
     if ast.limit is not None:
-        order_cols = (["time"] if has_time else []) + (
-            ["ingest_seq"] if "ingest_seq" in out.columns else []
-        )
-        if order_cols:
-            out = sl_ops.limit(out, ast.limit, ast.offset, by=by,
-                               order=order_cols, desc=ast.order_desc)
-        else:
-            if ast.offset:
-                out = out.offset(ast.offset)
-            out = out.limit(ast.limit)
+        out = sl_ops.limit(out, ast.limit, ast.offset, by=by, order=order,
+                           desc=ast.order_desc)
+    if raw:
+        out = out.orderBy(*by, *[F.desc(c) if ast.order_desc else F.col(c)
+                                 for c in order])
     return out

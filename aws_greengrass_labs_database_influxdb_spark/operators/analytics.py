@@ -84,9 +84,8 @@ def difference(
     ``keepFirst: true`` keeps it with a null difference. With
     ``nonNegative: true`` a decreasing step yields null, unless
     ``initialZero: true`` makes it diff against 0 (i.e. the current
-    value) — the stdlib's counter-reset convention. (r15: the old
-    default behaved as ``keepFirst: true`` and the two args did not
-    exist — a silent row-count divergence on every counter dashboard.)
+    value) — the stdlib's counter-reset convention. The first row's
+    default (dropped) matters: counter dashboards count the rows.
     """
     w = _series_window(by, order or time_ns)
     d = F.col(value) - F.lag(value).over(w)
@@ -225,10 +224,9 @@ def exponential_moving_average(
     fold (seed = sequential sum / n) so the DuckDB oracle can reproduce
     it bit-for-bit with ``list_reduce`` — see suite/timeseries.EMA_SQL.
 
-    Emission contract (r15, stock): the n−1 warm-up rows (no EMA yet)
-    are DROPPED — ``exponentialMovingAverage(n: 3)`` on 5 points emits
-    3 rows, the first being the SMA seed. The old form kept them as
-    null rows, an every-query row-count divergence vs stock.
+    Emission contract (stock): the n−1 warm-up rows (no EMA yet) are
+    DROPPED — ``exponentialMovingAverage(n: 3)`` on 5 points emits 3
+    rows, the first being the SMA seed, never null warm-up rows.
 
     The fold runs in the native kernel (_cfold — same expression tree,
     FMA contraction disabled, self-checked at load) when available, so
@@ -275,7 +273,7 @@ def double_ema(df, n, value="f_float", by=("measurement", "field"),
                time_ns="time_ns", alias="dema"):
     """Flux ``doubleEMA(n:)`` = 2·EMA_N − EMA of EMA_N.
 
-    Each EMA stage drops its own warm-up rows (r15), so the chained
+    Each EMA stage drops its own warm-up rows, so the chained
     emission count is m − 2(n−1) — the stock doubleEMA contract."""
     e1 = exponential_moving_average(df, n, value, by, time_ns, "_e1")
     e2 = exponential_moving_average(e1, n, "_e1", by, time_ns, "_e2")
@@ -356,8 +354,8 @@ def relative_strength_index(df, n, value="f_float", by=("measurement", "field"),
     avg_up/avg_down fold as y = y + (1/n)·(x − y) seeded with the first
     delta's up/down; output masked until n deltas observed. Explicit
     sequential arithmetic for DuckDB-oracle bit parity. The n warm-up
-    rows are DROPPED (stock emission: m − n rows — r15; the old form
-    kept them with a null indicator beside the live raw value).
+    rows are DROPPED (stock emission: m − n rows, never a null
+    indicator beside the live raw value).
     """
     out = _fold_values(df, by, time_ns, value, alias, lambda v: rsi_values(v, n))
     return out.filter(F.col(alias).isNotNull())
@@ -420,7 +418,7 @@ def kaufmans_ama(df, n, value="f_float", by=("measurement", "field"),
     DuckDB oracle computes (running SUM window minus its lag), keeping
     the two engines bit-identical.
 
-    Emission (r15, stock — the Flux stdlib's ``kaufmansAMA(n: 10)``
+    Emission (stock — the Flux stdlib's ``kaufmansAMA(n: 10)``
     doc example emits 6 rows from 16 points): m − n rows; the seed
     value (row n−1, = v[n−1]) feeds the recursion but is NOT emitted,
     and the warm-up rows are dropped.
@@ -435,7 +433,7 @@ def kama_values(v: np.ndarray, n: int, native: bool = True) -> np.ndarray:
     available; Python-float fold otherwise — bit-identical).
 
     The seed (row n−1 = v[n−1]) starts the recursion but its row stays
-    NaN — stock emits the first KAMA at row n (r15)."""
+    NaN — stock emits the first KAMA at row n."""
     m = len(v)
     out = np.full(m, np.nan)
     if m <= n:

@@ -100,11 +100,11 @@ def push_time_filter(
     # (time_ns div DAY_NS, sources/bucket.py write_points): the
     # equivalent superset predicate on it prunes whole day DIRECTORIES
     # before any footer is opened — without it a 2-day CQ recompute
-    # window still listed every file of the bucket's history (r9).
+    # window would list every file of the bucket's history.
     # `div` truncation is monotone non-decreasing in time_ns, so the
     # day bounds are implied by the exact time_ns bounds on both
     # signs of the epoch.
-    # provenance-gated (r10 ADVICE): only the bucket store's own
+    # provenance-gated: only the bucket store's own
     # partition column qualifies — read_points marks it with column
     # metadata; a user-computed column named `day` (e.g. added by map()
     # before a range push) must not be silently range-filtered.

@@ -25,7 +25,7 @@ def _keep_row(df: DataFrame, by: Sequence[str], order, alias: str,
     row (every order expr NULL — e.g. an all-spine createEmpty group)
     is DROPPED, matching stock: selectors ignore null values and an
     empty selection yields an empty table, never an invented all-NULL
-    row (r14 fuzz)."""
+    row."""
     others = [c for c in df.columns]
     row = F.struct(*[F.col(c) for c in others])
     agg = pick(row, order).alias("_row")
@@ -65,8 +65,8 @@ def _value_presence(df: DataFrame):
 def first(df: DataFrame, by: Sequence[str], time_ns: str = "time_ns") -> DataFrame:
     """Flux ``first()``: the first NON-NULL-valued row per series
     (null-valued rows — createEmpty spines, fill-less windows — are
-    skipped, stock semantics; r14 fuzz: last() over a spined window
-    returned the empty tail row)."""
+    skipped, stock semantics, so last() over a spined window never
+    returns the empty tail row)."""
     order = F.struct(F.col(time_ns), *_tiebreak(df))
     guard = _value_presence(df)
     if guard is not None:
@@ -86,8 +86,8 @@ def last(df: DataFrame, by: Sequence[str], time_ns: str = "time_ns") -> DataFram
 
 
 def _value_tuple(value) -> list[str]:
-    """Selector value spec: a single column, or — for MIXED frames
-    (r13) — the slot tuple (f_float, f_str, f_bool). Inside one group
+    """Selector value spec: a single column, or — for MIXED frames —
+    the slot tuple (f_float, f_str, f_bool). Inside one group
     exactly one slot is non-null (a series has a single type), so
     ordering by the tuple orders each group by its own typed values;
     the dead slots are constant NULL and never influence the order."""
@@ -96,8 +96,8 @@ def _value_tuple(value) -> list[str]:
 
 def _present(vals: Sequence[str]):
     """Non-null guard over the value spec — rows with no value in ANY
-    slot never win the selection (the single-column guard previously
-    voided entire non-float groups into one all-NULL row, r12)."""
+    slot never win the selection, and a group whose live slot is not
+    f_float still selects its own row."""
     if len(vals) == 1:
         return F.col(vals[0]).isNotNull()
     return F.coalesce(*[F.col(v).cast("string") for v in vals]).isNotNull()
@@ -107,10 +107,10 @@ def min_selector(
     df: DataFrame, by: Sequence[str], value="f_float", time_ns: str = "time_ns"
 ) -> DataFrame:
     """InfluxQL MIN: row with smallest value; ties → earliest time.
-    Works on any orderable type (r11: strings compare lexicographic,
-    bools false<true — Flux selector semantics); null-valued rows are
+    Works on any orderable type (strings compare lexicographic, bools
+    false<true — Flux selector semantics); null-valued rows are
     skipped via the null order guard. ``value`` may be a slot tuple
-    (mixed frames, r13 — see :func:`_value_tuple`)."""
+    (mixed frames — see :func:`_value_tuple`)."""
     vals = _value_tuple(value)
     order = F.when(
         _present(vals),
@@ -125,8 +125,8 @@ def max_selector(
 ) -> DataFrame:
     """InfluxQL MAX: row with largest value; ties → earliest time.
     max_by over (value, -time, -seq) instead of min_by over the negated
-    value (r11) so non-numeric orderable types select too. ``value``
-    may be a slot tuple (mixed frames, r13)."""
+    value, so non-numeric orderable types select too. ``value`` may be
+    a slot tuple (mixed frames)."""
     tb = [-c for c in _tiebreak(df)]
     vals = _value_tuple(value)
     order = F.when(
@@ -145,7 +145,7 @@ def top(
     time_ns: str = "time_ns",
 ) -> DataFrame:
     """Flux ``top(n:)``: n rows with largest value per series.
-    ``value`` may be a slot tuple (mixed frames, r13): each group ranks
+    ``value`` may be a slot tuple (mixed frames): each group ranks
     by its own live slot — the dead slots are constant NULL inside a
     group, so they never reorder rows."""
     tns = [F.asc(time_ns)] if time_ns in df.columns else []
@@ -167,7 +167,7 @@ def bottom(
     time_ns: str = "time_ns",
 ) -> DataFrame:
     """Flux ``bottom(n:)``: n rows with smallest value per series.
-    ``value`` may be a slot tuple (mixed frames, r13) — see :func:`top`."""
+    ``value`` may be a slot tuple (mixed frames) — see :func:`top`."""
     tns = [F.asc(time_ns)] if time_ns in df.columns else []
     vals = _value_tuple(value)
     w = W.partitionBy(*by).orderBy(
@@ -243,7 +243,7 @@ def _ranked_series(
     per_series = df.groupBy(*series).agg(agg.alias("_rank_v"))
     order = F.desc("_rank_v") if desc else F.asc("_rank_v")
     # orderBy+limit plans TakeOrderedAndProject — no single-partition
-    # window even at high series cardinality (r10, verdict r9 #3)
+    # window even at high series cardinality
     keep = per_series.orderBy(order, *series).limit(n).select(*series)
     return df.join(F.broadcast(keep), on=list(series), how="left_semi")
 

@@ -41,8 +41,8 @@ def limit(
     if not by:
         # global head: orderBy+limit plans TakeOrderedAndProject — a
         # per-partition top-(offset+n) merge on the driver, no
-        # single-partition window shuffle (r9 verdict: the ungrouped
-        # row_number funneled the WHOLE frame through one task).
+        # single-partition window shuffle (an ungrouped row_number
+        # would funnel the WHOLE frame through one task).
         # Same determinism as row_number: ties resolve by the caller's
         # tie-break columns in ``order``.
         out = df.orderBy(*ob)
@@ -83,9 +83,9 @@ def slimit(
     semi-join back, so the big side never fully shuffles.
     """
     # orderBy+offset+limit → TakeOrderedAndProject over the distinct
-    # series keys (r10: the row_number variant ranked every key in one
-    # window partition — fine at dashboard cardinality, wrong at 100 TB
-    # tag cardinality)
+    # series keys (a row_number would rank every key in one window
+    # partition — fine at dashboard cardinality, wrong at 100 TB tag
+    # cardinality)
     keys = df.select(*series).distinct().orderBy(*[F.asc(c) for c in series])
     if soffset:
         keys = keys.offset(soffset)

@@ -108,9 +108,9 @@ def window_start_ns(time_ns: Column, every_ns: int, offset_ns: int = 0) -> Colum
     epoch-ns magnitude (~2^60; double ulp there is 256 ns).
     """
     if every_ns <= 0:
-        # plan-time rejection: a zero/negative width reaches the
-        # modulo and crashes executors with REMAINDER_BY_ZERO (r13).
-        # Wording matches stock Flux's interval errors (r14 ADVICE #4)
+        # plan-time rejection: a zero/negative width would reach the
+        # modulo and crash executors with REMAINDER_BY_ZERO. Wording
+        # matches stock Flux's interval errors
         raise OperatorValidationError(
             "duration used as an interval cannot be zero" if every_ns == 0
             else "duration used as an interval cannot be negative"
@@ -222,7 +222,7 @@ def month_window_bounds(
 
 def _check_calendar_every(months: int, fixed_ns: int, period, every) -> None:
     if fixed_ns:
-        # stock Flux interval-package wording (r14 ADVICE #4)
+        # stock Flux interval-package wording
         raise OperatorValidationError(
             "duration used as an interval cannot mix month and "
             "nanosecond units"
@@ -241,7 +241,7 @@ def _calendar_offset_parts(offset) -> tuple[int, int]:
     accepts mixed offsets (``every: 1mo, offset: -4d``): the month
     part shifts the month lattice, the fixed part shifts every window
     boundary by that many ns — windows run e.g. from the 2nd 00:00 of
-    each month (r13; previously any fixed remainder raised)."""
+    each month."""
     return duration_parts(offset) if offset else (0, 0)
 
 
@@ -500,7 +500,7 @@ def aggregate_window(
     ``time``/``time_ns`` is the window ``_stop`` by default (Flux
     default ``timeSrc: "_stop"``). ``tz`` = Flux ``option location``.
 
-    ``slots`` (r13, MIXED frames): aggregate each typed value slot
+    ``slots`` (MIXED frames): aggregate each typed value slot
     independently and carry the ``ftype`` discriminator through — the
     slot-shaped twin of the single-column path. A series has one type,
     so inside each (series, window) group exactly one slot is non-null:
@@ -511,7 +511,7 @@ def aggregate_window(
     deterministic, unlike row-order ``F.first`` over a shuffle.
     """
     out_alias = alias or fn
-    # per-branch range bounds stamped by Pipeline.union (r15): each
+    # per-branch range bounds stamped by Pipeline.union: each
     # union branch aggregates — and spines — as its own table, to its
     # OWN stop, like stock Flux (the bounds are literal columns, so
     # the extra key costs nothing: constant-folded, no added shuffle
@@ -608,7 +608,7 @@ def aggregate_window_custom(
     one row per key tuple (any groupBy- or window-rank-based operator
     qualifies — same shuffle shape as the named-fn path)."""
     rb = [c for c in ("_rb_start_ns", "_rb_stop_ns") if c in df.columns]
-    by = [*by, *rb]  # per-branch union bounds (r15, see aggregate_window)
+    by = [*by, *rb]  # per-branch union bounds (see aggregate_window)
     bucket_col, start_e, stop_e = _window_bucket(every, offset, time_ns, tz)
     win = df.withColumn("_bucket", bucket_col)
     grouped = (
@@ -682,8 +682,8 @@ def interpolate_linear(
         )
     else:
         # bounds omitted: derive the grid lazily from each series' own
-        # [min, max] INSIDE the plan — no driver-side pre-scan job
-        # (VERDICT r3 item 6). Result-identical to a global-bounds
+        # [min, max] INSIDE the plan — no driver-side pre-scan job.
+        # Result-identical to a global-bounds
         # spine: both grids live on the same {k·every} lattice and
         # grid rows outside a series' observed range produce null
         # lerps that the final filter drops anyway.
@@ -713,7 +713,7 @@ def interpolate_linear(
     )
     v, t = F.col(value), F.col(time_ns)
     obs_t = F.when(v.isNotNull(), t)
-    # NOTE (r16, measured and left as-is): referencing the raw window
+    # NOTE (measured, kept): referencing the raw window
     # expressions from the lerp CASE makes Catalyst extract TEN
     # running-last() accumulators (7 asc + 3 desc) where four would
     # suffice — but the four-bracket-column rewrite (materialize

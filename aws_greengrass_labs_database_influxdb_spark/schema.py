@@ -87,6 +87,23 @@ def unify_numeric_value(df: DataFrame) -> DataFrame:
     return df.withColumn("f_float", F.coalesce(*parts))
 
 
+# Columns of the canonical points schema and of a bucket scan
+# (``series_key``, ``day``) that are not tags. Every other column of a
+# points frame whose name does not start with "_" (engine-internal, such
+# as the raw scan-time companion) is a promoted tag column.
+_NON_TAG_COLS = frozenset(
+    {"measurement", "time", "time_ns", "tags", "field", "ftype", "ingest_seq",
+     "f_float", "f_int", "f_uint", "f_str", "f_bool", "props",
+     "series_key", "day"}
+)
+
+
+def promoted_tags(columns) -> list[str]:
+    """The promoted tag columns among ``columns``, in frame order."""
+    return [c for c in columns
+            if c not in _NON_TAG_COLS and not c.startswith("_")]
+
+
 def tag_set_key(tags: Column) -> Column:
     """A tags map serialized as its key-sorted ``k=v`` pairs joined by
     commas — the one string form of a tag set. Spark cannot group on a

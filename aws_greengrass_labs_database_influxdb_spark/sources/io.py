@@ -209,10 +209,15 @@ def canonicalize_result(df: DataFrame) -> DataFrame:
     task shape arrives with measurement/field/f_float/time and no tags
     or type slots — missing canonical columns fill with nulls/defaults;
     ``ingest_seq`` stays null for the store's allocator to stamp.
+
+    A string column outside the points schema (``set(key: "rack",
+    value: "r9")``) is a tag, as stock ``to()`` writes it: it joins the
+    tags map, replacing a map entry of the same key; a NULL cell adds
+    no tag.
     """
     from pyspark.sql import types as T
 
-    from ..schema import POINTS_SCHEMA
+    from ..schema import POINTS_SCHEMA, promoted_tags
 
     cols = set(df.columns)
     if "measurement" not in cols:
@@ -224,6 +229,16 @@ def canonicalize_result(df: DataFrame) -> DataFrame:
     if "time_ns" not in cols and "time" not in cols:
         raise ValueError("write-back needs a time column")
     out = df
+    extra = [c for c in promoted_tags(df.columns)
+             if isinstance(df.schema[c].dataType, T.StringType)]
+    if extra:
+        empty = F.create_map().cast("map<string,string>")
+        kept = F.map_filter(F.coalesce(F.col("tags"), empty),
+                            lambda k, _v: ~k.isin(extra)) if "tags" in cols else empty
+        added = F.map_filter(
+            F.create_map(*[x for c in extra for x in (F.lit(c), F.col(c))]),
+            lambda _k, v: v.isNotNull())
+        out = out.withColumn("tags", F.map_concat(kept, added))
     if "time_ns" not in cols:
         out = out.withColumn("time_ns", F.expr("unix_micros(time) * 1000"))
     if "time" not in cols:

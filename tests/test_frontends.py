@@ -2249,23 +2249,66 @@ def test_flux_elapsed_unit_and_first_row_dropped(spark):
     assert [r["time_ns"] for r in out] == [t0 + i * 3600 * 10**9 for i in (1, 2, 3)]
 
 
-def test_influxql_slimit_applies_to_raw_selects(pts):
-    """SLIMIT/SOFFSET rank series on RAW selects too, not only
-    aggregates (r8: the raw path returned every series)."""
-    base = ("SELECT value FROM events WHERE time >= '2024-01-01'"
+@pytest.mark.parametrize("selection", [
+    "value", "*", "derivative(value, 1h)", "cumulative_sum(value)",
+    "moving_average(value, 3)",
+])
+def test_influxql_slimit_applies_to_raw_selects(pts, selection):
+    """SLIMIT/SOFFSET rank series on raw selects and transforms too,
+    not only aggregates: every shape is limited by the one _finish."""
+    base = (f"SELECT {selection} FROM events WHERE time >= '2024-01-01'"
             " AND time < '2024-01-05' GROUP BY event_type")
-    o1 = execute_influxql(pts, base + " SLIMIT 2")
-    assert o1.select("event_type").distinct().count() == 2
-    o2 = execute_influxql(pts, base + " SLIMIT 2 SOFFSET 1")
-    s1 = {r[0] for r in o1.select("event_type").distinct().collect()}
-    s2 = {r[0] for r in o2.select("event_type").distinct().collect()}
-    assert s1 != s2 and len(s2) == 2
-    star = execute_influxql(
-        pts,
-        "SELECT * FROM events WHERE time >= '2024-01-01'"
-        " AND time < '2024-01-05' GROUP BY event_type SLIMIT 2",
-    )
-    assert star.select("event_type").distinct().count() == 2
+
+    def series(q):
+        out = execute_influxql(pts, q)
+        return {r[0] for r in out.select("event_type").distinct().collect()}
+
+    s1 = series(base + " SLIMIT 2")
+    s2 = series(base + " SLIMIT 2 SOFFSET 1")
+    assert len(s1) == 2 and len(s2) == 2 and s1 != s2
+
+
+def test_influxql_limit_without_time_is_per_series(pts):
+    """LIMIT/OFFSET count points per series also when the answer has no
+    time column: an aggregate per tag has one point in each series."""
+    base = ("SELECT mean(value) AS m FROM events WHERE time >= '2024-01-01'"
+            " AND time < '2024-01-05' GROUP BY event_type")
+    assert execute_influxql(pts, base + " LIMIT 1").count() == 5
+    assert execute_influxql(pts, base + " LIMIT 1 OFFSET 1").count() == 0
+
+
+def test_influxql_point_identity_includes_promoted_tags(spark):
+    """A point is its measurement, timestamp and whole tag set, promoted
+    tag columns included (a NULL one too): a selector's companion field
+    and a per-point WHERE never read another series' point at the same
+    timestamp."""
+    from pyspark.sql import types as T
+
+    rows = []
+    for host, rack, v, st in (("a", None, 1.0, "ok"), (None, "a", 2.0, "bad"),
+                              ("b", "r1", 3.0, "late")):
+        base = dict(measurement="m", time_ns=10**9, host=host, rack=rack)
+        rows.append({**base, "field": "v", "ftype": "float", "f_float": v,
+                     "f_str": None})
+        rows.append({**base, "field": "status", "ftype": "string",
+                     "f_float": None, "f_str": st})
+    schema = T.StructType([
+        T.StructField("measurement", T.StringType()),
+        T.StructField("time_ns", T.LongType()),
+        T.StructField("host", T.StringType()),
+        T.StructField("rack", T.StringType()),
+        T.StructField("field", T.StringType()),
+        T.StructField("ftype", T.StringType()),
+        T.StructField("f_float", T.DoubleType()),
+        T.StructField("f_str", T.StringType()),
+    ])
+    frame = spark.createDataFrame(rows, schema).withColumn(
+        "time", F.timestamp_micros(F.expr("time_ns div 1000")))
+    picked = execute_influxql(frame, "SELECT last(v), status FROM m GROUP BY host")
+    assert sorted((r["host"] or "", r["status"]) for r in picked.collect()) == [
+        ("", "bad"), ("a", "ok"), ("b", "late")]
+    kept = execute_influxql(frame, "SELECT v FROM m WHERE status = 'ok'")
+    assert [r["v"] for r in kept.collect()] == [1.0]
 
 
 def test_flux_map_record_replacement_drops_unmentioned(pts):

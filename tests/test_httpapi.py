@@ -457,6 +457,35 @@ def test_flux_to_bucket_write_stage(served):
     assert vals[0] == sum(range(60)) / 60  # first hour's mean of 0..59
 
 
+def test_flux_to_writes_string_column_as_tag(served):
+    """A string column added before to() (``set(key: "rack", value:
+    "r9")``) is written as a tag, as stock to() writes it: the points
+    read back with it in their tag set, a tag filter finds them, and
+    the bucket's tag-key catalog lists it."""
+    base, engine, tokens = served
+    t0 = T0 + 86_400_000_000_000 * 7
+    _req(base, "/api/v2/write?bucket=greengrass-telemetry", "POST",
+         token=tokens["RW"], ctype="text/plain",
+         body="\n".join(f"rackm,host=h1 v={float(i)} {t0 + i * 10**9}"
+                        for i in range(3)))
+    rng = "range(start: 2024-01-08T00:00:00Z, stop: 2024-01-09T00:00:00Z)"
+    flux = (f'from(bucket: "greengrass-telemetry") |> {rng}'
+            ' |> filter(fn: (r) => r._measurement == "rackm")'
+            ' |> set(key: "rack", value: "r9") |> to(bucket: "rack-out")')
+    status, _ = _req(base, "/api/v2/query", "POST", token=tokens["Admin"],
+                     body={"query": flux, "type": "flux"})
+    assert status == 200
+    assert "rack" in engine.store.tag_keys("greengrass", "rack-out")
+    rows = engine.store.read_points("greengrass", "rack-out").collect()
+    assert len(rows) == 3
+    assert all(r.tags == {"host": "h1", "rack": "r9"} for r in rows)
+    _, body = _req(base, "/api/v2/query", "POST", token=tokens["Admin"],
+                   body={"query": f'from(bucket: "rack-out") |> {rng}'
+                         ' |> filter(fn: (r) => r.rack == "r9")',
+                         "type": "flux"})
+    assert body.count("rackm") == 3
+
+
 def test_v1_select_into(served):
     """SELECT ... INTO target — the continuous-query downsample: run
     the aggregation, write results back, query them from the target
@@ -1862,6 +1891,35 @@ def test_v1_raw_select_time_ordered_without_limit(served):
     assert [v[1] for v in vals] == [5.0, 4.0, 3.0, 2.0, 1.0, 0.0]
 
 
+def test_v1_series_time_ordered_in_statement_direction(served):
+    """Every v1 answer goes through one series framer that orders rows
+    by time in the statement's direction: an untagged GROUP BY time()
+    answer comes back time-ascending, and each series of GROUP BY <tag>
+    ORDER BY time DESC descending."""
+    base, _, tokens = served
+    t0 = T0 + 86_400_000_000_000 * 6
+    lines = [f"tord,host=h{i % 2} v={float(i)} {t0 + i * 60_000_000_000}"
+             for i in range(360)]
+    _req(base, "/api/v2/write?bucket=greengrass-telemetry", "POST",
+         token=tokens["RW"], body="\n".join(lines), ctype="text/plain")
+    import urllib.parse as up
+
+    def series(q):
+        _, body = _req(base, f"/query?db=greengrass-telemetry&q={up.quote(q)}"
+                       "&epoch=ns", token=tokens["RO"])
+        return json.loads(body)["results"][0]["series"]
+
+    span = f"time >= {t0} AND time < {t0 + 6 * 3_600_000_000_000}"
+    (windows,) = series(f"SELECT mean(v) FROM tord WHERE {span} GROUP BY time(10m)")
+    times = [v[0] for v in windows["values"]]
+    assert len(times) == 36 and times == sorted(times)
+    desc = series(f"SELECT v FROM tord WHERE {span} GROUP BY host ORDER BY time DESC")
+    assert [s["tags"] for s in desc] == [{"host": "h0"}, {"host": "h1"}]
+    for s in desc:
+        times = [v[0] for v in s["values"]]
+        assert len(times) == 180 and times == sorted(times, reverse=True)
+
+
 def test_v1_chunked_true_ndjson_partial_flags(served):
     """r9 probe 2: ``chunked=true&chunk_size=N`` must emit newline-
     delimited COMPLETE {"results":[...]} docs of ≤N rows, with
@@ -1892,6 +1950,32 @@ def test_v1_chunked_true_ndjson_partial_flags(served):
         assert res.get("partial", False) is (not last)
         assert ser.get("partial", False) is (not last)
     assert [r[1] for r in rows] == [0.0, 1.0, 2.0, 3.0, 4.0]
+
+
+def test_v1_chunked_splits_each_tagged_series(served):
+    """``chunked=true`` over a GROUP BY <tag> answer: every series of
+    the lazily split row stream arrives whole, in documents of at most
+    chunk_size rows, the last document of the statement without the
+    result-level partial flag."""
+    base, _, tokens = served
+    t0 = T0 + 86_400_000_000_000 * 8
+    lines = [f"chk2,host=h{i % 2} v={float(i)} {t0 + i * 60_000_000_000}"
+             for i in range(6)]
+    _req(base, "/api/v2/write?bucket=greengrass-telemetry", "POST",
+         token=tokens["RW"], body="\n".join(lines), ctype="text/plain")
+    import urllib.parse as up
+    q = up.quote("SELECT v FROM chk2 GROUP BY host")
+    _, body = _req(base, f"/query?db=greengrass-telemetry&q={q}"
+                   "&chunked=true&chunk_size=2&epoch=ns", token=tokens["RO"])
+    docs = [json.loads(ln)["results"][0] for ln in body.splitlines() if ln.strip()]
+    assert len(docs) == 4  # 2 + 1 rows per host
+    values: dict = {}
+    for doc in docs:
+        (s,) = doc["series"]
+        assert len(s["values"]) <= 2
+        values.setdefault(s["tags"]["host"], []).extend(v[1] for v in s["values"])
+    assert values == {"h0": [0.0, 2.0, 4.0], "h1": [1.0, 3.0, 5.0]}
+    assert [d.get("partial", False) for d in docs] == [True, True, True, False]
 
 
 def test_v2_dialect_delimiter_comment_prefix_datetime_format(served):

@@ -119,6 +119,29 @@ def test_influxql_group_by_time_and_tag_runs_one_pass(spark, panel_served):
     assert n == 3, f"{n} Spark jobs per request"
 
 
+UNTAGGED = {
+    # 36 ten-minute windows over the 6 hours, one series
+    "group_by_time": ("SELECT mean(f1) FROM tele WHERE time >= '2024-01-01T00:00:00Z' "
+                      "AND time < '2024-01-01T06:00:00Z' GROUP BY time(10m)", 36, 3),
+    # device d3's 90 points of f0
+    "raw_device": ("SELECT f0 FROM tele WHERE device = 'd3'", 90, 4),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(UNTAGGED))
+def test_influxql_untagged_answer_runs_one_framer(spark, panel_served, shape):
+    # an answer without a tag goes through the same series framer as a
+    # tagged one: one time-ordered series, no extra Spark pass
+    base, _, tokens = panel_served
+    q, rows, pinned = UNTAGGED[shape]
+    _influxql(base, tokens, q)
+    n, doc = _jobs(spark, lambda: _influxql(base, tokens, q))
+    (series,) = doc["results"][0]["series"]
+    times = [v[0] for v in series["values"]]
+    assert len(times) == rows and times == sorted(times)
+    assert n == pinned, f"{shape}: {n} Spark jobs per request"
+
+
 def test_influxql_group_by_star_finds_tag_keys_once(spark, panel_served):
     # GROUP BY * needs the queried rows' tag keys: the executor finds
     # them with one distinct, and the façade frames the series from the
