@@ -50,21 +50,26 @@ import ssl
 import subprocess
 import threading
 import time
+from collections.abc import Callable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
+from typing import NamedTuple
 from urllib.parse import parse_qs, urlsplit
 
 from pyspark.sql import functions as F
 
-from ..frontends.annotated_csv import iter_annotated_csv, ordered_rows
+from ..frontends.annotated_csv import given_rows, iter_annotated_csv, ordered_rows
 from ..frontends.flux import execute_flux_multi
 from ..frontends.influxql import (
-    execute_influxql, parse_delete, parse_statement, select_into, split_into,
+    _DELETE_RX, _INTO_RX, execute_influxql, is_raw, measurement_delete,
+    parse_statement, select_into,
 )
 from ..schema import SLOT_OF_FTYPE
-from ..sources.bucket import BucketMeta
 from ..sources.lineprotocol import parse_lines
 from ..sources.seq import next_seq_base
+from ..streaming.cq import (
+    _CREATE_RX as _CQ_CREATE_RX, _DROP_RX as _CQ_DROP_RX, CQRegistry,
+)
 from .engine import Engine
 
 
@@ -484,6 +489,351 @@ def _parse_delete_predicate(pred: str):
     return col
 
 
+# -------------------------------------------------------- v1 statements
+
+
+class _V1Call(NamedTuple):
+    """What a v1 statement's answer reads besides its match."""
+
+    api: HttpApi
+    org: str
+    db: str  # the database the statement acts on
+    epoch: str | None
+
+    @property
+    def store(self):
+        return self.api.engine.store
+
+    @property
+    def users(self):
+        return self.api.engine.users
+
+
+class _V1Statement(NamedTuple):
+    """One v1 statement kind: the whole-statement pattern that
+    recognizes it (a ``db`` group names the database it acts on;
+    without one it acts on the request's ``?db=``), the grant it needs
+    on that database (``read`` / ``write``) or org-wide
+    (``write:orgs``, ``write:authorizations``), and its answer, a
+    ``results[i]`` dict or None for the empty result of a mutation."""
+
+    pattern: re.Pattern
+    grant: str
+    answer: Callable[[_V1Call, re.Match], dict | None]
+
+
+def _rx(body: str) -> re.Pattern:
+    return re.compile(rf"(?is)^\s*{body}\s*$")
+
+
+def _ack(action) -> Callable[[_V1Call, re.Match], None]:
+    """The answer of a mutation: run it, answer the empty result."""
+    def answer(v: _V1Call, m) -> None:
+        action(v, m)
+    return answer
+
+
+def _show_databases(v: _V1Call, m) -> dict:
+    names = [[b.name] for b in v.store.list_buckets(v.org)]
+    return {"series": [{"name": "databases", "columns": ["name"], "values": names}]}
+
+
+def _drop_measurement(v: _V1Call, m) -> None:
+    v.store.delete_predicate(
+        v.org, v.db, *measurement_delete(m["name"], None, "DROP MEASUREMENT"))
+    # the dropped measurement's field-type pins go with it (stock: a
+    # re-created measurement may choose new types)
+    v.store.forget_measurement_types(v.org, v.db, m["name"])
+
+
+def _show_retention_policies(v: _V1Call, m) -> dict:
+    ret = v.store.get_bucket(v.org, v.db).retention_ns
+    return {"series": [
+        {"name": v.db,
+         "columns": ["name", "duration", "shardGroupDuration", "replicaN",
+                     "default"],
+         "values": [["autogen", f"{ret // 10**9}s" if ret else "0s", "0s", 1,
+                     True]]}]}
+
+
+def _show_shards(v: _V1Call, m) -> dict:
+    # one shard ≡ one (bucket, day) parquet partition — the store's
+    # physical unit of retention/delete granularity. Filesystem-metadata
+    # walk only: no Spark job.
+    from ..sources.bucket import DAY_NS
+
+    cols = ["id", "database", "retention_policy", "shard_group",
+            "start_time", "end_time", "expiry_time", "owners"]
+    series, sid = [], 1
+    for b in v.store.list_buckets(v.org):
+        data = v.store._data_dir(v.org, b.name)
+        days = sorted({
+            int(p.name.split("=", 1)[1])
+            for p in data.glob("measurement=*/day=*") if p.is_dir()
+        }) if data.exists() else []
+        vals = []
+        for d in days:
+            start = _ns_to_rfc3339(d * DAY_NS)
+            end = _ns_to_rfc3339((d + 1) * DAY_NS)
+            exp = _ns_to_rfc3339(
+                (d + 1) * DAY_NS + (b.retention_ns or 0)
+            ) if b.retention_ns else end
+            vals.append([sid, b.name, "autogen", d, start, end, exp, ""])
+            sid += 1
+        series.append({"name": b.name, "columns": cols, "values": vals})
+    return {"series": series}
+
+
+def _show_stats(v: _V1Call, m) -> dict:
+    # exact per-database counters (the v1 'database' stats block):
+    # measurements from partition dirs (metadata), series from a pruned
+    # distinct scan of the dictionary-encoded series_key column
+    series = []
+    for b in v.store.list_buckets(v.org):
+        data = v.store._data_dir(v.org, b.name)
+        n_meas = len(list(data.glob("measurement=*"))) if data.exists() else 0
+        n_series = 0
+        if n_meas:
+            n_series = (
+                v.store.read_points(v.org, b.name, lww=False)
+                .select("series_key").distinct().count()
+            )
+        series.append({
+            "name": "database", "tags": {"database": b.name},
+            "columns": ["numMeasurements", "numSeries"],
+            "values": [[n_meas, n_series]],
+        })
+    return {"series": series}
+
+
+def _show_diagnostics(v: _V1Call, m) -> dict:
+    import platform
+
+    from .. import __version__
+
+    now = dt.datetime.now(dt.timezone.utc)
+    return {"series": [
+        {"name": "build",
+         "columns": ["Branch", "Commit", "Version"],
+         "values": [["main", "", __version__]]},
+        {"name": "system",
+         "columns": ["PID", "currentTime", "hostname"],
+         "values": [[os.getpid(), now.isoformat(), platform.node()]]},
+    ]}
+
+
+def _show_grants(v: _V1Call, m) -> dict:
+    return {"series": [{
+        "columns": ["database", "privilege"],
+        "values": [[d, ("ALL PRIVILEGES" if p == "ALL" else p)]
+                   for d, p in v.users.show_grants(m["user"])],
+    }]}
+
+
+def _show_continuous_queries(v: _V1Call, m) -> dict:
+    by_db: dict[str, list] = {}
+    for row in v.api._cq_registry(v.org).show():
+        by_db.setdefault(row["db"], []).append([row["name"], row["query"]])
+    return {"series": [
+        {"name": d, "columns": ["name", "query"], "values": vals}
+        for d, vals in sorted(by_db.items())
+    ] or [{"name": v.db, "columns": ["name", "query"], "values": []}]}
+
+
+def _select_into(v: _V1Call, m) -> dict:
+    # the v1 continuous-query idiom: run the query, write its rows back
+    # as points of the target measurement
+    from ..sources.bucket import FieldTypeConflict
+
+    try:
+        written = select_into(v.store, v.org, v.db, m.string,
+                              v.store.read_points(v.org, v.db))
+    except FieldTypeConflict as e:
+        # v1 returns the conflict as a statement-level error
+        return {"error": str(e)}
+    return {"series": [{"name": "result", "columns": ["time", "written"],
+                        "values": [[0, written]]}]}
+
+
+def _select(v: _V1Call, m) -> dict:
+    """The data path: SELECT, SHOW, EXPLAIN and subquery statements,
+    answered by the InfluxQL executor and framed as v1 series."""
+    text = m.string
+    # parsed once: the executor resolves the statement in place, and
+    # the series framing reads its GROUP BY back from it
+    stmt = parse_statement(text)
+    # the store's field-type catalog resolves field slots driver-side —
+    # no per-query distinct job
+    result = execute_influxql(
+        v.store.read_points(v.org, v.db), text if stmt is None else stmt,
+        field_types=v.store.field_types(v.org, v.db),
+    )
+    if stmt is not None:
+        name = stmt.measurement or v.db
+    else:
+        found = re.search(r'FROM\s+"?(\w+)"?', text, re.IGNORECASE)
+        name = found.group(1) if found else v.db
+    return _v1_series(result, stmt, name, v.epoch)
+
+
+def _v1_series(result, stmt, name: str, epoch: str | None) -> dict:
+    """Frame an InfluxQL answer as v1 series named ``name``.
+
+    Stock v1 framing: one series per set of splitter values — a retained
+    `measurement` column (multi-measurement FROM lists / regexes: one
+    series PER MEASUREMENT, named by it), then the GROUP BY tags, each
+    series tagged with {"tags": {...}} and the tag columns removed from
+    "columns" (Grafana reads the tags dict for aliasing). An answer
+    without a tag is the zero-splitter case: one series. SHOW, EXPLAIN
+    and subquery answers (``stmt`` None) carry no GROUP BY tags."""
+    div = {"ns": 1, "u": 1000, "us": 1000, "ms": 10**6, "s": 10**9}.get(epoch)
+    # epoch ns computed in the plan (unix_micros is tz-independent);
+    # collect() returns naive local-tz datetimes, so any driver-side
+    # tz math would shift on non-UTC drivers
+    cols = result.columns
+    if "time" in cols:
+        result = result.withColumn(
+            "_time_ns_out", F.expr("unix_micros(time) * 1000")
+        )
+
+    def cell(row, c):
+        val = row[c]
+        if c == "time" and val is not None:
+            ns = row["_time_ns_out"]
+            return ns // div if div else _ns_to_rfc3339(ns)
+        return val
+
+    gtags: list[str] = []
+    is_agg = False
+    if stmt is not None:
+        # the executed GROUP BY: GROUP BY * already expanded to the
+        # queried rows' tag keys; a multi-measurement read leads with
+        # `measurement`, which splits series by name below
+        gtags = [t for t in stmt.group_tags
+                 if t != "measurement" and t in cols]
+        is_agg = bool(any(fn for fn, _f, _a in stmt.fields)
+                      or stmt.nested or stmt.arith)
+
+    # stock v1: an aggregate without GROUP BY time still carries a
+    # leading time column pinned to epoch 0
+    synth_time = is_agg and "time" not in cols
+    t0_cell = (0 if div else _ns_to_rfc3339(0)) if synth_time else None
+
+    # rows arrive sorted by the splitters, then by time in the
+    # statement's direction (other statements keep their own order),
+    # as the v2 annotated-CSV path delivers them: one bounded job, or a
+    # stream for a large answer, so a raw SELECT * over a big
+    # measurement never materializes in facade memory. A raw answer
+    # already comes out of the executor in that order and is read as
+    # given. itertools.groupby cuts series boundaries without
+    # buffering; the JSON envelope is emitted incrementally by
+    # _iter_v1_json
+    split_meas = "measurement" in cols
+    splitters = (["measurement"] if split_meas else []) + gtags
+    order = list(splitters)
+    if "time" in cols and stmt is not None:
+        order.append(F.desc("time") if stmt.order_desc else F.col("time"))
+    data_cols = [c for c in cols if c not in splitters]
+    out_cols = (["time"] if synth_time else []) + data_cols
+
+    def _series_gen():
+        rows = (given_rows(result) if stmt is not None and is_raw(stmt)
+                else ordered_rows(result, order))
+        for key, group in itertools.groupby(
+            rows, key=lambda r: tuple(r[t] for t in splitters),
+        ):
+            tags = dict(zip(splitters, key))
+            meas_name = tags.pop("measurement", None)
+            series = {
+                "name": meas_name if split_meas else name,
+                "columns": out_cols,
+                "values": _StreamedValues(
+                    ([t0_cell] if synth_time else [])
+                    + [cell(r, c) for c in data_cols]
+                    for r in group
+                ),
+            }
+            if tags:
+                series["tags"] = tags
+            yield series
+
+    # stock v1: a data query with no rows answers with NO series key at
+    # all ({"statement_id": 0}) — one-series look-ahead, then the
+    # generator resumes streaming
+    gen = _series_gen()
+    head = next(gen, None)
+    if head is None:
+        return {}
+    return {"series": itertools.chain([head], gen)}
+
+
+_USER = r'"?(?P<user>[\w.\-]+)"?'
+_NAME = r'"?(?P<name>[\w.\-]+)"?'
+_PRIV_ON = r'(?P<priv>READ|WRITE|ALL)\s+ON\s+"?(?P<on>[\w.\-]+)"?'
+_ADMIN = "write:authorizations"
+
+#: Every v1 statement kind, in match order; the data path is last.
+_V1_STATEMENTS = (
+    # datasource-init meta statements (Grafana issues these before any
+    # data query)
+    _V1Statement(_rx(r"SHOW\s+DATABASES"), "read", _show_databases),
+    _V1Statement(
+        _rx(r'SHOW\s+RETENTION\s+POLICIES(?:\s+ON\s+"?(?P<db>[\w.\-]+)"?)?'),
+        "read", _show_retention_policies),
+    # v1 DATABASE ≡ v2 bucket (1:1 DBRP): created and dropped org-wide,
+    # like POST /api/v2/buckets; the create is idempotent like the
+    # store's create_bucket (reference A6)
+    _V1Statement(_rx(rf"CREATE\s+DATABASE\s+{_NAME}"), "write:orgs",
+                 _ack(lambda v, m: v.store.create_bucket(v.org, m["name"]))),
+    _V1Statement(_rx(rf"DROP\s+DATABASE\s+{_NAME}"), "write:orgs",
+                 _ack(lambda v, m: v.store.drop_bucket(v.org, m["name"]))),
+    _V1Statement(_rx(rf"DROP\s+MEASUREMENT\s+{_NAME}"), "write",
+                 _drop_measurement),
+    _V1Statement(_rx(r"SHOW\s+SHARDS"), "read", _show_shards),
+    _V1Statement(_rx(r"SHOW\s+STATS"), "read", _show_stats),
+    _V1Statement(_rx(r"SHOW\s+DIAGNOSTICS"), "read", _show_diagnostics),
+    # v1 user management (public InfluxQL spec; privileges map to the
+    # v2 model like DBRP: db ≡ bucket), admin-gated like v2
+    # authorizations. SHOW USERS → (user, admin); SHOW GRANTS FOR u →
+    # (database, privilege)
+    _V1Statement(
+        _rx(rf"CREATE\s+USER\s+{_USER}\s+WITH\s+PASSWORD\s+'(?P<pw>[^']*)'"
+            r"(?P<admin>\s+WITH\s+ALL\s+PRIVILEGES)?"), _ADMIN,
+        _ack(lambda v, m: v.users.create(m["user"], m["pw"],
+                                         admin=bool(m["admin"])))),
+    _V1Statement(_rx(rf"DROP\s+USER\s+{_USER}"), _ADMIN,
+                 _ack(lambda v, m: v.users.drop(m["user"]))),
+    _V1Statement(_rx(rf"SET\s+PASSWORD\s+FOR\s+{_USER}\s*=\s*'(?P<pw>[^']*)'"),
+                 _ADMIN,
+                 _ack(lambda v, m: v.users.set_password(m["user"], m["pw"]))),
+    _V1Statement(_rx(rf"GRANT\s+ALL(?:\s+PRIVILEGES)?\s+TO\s+{_USER}"), _ADMIN,
+                 _ack(lambda v, m: v.users.grant_all(m["user"]))),
+    _V1Statement(_rx(rf"GRANT\s+{_PRIV_ON}\s+TO\s+{_USER}"), _ADMIN,
+                 _ack(lambda v, m: v.users.grant(m["user"], m["on"], m["priv"]))),
+    _V1Statement(_rx(rf"REVOKE\s+ALL(?:\s+PRIVILEGES)?\s+FROM\s+{_USER}"), _ADMIN,
+                 _ack(lambda v, m: v.users.revoke_all(m["user"]))),
+    _V1Statement(_rx(rf"REVOKE\s+{_PRIV_ON}\s+FROM\s+{_USER}"), _ADMIN,
+                 _ack(lambda v, m: v.users.revoke(m["user"], m["on"], m["priv"]))),
+    _V1Statement(_rx(r"SHOW\s+USERS"), _ADMIN, lambda v, m: {"series": [{
+        "name": "users", "columns": ["user", "admin"],
+        "values": [[n, a] for n, a in v.users.show_users()]}]}),
+    _V1Statement(_rx(rf"SHOW\s+GRANTS\s+FOR\s+{_USER}"), _ADMIN, _show_grants),
+    # continuous-query DDL (streaming/cq.py owns the semantics): a CQ
+    # re-runs on the database it names, so it is authorized there
+    _V1Statement(_CQ_CREATE_RX, "write",
+                 _ack(lambda v, m: v.api._cq_registry(v.org).create(m.string))),
+    _V1Statement(_CQ_DROP_RX, "write",
+                 _ack(lambda v, m: v.api._cq_registry(v.org).drop(m.string))),
+    _V1Statement(_rx(r"SHOW\s+CONTINUOUS\s+QUERIES"), "read",
+                 _show_continuous_queries),
+    # DELETE FROM m / DROP SERIES FROM m [WHERE ...]: one store delete
+    _V1Statement(_DELETE_RX, "write", _ack(lambda v, m: v.store.delete_predicate(
+        v.org, v.db, *measurement_delete(m["meas"], m["where"], m["kw"])))),
+    _V1Statement(_INTO_RX, "write", _select_into),
+    _V1Statement(re.compile(r"(?s).*"), "read", _select),
+)
+
+
 class HttpApi:
     """Serve an :class:`Engine` over HTTP or HTTPS.
 
@@ -515,8 +865,6 @@ class HttpApi:
     def _cq_registry(self, org: str):
         """Per-org continuous-query registry (lazy; see streaming/cq.py)."""
         if org not in self._cq_registries:
-            from ..streaming.cq import CQRegistry
-
             self._cq_registries[org] = CQRegistry(self.engine.store, org)
         return self._cq_registries[org]
 
@@ -588,30 +936,25 @@ class HttpApi:
 
     # ----------------------------------------------------------------- auth
 
-    def _authorize(self, handler, mode: str, org: str, bucket: str) -> None:
-        """401 unless a known token; 403 unless it grants `mode` on the
-        bucket (scoped grant or org-wide admin grant)."""
-        auth = handler.headers.get("Authorization", "")
-        if not auth.startswith("Token "):
-            raise ApiError(401, "unauthorized", "unauthorized access")
-        token = auth[len("Token "):].strip()
-        record = next(
-            (r for r in self.engine.tokens.list_records() if r["token"] == token),
-            None,
-        )
-        if record is None:
-            raise ApiError(401, "unauthorized", "unknown authorization token")
-        try:
-            bucket_id = self.engine.store.get_bucket(org, bucket).id
-        except FileNotFoundError:
-            raise ApiError(404, "not found", f"bucket {bucket!r} not found")
-        allowed = {f"{mode}:orgs", f"{mode}:orgs/{org}/buckets/{bucket_id}"}
-        if not allowed.intersection(record["permissions"]):
-            raise ApiError(403, "forbidden", f"insufficient permissions for {mode}")
+    def _authorize(self, handler, grant: str, org: str, bucket: str | None) -> None:
+        """401 unless a known token; 403 unless it holds ``grant``: an
+        org-wide permission (``write:orgs``, ``read:authorizations``,
+        …), or ``read`` / ``write`` on ``bucket`` through its scoped
+        grant or the org-wide one (404 for an unknown bucket)."""
+        permissions = self._bearer_record(handler)["permissions"]
+        allowed = {grant}
+        if ":" not in grant:
+            try:
+                bucket_id = self.engine.store.get_bucket(org, bucket).id
+            except FileNotFoundError:
+                raise ApiError(404, "not found", f"bucket {bucket!r} not found")
+            allowed = {f"{grant}:orgs", f"{grant}:orgs/{org}/buckets/{bucket_id}"}
+        if not allowed.intersection(permissions):
+            raise ApiError(403, "forbidden", f"insufficient permissions for {grant}")
 
     def _bearer_record(self, handler) -> dict:
         """The token record for the request's Authorization header —
-        401 when absent/unknown (no bucket-scope check)."""
+        401 when absent/unknown."""
         auth = handler.headers.get("Authorization", "")
         if not auth.startswith("Token "):
             raise ApiError(401, "unauthorized", "unauthorized access")
@@ -696,10 +1039,7 @@ class HttpApi:
                 # HTTP analog of the reference's `influx auth list`
                 # (src/influxDBTokenPublisher.py:53-90): the same token
                 # records, admin-scope required
-                rec = self._bearer_record(handler)
-                if "read:authorizations" not in rec["permissions"]:
-                    raise ApiError(403, "forbidden",
-                                   "authorizations list requires an admin token")
+                self._authorize(handler, "read:authorizations", None, None)
                 self._respond(handler, 200, {
                     "authorizations": self.engine.tokens.list_records()
                 })
@@ -713,10 +1053,7 @@ class HttpApi:
                     raise ApiError(400, "invalid", "bucket name required")
                 # bucket creation is an org-admin operation (the
                 # scoped RO/RW tokens only grant their one bucket)
-                rec = self._bearer_record(handler)
-                if "write:orgs" not in rec["permissions"]:
-                    raise ApiError(403, "forbidden",
-                                   "bucket creation requires an admin token")
+                self._authorize(handler, "write:orgs", org, None)
                 rules = doc.get("retentionRules") or []
                 ret_ns = None
                 if rules and rules[0].get("everySeconds"):
@@ -1119,362 +1456,17 @@ class HttpApi:
         else:
             self._respond(handler, 200, {"results": results})
 
-    def _try_user_statement(self, handler, text: str) -> dict | None:
-        """v1 user-management DDL → results dict, or None if ``text``
-        is not a user statement. Shapes per the public InfluxQL spec:
-        SHOW USERS → (user, admin); SHOW GRANTS FOR u → (database,
-        privilege); mutations return an empty result."""
-        from .users import UserError
-
-        users = self.engine.users
-
-        def admin_gate():
-            rec = self._bearer_record(handler)
-            if "write:authorizations" not in rec["permissions"]:
-                raise ApiError(403, "forbidden",
-                               "user management requires an admin token")
-
-        try:
-            m = re.match(
-                r"(?is)^\s*CREATE\s+USER\s+\"?([\w.\-]+)\"?\s+WITH\s+PASSWORD\s+"
-                r"'([^']*)'(\s+WITH\s+ALL\s+PRIVILEGES)?\s*$", text)
-            if m:
-                admin_gate()
-                users.create(m.group(1), m.group(2), admin=bool(m.group(3)))
-                return {}
-            m = re.match(r'(?is)^\s*DROP\s+USER\s+"?([\w.\-]+)"?\s*$', text)
-            if m:
-                admin_gate()
-                users.drop(m.group(1))
-                return {}
-            m = re.match(
-                r"(?is)^\s*SET\s+PASSWORD\s+FOR\s+\"?([\w.\-]+)\"?\s*=\s*"
-                r"'([^']*)'\s*$", text)
-            if m:
-                admin_gate()
-                users.set_password(m.group(1), m.group(2))
-                return {}
-            m = re.match(
-                r'(?is)^\s*GRANT\s+ALL(?:\s+PRIVILEGES)?\s+TO\s+"?([\w.\-]+)"?\s*$',
-                text)
-            if m:
-                admin_gate()
-                users.grant_all(m.group(1))
-                return {}
-            m = re.match(
-                r"(?is)^\s*GRANT\s+(READ|WRITE|ALL)\s+ON\s+\"?([\w.\-]+)\"?\s+"
-                r"TO\s+\"?([\w.\-]+)\"?\s*$", text)
-            if m:
-                admin_gate()
-                users.grant(m.group(3), m.group(2), m.group(1))
-                return {}
-            m = re.match(
-                r'(?is)^\s*REVOKE\s+ALL(?:\s+PRIVILEGES)?\s+FROM\s+"?([\w.\-]+)"?\s*$',
-                text)
-            if m:
-                admin_gate()
-                users.revoke_all(m.group(1))
-                return {}
-            m = re.match(
-                r"(?is)^\s*REVOKE\s+(READ|WRITE|ALL)\s+ON\s+\"?([\w.\-]+)\"?\s+"
-                r"FROM\s+\"?([\w.\-]+)\"?\s*$", text)
-            if m:
-                admin_gate()
-                users.revoke(m.group(3), m.group(2), m.group(1))
-                return {}
-            if re.match(r"(?is)^\s*SHOW\s+USERS\s*$", text):
-                admin_gate()
-                return {"series": [{
-                    "name": "users", "columns": ["user", "admin"],
-                    "values": [[n, a] for n, a in users.show_users()],
-                }]}
-            m = re.match(r'(?is)^\s*SHOW\s+GRANTS\s+FOR\s+"?([\w.\-]+)"?\s*$',
-                         text)
-            if m:
-                admin_gate()
-                return {"series": [{
-                    "columns": ["database", "privilege"],
-                    "values": [[d, ("ALL PRIVILEGES" if p == "ALL" else p)]
-                               for d, p in users.show_grants(m.group(1))],
-                }]}
-        except UserError as e:
-            raise ApiError(400, "invalid", str(e)) from None
-        except ValueError as e:  # weak password from validate_password
-            raise ApiError(400, "invalid", str(e)) from None
-        return None
-
     def _run_v1_statement(self, handler, org: str, db: str, text: str,
                           epoch: str | None) -> dict:
-        """One v1 statement → its ``results[i]`` dict (sans id)."""
-        # datasource-init meta statements (Grafana issues these before
-        # any data query): SHOW DATABASES / SHOW RETENTION POLICIES
-        if re.match(r"(?is)^\s*SHOW\s+DATABASES\s*$", text):
-            self._authorize(handler, "read", org, db)
-            names = [[b.name] for b in self.engine.store.list_buckets(org)]
-            return {"series": [
-                {"name": "databases", "columns": ["name"], "values": names}]}
-        cm = re.match(r'(?is)^\s*CREATE\s+DATABASE\s+"?([\w.\-]+)"?\s*$', text)
-        if cm:
-            # v1 DATABASE ≡ v2 bucket here (1:1 DBRP); idempotent like
-            # the store's create_bucket (reference A6)
-            self._authorize(handler, "write", org, db)
-            self.engine.store.create_bucket(org, cm.group(1))
-            return {}
-        xm = re.match(r'(?is)^\s*DROP\s+DATABASE\s+"?([\w.\-]+)"?\s*$', text)
-        if xm:
-            # org-admin operation (same gate as v2 bucket creation):
-            # scoped RW tokens only grant their one bucket
-            rec = self._bearer_record(handler)
-            if "write:orgs" not in rec["permissions"]:
-                raise ApiError(403, "forbidden",
-                               "DROP DATABASE requires an admin token")
-            self.engine.store.drop_bucket(org, xm.group(1))
-            return {}
-        dm = re.match(r'(?is)^\s*DROP\s+MEASUREMENT\s+"?([\w.\-]+)"?\s*$', text)
-        if dm:
-            self._authorize(handler, "write", org, db)
-            # full signed ns range (reference drops MinNanoTime..MaxNanoTime,
-            # so pre-1970 points must not survive the drop)
-            self.engine.store.delete_predicate(
-                org, db, -(2**62), 2**62, F.col("measurement") == dm.group(1)
-            )
-            # the dropped measurement's field-type pins go with it
-            # (stock: a re-created measurement may choose new types)
-            self.engine.store.forget_measurement_types(org, db, dm.group(1))
-            return {}
-        if re.match(r"(?is)^\s*SHOW\s+RETENTION\s+POLICIES(?:\s+ON\s+\S+)?\s*$",
-                    text):
-            self._authorize(handler, "read", org, db)
-            metas = [b for b in self.engine.store.list_buckets(org) if b.name == db]
-            rp = [
-                [
-                    "autogen",
-                    f"{m.retention_ns // 10**9}s" if m.retention_ns else "0s",
-                    "0s", 1, True,
-                ]
-                for m in (metas or [BucketMeta(org, db)])
-            ]
-            return {"series": [
-                {"name": db,
-                 "columns": ["name", "duration", "shardGroupDuration",
-                             "replicaN", "default"],
-                 "values": rp}]}
-
-        if re.match(r"(?is)^\s*SHOW\s+SHARDS\s*$", text):
-            # one shard ≡ one (bucket, day) parquet partition — the
-            # store's physical unit of retention/delete granularity.
-            # Filesystem-metadata walk only: no Spark job.
-            self._authorize(handler, "read", org, db)
-            from ..sources.bucket import DAY_NS
-
-            cols = ["id", "database", "retention_policy", "shard_group",
-                    "start_time", "end_time", "expiry_time", "owners"]
-            series, sid = [], 1
-            for b in self.engine.store.list_buckets(org):
-                data = self.engine.store._data_dir(org, b.name)
-                days = sorted({
-                    int(p.name.split("=", 1)[1])
-                    for p in data.glob("measurement=*/day=*") if p.is_dir()
-                }) if data.exists() else []
-                vals = []
-                for d in days:
-                    start = _ns_to_rfc3339(d * DAY_NS)
-                    end = _ns_to_rfc3339((d + 1) * DAY_NS)
-                    exp = _ns_to_rfc3339(
-                        (d + 1) * DAY_NS + (b.retention_ns or 0)
-                    ) if b.retention_ns else end
-                    vals.append([sid, b.name, "autogen", d, start, end, exp, ""])
-                    sid += 1
-                series.append({"name": b.name, "columns": cols, "values": vals})
-            return {"series": series}
-        if re.match(r"(?is)^\s*SHOW\s+STATS\s*$", text):
-            # exact per-database counters (the v1 'database' stats
-            # block): measurements from partition dirs (metadata), series
-            # from a pruned distinct scan of the dictionary-encoded
-            # series_key column
-            self._authorize(handler, "read", org, db)
-            series = []
-            for b in self.engine.store.list_buckets(org):
-                data = self.engine.store._data_dir(org, b.name)
-                n_meas = len(list(data.glob("measurement=*"))) if data.exists() else 0
-                n_series = 0
-                if n_meas:
-                    n_series = (
-                        self.engine.store.read_points(org, b.name, lww=False)
-                        .select("series_key").distinct().count()
-                    )
-                series.append({
-                    "name": "database", "tags": {"database": b.name},
-                    "columns": ["numMeasurements", "numSeries"],
-                    "values": [[n_meas, n_series]],
-                })
-            return {"series": series}
-        if re.match(r"(?is)^\s*SHOW\s+DIAGNOSTICS\s*$", text):
-            self._authorize(handler, "read", org, db)
-            from .. import __version__
-            import os as _os
-            import platform as _platform
-
-            now = dt.datetime.now(dt.timezone.utc)
-            return {"series": [
-                {"name": "build",
-                 "columns": ["Branch", "Commit", "Version"],
-                 "values": [["main", "", __version__]]},
-                {"name": "system",
-                 "columns": ["PID", "currentTime", "hostname"],
-                 "values": [[_os.getpid(), now.isoformat(), _platform.node()]]},
-            ]}
-
-        # v1 user management (public InfluxQL spec; privileges map to
-        # the v2 model like DBRP: db ≡ bucket). Mutations are
-        # admin-gated — same bar as v2 authorizations.
-        um = self._try_user_statement(handler, text)
-        if um is not None:
-            return um
-
-        # continuous-query DDL: CREATE/DROP/SHOW CONTINUOUS QUERIES
-        # (the v1 downsampling idiom; streaming/cq.py owns semantics)
-        if re.match(r"(?is)^\s*(CREATE|DROP)\s+CONTINUOUS\s+QUERY\b", text):
-            self._authorize(handler, "write", org, db)
-            reg = self._cq_registry(org)
-            if re.match(r"(?is)^\s*CREATE\b", text):
-                reg.create(text)
-            else:
-                reg.drop(text)
-            return {}
-        if re.match(r"(?is)^\s*SHOW\s+CONTINUOUS\s+QUERIES\s*$", text):
-            self._authorize(handler, "read", org, db)
-            reg = self._cq_registry(org)
-            by_db: dict[str, list] = {}
-            for row in reg.show():
-                by_db.setdefault(row["db"], []).append([row["name"], row["query"]])
-            return {"series": [
-                {"name": d, "columns": ["name", "query"], "values": v}
-                for d, v in sorted(by_db.items())
-            ] or [{"name": db, "columns": ["name", "query"], "values": []}]}
-
-        # v1 DELETE FROM m / DROP SERIES FROM m [WHERE ...]: one store
-        # delete; the WHERE clause compiles like SELECT's, so a field
-        # condition is an error that deletes nothing
-        delete = parse_delete(text)
-        if delete is not None:
-            self._authorize(handler, "write", org, db)
-            self.engine.store.delete_predicate(org, db, *delete)
-            return {}
-
-        # SELECT ... INTO <target> FROM ... — the v1 continuous-query
-        # idiom: run the query, write its rows back as points
-        if split_into(text) is not None:
-            from ..sources.bucket import FieldTypeConflict
-
-            self._authorize(handler, "write", org, db)
-            try:
-                written = select_into(self.engine.store, org, db, text,
-                                      self.engine.store.read_points(org, db))
-            except FieldTypeConflict as e:
-                # v1 returns the conflict as a statement-level error
-                return {"error": str(e)}
-            return {"series": [{"name": "result",
-                                "columns": ["time", "written"],
-                                "values": [[0, written]]}]}
-
-        self._authorize(handler, "read", org, db)
-        points = self.engine.store.read_points(org, db)
-        # parsed once: the executor resolves the statement in place, and
-        # the series framing below reads its GROUP BY back from it
-        stmt = parse_statement(text)
-        # the store's field-type catalog resolves field slots
-        # driver-side — no per-query distinct job
-        result = execute_influxql(
-            points, text if stmt is None else stmt,
-            field_types=self.engine.store.field_types(org, db),
-        )
-        div = {"ns": 1, "u": 1000, "us": 1000, "ms": 10**6, "s": 10**9}.get(epoch)
-        # epoch ns computed in the plan (unix_micros is tz-independent);
-        # collect() returns naive local-tz datetimes, so any driver-side
-        # tz math would shift on non-UTC drivers
-        cols = result.columns
-        if "time" in cols:
-            result = result.withColumn(
-                "_time_ns_out", F.expr("unix_micros(time) * 1000")
-            )
-        def cell(row, c):
-            v = row[c]
-            if c == "time" and v is not None:
-                ns = row["_time_ns_out"]
-                return ns // div if div else _ns_to_rfc3339(ns)
-            return v
-
-        name = re.search(r'FROM\s+"?(\w+)"?', text, re.IGNORECASE)
-        sname = name.group(1) if name else db
-
-        # stock v1 framing: one series per set of splitter values — a
-        # retained `measurement` column (multi-measurement FROM lists /
-        # regexes: one series PER MEASUREMENT, named by it), then the
-        # GROUP BY tags, each series tagged with {"tags": {...}} and the
-        # tag columns removed from "columns" (Grafana reads the tags
-        # dict for aliasing). An answer without a tag is the
-        # zero-splitter case: one series. SHOW, EXPLAIN and subquery
-        # results carry no GROUP BY tags.
-        gtags: list[str] = []
-        is_agg = False
-        if stmt is not None:
-            # the executed GROUP BY: GROUP BY * already expanded to the
-            # queried rows' tag keys; a multi-measurement read leads
-            # with `measurement`, which splits series by name below
-            gtags = [t for t in stmt.group_tags
-                     if t != "measurement" and t in cols]
-            is_agg = bool(any(fn for fn, _f, _a in stmt.fields)
-                          or stmt.nested or stmt.arith)
-
-        # stock v1: an aggregate without GROUP BY time still carries a
-        # leading time column pinned to epoch 0
-        synth_time = is_agg and "time" not in cols
-        t0_cell = (0 if div else _ns_to_rfc3339(0)) if synth_time else None
-
-        # rows arrive sorted by the splitters, then by time in the
-        # statement's direction (other statements keep their own
-        # order), as the v2 annotated-CSV path delivers them: one
-        # bounded job, or a stream for a large answer, so a raw SELECT *
-        # over a big measurement never materializes in facade memory.
-        # itertools.groupby cuts series boundaries without buffering;
-        # the JSON envelope is emitted incrementally by _iter_v1_json
-        split_meas = "measurement" in cols
-        splitters = (["measurement"] if split_meas else []) + gtags
-        order = list(splitters)
-        if "time" in cols and stmt is not None:
-            order.append(F.desc("time") if stmt.order_desc else F.col("time"))
-        data_cols = [c for c in cols if c not in splitters]
-        out_cols = (["time"] if synth_time else []) + data_cols
-
-        def _series_gen():
-            for key, rows in itertools.groupby(
-                ordered_rows(result, order),
-                key=lambda r: tuple(r[t] for t in splitters),
-            ):
-                tags = dict(zip(splitters, key))
-                meas_name = tags.pop("measurement", None)
-                series = {
-                    "name": meas_name if split_meas else sname,
-                    "columns": out_cols,
-                    "values": _StreamedValues(
-                        ([t0_cell] if synth_time else [])
-                        + [cell(r, c) for c in data_cols]
-                        for r in rows
-                    ),
-                }
-                if tags:
-                    series["tags"] = tags
-                yield series
-
-        # stock v1: a data query with no rows answers with NO series key
-        # at all ({"statement_id": 0}) — one-series look-ahead, then the
-        # generator resumes streaming
-        gen = _series_gen()
-        head = next(gen, None)
-        if head is None:
-            return {}
-        return {"series": itertools.chain([head], gen)}
+        """One v1 statement → its ``results[i]`` dict (sans id): the
+        first row of ``_V1_STATEMENTS`` that matches it, authorized on
+        the database the statement names (else the request's ``db``)."""
+        row, m = next((row, m) for row in _V1_STATEMENTS
+                      if (m := row.pattern.match(text)))
+        db = m.groupdict().get("db") or db
+        self._authorize(handler, row.grant, org, db)
+        out = row.answer(_V1Call(self, org, db, epoch), m)
+        return {} if out is None else out
 
     def _handle_delete(self, handler, q: dict, body: bytes) -> None:
         org = q.get("org") or self.engine.config.org

@@ -17,6 +17,8 @@ O(one partition) of driver memory for any answer:
 - An answer of more than ``BOUND`` rows is streamed instead
   (:func:`stream_rows`): the same order as a Spark ``orderBy``, read
   through ``toLocalIterator()`` one partition at a time.
+- An answer that is already in wire order (:func:`given_rows`) is read
+  in that order by the same two paths, without a second sort.
 
 Both paths emit the same bytes. ``BOUND`` is a fixed row count, not an
 option: it caps the driver memory of the one-job path.
@@ -62,6 +64,13 @@ def ordered_rows(df: DataFrame, key=()) -> Iterable:
     """:func:`sorted_rows`, falling back to :func:`stream_rows`."""
     rows = sorted_rows(df, key)
     return stream_rows(df, key) if rows is None else rows
+
+
+def given_rows(df: DataFrame) -> Iterable:
+    """The rows of an already sorted ``df`` in its own order: one
+    bounded job, or a stream above ``BOUND``."""
+    rows = df.limit(BOUND + 1).collect()
+    return df.toLocalIterator(prefetchPartitions=True) if len(rows) > BOUND else rows
 
 
 _DTYPES = {

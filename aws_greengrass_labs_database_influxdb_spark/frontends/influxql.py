@@ -992,26 +992,28 @@ _DELETE_RX = re.compile(
 )
 
 
-def parse_delete(text: str) -> tuple[int, int, Column] | None:
-    """``DELETE FROM m [WHERE …]`` / ``DROP SERIES FROM m [WHERE …]`` →
-    the store delete's ``(start_ns, stop_ns, predicate)``; None for any
-    other statement. Both delete points (a series without points no
-    longer exists here), DROP SERIES without time bounds.
+def measurement_delete(meas: str, where: str | None,
+                       statement: str) -> tuple[int, int, Column]:
+    """``DELETE FROM m [WHERE …]``, ``DROP SERIES FROM m [WHERE …]`` and
+    ``DROP MEASUREMENT m`` → the store delete's ``(start_ns, stop_ns,
+    predicate)`` for the points of ``meas`` that the WHERE clause
+    selects; ``statement`` is the keyword its errors name. All three
+    delete points (a series without points no longer exists here).
+    Without a time bound the delete covers the whole signed time range:
+    stock deletes MinNanoTime .. MaxNanoTime, so pre-1970 points go too.
 
     The WHERE clause goes through the same tag-condition compiler as
     SELECT and SHOW, over the stored tags map: a row is deleted exactly
     when SELECT with that WHERE clause returns it. A field or arithmetic
     condition raises, so nothing is deleted (stock rejects fields in a
     delete)."""
-    m = _DELETE_RX.match(text)
-    if not m:
-        return None
-    where = _parse_where_only(m.group("where"))
-    kw = re.sub(r"\s+", " ", m.group("kw").upper())
-    pred = reduce(operator.and_, _tag_conditions(where, (), kw),
-                  F.col("measurement") == m.group("meas"))
-    stop = where.time_stop_ns if where.time_stop_ns is not None else 2**62
-    return where.time_start_ns or 0, stop, pred
+    cond = _parse_where_only(where)
+    kw = " ".join(statement.upper().split())
+    pred = reduce(operator.and_, _tag_conditions(cond, (), kw),
+                  F.col("measurement") == meas)
+    start = cond.time_start_ns if cond.time_start_ns is not None else -(2**62)
+    stop = cond.time_stop_ns if cond.time_stop_ns is not None else 2**62
+    return start, stop, pred
 
 
 # v1 SHOW FIELD KEYS type names differ from our ftype discriminators
@@ -1594,6 +1596,13 @@ def _select_shape(ast: InfluxQLQuery):
             "cannot mix raw field expressions with aggregate selections"
         )
     return _execute_aggregate if has_agg else _execute_raw
+
+
+def is_raw(ast: InfluxQLQuery) -> bool:
+    """Whether the SELECT answers one row per point. :func:`_finish`
+    hands such an answer out sorted by series, then time in the
+    statement's direction."""
+    return _select_shape(ast) is _execute_raw
 
 
 def _execute_raw(df: DataFrame, ast: InfluxQLQuery, by: list) -> DataFrame:

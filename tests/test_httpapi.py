@@ -744,15 +744,16 @@ def test_v2_tasks_pause_resume(served, spark):
 
 def test_v1_create_database_and_drop_measurement(served):
     base, engine, tokens = served
+    # creating a database is org-wide work: the admin token's
     q = urllib.parse.quote("CREATE DATABASE newdb")
     status, _ = _req(base, f"/query?db=greengrass-telemetry&q={q}",
-                     token=tokens["RW"])
+                     token=tokens["Admin"])
     assert status == 200
     assert any(b.name == "newdb"
                for b in engine.store.list_buckets("greengrass"))
     # idempotent re-create
     status, _ = _req(base, f"/query?db=greengrass-telemetry&q={q}",
-                     token=tokens["RW"])
+                     token=tokens["Admin"])
     assert status == 200
 
     _req(base, "/api/v2/write?bucket=greengrass-telemetry", "POST",
@@ -796,24 +797,84 @@ def test_v2_tasks_get_by_id(served):
          body=None)
 
 
-def test_v1_drop_measurement_includes_pre_epoch_points(served):
-    """DROP MEASUREMENT covers the full signed int64 time range — points
-    with negative (pre-1970) timestamps must not survive (reference
-    deletes MinNanoTime..MaxNanoTime)."""
+@pytest.mark.parametrize("statement",
+                         ["DROP MEASUREMENT", "DELETE FROM", "DROP SERIES FROM"])
+def test_v1_drop_measurement_includes_pre_epoch_points(served, statement):
+    """DROP MEASUREMENT, and DELETE / DROP SERIES without a time bound,
+    cover the full signed int64 time range — points with negative
+    (pre-1970) timestamps must not survive (reference deletes
+    MinNanoTime..MaxNanoTime)."""
     base, engine, tokens = served
+    meas = "oldgone_" + "_".join(statement.lower().split())
     _req(base, "/api/v2/write?bucket=greengrass-telemetry", "POST",
          token=tokens["RW"],
-         body=f"oldgone,host=a v=1.0 -86400000000000\noldgone,host=a v=2.0 {T0}",
+         body=f"{meas},host=a v=1.0 -86400000000000\n{meas},host=a v=2.0 {T0}",
          ctype="text/plain")
     from pyspark.sql import functions as F
     pts = engine.store.read_points("greengrass", "greengrass-telemetry")
-    assert pts.filter(F.col("measurement") == "oldgone").count() == 2
-    dq = urllib.parse.quote("DROP MEASUREMENT oldgone")
+    assert pts.filter(F.col("measurement") == meas).count() == 2
+    dq = urllib.parse.quote(f"{statement} {meas}")
     status, _ = _req(base, f"/query?db=greengrass-telemetry&q={dq}",
                      token=tokens["RW"])
     assert status == 200
     pts = engine.store.read_points("greengrass", "greengrass-telemetry")
-    assert pts.filter(F.col("measurement") == "oldgone").count() == 0
+    assert pts.filter(F.col("measurement") == meas).count() == 0
+
+
+@pytest.mark.parametrize("kind", ["create_cq", "drop_cq", "create_database"])
+def test_v1_statement_authorized_on_the_database_it_names(served, kind):
+    """A v1 statement is authorized on the database it names: CREATE /
+    DROP CONTINUOUS QUERY … ON <db> need write on <db>, not on the
+    request's ?db=, and CREATE DATABASE needs the org-wide write:orgs.
+    The RW token (write on greengrass-telemetry only) is refused and
+    changes nothing; the admin token succeeds."""
+    base, engine, tokens = served
+    secret, cq, made = f"secret_{kind}", f"cq_{kind}", f"made_{kind}"
+    engine.store.create_bucket("greengrass", secret)
+    create_cq = (f"CREATE CONTINUOUS QUERY {cq} ON {secret} BEGIN "
+                 "SELECT mean(v) INTO copied FROM m GROUP BY time(1h) END")
+
+    def run(stmt, token):
+        return _req(base, "/query?db=greengrass-telemetry&q="
+                    + urllib.parse.quote(stmt), "POST", token=token)
+
+    def shown():
+        return run("SHOW CONTINUOUS QUERIES", tokens["Admin"])[1]
+
+    statement, done = {
+        "create_cq": (create_cq, lambda: cq in shown()),
+        "drop_cq": (f"DROP CONTINUOUS QUERY {cq} ON {secret}",
+                    lambda: cq not in shown()),
+        "create_database": (f"CREATE DATABASE {made}", lambda: any(
+            b.name == made for b in engine.store.list_buckets("greengrass"))),
+    }[kind]
+    if kind == "drop_cq":
+        run(create_cq, tokens["Admin"])
+    before = shown()
+    with pytest.raises(urllib.error.HTTPError) as e:
+        run(statement, tokens["RW"])
+    assert e.value.code == 403
+    assert shown() == before and not done()
+    assert run(statement, tokens["Admin"])[0] == 200
+    assert done()
+    if kind == "create_cq":
+        run(f"DROP CONTINUOUS QUERY {cq} ON {secret}", tokens["Admin"])
+
+
+def test_v1_series_named_by_the_parsed_measurement(served):
+    """A v1 series is named by the statement's measurement as parsed,
+    so a name with a hyphen or a dot comes back whole."""
+    base, _, tokens = served
+    _req(base, "/api/v2/write?bucket=greengrass-telemetry", "POST",
+         token=tokens["RW"], ctype="text/plain",
+         body=f"cpu-load,host=a v=1.0 {T0}\na.b,host=a v=2.0 {T0}")
+    for meas in ("cpu-load", "a.b"):
+        for q in (f'SELECT v FROM "{meas}"',
+                  f'SELECT mean(v) FROM "{meas}" GROUP BY host'):
+            _, body = _req(base, "/query?db=greengrass-telemetry&q="
+                           + urllib.parse.quote(q), token=tokens["RO"])
+            series = json.loads(body)["results"][0]["series"]
+            assert [s["name"] for s in series] == [meas], q
 
 
 def test_v1_query_json_streams_chunked(served):

@@ -124,7 +124,7 @@ UNTAGGED = {
     "group_by_time": ("SELECT mean(f1) FROM tele WHERE time >= '2024-01-01T00:00:00Z' "
                       "AND time < '2024-01-01T06:00:00Z' GROUP BY time(10m)", 36, 3),
     # device d3's 90 points of f0
-    "raw_device": ("SELECT f0 FROM tele WHERE device = 'd3'", 90, 4),
+    "raw_device": ("SELECT f0 FROM tele WHERE device = 'd3'", 90, 2),
 }
 
 
@@ -140,6 +140,21 @@ def test_influxql_untagged_answer_runs_one_framer(spark, panel_served, shape):
     times = [v[0] for v in series["values"]]
     assert len(times) == rows and times == sorted(times)
     assert n == pinned, f"{shape}: {n} Spark jobs per request"
+
+
+def test_influxql_tagged_raw_answer_is_sorted_once(spark, panel_served):
+    # a raw answer comes out of the executor sorted by series, then
+    # time; the framer reads it in that order instead of sorting it again
+    base, _, tokens = panel_served
+    q = "SELECT f0 FROM tele WHERE time < '2024-01-01T01:00:00Z' GROUP BY site"
+    _influxql(base, tokens, q)
+    n, doc = _jobs(spark, lambda: _influxql(base, tokens, q))
+    series = doc["results"][0]["series"]
+    assert [s["tags"] for s in series] == [{"site": "s0"}, {"site": "s1"}]
+    for s in series:
+        times = [v[0] for v in s["values"]]
+        assert len(times) == 60 and times == sorted(times)
+    assert n == 2, f"{n} Spark jobs per request"
 
 
 def test_influxql_group_by_star_finds_tag_keys_once(spark, panel_served):
