@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 from ..frontends.annotated_csv import given_rows, iter_annotated_csv, ordered_rows
 from ..frontends.flux import execute_flux_multi
 from ..frontends.influxql import (
-    _DELETE_RX, _INTO_RX, execute_influxql, is_raw, measurement_delete,
+    _DELETE_RX, _INTO_RX, _SHOW_RX, execute_influxql, is_raw, measurement_delete,
     parse_statement, select_into,
 )
 from ..schema import SLOT_OF_FTYPE
@@ -830,6 +830,9 @@ _V1_STATEMENTS = (
     _V1Statement(_DELETE_RX, "write", _ack(lambda v, m: v.store.delete_predicate(
         v.org, v.db, *measurement_delete(m["meas"], m["where"], m["kw"])))),
     _V1Statement(_INTO_RX, "write", _select_into),
+    # SHOW MEASUREMENTS / TAG KEYS / TAG VALUES / FIELD KEYS / SERIES
+    # [ON <db>]: the data path, on the database the statement names
+    _V1Statement(_SHOW_RX, "read", _select),
     _V1Statement(re.compile(r"(?s).*"), "read", _select),
 )
 

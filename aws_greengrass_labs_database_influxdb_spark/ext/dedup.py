@@ -51,15 +51,13 @@ def _shingled(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
 
     ``array_distinct`` IN-ROW makes the exploded rows unique already
     (one document's shingles live in one array; ids are unique per
-    row), so the frame is map-only — no shuffle. r15: the old
-    post-explode ``.distinct()`` (a full corpus exchange keyed by
-    (id, shingle)) is gone. It existed as a cross-branch
-    materialization point for ReusedExchange, but the r14 plans show
-    the reuse never survived AQE re-planning — jaccard recomputed the
-    explode per branch anyway (3 scans in the executed plan).
-    Multi-branch consumers now materialize explicitly
-    (``ngram_jaccard_pairs``'s localCheckpoint); single-branch
-    consumers (minhash, contamination) save the exchange outright.
+    row), so the frame is map-only — no shuffle and no post-explode
+    ``.distinct()``. A distinct would not serve as a cross-branch
+    materialization point either: ReusedExchange does not survive AQE
+    re-planning, so each branch would still recompute the explode.
+    Multi-branch consumers materialize explicitly
+    (``ngram_jaccard_pairs``'s persist); single-branch consumers
+    (minhash, contamination) read the map-only frame directly.
     """
     base = df.select(F.col(id_col).alias("_id"), tokens_col(F.col(text_col)).alias("_toks"))
     ngrams = F.expr(
@@ -86,7 +84,7 @@ def ngram_jaccard_pairs(
     quadratic hot key (10⁶ docs sharing it → 10¹² join rows). Dropping
     it loses nothing: a shingle in >1000 docs carries ~zero Jaccard
     signal for any pair. Pass ``None`` for the exact-oracle semantics —
-    memory-safe at any skew (the r16 self-join STREAMS each shingle's
+    memory-safe at any skew (the self-join STREAMS each shingle's
     pair block: the sort-merge group buffer spills to disk, no O(freq²)
     row is ever materialized); the cap remains the *CPU/pair-count*
     bound (a freq-f shingle still emits C(f,2) pairs).
@@ -95,12 +93,12 @@ def ngram_jaccard_pairs(
     frequencies and per-doc sizes count (id, shingle) pairs directly
     (duplicate ids would double-count; dedupe upstream).
 
-    Eagerness (r16): with ``max_shingle_freq`` set, constructing the
+    Eagerness: with ``max_shingle_freq`` set, constructing the
     DataFrame runs ONE bounded Spark job (the hot-set count that picks
     the cap-join strategy at plan time); the shingle frame itself is a
     lineage-preserving ``persist(MEMORY_AND_DISK)`` — an executor loss
-    recomputes the lost blocks instead of failing the query (the r15
-    ``localCheckpoint`` pinned lineage-free blocks: cheaper locally,
+    recomputes the lost blocks instead of failing the query (a
+    ``localCheckpoint`` would pin lineage-free blocks: cheaper locally,
     fatal mid-query at cluster scale). A fully lazy variant (no
     caches, AQE-decided cap join) was measured SLOWER even at sf0.1
     (4.32 vs 3.34 same-window best) — each consumer branch re-runs the
@@ -108,23 +106,20 @@ def ngram_jaccard_pairs(
     unconditional.
     """
     # The shingle frame feeds FOUR plan branches (the frequency cap,
-    # both self-join pair sides, the per-doc sizes) and the r14
-    # executed plan recomputed the scan+tokenize+explode per branch —
-    # multiple corpus passes plus repeated builds of the freq subquery
-    # (ReusedExchange never fired across AQE-replanned subtrees). r16:
-    # persist(MEMORY_AND_DISK) + ONE count replaces r15's two eager
-    # localCheckpoints + count — same single-materialization plan
-    # shape, minus one full pass over the pinned blocks, minus two job
-    # launches; the cached blocks keep their lineage, and column
-    # pruning / whole-stage codegen reach the parquet scan again
-    # (localCheckpoint's RDD boundary blocked both). fresh_persist
-    # evicts any entry a previous construction left, so every
-    # construction recomputes from the source (no cross-run cache).
+    # both self-join pair sides, the per-doc sizes). Uncached, each
+    # branch would recompute the scan+tokenize+explode (ReusedExchange
+    # does not fire across AQE-replanned subtrees), so it is persisted
+    # (MEMORY_AND_DISK) and filled by ONE count job. The cached blocks
+    # keep their lineage, and column pruning / whole-stage codegen
+    # reach the parquet scan (a localCheckpoint's RDD boundary would
+    # block both). fresh_persist evicts any entry a previous
+    # construction left, so every construction recomputes from the
+    # source (no cross-run cache).
     sh = fresh_persist(_shingled(df, text_col, id_col, n))
     if max_shingle_freq is not None:
         # The cap is an ANTI-join against the HOT set ({shingle:
-        # freq > cap}) instead of a semi-join against the <=cap set
-        # (r15). Row-for-row equivalent: every shingle of ``sh``
+        # freq > cap}) instead of a semi-join against the <=cap set.
+        # Row-for-row equivalent: every shingle of ``sh``
         # appears in the frequency table derived from ``sh`` itself,
         # and shingles are never null (concat_ws output), so
         # "not in the >cap set" == "in the <=cap set". What flips is
@@ -132,13 +127,14 @@ def ngram_jaccard_pairs(
         # shingle dictionary (grows with corpus vocabulary —
         # unbroadcastable at scale) while the hot set is structurally
         # bounded at rows/cap keys.
-        # NOT persisted (r16): caching a post-shuffle aggregate builds
-        # its InMemoryRelation without AQE partition coalescing — the
-        # count job ran all 8×CPU initial partitions as near-empty
-        # tasks (measured: persisting hot+sizes cost ~0.8 s per run at
-        # sf0.1). The hot set is consumed at most twice (the count
-        # below + the anti-join when non-empty), and the second use
-        # re-aggregates from the already-cached ``sh`` blocks.
+        # NOT persisted: caching a post-shuffle aggregate builds its
+        # InMemoryRelation without AQE partition coalescing — the count
+        # job runs all 8×CPU initial partitions as near-empty tasks
+        # (measured: persisting hot+sizes cost ~0.8 s per run at
+        # sf0.1). The count below builds the hot set once. When it is
+        # non-empty, every plan branch that reads the anti-joined
+        # ``sh`` (the per-doc sizes and both pair sides) builds it
+        # again from the cached ``sh`` blocks.
         hot = (
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("_f"))
@@ -151,37 +147,34 @@ def ngram_jaccard_pairs(
         # the empty set is the identity). When non-empty, the join
         # strategy is AQE's: it sees the hot side's RUNTIME bytes and
         # broadcasts iff it fits under autoBroadcastJoinThreshold,
-        # shuffling otherwise (r16, ADVICE r15: the old forced
-        # F.broadcast under a 4M-ROW cap misjudged long-shingle corpora
-        # — the driver collects the broadcast side, and JVM string
-        # overhead is 2–3× the raw bytes; a byte-based runtime decision
-        # cannot).
+        # shuffling otherwise. A forced F.broadcast under a row-count
+        # cap would misjudge long-shingle corpora — the driver collects
+        # the broadcast side, and JVM string overhead is 2–3× the raw
+        # bytes; a byte-based runtime decision cannot.
         n_hot = hot.count()
         if n_hot:
             sh = sh.join(hot, "shingle", "left_anti")
-    # the per-doc size table is NOT persisted (r16): caching a
+    # the per-doc size table is NOT persisted: caching a
     # post-shuffle aggregate builds without AQE partition coalescing
     # (near-empty 8×CPU-task stages, measured ~0.8 s/run at sf0.1 for
     # hot+sizes together) — recomputing the one-row-per-doc aggregate
     # from the cached ``sh`` blocks for each pair-side join is cheaper.
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
-    # Pair generation as a SELF-EQUI-JOIN on the cached shingle frame
-    # (r16). History: r5 replaced the naive self-join with a two-level
-    # block explode (collect_list per shingle, O(block²) per-row
-    # combination arrays) to bound per-row memory. But the nested
-    # higher-order transforms are CodegenFallback — every emitted pair
-    # passed through interpreted expression eval, which dominated the
-    # whole query (noop-isolated: the pair stage was ~2.6 s of the
-    # 3.4 s total at sf0.1). The equi-join emits the SAME C(freq,2)
-    # a<b pair stream per shingle through whole-stage-codegen'd join
-    # machinery, STREAMING: the sort-merge group buffer spills to disk
-    # (ExternalAppendOnlyUnsafeRowArray), so no O(freq²) — nor even
-    # O(freq) — row is materialized; memory safety at any skew is
-    # preserved (pinned by the uncapped all-docs-shingle test). Same
-    # shuffle bytes as collect_list (both exchange the full (shingle,
-    # id) stream; the join does it twice, the second read from cache).
-    # Measured interleaved same-window: 3.32 vs 4.46 s best-of-4, pair
-    # set byte-identical.
+    # Pair generation as a SELF-EQUI-JOIN on the cached shingle frame.
+    # A block explode (collect_list per shingle, O(block²) per-row
+    # combination arrays) would bound per-row memory too, but its
+    # nested higher-order transforms are CodegenFallback — every
+    # emitted pair passes through interpreted expression eval (measured
+    # noop-isolated: ~2.6 s of a 3.4 s query at sf0.1). The equi-join
+    # emits the SAME C(freq,2) a<b pair stream per shingle through
+    # whole-stage-codegen'd join machinery, STREAMING: the sort-merge
+    # group buffer spills to disk (ExternalAppendOnlyUnsafeRowArray),
+    # so no O(freq²) — nor even O(freq) — row is materialized; memory
+    # safety at any skew is preserved (pinned by the uncapped
+    # all-docs-shingle test). Same shuffle bytes as collect_list (both
+    # exchange the full (shingle, id) stream; the join does it twice,
+    # the second read from cache). Measured interleaved same-window:
+    # 3.32 vs 4.46 s best-of-4, pair set byte-identical.
     xa = sh.select("shingle", F.col("_id").alias("a"))
     xb = sh.select("shingle", F.col("_id").alias("b"))
     common = (
@@ -286,7 +279,7 @@ def minhash_lsh_pairs(
     # (banding + two post-candidate re-joins) — one shingle pass total.
     # At corpus scale this table is num_docs × (8·num_hashes) bytes;
     # memory-and-disk persistence spills gracefully.
-    # fresh_persist (r16): evict any entry a previous construction of
+    # fresh_persist: evict any entry a previous construction of
     # the same plan left in the CacheManager — each construction
     # recomputes the signatures from the source (no cross-run cache).
     sig = fresh_persist(
@@ -368,7 +361,7 @@ def span_dedup(
     # The exploded span frame feeds TWO branches (the winner aggregate
     # and the join's probe side); without materialization the
     # scan+tokenize+explode ran twice (AQE replanning defeats
-    # ReusedExchange — the r14 lesson). Map-only, so the cache builds
+    # ReusedExchange). Map-only, so the cache builds
     # with no partitioning consequences; fresh_persist evicts any
     # previous construction's entry (no cross-run cache), lineage
     # kept. Interleaved A/B at sf0.1: 0.85 → 0.71 s best-of-4, wins

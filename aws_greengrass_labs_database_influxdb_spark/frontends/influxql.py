@@ -1023,7 +1023,7 @@ _V1_FIELD_TYPES = {"float": "float", "int": "integer", "uint": "unsigned",
 _SHOW_RX = re.compile(
     r"(?is)^SHOW\s+(?P<what>MEASUREMENTS|TAG\s+KEYS|TAG\s+VALUES|FIELD\s+KEYS"
     r"|SERIES)"
-    r"(?:\s+ON\s+\"?[\w.\-]+\"?)?"
+    r"(?:\s+ON\s+\"?(?P<db>[\w.\-]+)\"?)?"
     r"(?:\s+FROM\s+(?:/(?P<measrx>[^/]+)/|\"?(?P<meas>[\w.\-]+)\"?))?"
     r"(?:\s+WITH\s+MEASUREMENT\s*(?:=~\s*/(?P<wmrx>[^/]+)/"
     r"|=\s*\"?(?P<wmeq>[\w.\-]+)\"?))?"

@@ -33,14 +33,14 @@ from ..frontends.influxql import (
 )
 
 _CREATE_RX = re.compile(
-    r'(?is)^\s*CREATE\s+CONTINUOUS\s+QUERY\s+"?(?P<name>[\w\-]+)"?'
-    r'\s+ON\s+"?(?P<db>[\w\-]+)"?'
+    r'(?is)^\s*CREATE\s+CONTINUOUS\s+QUERY\s+"?(?P<name>[\w.\-]+)"?'
+    r'\s+ON\s+"?(?P<db>[\w.\-]+)"?'
     r"(?:\s+RESAMPLE(?:\s+EVERY\s+(\S+))?(?:\s+FOR\s+(\S+))?)?"
     r"\s+BEGIN\s+(.+?)\s+END\s*$"
 )
 _DROP_RX = re.compile(
-    r'(?is)^\s*DROP\s+CONTINUOUS\s+QUERY\s+"?(?P<name>[\w\-]+)"?'
-    r'\s+ON\s+"?(?P<db>[\w\-]+)"?\s*$'
+    r'(?is)^\s*DROP\s+CONTINUOUS\s+QUERY\s+"?(?P<name>[\w.\-]+)"?'
+    r'\s+ON\s+"?(?P<db>[\w.\-]+)"?\s*$'
 )
 _GROUP_TIME_RX = re.compile(r"(?is)GROUP\s+BY\s+.*?time\s*\(\s*(\w+)\s*[,)]")
 

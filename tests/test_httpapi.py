@@ -861,6 +861,48 @@ def test_v1_statement_authorized_on_the_database_it_names(served, kind):
         run(f"DROP CONTINUOUS QUERY {cq} ON {secret}", tokens["Admin"])
 
 
+def test_v1_show_on_names_its_database(served):
+    """SHOW … ON <db> reads <db>, not the request's ?db=, and is
+    authorized there: the RO token (read on greengrass-telemetry only)
+    is refused."""
+    base, engine, tokens = served
+    engine.store.create_bucket("greengrass", "show_on_other")
+    _req(base, "/api/v2/write?bucket=show_on_other", "POST", token=tokens["Admin"],
+         body=f"only_in_other,host=a v=1.0 {T0}", ctype="text/plain")
+
+    def show(stmt, token):
+        return _req(base, "/query?db=greengrass-telemetry&q="
+                    + urllib.parse.quote(stmt), token=token)[1]
+
+    doc = json.loads(show("SHOW MEASUREMENTS ON show_on_other", tokens["Admin"]))
+    (series,) = doc["results"][0]["series"]
+    assert series["values"] == [["only_in_other"]]
+    doc = json.loads(show('SHOW TAG KEYS ON "show_on_other"', tokens["Admin"]))
+    assert [v[-1] for v in doc["results"][0]["series"][0]["values"]] == ["host"]
+    with pytest.raises(urllib.error.HTTPError) as e:
+        show("SHOW MEASUREMENTS ON show_on_other", tokens["RO"])
+    assert e.value.code == 403
+
+
+def test_v1_continuous_query_on_a_dotted_database(served):
+    """CREATE / DROP CONTINUOUS QUERY accept a dotted name and database,
+    like every other v1 statement."""
+    base, _, tokens = served
+
+    def run(stmt):
+        return _req(base, "/query?db=greengrass-telemetry&q="
+                    + urllib.parse.quote(stmt), "POST", token=tokens["Admin"])
+
+    assert run("CREATE DATABASE a.b")[0] == 200
+    assert run('CREATE CONTINUOUS QUERY "c.1" ON "a.b" BEGIN '
+               "SELECT mean(v) INTO m_1h FROM m GROUP BY time(1h) END")[0] == 200
+    shown = json.loads(run("SHOW CONTINUOUS QUERIES")[1])["results"][0]["series"]
+    assert [[n for n, _ in s["values"]] for s in shown if s["name"] == "a.b"] == [["c.1"]]
+    assert run('DROP CONTINUOUS QUERY "c.1" ON "a.b"')[0] == 200
+    shown = json.loads(run("SHOW CONTINUOUS QUERIES")[1])["results"][0]["series"]
+    assert not any(s["name"] == "a.b" and s["values"] for s in shown)
+
+
 def test_v1_series_named_by_the_parsed_measurement(served):
     """A v1 series is named by the statement's measurement as parsed,
     so a name with a hyphen or a dot comes back whole."""

@@ -6,11 +6,18 @@ request (the façade runs its jobs outside any job group). The pinned
 counts are the result job plus the shuffle stages AQE submits as jobs
 of their own: the tag-key distinct, the ftype probe and the range-sort
 sampling job of the streaming writer are gone.
+
+Each test pins both sides of the store's small-bucket rule: the test
+store is under half the session's AQE advisory size, so a panel reads
+it in one task with no shuffle (``one_task``); with the advisory size
+set to half the store's bytes the same request takes the multi-task
+plan (``multi_task``). Both sides answer byte for byte the same.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import urllib.error
 import urllib.request
 from urllib.parse import quote
@@ -69,7 +76,7 @@ def _flux(base, tokens, q):
 
 
 def _influxql(base, tokens, q):
-    return json.loads(_req(base, f"/query?db={BUCKET}&q={quote(q)}", tokens["RO"])[1])
+    return _req(base, f"/query?db={BUCKET}&q={quote(q)}", tokens["RO"])[1]
 
 
 def _jobs(spark, fn):
@@ -79,52 +86,82 @@ def _jobs(spark, fn):
     return len(set(tracker.getJobIdsForGroup(None) or []) - before), out
 
 
+ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+def _store_bytes(engine) -> int:
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _, files in os.walk(engine.store.root / ORG / BUCKET / "data")
+               for f in files if not f.startswith(("_", ".")))
+
+
+def _both_sides(spark, engine, fn):
+    """Jobs per request of ``fn`` on the default session (``one_task``:
+    the store is under the one-task size) and with the advisory size
+    set to half the store's bytes (``multi_task``), restored afterwards.
+    Both sides must answer byte for byte the same; returns
+    ``({case: jobs}, body)``."""
+    fn()  # warm: the first request may plan more
+    one, body = _jobs(spark, fn)
+    old = spark.conf.get(ADVISORY)
+    spark.conf.set(ADVISORY, str(_store_bytes(engine) // 2))
+    try:
+        fn()
+        multi, other = _jobs(spark, fn)
+    finally:
+        spark.conf.set(ADVISORY, old)
+    assert other == body, "the one-task and multi-task answers differ"
+    return {"one_task": one, "multi_task": multi}, body
+
+
 def _src(pred: str) -> str:
     return (f'from(bucket: "{BUCKET}") |> {RANGE}'
             f' |> filter(fn: (r) => r._measurement == "tele" and {pred})')
 
 
+# query, then the jobs per request pinned for each side
 PANELS = {
     "aggregate_mean": (
         _src('r.device == "d3" and r._field == "f0"')
-        + " |> aggregateWindow(every: 10m, fn: mean)", 3),
+        + " |> aggregateWindow(every: 10m, fn: mean)", {"one_task": 1, "multi_task": 3}),
+    # the EMA fold repartitions by series itself: one shuffle is left
     "ema": (
         _src('r.device == "d3" and r._field == "f0"')
-        + " |> exponentialMovingAverage(n: 10)", 3),
+        + " |> exponentialMovingAverage(n: 10)", {"one_task": 2, "multi_task": 3}),
     "group_site_max": (
         _src('r._field == "f1"') + ' |> group(columns: ["site"])'
-        " |> aggregateWindow(every: 1h, fn: max)", 3),
+        " |> aggregateWindow(every: 1h, fn: max)", {"one_task": 1, "multi_task": 3}),
 }
 
 
 @pytest.mark.parametrize("panel", sorted(PANELS))
 def test_flux_panel_runs_one_pass(spark, panel_served, panel):
-    base, _, tokens = panel_served
+    base, engine, tokens = panel_served
     query, pinned = PANELS[panel]
-    _flux(base, tokens, query)  # warm: the first request may plan more
-    n, body = _jobs(spark, lambda: _flux(base, tokens, query))
+    n, body = _both_sides(spark, engine, lambda: _flux(base, tokens, query))
     assert body.count("\r\n") > 4
-    assert n == pinned, f"{panel}: {n} Spark jobs per request"
+    assert n == pinned, f"{panel}: Spark jobs per request {n}"
 
 
 def test_influxql_group_by_time_and_tag_runs_one_pass(spark, panel_served):
-    base, _, tokens = panel_served
+    base, engine, tokens = panel_served
     q = ("SELECT mean(f1) FROM tele WHERE time >= '2024-01-01T00:00:00Z' "
          "AND time < '2024-01-01T06:00:00Z' GROUP BY time(10m), site")
-    _influxql(base, tokens, q)
-    n, doc = _jobs(spark, lambda: _influxql(base, tokens, q))
-    series = doc["results"][0]["series"]
+    n, body = _both_sides(spark, engine, lambda: _influxql(base, tokens, q))
+    series = json.loads(body)["results"][0]["series"]
     assert [s["tags"] for s in series] == [{"site": "s0"}, {"site": "s1"}]
     assert all(len(s["values"]) == 36 for s in series)
-    assert n == 3, f"{n} Spark jobs per request"
+    assert n == {"one_task": 1, "multi_task": 3}, f"Spark jobs per request {n}"
 
 
 UNTAGGED = {
     # 36 ten-minute windows over the 6 hours, one series
     "group_by_time": ("SELECT mean(f1) FROM tele WHERE time >= '2024-01-01T00:00:00Z' "
-                      "AND time < '2024-01-01T06:00:00Z' GROUP BY time(10m)", 36, 3),
+                      "AND time < '2024-01-01T06:00:00Z' GROUP BY time(10m)", 36,
+                      {"one_task": 1, "multi_task": 3}),
     # device d3's 90 points of f0
-    "raw_device": ("SELECT f0 FROM tele WHERE device = 'd3'", 90, 2),
+    "raw_device": ("SELECT f0 FROM tele WHERE device = 'd3'", 90,
+                   {"one_task": 1, "multi_task": 2}),
 }
 
 
@@ -132,45 +169,42 @@ UNTAGGED = {
 def test_influxql_untagged_answer_runs_one_framer(spark, panel_served, shape):
     # an answer without a tag goes through the same series framer as a
     # tagged one: one time-ordered series, no extra Spark pass
-    base, _, tokens = panel_served
+    base, engine, tokens = panel_served
     q, rows, pinned = UNTAGGED[shape]
-    _influxql(base, tokens, q)
-    n, doc = _jobs(spark, lambda: _influxql(base, tokens, q))
-    (series,) = doc["results"][0]["series"]
+    n, body = _both_sides(spark, engine, lambda: _influxql(base, tokens, q))
+    (series,) = json.loads(body)["results"][0]["series"]
     times = [v[0] for v in series["values"]]
     assert len(times) == rows and times == sorted(times)
-    assert n == pinned, f"{shape}: {n} Spark jobs per request"
+    assert n == pinned, f"{shape}: Spark jobs per request {n}"
 
 
 def test_influxql_tagged_raw_answer_is_sorted_once(spark, panel_served):
     # a raw answer comes out of the executor sorted by series, then
     # time; the framer reads it in that order instead of sorting it again
-    base, _, tokens = panel_served
+    base, engine, tokens = panel_served
     q = "SELECT f0 FROM tele WHERE time < '2024-01-01T01:00:00Z' GROUP BY site"
-    _influxql(base, tokens, q)
-    n, doc = _jobs(spark, lambda: _influxql(base, tokens, q))
-    series = doc["results"][0]["series"]
+    n, body = _both_sides(spark, engine, lambda: _influxql(base, tokens, q))
+    series = json.loads(body)["results"][0]["series"]
     assert [s["tags"] for s in series] == [{"site": "s0"}, {"site": "s1"}]
     for s in series:
         times = [v[0] for v in s["values"]]
         assert len(times) == 60 and times == sorted(times)
-    assert n == 2, f"{n} Spark jobs per request"
+    assert n == {"one_task": 1, "multi_task": 2}, f"Spark jobs per request {n}"
 
 
 def test_influxql_group_by_star_finds_tag_keys_once(spark, panel_served):
     # GROUP BY * needs the queried rows' tag keys: the executor finds
     # them with one distinct, and the façade frames the series from the
     # executed statement instead of repeating that over the bucket
-    base, _, tokens = panel_served
+    base, engine, tokens = panel_served
     q = ("SELECT mean(f1) FROM tele WHERE time >= '2024-01-01T00:00:00Z' "
          "AND time < '2024-01-01T06:00:00Z' GROUP BY time(1h), *")
-    _influxql(base, tokens, q)
-    n, doc = _jobs(spark, lambda: _influxql(base, tokens, q))
-    series = doc["results"][0]["series"]
+    n, body = _both_sides(spark, engine, lambda: _influxql(base, tokens, q))
+    series = json.loads(body)["results"][0]["series"]
     assert [s["tags"] for s in series] == [
         {"device": f"d{d}", "site": f"s{d % 2}"} for d in range(8)]
     assert all(len(s["values"]) == 6 for s in series)
-    assert n <= 6, f"{n} Spark jobs per request"
+    assert max(n.values()) <= 6, f"Spark jobs per request {n}"
 
 
 # ------------------------------------------------------- catalog staleness

@@ -166,3 +166,92 @@ def test_known_types_completeness_contract_debug_assert(spark, tmp_path, monkeyp
     store.write_points("o", "b", pts,
                        known_types={("kc", "v", "float")})
     assert store.read_points("o", "b").count() == 4
+
+
+def _files_per_dir(data) -> dict[str, int]:
+    import os
+
+    return {os.path.relpath(d, data): sum(f.endswith(".parquet") for f in files)
+            for d, _, files in os.walk(data) if "day=" in os.path.basename(d)}
+
+
+def test_http_batch_writes_one_file_per_directory_in_one_job(spark, tmp_path):
+    """An HTTP line-protocol batch is a driver-resident frame: its write
+    is one Spark job (AQE on, as in production) and adds one file to
+    each (measurement, day) directory. The same rows from a non-local
+    frame go through the clustering repartition and read back the
+    same."""
+    import urllib.request
+
+    from pyspark.sql import functions as F
+
+    from aws_greengrass_labs_database_influxdb_spark.control.engine import (
+        Engine, EngineConfig,
+    )
+    from aws_greengrass_labs_database_influxdb_spark.control.httpapi import HttpApi
+    from aws_greengrass_labs_database_influxdb_spark.control.secrets import (
+        CredentialsProvider,
+    )
+
+    engine = Engine(spark, EngineConfig(store_root=str(tmp_path / "http")))
+    engine.setup(CredentialsProvider({"influxdb_username": "greengrass",
+                                      "influxdb_password": "ValidPassword#123"}))
+    engine.serve()
+    api = HttpApi(engine)
+    host, port = api.start()
+    token = engine.get_publish_json(
+        {"action": "RetrieveToken", "accessLevel": "RW"})["InfluxDBToken"]
+    org, bucket = engine.config.org, engine.config.bucket
+    day0 = 1704067200_000_000_000  # 2024-01-01T00:00:00Z
+    step = 15 * 60_000_000_000
+
+    def write(offset):
+        # 2 measurements × 8 hosts, 15-minute steps from 18:00 to 06:00:
+        # every (measurement, day) directory of both days gets rows
+        lines = "\n".join(
+            f"{m},host=h{h} v={i + h}.5 {day0 + offset + (72 + i) * step}"
+            for m in ("cpu", "mem") for h in range(8) for i in range(48))
+        req = urllib.request.Request(
+            f"http://{host}:{port}/api/v2/write?bucket={bucket}", method="POST",
+            data=lines.encode())
+        req.add_header("Authorization", f"Token {token}")
+        req.add_header("Content-Type", "text/plain")
+        with urllib.request.urlopen(req) as resp:
+            assert resp.status == 204
+
+    try:
+        data = engine.store.root / org / bucket / "data"
+        write(0)
+        before = _files_per_dir(data)
+        assert len(before) == 4 and set(before.values()) == {1}
+        tracker = spark.sparkContext.statusTracker()
+        jobs = set(tracker.getJobIdsForGroup(None) or [])
+        write(1)  # a second batch, one nanosecond later
+        jobs = set(tracker.getJobIdsForGroup(None) or []) - jobs
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        assert len(jobs) == 1, f"HTTP write ran {len(jobs)} Spark jobs"
+        after = _files_per_dir(data)
+        assert {d: after[d] - before[d] for d in after} == {d: 1 for d in before}
+
+        pts = engine.store.read_points(org, bucket).select(*POINTS_COLUMNS).repartition(8)
+        assert not pts.isLocal()
+        copy = BucketStore(spark, str(tmp_path / "copy"))
+        copy.create_bucket(org, bucket)
+        copy.write_points(org, bucket, pts)
+        files = _files_per_dir(copy.root / org / bucket / "data")
+        assert set(files) == set(after)
+        assert max(files.values()) <= BucketStore.WRITE_FILES_PER_PARTITION
+
+        def rows(store):
+            return (store.read_points(org, bucket)
+                    .select("measurement", "day", "series_key", "time_ns",
+                            "field", "f_float", "ftype", "ingest_seq")
+                    .orderBy("measurement", "series_key", "time_ns").collect())
+
+        got = rows(engine.store)
+        assert len(got) == 2 * 2 * 8 * 48 and got == rows(copy)
+        assert engine.store.read_points(org, bucket).filter(
+            F.col("day") == day0 // 86_400_000_000_000 + 1).count() == 2 * 2 * 8 * 24
+    finally:
+        api.stop()
+        engine.close()
