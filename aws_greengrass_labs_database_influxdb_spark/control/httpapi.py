@@ -9,21 +9,10 @@ protocol to ``/api/v2/write`` and Flux to ``/api/v2/query``
 (§3.2/§3.3 of SURVEY.md). This module closes that last loop: a user of
 the reference can point the same client at this engine.
 
-Endpoints (InfluxDB 2.0 API shapes):
-
-- ``GET /ping`` → 204 (liveness; the ``influx ping`` probe the
-  reference health-check drives, ``src/influxdb_utils.sh:31-35``)
-- ``GET /health`` → 200 JSON pass/fail
-- ``GET /api/v2/setup`` → ``{"allowed": bool}`` (provision state —
-  the troubleshooting probe at ``README.md:383``)
-- ``POST /api/v2/write?org=&bucket=&precision=`` — line-protocol
-  body → LWW append into the bucket store (write-scoped token)
-- ``POST /api/v2/query?org=`` — Flux text (raw or JSON-wrapped) →
-  annotated CSV (read-scoped token)
-- ``GET/POST /query?db=&q=`` — InfluxQL 1.x compatibility endpoint →
-  v1-style JSON results
-- ``POST /api/v2/delete?org=&bucket=`` — time range + tag-equality
-  predicate delete
+Endpoints (InfluxDB 2.0 API shapes, plus the 1.x ``/query`` and
+``/write`` compatibility pair): one row each in ``_V2_ROUTES``, which
+names the method, the path and the answer; v1 statements are rows of
+``_V1_STATEMENTS``.
 
 Auth: ``Authorization: Token <token>`` resolved against the engine's
 :class:`~.tokens.TokenRegistry`; scoped tokens carry
@@ -42,6 +31,8 @@ collected except final query results (post-aggregation row counts).
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import gzip
 import itertools
 import json
 import os
@@ -61,15 +52,17 @@ from pyspark.sql import functions as F
 from ..frontends.annotated_csv import given_rows, iter_annotated_csv, ordered_rows
 from ..frontends.flux import execute_flux_multi
 from ..frontends.influxql import (
-    _DELETE_RX, _INTO_RX, _SHOW_RX, execute_influxql, is_raw, measurement_delete,
-    parse_statement, select_into,
+    _DELETE_RX, _INTO_RX, _SHOW_CARD_RX, _SHOW_RX, execute_influxql, is_raw,
+    measurement_delete, parse_statement, select_into,
 )
 from ..schema import SLOT_OF_FTYPE
+from ..sources.io import write_result
 from ..sources.lineprotocol import parse_lines
 from ..sources.seq import next_seq_base
 from ..streaming.cq import (
     _CREATE_RX as _CQ_CREATE_RX, _DROP_RX as _CQ_DROP_RX, CQRegistry,
 )
+from ..streaming.flux_tasks import FluxTask, FluxTaskRegistry, parse_task
 from .engine import Engine
 
 
@@ -831,9 +824,434 @@ _V1_STATEMENTS = (
         v.org, v.db, *measurement_delete(m["meas"], m["where"], m["kw"])))),
     _V1Statement(_INTO_RX, "write", _select_into),
     # SHOW MEASUREMENTS / TAG KEYS / TAG VALUES / FIELD KEYS / SERIES
-    # [ON <db>]: the data path, on the database the statement names
+    # and SHOW … CARDINALITY [ON <db>]: the data path, on the database
+    # the statement names
+    _V1Statement(_SHOW_CARD_RX, "read", _select),
     _V1Statement(_SHOW_RX, "read", _select),
     _V1Statement(re.compile(r"(?s).*"), "read", _select),
+)
+
+
+# ------------------------------------------------------------ v2 routes
+
+
+class _V2Call(NamedTuple):
+    """What a v2 route's answer reads besides its path match."""
+
+    api: HttpApi
+    handler: BaseHTTPRequestHandler
+    q: dict  # the query string, first value per key
+    body: bytes  # un-gzipped
+
+    @property
+    def engine(self) -> Engine:
+        return self.api.engine
+
+    @property
+    def org(self) -> str:
+        """``?org=``, else the engine's org."""
+        return self.q.get("org") or self.engine.config.org
+
+    @property
+    def payload(self) -> dict:
+        """The JSON body; an empty body is ``{}``."""
+        return json.loads(self.body or b"{}")
+
+
+class _V2Route(NamedTuple):
+    """One v2 route: the method and the whole-path pattern that select
+    it (a task route names its task in an ``id`` group), and its
+    answer, a ``(status, payload)`` reply or None when the answer has
+    streamed its own."""
+
+    method: str
+    path: re.Pattern
+    answer: Callable[[_V2Call, re.Match], tuple | None]
+
+
+def _health(v: _V2Call, m) -> tuple:
+    ok = v.engine.ping() == "OK"
+    return 200 if ok else 503, {
+        "name": "influxdb", "status": "pass" if ok else "fail",
+        "message": "ready for queries and writes", "checks": []}
+
+
+def _write(v: _V2Call, m) -> tuple:
+    # the v2 precision set is ns/us/ms/s (public API contract); m/h
+    # are legal only on the v1 /write route
+    precision = v.q.get("precision", "ns")
+    if precision not in ("ns", "us", "ms", "s"):
+        raise ApiError(400, "invalid",
+                       f"invalid precision {precision!r} (ns, us, ms, s)")
+    return _write_lines(v, v.q.get("bucket"), precision)
+
+
+def _write_v1(v: _V2Call, m) -> tuple:
+    """The v1 compatibility write (Telegraf's v1 output, legacy
+    clients): ``?db=`` is the bucket (1:1 DBRP), rp is ignored, and the
+    v1 precision names n/u/µ map to the v2 set. m/h pass through:
+    InfluxDB 1.x accepts minute/hour precision (the line-protocol
+    parser scales timestamps ×60e9 / ×3600e9), as legacy clients
+    expect."""
+    precision = v.q.get("precision", "ns")
+    return _write_lines(v, v.q.get("db") or v.q.get("bucket"),
+                        {"n": "ns", "u": "us", "µ": "us"}.get(precision, precision))
+
+
+def _write_lines(v: _V2Call, bucket: str | None, precision: str) -> tuple:
+    """The line-protocol body → one LWW append into ``bucket`` (the
+    engine's bucket when None)."""
+    org, bucket = v.org, bucket or v.engine.config.bucket
+    v.api._authorize(v.handler, "write", org, bucket)
+    rows = parse_lines(v.body.decode().splitlines(), precision=precision,
+                       default_time_ns=time.time_ns())
+    if not rows:
+        raise ApiError(400, "invalid", "no points in request body")
+    # Shared wall-clock base (sources/seq.py) so LWW order is
+    # consistent with the streaming ingest path; line index within
+    # the request stays the low bits (later duplicate line wins).
+    base = next_seq_base(rows=len(rows))
+    import pandas as pd
+
+    from ..schema import POINTS_SCHEMA
+    from ..sources.bucket import FieldTypeConflict
+
+    pdf = pd.DataFrame(rows)
+    pdf["ingest_seq"] = pdf["ingest_seq"] + base
+    pdf["time"] = pd.to_datetime(pdf["time_ns"] // 1000, unit="us")
+    df = v.engine.spark.createDataFrame(
+        pdf[[f.name for f in POINTS_SCHEMA.fields]], POINTS_SCHEMA
+    )
+    try:
+        # line protocol is parsed driver-side — the type pins and
+        # tag keys are already known, so the write runs a single
+        # Spark job
+        v.engine.store.write_points(
+            org, bucket, df,
+            known_types={(r["measurement"], r["field"], r["ftype"])
+                         for r in rows},
+            tag_keys={k for r in rows for k in r["tags"]},
+        )
+    except FieldTypeConflict as e:
+        # stock partial-write contract: valid points landed, the
+        # conflicting field is reported with 422 unprocessable
+        raise ApiError(422, "unprocessable entity", str(e)) from None
+    return 204, None
+
+
+def _query_flux(v: _V2Call, m) -> None:
+    org = v.org
+    text = v.body.decode()
+    # v2 dialect object: which annotation rows + header to emit,
+    # plus delimiter / commentPrefix / dateTimeFormat (stock
+    # honors all five; dateTimeFormat defaults RFC3339 —
+    # which DROPS fractional seconds — vs RFC3339Nano)
+    annotations: tuple = ("group", "datatype", "default")
+    csv_header = True
+    delimiter, comment_prefix = ",", "#"
+    datetime_format = "RFC3339"
+    if "json" in v.handler.headers.get("Content-Type", ""):
+        req = json.loads(text)
+        text = req.get("query", "")
+        dialect = req.get("dialect") or {}
+        if "annotations" in dialect:
+            annotations = tuple(dialect["annotations"])
+        csv_header = bool(dialect.get("header", True))
+        delimiter = dialect.get("delimiter", ",")
+        comment_prefix = dialect.get("commentPrefix", "#")
+        datetime_format = dialect.get("dateTimeFormat", "RFC3339")
+        if len(delimiter) != 1 or delimiter == '"':
+            raise ApiError(400, "invalid",
+                           "dialect delimiter must be a single non-quote character")
+        if datetime_format not in ("RFC3339", "RFC3339Nano"):
+            raise ApiError(400, "invalid",
+                           "dialect dateTimeFormat must be RFC3339 or RFC3339Nano")
+    found = _FROM_BUCKET_RX.search(text)
+    if not found:
+        raise ApiError(400, "invalid", 'query must reference bucket: "..."')
+    bucket = found.group(1)
+    v.api._authorize(v.handler, "read", org, bucket)
+    store = v.engine.store
+    points = store.read_points(org, bucket)
+    # the bucket's catalog, read AFTER read_points listed the files,
+    # is a superset of what those files hold. The field-type pins
+    # bound which value slots can be live, so ordering/presence
+    # consumers (sort, selectors, count, conversions, map) and the
+    # numeric-input check on float-only data skip their ftype
+    # probe; the full map lets group(columns:) collision checks
+    # resolve from the pins. The tag keys stand in for the tag-key
+    # distinct (see _flux_blocks).
+    from ..frontends.flux import seed_live_slots
+
+    cat = store.field_types(org, bucket)
+    tag_keys = store.tag_keys(org, bucket)
+    seed_live_slots(
+        points,
+        {t for fields in cat.values() for t in fields.values()},
+        catalog=cat,
+    )
+    # Flux from() tables are keyed by measurement + TAG SET + field
+    # (stock InfluxDB: each series is its own table). The stored
+    # bucket schema carries the serialized tag set as series_key;
+    # without it in the group key, per-series stages (sum, mean,
+    # derivative, aggregateWindow, …) would merge every series of
+    # a measurement into one stream.
+    gk = (
+        ("measurement", "series_key", "field")
+        if "series_key" in points.columns
+        else ("measurement", "field")
+    )
+    sink = None
+    if re.search(r"\|>\s*to\s*\(", text):
+        # write stage present → needs write scope and a store sink
+        v.api._authorize(v.handler, "write", org, bucket)
+        sink = functools.partial(write_result, store, org)
+    results = execute_flux_multi(points, text, sink=sink, group_key=gk)
+
+    # chunked encoding; each result block is one bounded Spark job,
+    # or a toLocalIterator stream when it is larger (see
+    # annotated_csv), so facade memory stays bounded. Multi-yield
+    # scripts emit one CSV block per yield, each tagged with its
+    # result name and separated by an empty row (InfluxDB
+    # multi-result annotated-CSV framing).
+    from ..frontends.annotated_csv import stream_rows
+
+    def _gen():
+        for i, (name, df) in enumerate(results.items()):
+            if i:
+                yield "\r\n"
+            # table numbering continues across datatype splits of
+            # one result (shared table_ids dict); each split emits
+            # its own annotation block (schema changed).
+            table_ids: dict = {}
+            for j, (wire_df, wire_key, rows) in enumerate(
+                    _flux_blocks(df, tag_keys)):
+                if j:
+                    yield "\r\n"
+                yield from iter_annotated_csv(
+                    wire_df, group_key=wire_key, result_name=name,
+                    annotations=annotations, header=csv_header,
+                    table_ids=table_ids, delimiter=delimiter,
+                    comment_prefix=comment_prefix,
+                    datetime_format=datetime_format,
+                    rows=(stream_rows(wire_df, wire_key)
+                          if rows is None else rows),
+                )
+
+    v.api._respond_chunks(v.handler, _gen())
+
+
+def _query_v1(v: _V2Call, m) -> tuple | None:
+    """InfluxQL compatibility: ``/query?db=<bucket>&q=<stmts>`` →
+    the 1.x JSON results envelope (DBRP maps db→bucket 1:1 here).
+
+    Multiple semicolon-separated statements run in order, one
+    ``results`` entry each (Grafana batches its init SHOWs)."""
+    q = dict(v.q)
+    if not q.get("q") and v.body:
+        q.update({k: val[0] for k, val in parse_qs(v.body.decode()).items()})
+    db, text = q.get("db"), q.get("q")
+    if not db or not text:
+        raise ApiError(400, "invalid", "db and q parameters are required")
+    org = q.get("org") or v.engine.config.org
+    results = []
+    for i, stmt in enumerate(_split_v1_statements(text)):
+        res = v.api._run_v1_statement(v.handler, org, db, stmt, q.get("epoch"))
+        res["statement_id"] = i
+        results.append(res)
+    if not results:
+        raise ApiError(400, "invalid", "empty query")
+
+    if q.get("chunked") in ("true", "1"):
+        # stock v1 chunked mode: newline-delimited complete JSON
+        # documents of at most chunk_size rows each, with partial
+        # flags while a series/statement has more data
+        try:
+            chunk_size = max(1, int(q.get("chunk_size", 10000)))
+        except ValueError:
+            chunk_size = 10000
+        v.api._respond_chunks(
+            v.handler, _iter_v1_json_chunked(results, chunk_size),
+            content_type="application/json",
+        )
+        return None
+
+    def _is_streamed(res: dict) -> bool:
+        s = res.get("series", [])
+        if not isinstance(s, list):
+            return True  # lazy series generator — MUST NOT iterate here
+        return any(isinstance(x.get("values"), _StreamedValues) for x in s)
+
+    if any(_is_streamed(res) for res in results):
+        v.api._respond_chunks(
+            v.handler, _iter_v1_json(results), content_type="application/json"
+        )
+        return None
+    return 200, {"results": results}
+
+
+def _delete(v: _V2Call, m) -> tuple:
+    org = v.org
+    bucket = v.q.get("bucket") or v.engine.config.bucket
+    v.api._authorize(v.handler, "write", org, bucket)
+    req = v.payload
+    if "start" not in req or "stop" not in req:
+        raise ApiError(400, "invalid", "start and stop are required")
+    predicate = (
+        _parse_delete_predicate(req["predicate"]) if req.get("predicate") else None
+    )
+    v.engine.store.delete_predicate(
+        org,
+        bucket,
+        _rfc3339_to_ns(req["start"]),
+        _rfc3339_to_ns(req["stop"]),
+        predicate,
+    )
+    return 204, None
+
+
+def _orgs(v: _V2Call, m) -> tuple:
+    org = v.engine.config.org
+    v.api._authorize(v.handler, "read", org, v.engine.config.bucket)
+    name = v.q.get("org") or v.q.get("name")
+    return 200, {"orgs": [] if name and name != org else [{"id": org, "name": org}]}
+
+
+def _authorizations(v: _V2Call, m) -> tuple:
+    v.api._authorize(v.handler, "read:authorizations", None, None)
+    return 200, {"authorizations": v.engine.tokens.list_records()}
+
+
+def _bucket_json(org: str, meta) -> dict:
+    return {"id": meta.id, "orgID": org, "name": meta.name, "type": "user",
+            "retentionRules": (
+                [{"type": "expire", "everySeconds": meta.retention_ns // 10**9}]
+                if meta.retention_ns else [])}
+
+
+def _create_bucket(v: _V2Call, m) -> tuple:
+    doc = v.payload
+    org = doc.get("orgID") or doc.get("org") or v.engine.config.org
+    name = doc.get("name")
+    if not name:
+        raise ApiError(400, "invalid", "bucket name required")
+    # bucket creation is an org-admin operation (the scoped RO/RW
+    # tokens only grant their one bucket)
+    v.api._authorize(v.handler, "write:orgs", org, None)
+    rules = doc.get("retentionRules") or []
+    ret_ns = None
+    if rules and rules[0].get("everySeconds"):
+        ret_ns = int(rules[0]["everySeconds"]) * 10**9
+    # InfluxDB v2 answers 422 on a duplicate bucket name — the store's
+    # idempotent create is for engine setup (reference A6), not for
+    # the public API
+    if v.engine.store._meta_path(org, name).exists():
+        raise ApiError(422, "conflict", f"bucket with name {name} already exists")
+    return 201, _bucket_json(org, v.engine.store.create_bucket(org, name, ret_ns))
+
+
+def _list_buckets(v: _V2Call, m) -> tuple:
+    # read scope on the org's provisioned bucket gates the discovery
+    org = v.org
+    v.api._authorize(v.handler, "read", org, v.engine.config.bucket)
+    name = v.q.get("name")
+    return 200, {"buckets": [_bucket_json(org, b)
+                             for b in v.engine.store.list_buckets(org)
+                             if not name or b.name == name]}
+
+
+def _task_json(task: FluxTask) -> dict:
+    return {"id": task.id, "name": task.name, "status": task.status,
+            "flux": task.flux, "everySeconds": task.every_ns // 10**9,
+            "offsetSeconds": task.offset_ns // 10**9}
+
+
+def _create_task(v: _V2Call, m) -> tuple:
+    task = parse_task(v.payload.get("flux", ""))
+    # a task mutation needs write on the task's SOURCE bucket (the to()
+    # sink re-checks nothing: a task writes derived data to a bucket
+    # the org owns, as the CQ path does), granted before it registers
+    v.api._authorize(v.handler, "write", v.org, task.source_bucket)
+    return 201, _task_json(v.api._task_registry(v.org).register(task))
+
+
+def _list_tasks(v: _V2Call, m) -> tuple:
+    v.api._authorize(v.handler, "read", v.org, v.engine.config.bucket)
+    return 200, {"tasks": [_task_json(t) for t in v.api._task_registry(v.org).list()]}
+
+
+def _on_task(grant: str, answer) -> Callable[[_V2Call, re.Match], tuple]:
+    """The answer of a route on one task: resolve the ``id`` group
+    (404 when unknown), authorize ``grant`` on the task's source
+    bucket, then answer with the registry and the task."""
+    def resolved(v: _V2Call, m) -> tuple:
+        reg = v.api._task_registry(v.org)
+        try:
+            task = reg.get(m["id"])
+        except KeyError:
+            raise ApiError(404, "not found", f"task {m['id']!r} not found") from None
+        v.api._authorize(v.handler, grant, v.org, task.source_bucket)
+        return answer(v, reg, task)
+    return resolved
+
+
+def _delete_task(v: _V2Call, reg, task: FluxTask) -> tuple:
+    reg.delete(task.id)
+    return 204, None
+
+
+def _set_task_status(v: _V2Call, reg, task: FluxTask) -> tuple:
+    status = v.payload.get("status")
+    if status not in ("active", "inactive"):
+        raise ApiError(400, "invalid", "status must be active|inactive")
+    task.status = status
+    return 200, _task_json(task)
+
+
+def _run_task(v: _V2Call, reg, task: FluxTask) -> tuple:
+    # an optional "now" (epoch ns) pins the run time — the scheduledFor
+    # equivalent; tests and replays use it
+    now_ns = int(v.payload.get("now") or time.time_ns())
+    rows = reg.run(v.engine.spark, task.id, now_ns)
+    return 200, {"taskID": task.id, "status": "success", "rows": rows}
+
+
+_TASK = r"/api/v2/tasks/(?P<id>[0-9a-f]+)"
+
+#: Every HTTP route, in match order: a request takes the first row
+#: whose method and whole path match it; none matching is a 404.
+_V2_ROUTES = tuple(
+    _V2Route(method, re.compile(path), answer)
+    for method, path, answer in (
+        # liveness: the `influx ping` probe the reference health check drives
+        ("GET", "/ping", lambda v, m: (204, None)),
+        ("GET", "/health", _health),
+        # provision state (the reference's troubleshooting probe)
+        ("GET", "/api/v2/setup",
+         lambda v, m: (200, {"allowed": not v.engine._provisioned})),
+        ("POST", "/api/v2/write", _write),
+        ("POST", "/write", _write_v1),
+        ("POST", "/api/v2/query", _query_flux),
+        ("GET", "/query", _query_v1),
+        ("POST", "/query", _query_v1),
+        ("POST", "/api/v2/delete", _delete),
+        # the org-name → ID lookup the influx CLI makes before most calls
+        ("GET", "/api/v2/orgs", _orgs),
+        # `influx auth list` over HTTP: the token records, admin only
+        ("GET", "/api/v2/authorizations", _authorizations),
+        ("POST", "/api/v2/buckets", _create_bucket),
+        # the discovery call the influx CLI and Grafana's Flux source make first
+        ("GET", "/api/v2/buckets", _list_buckets),
+        # the 2.x downsampling-task API (streaming/flux_tasks.py)
+        ("POST", "/api/v2/tasks", _create_task),
+        ("GET", "/api/v2/tasks", _list_tasks),
+        # the influx CLI fetches a task by id after creating it
+        ("GET", _TASK, _on_task("read", lambda v, reg, task: (200, _task_json(task)))),
+        ("DELETE", _TASK, _on_task("write", _delete_task)),
+        # pause/resume: an inactive task is skipped by run_due
+        ("PATCH", _TASK, _on_task("write", _set_task_status)),
+        ("POST", _TASK + "/runs", _on_task("write", _run_task)),
+    )
 )
 
 
@@ -863,33 +1281,30 @@ class HttpApi:
         self.cert_file: str | None = None
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
-        self._cq_registries: dict = {}
+        self._cq_registries: dict[str, CQRegistry] = {}
+        self._task_registries: dict[str, FluxTaskRegistry] = {}
 
-    def _cq_registry(self, org: str):
+    def _cq_registry(self, org: str) -> CQRegistry:
         """Per-org continuous-query registry (lazy; see streaming/cq.py)."""
         if org not in self._cq_registries:
             self._cq_registries[org] = CQRegistry(self.engine.store, org)
         return self._cq_registries[org]
 
-    def _task_registry(self, org: str):
+    def _task_registry(self, org: str) -> FluxTaskRegistry:
         """Per-org Flux task registry (lazy; see streaming/flux_tasks.py)."""
-        if not hasattr(self, "_task_registries"):
-            self._task_registries = {}
         if org not in self._task_registries:
-            from ..streaming.flux_tasks import FluxTaskRegistry
-
             self._task_registries[org] = FluxTaskRegistry(self.engine.store, org)
         return self._task_registries[org]
 
     def run_continuous_queries(self, now_ns: int | None = None) -> dict[str, int]:
-        """Run every registered CQ once (idempotent; callers own the
-        cadence — a production deployment wraps this in a timer at the
-        finest CQ grain, matching InfluxDB's own CQ scheduler)."""
-        import time as _time
-
-        now = now_ns if now_ns is not None else _time.time_ns()
+        """Run every registered CQ and every active Flux task once, all
+        at the same ``now`` (idempotent; callers own the cadence — a
+        production deployment wraps this in a timer at the finest CQ or
+        task grain, matching InfluxDB's own schedulers). Returns the
+        rows per CQ or task name."""
+        now = now_ns if now_ns is not None else time.time_ns()
         out: dict[str, int] = {}
-        for reg in self._cq_registries.values():
+        for reg in (*self._cq_registries.values(), *self._task_registries.values()):
             out.update(reg.run_due(self.engine.spark, now))
         return out
 
@@ -973,6 +1388,8 @@ class HttpApi:
     # ------------------------------------------------------------- dispatch
 
     def _dispatch(self, handler, method: str) -> None:
+        """Answer one request with the first row of ``_V2_ROUTES`` that
+        matches its method and path."""
         url = urlsplit(handler.path)
         q = {k: v[0] for k, v in parse_qs(url.query).items()}
         try:
@@ -984,139 +1401,30 @@ class HttpApi:
             # reference engine accepts Content-Encoding: gzip on write
             # and query bodies alike
             if handler.headers.get("Content-Encoding", "").lower() == "gzip":
-                import gzip as _gzip
-
                 try:
-                    body = _gzip.decompress(body)
+                    body = gzip.decompress(body)
                 except OSError:
                     raise ApiError(400, "invalid", "body is not valid gzip")
-            route = (method, url.path)
-            if route == ("GET", "/ping"):
-                self._respond(handler, 204, None)
-            elif route == ("GET", "/health"):
-                ok = self.engine.ping() == "OK"
-                self._respond(
-                    handler,
-                    200 if ok else 503,
-                    {"name": "influxdb", "status": "pass" if ok else "fail",
-                     "message": "ready for queries and writes", "checks": []},
-                )
-            elif route == ("GET", "/api/v2/setup"):
-                self._respond(handler, 200, {"allowed": not self.engine._provisioned})
-            elif route == ("POST", "/api/v2/write"):
-                self._handle_write(handler, q, body)
-            elif route == ("POST", "/write"):
-                # v1 compatibility write (Telegraf v1 output / legacy
-                # clients): ?db= is the bucket (1:1 DBRP), rp ignored,
-                # v1 precision names (n/u/m/h) mapped to the v2 set
-                q2 = dict(q)
-                if "db" in q2:
-                    q2["bucket"] = q2["db"]
-                prec = q2.get("precision", "ns")
-                q2["precision"] = {"n": "ns", "u": "us", "µ": "us"}.get(prec, prec)
-                # m/h pass through: InfluxDB 1.x accepts minute/hour
-                # precision (timestamps scale ×60e9 / ×3600e9 in the
-                # line-protocol parser), as legacy clients expect
-                self._handle_write(handler, q2, body, v1=True)
-            elif route == ("POST", "/api/v2/query"):
-                self._handle_query_flux(handler, q, body)
-            elif url.path == "/query":
-                self._handle_query_v1(handler, q, body)
-            elif route == ("POST", "/api/v2/delete"):
-                self._handle_delete(handler, q, body)
-            elif url.path == "/api/v2/tasks" or url.path.startswith("/api/v2/tasks/"):
-                self._handle_tasks(handler, method, url.path, q, body)
-            elif route == ("GET", "/api/v2/orgs"):
-                # org-discovery call the influx CLI makes to resolve an
-                # org name to an ID before most other operations
-                self._authorize(handler, "read", self.engine.config.org,
-                                self.engine.config.bucket)
-                name_filter = q.get("org") or q.get("name")
-                orgs = [self.engine.config.org]
-                if name_filter:
-                    orgs = [o for o in orgs if o == name_filter]
-                self._respond(handler, 200, {"orgs": [
-                    {"id": o, "name": o} for o in orgs
-                ]})
-            elif route == ("GET", "/api/v2/authorizations"):
-                # HTTP analog of the reference's `influx auth list`
-                # (src/influxDBTokenPublisher.py:53-90): the same token
-                # records, admin-scope required
-                self._authorize(handler, "read:authorizations", None, None)
-                self._respond(handler, 200, {
-                    "authorizations": self.engine.tokens.list_records()
-                })
-            elif route == ("POST", "/api/v2/buckets"):
-                import json as _json
-
-                doc = _json.loads(body or b"{}")
-                org = doc.get("orgID") or doc.get("org") or self.engine.config.org
-                name = doc.get("name")
-                if not name:
-                    raise ApiError(400, "invalid", "bucket name required")
-                # bucket creation is an org-admin operation (the
-                # scoped RO/RW tokens only grant their one bucket)
-                self._authorize(handler, "write:orgs", org, None)
-                rules = doc.get("retentionRules") or []
-                ret_ns = None
-                if rules and rules[0].get("everySeconds"):
-                    ret_ns = int(rules[0]["everySeconds"]) * 10**9
-                # InfluxDB v2 answers 422 on a duplicate bucket name —
-                # the store's idempotent create is for engine setup
-                # (reference A6), not for the public API
-                if self.engine.store._meta_path(org, name).exists():
-                    raise ApiError(
-                        422, "conflict",
-                        f"bucket with name {name} already exists",
-                    )
-                meta = self.engine.store.create_bucket(org, name, ret_ns)
-                self._respond(handler, 201, {
-                    "id": meta.id, "orgID": org, "name": meta.name,
-                    "type": "user",
-                    "retentionRules": (
-                        [{"type": "expire",
-                          "everySeconds": meta.retention_ns // 10**9}]
-                        if meta.retention_ns else []
-                    ),
-                })
-            elif route == ("GET", "/api/v2/buckets"):
-                # the discovery call clients (influx CLI, Grafana Flux
-                # datasource) issue first; read scope on the org's
-                # provisioned bucket gates it
-                org = q.get("org") or self.engine.config.org
-                self._authorize(handler, "read", org, self.engine.config.bucket)
-                name_filter = q.get("name")
-                metas = self.engine.store.list_buckets(org)
-                if name_filter:
-                    metas = [b for b in metas if b.name == name_filter]
-                self._respond(handler, 200, {"buckets": [
-                    {"id": b.id, "orgID": org, "name": b.name, "type": "user",
-                     "retentionRules": (
-                         [{"type": "expire",
-                           "everySeconds": b.retention_ns // 10**9}]
-                         if b.retention_ns else []
-                     )}
-                    for b in metas
-                ]})
-            else:
+            route, m = next(((r, m) for r in _V2_ROUTES if r.method == method
+                             and (m := r.path.fullmatch(url.path))), (None, None))
+            if route is None:
                 raise ApiError(404, "not found", f"path not found: {url.path}")
+            reply = route.answer(_V2Call(self, handler, q, body), m)
+            if reply is not None:
+                self._respond(handler, *reply)
         except ApiError as e:
             self._respond(handler, e.status, {"code": e.code, "message": e.message})
         except Exception as e:  # surface engine errors as 400s, keep serving
             self._respond(handler, 400, {"code": "invalid", "message": str(e)})
 
-    def _respond(self, handler, status: int, payload, content_type="application/json"):
+    def _respond(self, handler, status: int, payload) -> None:
+        """One whole reply: a JSON body, or none when ``payload`` is None."""
+        handler.send_response(status)
         if payload is None:
-            handler.send_response(status)
             handler.end_headers()
             return
-        data = (
-            payload.encode()
-            if isinstance(payload, str)
-            else json.dumps(payload).encode()
-        )
-        handler.send_response(status)
-        handler.send_header("Content-Type", content_type)
+        data = json.dumps(payload).encode()
+        handler.send_header("Content-Type", "application/json")
         handler.send_header("Content-Length", str(len(data)))
         handler.end_headers()
         handler.wfile.write(data)
@@ -1167,297 +1475,7 @@ class HttpApi:
                 )
         handler.wfile.write(b"0\r\n\r\n")
 
-    # ------------------------------------------------------------ endpoints
-
-    def _handle_write(self, handler, q: dict, body: bytes,
-                      v1: bool = False) -> None:
-        org = q.get("org") or self.engine.config.org
-        bucket = q.get("bucket") or self.engine.config.bucket
-        precision = q.get("precision", "ns")
-        # m/h are legal only via the v1 /write route; the v2 API's
-        # own precision set is ns/us/ms/s (public API contract). The v1
-        # marker is a function argument, NOT a query-dict sentinel — q
-        # comes straight from the client's query string, so a sentinel
-        # there would let ?precision=h&_v1=1 bypass the v2 contract.
-        if not v1 and precision not in ("ns", "us", "ms", "s"):
-            raise ApiError(
-                400, "invalid",
-                f"invalid precision {precision!r} (ns, us, ms, s)"
-            )
-        self._authorize(handler, "write", org, bucket)
-        lines = body.decode().splitlines()
-        rows = parse_lines(lines, precision=precision, default_time_ns=time.time_ns())
-        if not rows:
-            raise ApiError(400, "invalid", "no points in request body")
-        # Shared wall-clock base (sources/seq.py) so LWW order is
-        # consistent with the streaming ingest path; line index within
-        # the request stays the low bits (later duplicate line wins).
-        base = next_seq_base(rows=len(rows))
-        import pandas as pd
-
-        from ..schema import POINTS_SCHEMA
-
-        pdf = pd.DataFrame(rows)
-        pdf["ingest_seq"] = pdf["ingest_seq"] + base
-        pdf["time"] = pd.to_datetime(pdf["time_ns"] // 1000, unit="us")
-        df = self.engine.spark.createDataFrame(
-            pdf[[f.name for f in POINTS_SCHEMA.fields]], POINTS_SCHEMA
-        )
-        from ..sources.bucket import FieldTypeConflict
-
-        try:
-            # line protocol is parsed driver-side — the type pins and
-            # tag keys are already known, so the write runs a single
-            # Spark job
-            self.engine.store.write_points(
-                org, bucket, df,
-                known_types={(r["measurement"], r["field"], r["ftype"])
-                             for r in rows},
-                tag_keys={k for r in rows for k in r["tags"]},
-            )
-        except FieldTypeConflict as e:
-            # stock partial-write contract: valid points landed, the
-            # conflicting field is reported with 422 unprocessable
-            raise ApiError(422, "unprocessable entity", str(e)) from None
-        self._respond(handler, 204, None)
-
-    def _handle_tasks(self, handler, method: str, path: str, q: dict,
-                      body: bytes) -> None:
-        """``/api/v2/tasks`` — the 2.x downsampling-task API surface:
-
-            POST   /api/v2/tasks             {"flux": "option task = ..."}
-            GET    /api/v2/tasks             → {"tasks": [...]}
-            DELETE /api/v2/tasks/<id>        → 204
-            POST   /api/v2/tasks/<id>/runs   → run now (aligned `now`)
-
-        Mutations require write scope on the task's SOURCE bucket (the
-        ``to()`` sink re-checks nothing: a task writes derived data to
-        a bucket the org owns, as the engine's CQ path does).
-        """
-        org = q.get("org") or self.engine.config.org
-        reg = self._task_registry(org)
-
-        def _json(task) -> dict:
-            return {"id": task.id, "name": task.name, "status": task.status,
-                    "flux": task.flux, "everySeconds": task.every_ns // 10**9,
-                    "offsetSeconds": task.offset_ns // 10**9}
-
-        m = re.match(r"^/api/v2/tasks(?:/([0-9a-f]+))?(/runs)?$", path)
-        if not m:
-            raise ApiError(404, "not found", f"path not found: {path}")
-        task_id, runs = m.group(1), m.group(2)
-        if task_id is not None:
-            try:
-                reg.get(task_id)
-            except KeyError:
-                raise ApiError(404, "not found", f"task {task_id!r} not found")
-
-        if method == "POST" and task_id is None:
-            payload = json.loads(body.decode() or "{}")
-            flux = payload.get("flux", "")
-            from ..streaming.flux_tasks import FluxTaskRegistry as _R  # noqa: F401
-            # parse first (cheap, no side effects) to learn the source
-            # bucket, then authorize against it before registering
-            probe = type(reg)(self.engine.store, org).create(flux)
-            self._authorize(handler, "write", org, probe.source_bucket)
-            task = reg.create(flux)
-            self._respond(handler, 201, _json(task))
-        elif method == "GET" and task_id is None:
-            self._authorize(handler, "read", org, self.engine.config.bucket)
-            self._respond(handler, 200, {"tasks": [_json(t) for t in reg.list()]})
-        elif method == "GET" and task_id and not runs:
-            # fetch single task by id (influx CLI issues this after create)
-            task = reg.get(task_id)
-            self._authorize(handler, "read", org, task.source_bucket)
-            self._respond(handler, 200, _json(task))
-        elif method == "DELETE" and task_id and not runs:
-            task = reg.get(task_id)
-            self._authorize(handler, "write", org, task.source_bucket)
-            reg.delete(task_id)
-            self._respond(handler, 204, None)
-        elif method == "POST" and task_id and runs:
-            import time as _time
-
-            task = reg.get(task_id)
-            self._authorize(handler, "write", org, task.source_bucket)
-            # optional "now" (epoch ns) pins the run time — the
-            # scheduledFor equivalent; tests and replays use it
-            payload = json.loads(body.decode() or "{}")
-            now_ns = int(payload.get("now") or _time.time_ns())
-            rows = reg.run(self.engine.spark, task_id, now_ns)
-            self._respond(handler, 200,
-                          {"taskID": task_id, "status": "success", "rows": rows})
-        elif method == "PATCH" and task_id and not runs:
-            # pause/resume: {"status": "active" | "inactive"} — paused
-            # tasks are skipped by run_due (the 2.x task toggle)
-            task = reg.get(task_id)
-            self._authorize(handler, "write", org, task.source_bucket)
-            payload = json.loads(body.decode() or "{}")
-            status = payload.get("status")
-            if status not in ("active", "inactive"):
-                raise ApiError(400, "invalid", "status must be active|inactive")
-            task.status = status
-            self._respond(handler, 200, _json(task))
-        else:
-            raise ApiError(404, "not found", f"unsupported tasks call {method} {path}")
-
-    def _handle_query_flux(self, handler, q: dict, body: bytes) -> None:
-        org = q.get("org") or self.engine.config.org
-        ctype = handler.headers.get("Content-Type", "")
-        text = body.decode()
-        # v2 dialect object: which annotation rows + header to emit,
-        # plus delimiter / commentPrefix / dateTimeFormat (stock
-        # honors all five; dateTimeFormat defaults RFC3339 —
-        # which DROPS fractional seconds — vs RFC3339Nano)
-        annotations: tuple = ("group", "datatype", "default")
-        csv_header = True
-        delimiter, comment_prefix = ",", "#"
-        datetime_format = "RFC3339"
-        if "json" in ctype:
-            req = json.loads(text)
-            text = req.get("query", "")
-            dialect = req.get("dialect") or {}
-            if "annotations" in dialect:
-                annotations = tuple(dialect["annotations"])
-            csv_header = bool(dialect.get("header", True))
-            delimiter = dialect.get("delimiter", ",")
-            comment_prefix = dialect.get("commentPrefix", "#")
-            datetime_format = dialect.get("dateTimeFormat", "RFC3339")
-            if len(delimiter) != 1 or delimiter == '"':
-                raise ApiError(400, "invalid",
-                               "dialect delimiter must be a single non-quote character")
-            if datetime_format not in ("RFC3339", "RFC3339Nano"):
-                raise ApiError(400, "invalid",
-                               "dialect dateTimeFormat must be RFC3339 or RFC3339Nano")
-        m = _FROM_BUCKET_RX.search(text)
-        if not m:
-            raise ApiError(400, "invalid", 'query must reference bucket: "..."')
-        bucket = m.group(1)
-        self._authorize(handler, "read", org, bucket)
-        points = self.engine.store.read_points(org, bucket)
-        # the bucket's catalog, read AFTER read_points listed the files,
-        # is a superset of what those files hold. The field-type pins
-        # bound which value slots can be live, so ordering/presence
-        # consumers (sort, selectors, count, conversions, map) and the
-        # numeric-input check on float-only data skip their ftype
-        # probe; the full map lets group(columns:) collision checks
-        # resolve from the pins. The tag keys stand in for the tag-key
-        # distinct (see _flux_blocks).
-        from ..frontends.flux import seed_live_slots
-
-        cat = self.engine.store.field_types(org, bucket)
-        tag_keys = self.engine.store.tag_keys(org, bucket)
-        seed_live_slots(
-            points,
-            {t for fields in cat.values() for t in fields.values()},
-            catalog=cat,
-        )
-        # Flux from() tables are keyed by measurement + TAG SET + field
-        # (stock InfluxDB: each series is its own table). The stored
-        # bucket schema carries the serialized tag set as series_key;
-        # without it in the group key, per-series stages (sum, mean,
-        # derivative, aggregateWindow, …) would merge every series of
-        # a measurement into one stream.
-        gk = (
-            ("measurement", "series_key", "field")
-            if "series_key" in points.columns
-            else ("measurement", "field")
-        )
-
-        if re.search(r"\|>\s*to\s*\(", text):
-            # write stage present → needs write scope and a store sink
-            from ..sources.io import canonicalize_result
-
-            self._authorize(handler, "write", org, bucket)
-
-            def _sink(df, target_bucket: str) -> None:
-                self.engine.store.create_bucket(org, target_bucket)
-                self.engine.store.write_points(
-                    org, target_bucket, canonicalize_result(df)
-                )
-
-            results = execute_flux_multi(points, text, sink=_sink, group_key=gk)
-        else:
-            results = execute_flux_multi(points, text, group_key=gk)
-
-        # chunked encoding; each result block is one bounded Spark job,
-        # or a toLocalIterator stream when it is larger (see
-        # annotated_csv), so facade memory stays bounded. Multi-yield
-        # scripts emit one CSV block per yield, each tagged with its
-        # result name and separated by an empty row (InfluxDB
-        # multi-result annotated-CSV framing).
-        from ..frontends.annotated_csv import stream_rows
-
-        def _gen():
-            for i, (name, df) in enumerate(results.items()):
-                if i:
-                    yield "\r\n"
-                # table numbering continues across datatype splits of
-                # one result (shared table_ids dict); each split emits
-                # its own annotation block (schema changed).
-                table_ids: dict = {}
-                for j, (wire_df, wire_key, rows) in enumerate(
-                        _flux_blocks(df, tag_keys)):
-                    if j:
-                        yield "\r\n"
-                    yield from iter_annotated_csv(
-                        wire_df, group_key=wire_key, result_name=name,
-                        annotations=annotations, header=csv_header,
-                        table_ids=table_ids, delimiter=delimiter,
-                        comment_prefix=comment_prefix,
-                        datetime_format=datetime_format,
-                        rows=(stream_rows(wire_df, wire_key)
-                              if rows is None else rows),
-                    )
-
-        self._respond_chunks(handler, _gen())
-
-    def _handle_query_v1(self, handler, q: dict, body: bytes) -> None:
-        """InfluxQL compatibility: ``/query?db=<bucket>&q=<stmts>`` →
-        the 1.x JSON results envelope (DBRP maps db→bucket 1:1 here).
-
-        Multiple semicolon-separated statements run in order, one
-        ``results`` entry each (Grafana batches its init SHOWs)."""
-        if not q.get("q") and body:
-            q.update({k: v[0] for k, v in parse_qs(body.decode()).items()})
-        db, text = q.get("db"), q.get("q")
-        if not db or not text:
-            raise ApiError(400, "invalid", "db and q parameters are required")
-        org = q.get("org") or self.engine.config.org
-        results = []
-        for i, stmt in enumerate(_split_v1_statements(text)):
-            res = self._run_v1_statement(handler, org, db, stmt, q.get("epoch"))
-            res["statement_id"] = i
-            results.append(res)
-        if not results:
-            raise ApiError(400, "invalid", "empty query")
-
-        if q.get("chunked") in ("true", "1"):
-            # stock v1 chunked mode: newline-delimited complete JSON
-            # documents of at most chunk_size rows each, with partial
-            # flags while a series/statement has more data
-            try:
-                chunk_size = max(1, int(q.get("chunk_size", 10000)))
-            except ValueError:
-                chunk_size = 10000
-            self._respond_chunks(
-                handler, _iter_v1_json_chunked(results, chunk_size),
-                content_type="application/json",
-            )
-            return
-
-        def _is_streamed(res: dict) -> bool:
-            s = res.get("series", [])
-            if not isinstance(s, list):
-                return True  # lazy series generator — MUST NOT iterate here
-            return any(isinstance(x.get("values"), _StreamedValues) for x in s)
-
-        if any(_is_streamed(res) for res in results):
-            self._respond_chunks(
-                handler, _iter_v1_json(results), content_type="application/json"
-            )
-        else:
-            self._respond(handler, 200, {"results": results})
+    # ------------------------------------------------------------ v1
 
     def _run_v1_statement(self, handler, org: str, db: str, text: str,
                           epoch: str | None) -> dict:
@@ -1470,22 +1488,3 @@ class HttpApi:
         self._authorize(handler, row.grant, org, db)
         out = row.answer(_V1Call(self, org, db, epoch), m)
         return {} if out is None else out
-
-    def _handle_delete(self, handler, q: dict, body: bytes) -> None:
-        org = q.get("org") or self.engine.config.org
-        bucket = q.get("bucket") or self.engine.config.bucket
-        self._authorize(handler, "write", org, bucket)
-        req = json.loads(body.decode() or "{}")
-        if "start" not in req or "stop" not in req:
-            raise ApiError(400, "invalid", "start and stop are required")
-        predicate = (
-            _parse_delete_predicate(req["predicate"]) if req.get("predicate") else None
-        )
-        self.engine.store.delete_predicate(
-            org,
-            bucket,
-            _rfc3339_to_ns(req["start"]),
-            _rfc3339_to_ns(req["stop"]),
-            predicate,
-        )
-        self._respond(handler, 204, None)

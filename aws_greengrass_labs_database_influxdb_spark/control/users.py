@@ -29,8 +29,9 @@ class UserError(ValueError):
 
 # PBKDF2 work factor: upstream InfluxDB 1.x uses bcrypt(cost=10); a
 # keyed-stretch KDF with ~1e5 iterations is the stdlib equivalent —
-# a dumped registry costs ~100k SHA-256 per guess instead of 1
-# (ADVICE r6: plain salted SHA-256 is offline-brute-forceable).
+# a dumped registry costs ~100k SHA-256 per guess instead of 1. A
+# stored hash is never a plain salted SHA-256, which an offline guesser
+# brute-forces.
 _PBKDF2_ITERS = 100_000
 
 

@@ -1165,6 +1165,7 @@ def execute_show(points: DataFrame, query: str) -> DataFrame:
 _SHOW_CARD_RX = re.compile(
     r"(?is)^SHOW\s+(?P<what>MEASUREMENT|SERIES|FIELD\s+KEY|TAG\s+KEY|TAG\s+VALUES)\s+"
     r"(?:(?P<exact>EXACT)\s+)?CARDINALITY"
+    r"(?:\s+ON\s+\"?(?P<db>[\w.\-]+)\"?)?"
     r"(?:\s+FROM\s+(?:/(?P<measrx>[^/]+)/|\"?(?P<meas>[\w.\-]+)\"?))?"
     r'(?:\s+WITH\s+KEY\s*=\s*"?(?P<key>\w+)"?)?'
     r"(?:\s+WHERE\s+(?P<where>.+?))?\s*$"

@@ -267,3 +267,11 @@ def canonicalize_result(df: DataFrame) -> DataFrame:
         if name not in out.columns:
             out = out.withColumn(name, default)
     return out.select(*[f.name for f in POINTS_SCHEMA.fields])
+
+
+def write_result(store, org: str, df: DataFrame, bucket: str) -> None:
+    """Flux ``to(bucket:)`` over a bucket store: create the target
+    bucket when missing, then write the result as points (the sink of
+    an HTTP query and of a Flux task run alike)."""
+    store.create_bucket(org, bucket)
+    store.write_points(org, bucket, canonicalize_result(df))

@@ -25,6 +25,7 @@ window, never bucket size.
 
 from __future__ import annotations
 
+import functools
 import itertools
 import re
 from dataclasses import dataclass
@@ -33,6 +34,7 @@ from pyspark.sql import SparkSession
 
 from ..frontends.flux import FluxError, execute_flux_multi
 from ..operators.windows import duration_ns
+from ..sources.io import write_result
 
 _OPTION_RX = re.compile(r"(?s)^\s*option\s+task\s*=\s*\{(.*?)\}\s*(.*)$")
 _FROM_BUCKET_RX = re.compile(r'from\s*\(\s*bucket\s*:\s*"([^"]+)"')
@@ -40,7 +42,7 @@ _FROM_BUCKET_RX = re.compile(r'from\s*\(\s*bucket\s*:\s*"([^"]+)"')
 
 @dataclass
 class FluxTask:
-    id: str
+    id: str | None  # None until registered
     name: str
     every_ns: int
     offset_ns: int
@@ -57,8 +59,35 @@ class FluxTask:
         return m.group(1)
 
 
+def parse_task(flux_text: str) -> FluxTask:
+    """A task script → its task, not yet registered (no id). No side
+    effects, so a caller can authorize on the task's source bucket
+    before :meth:`FluxTaskRegistry.register` holds it."""
+    m = _OPTION_RX.match(flux_text.strip())
+    if not m:
+        raise FluxError("task script must start with option task = {...}")
+    opts: dict[str, str] = {}
+    for part in m.group(1).split(","):
+        if ":" in part:
+            k, _, v = part.partition(":")
+            opts[k.strip()] = v.strip().strip('"')
+    if "name" not in opts or "every" not in opts:
+        raise FluxError("option task needs name: and every:")
+    body = m.group(2).strip()
+    if not body:
+        raise FluxError("task has no pipeline body")
+    return FluxTask(
+        id=None,
+        name=opts["name"],
+        every_ns=duration_ns(opts["every"]),
+        offset_ns=duration_ns(opts["offset"]) if "offset" in opts else 0,
+        flux=flux_text,
+        body=body,
+    )
+
+
 class FluxTaskRegistry:
-    """Parse/hold/run Flux tasks for one org's buckets."""
+    """Hold and run Flux tasks for one org's buckets."""
 
     def __init__(self, store, org: str):
         self.store = store
@@ -68,30 +97,11 @@ class FluxTaskRegistry:
 
     # ------------------------------------------------------------ CRUD
 
-    def create(self, flux_text: str) -> FluxTask:
-        m = _OPTION_RX.match(flux_text.strip())
-        if not m:
-            raise FluxError("task script must start with option task = {...}")
-        opts: dict[str, str] = {}
-        for part in m.group(1).split(","):
-            if ":" in part:
-                k, _, v = part.partition(":")
-                opts[k.strip()] = v.strip().strip('"')
-        if "name" not in opts or "every" not in opts:
-            raise FluxError("option task needs name: and every:")
-        body = m.group(2).strip()
-        if not body:
-            raise FluxError("task has no pipeline body")
-        task = FluxTask(
-            id=f"{next(self._ids):016x}",
-            name=opts["name"],
-            every_ns=duration_ns(opts["every"]),
-            offset_ns=duration_ns(opts["offset"]) if "offset" in opts else 0,
-            flux=flux_text,
-            body=body,
-        )
+    def register(self, task: FluxTask) -> FluxTask:
+        """Hold a parsed task (:func:`parse_task`) under a fresh id."""
         if any(t.name == task.name for t in self._tasks.values()):
             raise FluxError(f"task {task.name!r} already exists")
+        task.id = f"{next(self._ids):016x}"
         self._tasks[task.id] = task
         return task
 
@@ -108,17 +118,6 @@ class FluxTaskRegistry:
 
     # ------------------------------------------------------------ run
 
-    def _sink(self):
-        from ..sources.io import canonicalize_result
-
-        def sink(df, target_bucket: str) -> None:
-            self.store.create_bucket(self.org, target_bucket)
-            self.store.write_points(
-                self.org, target_bucket, canonicalize_result(df)
-            )
-
-        return sink
-
     def run(self, spark: SparkSession, task_id: str, now_ns: int) -> int:
         """One task run with ``now`` pinned to the task's latest
         aligned boundary ≤ now (InfluxDB's scheduled-run `now`
@@ -131,7 +130,8 @@ class FluxTaskRegistry:
         points = self.store.read_points(self.org, task.source_bucket)
         body = self._bind_last_success(task, aligned)
         results = execute_flux_multi(
-            points, body, now_ns=aligned, sink=self._sink()
+            points, body, now_ns=aligned,
+            sink=functools.partial(write_result, self.store, self.org),
         )
         last = list(results.values())[-1]
         n = last.count()

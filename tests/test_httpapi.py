@@ -742,6 +742,49 @@ def test_v2_tasks_pause_resume(served, spark):
     _req(base, f"/api/v2/tasks/{tid}", "DELETE", token=tokens["RW"], body=None)
 
 
+def test_scheduler_hook_runs_flux_tasks(served):
+    """``run_continuous_queries`` also runs each org's Flux tasks at
+    the same ``now``: an active task writes its windows to its target
+    bucket, and a task paused with PATCH ``inactive`` writes nothing."""
+    _, engine, tokens = served
+    # a facade of its own: no other test's task runs in its hook
+    api = HttpApi(engine)
+    host, port = api.start()
+    base = f"http://{host}:{port}"
+    try:
+        _req(base, "/api/v2/write?bucket=greengrass-telemetry", "POST",
+             token=tokens["RW"], ctype="text/plain", body="\n".join(
+                 f"hookm,host=h1 load={float(i)} {T0 + i * 60_000_000_000}"
+                 for i in range(120)))
+
+        def create(name):
+            flux = (
+                f'option task = {{name: "{name}", every: 1h}}\n'
+                'from(bucket: "greengrass-telemetry")\n'
+                "  |> range(start: 2024-01-01T00:00:00Z, stop: 2024-01-02T00:00:00Z)\n"
+                '  |> filter(fn: (r) => r._measurement == "hookm")\n'
+                "  |> aggregateWindow(every: 1h, fn: mean)\n"
+                f'  |> to(bucket: "{name}-out")'
+            )
+            _, body = _req(base, "/api/v2/tasks", "POST", token=tokens["RW"],
+                           body={"flux": flux})
+            return json.loads(body)["id"]
+
+        create("hook-active")
+        paused = create("hook-paused")
+        status, _ = _req(base, f"/api/v2/tasks/{paused}", "PATCH",
+                         token=tokens["RW"], body={"status": "inactive"})
+        assert status == 200
+        ran = api.run_continuous_queries(T0 + 3 * 3600 * 10**9)
+        assert "hook-active" in ran and "hook-paused" not in ran
+        out = engine.store.read_points("greengrass", "hook-active-out")
+        assert out.count() == 2  # 2 windows of the 2h of data
+        assert "hook-paused-out" not in {
+            b.name for b in engine.store.list_buckets("greengrass")}
+    finally:
+        api.stop()
+
+
 def test_v1_create_database_and_drop_measurement(served):
     base, engine, tokens = served
     # creating a database is org-wide work: the admin token's
@@ -884,6 +927,33 @@ def test_v1_show_on_names_its_database(served):
     assert e.value.code == 403
 
 
+@pytest.mark.parametrize("what, count", [
+    ("MEASUREMENT", 1), ("SERIES", 2), ("FIELD KEY", 2), ("TAG KEY", 1),
+    ("TAG VALUES", 2),
+])
+def test_v1_show_cardinality_on_names_its_database(served, what, count):
+    """SHOW … CARDINALITY ON <db> counts <db>, not the request's ?db=,
+    and is authorized there: the RO token (read on greengrass-telemetry
+    only) is refused."""
+    base, engine, tokens = served
+    engine.store.create_bucket("greengrass", "card_on_other")
+    _req(base, "/api/v2/write?bucket=card_on_other", "POST", token=tokens["Admin"],
+         body=f"card_only,host=a v=1.0,w=2.0 {T0}\ncard_only,host=b v=1.0 {T0}",
+         ctype="text/plain")
+    key = ' WITH KEY = "host"' if what == "TAG VALUES" else ""
+    stmt = f"SHOW {what} EXACT CARDINALITY ON card_on_other{key}"
+
+    def show(token):
+        return _req(base, "/query?db=greengrass-telemetry&q="
+                    + urllib.parse.quote(stmt), token=token)[1]
+
+    (series,) = json.loads(show(tokens["Admin"]))["results"][0]["series"]
+    assert series["name"] == "card_on_other" and series["values"] == [[count]]
+    with pytest.raises(urllib.error.HTTPError) as e:
+        show(tokens["RO"])
+    assert e.value.code == 403
+
+
 def test_v1_continuous_query_on_a_dotted_database(served):
     """CREATE / DROP CONTINUOUS QUERY accept a dotted name and database,
     like every other v1 statement."""
@@ -996,6 +1066,101 @@ def test_v2_bucket_create_admin_only(served):
     status, body = _req(base, "/api/v2/buckets?name=archive", token=tokens["RO"])
     got = json.loads(body)["buckets"]
     assert len(got) == 1 and got[0]["id"] == doc["id"]
+
+
+def _route_task_flux(name: str) -> str:
+    return (f'option task = {{name: "{name}", every: 1h}}\n'
+            'from(bucket: "greengrass-telemetry") |> range(start: -1h)\n'
+            '  |> to(bucket: "route-out")')
+
+
+#: A request per v2 route that reaches the route's grant check:
+#: (method, path, body, the RO token's status where it is refused, else
+#: None). ``{task}`` stands for a registered task's id.
+_V2_ROUTE_CASES = [
+    ("GET", "/ping", None, None),
+    ("GET", "/health", None, None),
+    ("GET", "/api/v2/setup", None, None),
+    ("POST", "/api/v2/write?bucket=greengrass-telemetry", f"routem v=1.0 {T0}", 403),
+    ("POST", "/write?db=greengrass-telemetry", f"routem v=1.0 {T0}", 403),
+    ("POST", "/api/v2/query",
+     {"query": 'from(bucket: "greengrass-telemetry") |> range(start: 0)'}, None),
+    ("GET", "/query?db=greengrass-telemetry&q=SHOW%20DATABASES", None, None),
+    ("POST", "/query?db=greengrass-telemetry&q=SHOW%20DATABASES", None, None),
+    ("POST", "/api/v2/delete?bucket=greengrass-telemetry",
+     {"start": "2024-01-01T00:00:00Z", "stop": "2024-01-01T00:00:01Z",
+      "predicate": '_measurement="routem"'}, 403),
+    ("GET", "/api/v2/orgs", None, None),
+    ("GET", "/api/v2/authorizations", None, 403),
+    ("POST", "/api/v2/buckets", {"name": "route-bucket"}, 403),
+    ("GET", "/api/v2/buckets", None, None),
+    ("POST", "/api/v2/tasks", {"flux": _route_task_flux("route-create")}, 403),
+    ("GET", "/api/v2/tasks", None, None),
+    ("GET", "/api/v2/tasks/{task}", None, None),
+    ("DELETE", "/api/v2/tasks/{task}", None, 403),
+    ("PATCH", "/api/v2/tasks/{task}", {"status": "inactive"}, 403),
+    ("POST", "/api/v2/tasks/{task}/runs", {}, 403),
+]
+_OPEN_ROUTES = {"/ping", "/health", "/api/v2/setup"}
+
+
+def test_v2_route_cases_cover_every_route():
+    """Each row of ``_V2_ROUTES`` has exactly one case above."""
+    from aws_greengrass_labs_database_influxdb_spark.control.httpapi import _V2_ROUTES
+
+    cases = [(method, urllib.parse.urlsplit(path.format(task="1")).path)
+             for method, path, _body, _ro in _V2_ROUTE_CASES]
+    for route in _V2_ROUTES:
+        hits = [c for c in cases
+                if c[0] == route.method and route.path.fullmatch(c[1])]
+        assert len(hits) == 1, route
+    assert len(cases) == len(_V2_ROUTES)
+
+
+@pytest.mark.parametrize("method, path, body, ro", _V2_ROUTE_CASES,
+                         ids=[f"{c[0]} {c[1].split('?')[0]}" for c in _V2_ROUTE_CASES])
+def test_v2_route_grants(served, method, path, body, ro):
+    """Every route but the three open probes answers 401 without a
+    token, and the RO token is refused on each mutating route."""
+    base, _, tokens = served
+    task = None
+    if "{task}" in path:
+        _, created = _req(base, "/api/v2/tasks", "POST", token=tokens["Admin"],
+                          body={"flux": _route_task_flux(f"route-{method}")})
+        task = json.loads(created)["id"]
+        path = path.format(task=task)
+
+    def status(token):
+        try:
+            return _req(base, path, method, token=token, body=body)[0]
+        except urllib.error.HTTPError as e:
+            return e.code
+
+    try:
+        if path in _OPEN_ROUTES:
+            assert status(None) in (200, 204)
+        else:
+            assert status(None) == 401
+        if ro is not None:
+            assert status(tokens["RO"]) == ro
+    finally:
+        if task is not None:
+            _req(base, f"/api/v2/tasks/{task}", "DELETE", token=tokens["Admin"])
+
+
+@pytest.mark.parametrize("method, path", [
+    ("GET", "/api/v2/write"), ("PATCH", "/api/v2/tasks"), ("DELETE", "/query"),
+    ("POST", "/ping"), ("GET", "/api/v2/delete"), ("PATCH", "/api/v2/buckets"),
+    ("POST", "/api/v2/tasks/1"), ("GET", "/api/v2/tasks/1/runs"),
+])
+def test_v2_wrong_method_is_404(served, method, path):
+    """A wrong method on a known path answers like an unknown path."""
+    base, _, tokens = served
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _req(base, path, method, token=tokens["Admin"])
+    assert e.value.code == 404
+    assert json.loads(e.value.read()) == {
+        "code": "not found", "message": f"path not found: {path}"}
 
 
 def test_v2_task_windowed_quantile(served):
