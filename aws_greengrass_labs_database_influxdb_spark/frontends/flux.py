@@ -9,7 +9,7 @@ Supported pipeline stages (the telemetry-dashboard core):
 
     from(bucket: "b")
     range(start: <time|duration|int>, stop: ...)
-    filter(fn: (r) => <conjunction of comparisons on r.cols>)
+    filter(fn: (r) => <boolean expression over r.cols>)
     group(columns: ["a"], mode: "by"|"except")
     window(every: 1m) / aggregateWindow(every: 1m, fn: mean,
         createEmpty: false)
@@ -42,6 +42,7 @@ import calendar
 import contextlib
 import dataclasses
 import datetime as dt
+import operator
 import re
 from collections.abc import Callable
 from typing import NamedTuple
@@ -53,10 +54,11 @@ from ..operators.errors import OperatorValidationError
 from ..operators.windows import duration_ns, duration_parts
 from ..plans.pipeline import Pipeline, from_points, merge_range_bounds
 from ..schema import SLOT_OF_FTYPE, tag_set_key
-
-
-class FluxError(ValueError):
-    pass
+from .flux_expr import (
+    Array, Binary, Call, Cond, FluxError, Lit, Record, Ref, Unary,
+    _unescape_flux_str, compile_scalar, conjuncts, const, eq_literals,
+    parse_expr, parse_fn, refs,
+)
 
 
 @contextlib.contextmanager
@@ -562,90 +564,17 @@ def _carry_slot_cache(src: DataFrame, dst: DataFrame,
         _LIVE_SLOT_CACHE[dst] = pruned
 
 
-def _pred_eq_literals(pred_src: str, flux_col: str) -> set | None:
-    """The set of values a filter predicate provably constrains
-    ``flux_col`` to, or None when unconstrained.
-
-    Conservative textual analysis of the Flux predicate source, with
-    FLUX PRECEDENCE — ``and`` binds tighter than ``or``, so ``m ==
-    "cpu" and v > 1 or m == "logs"`` constrains to {cpu, logs}. Split
-    on top-level ``or`` first: the result is sound only
-    if EVERY disjunct constrains the column, and the answer is the
-    UNION of the disjuncts' sets. Within a disjunct, split on ``and``:
-    constraining conjuncts INTERSECT, non-constraining ones
-    (inequalities, regex, other columns) contribute nothing — sound,
-    the filter only removes more rows. Parenthesized groups recurse."""
-    def _split(src: str, sep: str) -> list[str]:
-        parts, buf, depth, instr = [], [], 0, False
-        toks = re.split(rf"(\s{sep}\s)", src)
-        for t in toks:
-            if depth == 0 and not instr and re.fullmatch(rf"\s{sep}\s", t):
-                parts.append("".join(buf))
-                buf = []
-                continue
-            buf.append(t)
-            for ch in t:
-                if instr:
-                    instr = ch != '"'
-                elif ch == '"':
-                    instr = True
-                elif ch in "([{":
-                    depth += 1
-                elif ch in ")]}":
-                    depth -= 1
-        parts.append("".join(buf))
-        return parts
-
-    eq_rx = re.compile(
-        rf'^\s*(?:r\.{flux_col}|r\["{flux_col}"\])\s*==\s*"((?:[^"\\]|\\.)*)"\s*$'
-    )
-
-    def _peel(src: str) -> str:
-        src = src.strip()
-        while src.startswith("(") and src.endswith(")"):
-            inner = src[1:-1].strip()
-            # only peel when the parens wrap the WHOLE expression
-            depth, ok = 0, True
-            for ch in inner:
-                if ch in "([{":
-                    depth += 1
-                elif ch in ")]}":
-                    depth -= 1
-                    if depth < 0:
-                        ok = False
-                        break
-            if not ok or depth != 0:
-                break
-            src = inner
-        return src
-
-    def _analyze(src: str) -> set | None:
-        src = _peel(src)
-        disjuncts = _split(src, "or")
-        if len(disjuncts) > 1:
-            acc: set = set()
-            for d in disjuncts:
-                s = _analyze(d)
-                if s is None:
-                    return None  # one unconstrained disjunct voids all
-                acc |= s
-            return acc
-        conjuncts = _split(src, "and")
-        if len(conjuncts) > 1:
-            allowed: set | None = None
-            for cpart in conjuncts:
-                s = _analyze(cpart)
-                if s is not None:
-                    allowed = s if allowed is None else allowed & s
-            return allowed
-        m = eq_rx.match(src)
-        return {_unescape_flux_str(m.group(1))} if m else None
-
-    return _analyze(pred_src)
+def _pred_eq_literals(pred, flux_col: str) -> set | None:
+    """The set of values a filter predicate (a parsed body, or its
+    source over ``r``) provably constrains ``flux_col`` to, or None when
+    unconstrained — :func:`.flux_expr.eq_literals` over the one tree,
+    so ``and`` binds tighter than ``or`` and string literals never
+    split."""
+    return eq_literals(
+        parse_expr(pred, ("r",)) if isinstance(pred, str) else pred, flux_col)
 
 
-def _narrow_catalog_on_filter(src: DataFrame, dst: DataFrame,
-                              pred_src: str) -> None:
+def _narrow_catalog_on_filter(src: DataFrame, dst: DataFrame, pred) -> None:
     """Narrow the catalog class map and live-slot superset through a
     measurement/field equality filter: ``filter(fn: (r) =>
     r._measurement == "m")`` is THE standard Flux idiom, and after it
@@ -657,8 +586,8 @@ def _narrow_catalog_on_filter(src: DataFrame, dst: DataFrame,
     cat = _CATALOG_CLASS_CACHE.get(src)
     if cat is None or dst is src:
         return
-    meas = _pred_eq_literals(pred_src, "_measurement")
-    fld = _pred_eq_literals(pred_src, "_field")
+    meas = _pred_eq_literals(pred, "_measurement")
+    fld = _pred_eq_literals(pred, "_field")
     if meas is None and fld is None:
         return
     narrowed = {
@@ -814,270 +743,6 @@ def _col(df: DataFrame, name: str) -> Column:
     raise FluxError(f"unknown column {name!r}")
 
 
-_CMP_RX = re.compile(
-    r'r(?:\.(\w+)|\["(\w+)"\])\s*(==|!=|>=|<=|>|<|=~|!~)\s*'
-    r'("(?:[^"\\]|\\.)*"'
-    r"|\d{4}-\d{2}-\d{2}(?:T\d{2}:\d{2}:\d{2}(?:\.\d+)?Z)?"  # RFC3339 time
-    # numeric incl. scientific notation — without the exponent branch
-    # `r._value > 1e18` silently truncated to `> 1`
-    r"|-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?|true|false|/[^/]*/)"
-)
-
-_ISO_LIT_RX = re.compile(r"^\d{4}-\d{2}-\d{2}(?:T\d{2}:\d{2}:\d{2}(?:\.\d+)?Z)?$")
-
-
-_EXISTS_RX = re.compile(r'(not\s+)?exists\s+r(?:\.(\w+)|\["(\w+)"\])')
-
-
-_CONTAINS_RX = re.compile(
-    r'contains\(\s*value:\s*r(?:\.(\w+)|\["(\w+)"\])\s*,\s*set:\s*\[([^\]]*)\]\s*\)'
-)
-
-
-def _parse_predicate(df: DataFrame, body: str) -> Column:
-    """Boolean combination of r.<col> <op> <literal> comparisons,
-    ``[not] exists r.<col>`` null checks, and ``contains()`` — with
-    Flux precedence (``and`` binds tighter than ``or``) and
-    parenthesized grouping: ``A or B and C`` is ``A or (B and C)``."""
-    body = body.strip()
-    pos = 0
-    tokens: list = []  # Columns and 'and'/'or'/'('/')'
-
-    def _connectives(gap: str) -> None:
-        """Emit the and/or/not/paren tokens appearing between two
-        comparisons, in source order. (``not exists`` never reaches
-        here — _EXISTS_RX consumes its ``not``.) Any OTHER text in a
-        gap is a parse error — silently skipping it turned
-        half-matched literals into wrong filters."""
-        residue = re.sub(r"\(|\)|\band\b|\bor\b|\bnot\b|\s+", "", gap)
-        if residue:
-            raise FluxError(
-                f"cannot parse predicate fragment {residue!r} in {body!r}"
-            )
-        for t in re.findall(r"\(|\)|\band\b|\bor\b|\bnot\b", gap):
-            tokens.append(t)
-
-    while pos < len(body):
-        m = _CMP_RX.search(body, pos)
-        me = _EXISTS_RX.search(body, pos)
-        mc = _CONTAINS_RX.search(body, pos)
-        if mc and (not m or mc.start() < m.start()) and (
-            not me or mc.start() < me.start()
-        ):
-            _connectives(body[pos : mc.start()])
-            c = _col(df, mc.group(1) or mc.group(2))
-            vals = [_lit(v.strip()) for v in mc.group(3).split(",") if v.strip()]
-            tokens.append(c.isin(vals))
-            pos = mc.end()
-            continue
-        if me and (not m or me.start() < m.start()):
-            _connectives(body[pos : me.start()])
-            c = _col(df, me.group(2) or me.group(3))
-            tokens.append(c.isNull() if me.group(1) else c.isNotNull())
-            pos = me.end()
-            continue
-        if not m:
-            _connectives(body[pos:])
-            break
-        _connectives(body[pos : m.start()])
-        name = m.group(1) or m.group(2)
-        op, lit = m.group(3), m.group(4)
-        c = _col(df, name)
-        # kind bookkeeping for the cross-type comparison rules. Stock
-        # Flux: EQUALITY across types is legal
-        # and false; ORDERING comparisons type-conflict; regex matches
-        # strings only. `bound` is the physical column the comparison
-        # reads (None = derived/unknown → rules don't apply).
-        _KINDS = {"boolean": "bool", "string": "string", "double": "float",
-                  "float": "float", "bigint": "int", "int": "int",
-                  "smallint": "int", "tinyint": "int"}
-        real0 = _colname(df, name)
-        if real0 in df.columns:
-            if real0 == "f_float":
-                # the live slot, not the physical default — a string
-                # series' _value IS its f_str, so the comparison reads
-                # it (mixed frames resolve to f_float and keep the
-                # documented lenient per-literal slot binding below)
-                resolved = _value_slot_runtime(df, real0)
-                if resolved != real0:
-                    real0 = resolved
-                    c = F.col(real0)
-            bound = real0
-            bound_kind = _KINDS.get(dict(df.dtypes).get(real0))
-        elif "tags" in df.columns:
-            bound, bound_kind = None, "string"  # tags-map access
-        else:
-            bound, bound_kind = None, None
-        lit_kind = None
-        if _ISO_LIT_RX.match(lit):
-            # RFC3339 time literal: compare on the exact-ns column
-            # (canonical frames always carry time_ns; the µs timestamp
-            # column would silently truncate sub-µs bounds)
-            val = _time_to_ns(lit, 0)
-            if _colname(df, name) == "time":
-                if "time_ns" in df.columns:
-                    c = F.col("time_ns")
-                elif "time" in df.columns:
-                    # keep()/drop() may have pruned time_ns; re-derive it
-                    # from the µs timestamp rather than comparing a
-                    # timestamp column against an epoch-ns long
-                    c = F.unix_micros(F.col("time")) * F.lit(1000)
-                else:
-                    raise FluxError(
-                        "time comparison requires a _time column in the frame"
-                    )
-        elif lit.startswith('"'):
-            val = lit[1:-1]
-            lit_kind = "string"
-            real = real0
-            if real == "f_float" and "f_str" in df.columns:
-                # _value compared to a STRING literal: bind the string
-                # slot (stock Flux's _value is typed per table and a
-                # string table compares strings)
-                c, bound_kind = F.col("f_str"), "string"
-            elif (real.startswith("f_float_")
-                    and "f_str" + real[7:] in df.columns):
-                # join-suffixed _value_<side> vs string literal
-                c, bound_kind = F.col("f_str" + real[7:]), "string"
-        elif lit in ("true", "false"):
-            val = lit == "true"
-            lit_kind = "bool"
-            real = real0
-            if real == "f_float" and "f_bool" in df.columns:
-                # _value compared to a BOOL literal → the bool slot
-                c, bound_kind = F.col("f_bool"), "bool"
-            elif (real.startswith("f_float_")
-                    and "f_bool" + real[7:] in df.columns):
-                c, bound_kind = F.col("f_bool" + real[7:]), "bool"
-        elif lit.startswith("/"):
-            val = lit[1:-1]
-            lit_kind = "regex"
-            real = real0
-            if (op in ("=~", "!~") and real == "f_float"
-                    and "f_str" in df.columns):
-                # regex on _value: only the string slot can match
-                c, bound_kind = F.col("f_str"), "string"
-            elif (op in ("=~", "!~") and real.startswith("f_float_")
-                    and "f_str" + real[7:] in df.columns):
-                c, bound_kind = F.col("f_str" + real[7:]), "string"
-        else:
-            try:
-                val = (
-                    float(lit) if ("." in lit or "e" in lit or "E" in lit)
-                    else int(lit)
-                )
-            except ValueError:
-                raise FluxError(
-                    f"cannot parse comparison literal {lit!r}"
-                ) from None
-            if name == "_value" or COLMAP.get(name) == "f_float":
-                val = float(val)
-            lit_kind = "int" if isinstance(val, int) else "float"
-        # cross-type comparison rules (stock Flux): a comparison whose
-        # operand types conflict is a runtime "type conflict" error
-        # when evaluated, never an ANSI cast failure or a read of the
-        # dead float slot. Applied only
-        # when the bound column's kind is KNOWABLE: single-typed
-        # frames (live-slot resolution above) and tag accesses. Mixed
-        # frames keep the documented lenient slot binding — stock
-        # accepts the common `r._field == "x" and r._value == <lit>`
-        # idiom through and-short-circuiting, which the slot binding
-        # reproduces without per-row type dispatch.
-        _NUMK = {"int", "float"}
-        if bound_kind and lit_kind:
-            same = (bound_kind == lit_kind
-                    or (bound_kind in _NUMK and lit_kind in _NUMK))
-            if lit_kind == "regex":
-                if op in ("=~", "!~") and bound_kind != "string":
-                    raise FluxError(
-                        f"type conflict: {bound_kind} {op} regexp"
-                    )
-            elif not same:
-                raise FluxError(
-                    f"type conflict: {bound_kind} {op} {lit_kind}"
-                )
-        expr = {
-            "==": lambda: c == val,
-            "!=": lambda: c != val,
-            ">": lambda: c > val,
-            ">=": lambda: c >= val,
-            "<": lambda: c < val,
-            "<=": lambda: c <= val,
-            "=~": lambda: c.rlike(val),
-            # Flux !~: matches-regex negated; a null operand (missing
-            # tag) propagates null and the filter drops the row, the
-            # engine's null-comparison behavior
-            "!~": lambda: ~c.rlike(val),
-        }[op]()
-        tokens.append(expr)
-        pos = m.end()
-    if not tokens or not any(isinstance(t, Column) for t in tokens):
-        raise FluxError(f"cannot parse predicate {body!r}")
-    # recursive descent over the token stream:
-    #   or-expr := and-expr ('or' and-expr)*
-    #   and-expr := primary ('and' primary)*
-    #   primary := '(' or-expr ')' | comparison
-    idx = [0]
-
-    def _at(tok: str) -> bool:
-        # NB: ``==`` on a pyspark Column builds an expression — the
-        # token kind must be checked first
-        t = tokens[idx[0]] if idx[0] < len(tokens) else None
-        return isinstance(t, str) and t == tok
-
-    def _primary() -> Column:
-        if _at("not"):
-            idx[0] += 1
-            return ~_primary()
-        if _at("("):
-            idx[0] += 1
-            e = _or_expr()
-            if not _at(")"):
-                raise FluxError(f"unbalanced parens in predicate {body!r}")
-            idx[0] += 1
-            return e
-        t = tokens[idx[0]] if idx[0] < len(tokens) else None
-        if not isinstance(t, Column):
-            raise FluxError(f"cannot parse predicate {body!r}")
-        idx[0] += 1
-        return t
-
-    def _and_expr() -> Column:
-        e = _primary()
-        while _at("and"):
-            idx[0] += 1
-            e = e & _primary()
-        return e
-
-    def _or_expr() -> Column:
-        e = _and_expr()
-        while _at("or"):
-            idx[0] += 1
-            e = e | _and_expr()
-        return e
-
-    out = _or_expr()
-    if idx[0] != len(tokens):
-        raise FluxError(f"trailing tokens in predicate {body!r}")
-    return out
-
-
-#: standard Flux string escapes (public spec: \n \r \t \" \\ \$);
-#: unknown sequences pass through verbatim
-_FLUX_ESCAPES = {"n": "\n", "r": "\r", "t": "\t", '"': '"',
-                 "\\": "\\", "$": "$"}
-
-
-def _unescape_flux_str(s: str) -> str:
-    """One regex pass over Flux escapes — sequential replaces corrupt
-    inputs where an escaped backslash precedes an escape letter."""
-    return re.sub(
-        r"\\(.)",
-        lambda m: _FLUX_ESCAPES.get(m.group(1), "\\" + m.group(1)),
-        s,
-    )
-
-
 def _bit_shift(kind: str, a: Column, b: Column) -> Column:
     """bitwise shift with Go/Flux >= 64 semantics: the
     JVM masks the count mod 64 (shiftleft(a, 64) == a), Go shifts out
@@ -1175,17 +840,6 @@ def _location_value(expr: str) -> str:
         return _lit(s)
     raise FluxError(f"unsupported location value {expr!r}")
 
-
-_ARITH_TOKEN_RX = re.compile(
-    r'r\.\w+|r\["[^"]+"\]'
-    r"|\d+(?:ns|us|ms|mo|[smhdwy])\b"  # duration literal (before numbers)
-    r"|\d+(?:\.\d+)?(?:[eE][+-]?\d+)?"  # incl. scientific notation
-    r'|"(?:[^"\\]|\\.)*"'
-    r"|(?:strings|math|date)\.\w+|\b(?:float|int|uint|string)\b|\w+:|[(),+\-*/%]"
-    # any other identifier (unknown function name, bare word): tokenized
-    # so the parser can raise a typed FluxError, not skip it silently
-    r"|[A-Za-z_][A-Za-z0-9_.]*"
-)
 
 # Flux stdlib functions usable inside map(): labeled-argument calls
 # compiled to JVM-side Column expressions (no UDF). Each entry maps
@@ -1320,325 +974,413 @@ _MAP_FUNCS: dict = {
 }
 
 
-def _geo_st_fn(df: DataFrame, fn: str, argstr: str) -> Column:
-    """``geo.ST_Distance/ST_DWithin/ST_Contains`` inside map()/filter():
-    region is a literal record, geometry a {lat:, lon:} record whose
-    values may reference row columns. Haversine km, all Column trig."""
-    from ..operators import geo as geo_ops
-
-    args = _split_args(argstr)
-    if "geometry" not in args or "region" not in args:
-        raise FluxError(f"geo.{fn} requires region: and geometry:")
-    g = {k: _parse_arith(df, v) for k, v in _record_refs(args["geometry"])}
-    if "lat" not in g or "lon" not in g:
-        raise FluxError(f"geo.{fn} geometry must be a {{lat:, lon:}} record")
-    region = _parse_geo_region(args["region"])
-    if fn == "ST_Contains":
-        try:
-            return geo_ops.region_strict_predicate(region, g["lat"], g["lon"])
-        except OperatorValidationError as e:
-            raise FluxError(str(e)) from None
-    if not ({"lat", "lon"} <= region.keys() and "radius" not in region):
-        raise FluxError(
-            f"geo.{fn} needs a point region ({{lat:, lon:}}) — distances "
-            "to box/circle/polygon edges are not supported"
-        )
-    dist = geo_ops.haversine_km(
-        g["lat"], g["lon"], F.lit(region["lat"]), F.lit(region["lon"])
-    )
-    if fn == "ST_Distance":
-        return dist
-    if "distance" not in args:
-        raise FluxError("geo.ST_DWithin requires distance:")
-    try:
-        radius_km = _float_lit(args["distance"])
-    except (TypeError, ValueError):
-        # a column reference or non-numeric literal
-        raise FluxError(
-            "geo.ST_DWithin distance: must be a numeric literal"
-        ) from None
-    return dist <= F.lit(radius_km)
-
-
-_GEO_ST_RX = re.compile(
-    r"^geo\.(ST_Distance|ST_DWithin|ST_Contains)\s*\((.*)\)$", re.DOTALL
-)
-
-
-def _parse_map_value(df: DataFrame, s: str) -> Column:
-    """A ``map()`` field value: either Flux conditional syntax
-    ``if <pred> then <v> else <v>`` (chainable via ``else if``, the
-    dashboard banding idiom) compiled to ``F.when``, or plain
-    arithmetic. All JVM-side — no UDF."""
-    s = s.strip()
-    gm = _GEO_ST_RX.match(s)
-    if gm:
-        return _geo_st_fn(df, gm.group(1), gm.group(2))
-    m = re.match(r"(?s)^if\s+(.+?)\s+then\s+(.+?)\s+else\s+(.+)$", s)
-    if m:
-        try:
-            cond = _parse_predicate(df, m.group(1))
-        except FluxError:
-            # boolean-returning stdlib calls (strings.containsStr,
-            # hasPrefix, ...) as the condition
-            cond = _parse_arith(df, m.group(1))
-        return F.when(cond, _parse_map_value(df, m.group(2))).otherwise(
-            _parse_map_value(df, m.group(3))
-        )
-    # boolean-valued map field (`hot: r._value > 10.0`, the Flux
-    # threshold-flag idiom) — a comparison operator routes the whole
-    # expression through the predicate parser
-    if re.search(r"==|!=|>=|<=|[<>]|=~|!~|\bexists\b", s):
-        return _parse_predicate(df, s)
-    return _parse_arith(df, s)
-
-
-#: map functions whose RESULT is a string (drives `+`-as-concat)
-_MAP_FN_STR = {
-    "strings.toUpper", "strings.toLower", "strings.trimSpace",
-    "strings.trim", "strings.trimLeft", "strings.trimRight",
-    "strings.replaceAll", "strings.substring", "strings.repeat",
-    "string", "display",
+#: map functions whose result is a string (drives ``+``-as-concat) or a
+#: boolean (valid as a predicate); every other result is numeric
+_MAP_FN_KIND = {
+    **dict.fromkeys((
+        "strings.toUpper", "strings.toLower", "strings.trimSpace",
+        "strings.trim", "strings.trimLeft", "strings.trimRight",
+        "strings.replaceAll", "strings.substring", "strings.repeat",
+        "string", "display"), "str"),
+    **dict.fromkeys((
+        "strings.containsStr", "strings.hasPrefix", "strings.hasSuffix",
+        "bool"), "bool"),
 }
-
 
 #: operand kind → the Flux type name used in stock's binary-expression
 #: type errors (the engine's arithmetic runs in doubles, so "num" reads
 #: as float)
 _FLUX_KIND = {"num": "float", "str": "string", "bool": "bool"}
 
+#: Spark dtype → Flux kind of a compared column
+_SPARK_KIND = {"boolean": "bool", "string": "string", "double": "float",
+               "float": "float", "bigint": "int", "int": "int",
+               "smallint": "int", "tinyint": "int"}
 
-def _parse_arith(df: DataFrame, s: str) -> Column:
-    """Arithmetic over row fields for ``map()``: ``r.col``/``r["col"]``,
-    numeric/string literals, ``+ - * / %`` and parens — compiled to a
-    Column expression (JVM-side, no UDF). ``+`` with a string operand
-    is Flux string concatenation — operand string-ness is inferred
-    from the frame schema / literal form / function table."""
-    tokens = _ARITH_TOKEN_RX.findall(s)
-    if not tokens:
-        raise FluxError(f"cannot parse map expression {s!r}")
-    pos = [0]
-    dtypes = dict(df.dtypes)
+_ARITH = {"+": operator.add, "-": operator.sub, "*": operator.mul,
+          "/": operator.truediv, "%": operator.mod}
 
-    def peek():
-        return tokens[pos[0]] if pos[0] < len(tokens) else None
+_COMPARE = {
+    "==": operator.eq, "!=": operator.ne, ">": operator.gt,
+    ">=": operator.ge, "<": operator.lt, "<=": operator.le,
+    "=~": lambda c, v: c.rlike(v),
+    # Flux !~: matches-regex negated; a null operand (missing tag)
+    # propagates null and the filter drops the row, the engine's
+    # null-comparison behavior
+    "!~": lambda c, v: ~c.rlike(v),
+}
 
-    def eat():
-        t = tokens[pos[0]]
-        pos[0] += 1
-        return t
 
-    def factor() -> tuple[Column, bool]:
-        t = peek()
-        if t is None:
-            raise FluxError(f"truncated map expression {s!r}")
-        if t == "(":
-            eat()
-            e = expr()
-            if peek() != ")":
-                raise FluxError(f"unbalanced parens in {s!r}")
-            eat()
-            return e
-        if t == "-":
-            eat()
-            e, kind = factor()
-            if kind != "num":
-                raise FluxError(
-                    f"unsupported unary expression -{_FLUX_KIND[kind]}"
-                )
-            return -e, "num"
-        if t in _MAP_FUNCS:
-            eat()
-            labels, builder = _MAP_FUNCS[t]
-            if peek() != "(":
-                raise FluxError(f"expected '(' after {t} in {s!r}")
-            eat()
-            got: dict[str, Column] = {}
-            while peek() != ")":
-                lab = eat()
-                if not lab.endswith(":"):
-                    raise FluxError(f"expected label in {t} call in {s!r}")
-                got[lab[:-1]] = expr()[0]
-                if peek() == ",":
-                    eat()
-            eat()  # ")"
-            try:
-                return (builder(*[got[l] for l in labels]),
-                        "str" if t in _MAP_FN_STR else "num")
-            except KeyError as missing:
-                raise FluxError(f"{t} missing argument {missing} in {s!r}")
-        eat()
-        if t.startswith('r["') or t.startswith("r."):
-            raw = t[3:-2] if t.startswith('r["') else t[2:]
-            name = _colname(df, raw)
-            if name in dtypes:
-                if name == "f_float":
-                    # r._value on a string/bool-typed frame means that
-                    # slot, as in the comparison binding
-                    resolved = _value_slot_runtime(df, name)
-                    if (resolved == "f_float"
-                            and any(s in dtypes for s in ("f_str", "f_bool"))
-                            and len(_live_slots(df)) > 1):
-                        # MIXED frame: an arithmetic read
-                        # of _value cannot bind one slot — stock map
-                        # evaluates per table and the op type-errors
-                        # the mismatched table, failing the query
-                        # ("unsupported binary expression float +
-                        # string"); the dead-slot binding silently
-                        # nulled every non-float row instead
-                        live_t = {"f_float": "float", "f_str": "string",
-                                  "f_bool": "bool"}
-                        types = " and ".join(live_t[s]
-                                             for s in _live_slots(df))
-                        raise FluxError(
-                            "type conflict in map(): _value is "
-                            f"{types} across input tables"
-                        )
-                    name = resolved
-                elif name.startswith("f_float_"):
-                    # join-suffixed _value_<side>: bind the side's own
-                    # live slot
-                    name = _suffixed_live_slot(df, name)
-                kind = ("str" if dtypes[name] == "string"
-                        else "bool" if dtypes[name] == "boolean" else "num")
-                return F.col(name), kind
+class _Columns:
+    """The Column walk of one expression tree over ``df``: each node
+    compiles to ``(Column, kind)``, kind "num", "str" or "bool" — the
+    Flux type that picks ``+``-as-concat and the stock type errors.
+    ``stage`` names the Flux stage in its errors. All JVM-side, no UDF."""
+
+    def __init__(self, df: DataFrame, stage: str):
+        self.df = df
+        self.dtypes = dict(df.dtypes)
+        self.stage = stage
+
+    def name_of(self, ref: Ref) -> str:
+        """The name member ``ref`` reads in ``df``: its field. reduce()'s
+        accumulator is no column of ``df``, so reading it stops the walk
+        (and sends the fold to its sequential path)."""
+        if ref.param == "accumulator":
+            raise FluxError(f"{self.stage}(): accumulator.{ref.field} is "
+                            "not a column of the input rows")
+        if ref.field is None:
+            raise FluxError(f"{ref.param!r} is a record, not a value")
+        return ref.field
+
+    def predicate(self, node) -> Column:
+        col, kind = self.value(node)
+        if kind != "bool":
+            raise FluxError(
+                f"cannot parse predicate: expected a bool, got {_FLUX_KIND[kind]}")
+        return col
+
+    def value(self, node) -> tuple[Column, str]:
+        df = self.df
+        match node:
+            case Lit("string", v):
+                return F.lit(v), "str"
+            case Lit("bool", v):
+                return F.lit(v), "bool"
+            case Lit("int" | "float" | "duration", v):
+                return F.lit(v), "num"
+            case Lit("regex", _):
+                raise FluxError("regex literal needs =~ or !~")
+            case Ref():
+                return self.member(self.name_of(node))
+            case Unary("-", arg):
+                col, kind = self.value(arg)
+                if kind != "num":
+                    raise FluxError(
+                        f"unsupported unary expression -{_FLUX_KIND[kind]}")
+                return -col, "num"
+            case Unary("not", Unary("exists", ref)):
+                return _col(df, self.name_of(ref)).isNull(), "bool"
+            case Unary("exists", ref):
+                return _col(df, self.name_of(ref)).isNotNull(), "bool"
+            case Unary("not", arg):
+                return ~self.predicate(arg), "bool"
+            case Binary("and", left, right):
+                return self.predicate(left) & self.predicate(right), "bool"
+            case Binary("or", left, right):
+                return self.predicate(left) | self.predicate(right), "bool"
+            case Binary(op, Ref() as ref, right) if (
+                    op in _COMPARE and (lit := _cmp_literal(right))):
+                return _compare_member(df, self.name_of(ref), op, lit), "bool"
+            case Binary("=~" | "!~" as op, left, Lit("regex", pattern)):
+                col, kind = self.value(left)
+                if kind != "str":
+                    raise FluxError(
+                        f"type conflict: {_FLUX_KIND[kind]} {op} regexp")
+                return _COMPARE[op](col, pattern), "bool"
+            case Binary(op, left, right):
+                (a, ka), (b, kb) = self.value(left), self.value(right)
+                if op in _COMPARE:
+                    if ka != kb:
+                        raise FluxError(f"type conflict: {_FLUX_KIND[ka]} "
+                                        f"{op} {_FLUX_KIND[kb]}")
+                    return _COMPARE[op](a, b), "bool"
+                if op == "+" and "str" in (ka, kb):
+                    # Flux string concatenation. Lenient divergence:
+                    # stock only concats string + string; number
+                    # operands are stringified here rather than rejected
+                    return F.concat(a.cast("string"), b.cast("string")), "str"
+                if ka != "num" or kb != "num":
+                    # stock type-errors arithmetic over string/bool
+                    # operands; the slot binding would compile it and
+                    # fail with an ANSI cast at collect time
+                    raise FluxError("unsupported binary expression "
+                                    f"{_FLUX_KIND[ka]} {op} {_FLUX_KIND[kb]}")
+                return _ARITH[op](a, b), "num"
+            case Cond(test, then, other):
+                cond = self.predicate(test)
+                col, kind = self.value(then)
+                return F.when(cond, col).otherwise(self.value(other)[0]), kind
+            case Call(name, args):
+                return self.call(name, dict(args))
+        raise FluxError(
+            f"unsupported {type(node).__name__.lower()} in an expression")
+
+    def member(self, name: str) -> tuple[Column, str]:
+        """A record member read as a value. ``_value`` binds the live
+        slot; a join-suffixed ``_value_<side>`` its side's live slot."""
+        df, dtypes = self.df, self.dtypes
+        real = _colname(df, name)
+        if real not in dtypes:
             # tags-map fallback: tag values are strings by model
-            return _col(df, raw), "str"
-        if t.startswith('"'):
-            return F.lit(t[1:-1]), "str"
-        if re.fullmatch(r"\d+(?:ns|us|ms|mo|[smhdwy])", t):
-            return F.lit(duration_ns(t)), "num"
-        if t in ("true", "false"):
-            return F.lit(t == "true"), "bool"
-        if re.match(r"^[A-Za-z_]", t):
+            return _col(df, name), "str"
+        if real == "f_float":
+            # r._value on a string/bool-typed frame means that slot, as
+            # in the comparison binding
+            resolved = _value_slot_runtime(df, real)
+            if (resolved == "f_float"
+                    and any(s in dtypes for s in ("f_str", "f_bool"))
+                    and len(_live_slots(df)) > 1):
+                # MIXED frame: a read of _value cannot bind one slot —
+                # stock evaluates per table and the op type-errors the
+                # mismatched table, failing the query; the dead-slot
+                # binding silently nulled every non-float row instead
+                live_t = {"f_float": "float", "f_str": "string",
+                          "f_bool": "bool"}
+                types = " and ".join(live_t[s] for s in _live_slots(df))
+                raise FluxError(
+                    f"type conflict in {self.stage}(): _value is {types} "
+                    "across input tables")
+            real = resolved
+        elif real.startswith("f_float_"):
+            real = _suffixed_live_slot(df, real)
+        kind = ("str" if dtypes[real] == "string"
+                else "bool" if dtypes[real] == "boolean" else "num")
+        return F.col(real), kind
+
+    def call(self, name: str, args: dict) -> tuple[Column, str]:
+        if name in _MAP_FUNCS:
+            labels, builder = _MAP_FUNCS[name]
+            got = {k: self.value(v)[0] for k, v in args.items()}
+            try:
+                col = builder(*[got[k] for k in labels])
+            except KeyError as missing:
+                raise FluxError(f"{name} missing argument {missing}") from None
+            return col, _MAP_FN_KIND.get(name, "num")
+        if name == "contains":
+            value, members = args.get("value"), args.get("set")
+            vals = ([const(m) for m in members.items]
+                    if isinstance(members, Array) else [None])
+            if not isinstance(value, Ref) or None in vals:
+                raise FluxError(
+                    "contains() needs value: r.<column> and set: [literals]")
+            return _col(self.df, self.name_of(value)).isin(vals), "bool"
+        if name in ("geo.ST_Distance", "geo.ST_DWithin", "geo.ST_Contains"):
+            return self.geo(name, args)
+        raise FluxError(f"unsupported function or identifier {name!r}")
+
+    def geo(self, fn: str, args: dict) -> tuple[Column, str]:
+        """``geo.ST_Distance/ST_DWithin/ST_Contains``: region is a
+        literal record, geometry a {lat:, lon:} record whose values may
+        read row columns. Haversine km, all Column trig."""
+        from ..operators import geo as geo_ops
+
+        if "geometry" not in args or "region" not in args:
+            raise FluxError(f"{fn} requires region: and geometry:")
+        geometry = args["geometry"]
+        g = ({k: self.value(v)[0] for k, v in geometry.fields}
+             if isinstance(geometry, Record) else {})
+        if "lat" not in g or "lon" not in g:
+            raise FluxError(f"{fn} geometry must be a {{lat:, lon:}} record")
+        region = _geo_region(args["region"])
+        if fn == "geo.ST_Contains":
+            try:
+                return (geo_ops.region_strict_predicate(
+                    region, g["lat"], g["lon"]), "bool")
+            except OperatorValidationError as e:
+                raise FluxError(str(e)) from None
+        if not ({"lat", "lon"} <= region.keys() and "radius" not in region):
             raise FluxError(
-                f"unsupported function or identifier {t!r} in map expression {s!r}"
+                f"{fn} needs a point region ({{lat:, lon:}}) — distances "
+                "to box/circle/polygon edges are not supported"
             )
-        return (
-            F.lit(float(t) if ("." in t or "e" in t or "E" in t) else int(t)),
-            "num",
+        dist = geo_ops.haversine_km(
+            g["lat"], g["lon"], F.lit(region["lat"]), F.lit(region["lon"])
         )
-
-    def _reject_nonnum(op: str, lk: str, rk: str) -> None:
-        # stock map() type-errors arithmetic over string/bool operands
-        # ("unsupported binary expression string * float"); the slot
-        # binding would compile it and fail with an ANSI cast at
-        # collect time
-        if lk != "num" or rk != "num":
+        if fn == "geo.ST_Distance":
+            return dist, "num"
+        radius_km = _number(args.get("distance"))
+        if radius_km is None:
             raise FluxError(
-                "unsupported binary expression "
-                f"{_FLUX_KIND[lk]} {op} {_FLUX_KIND[rk]}"
-            )
+                "geo.ST_DWithin requires distance: as a numeric literal")
+        return dist <= F.lit(radius_km), "bool"
 
-    def term() -> tuple[Column, str]:
-        e, kind = factor()
-        while peek() in ("*", "/", "%"):
-            op = eat()
-            r, r_kind = factor()
-            _reject_nonnum(op, kind, r_kind)
-            e = e * r if op == "*" else (e / r if op == "/" else e % r)
-            kind = "num"
-        return e, kind
 
-    def expr() -> tuple[Column, str]:
-        e, kind = term()
-        while peek() in ("+", "-"):
-            op = eat()
-            r, r_kind = term()
-            if op == "+" and "str" in (kind, r_kind):
-                # Flux string concatenation. Lenient divergence:
-                # stock only concats string + string; number operands
-                # are stringified here rather than rejected
-                e, kind = F.concat(e.cast("string"), r.cast("string")), "str"
+def _cmp_literal(node) -> Lit | None:
+    """The literal of a ``member <op> literal`` comparison, a negated
+    number folded in; None for any other right operand."""
+    match node:
+        case Lit("duration", _):
+            return None
+        case Lit():
+            return node
+        case Unary("-", Lit("int" | "float" as kind, v)):
+            return Lit(kind, -v)
+    return None
+
+
+def _compare_member(df: DataFrame, name: str, op: str, lit: Lit) -> Column:
+    """``r.<name> <op> <literal>``: the member binds the slot the
+    literal's type selects, and operand kinds follow stock's rules."""
+    c = _col(df, name)
+    real = _colname(df, name)
+    if real in df.columns:
+        if real == "f_float":
+            # the live slot, not the physical default — a string
+            # series' _value IS its f_str, so the comparison reads it
+            # (mixed frames resolve to f_float and keep the documented
+            # lenient per-literal slot binding below)
+            resolved = _value_slot_runtime(df, real)
+            if resolved != real:
+                real, c = resolved, F.col(resolved)
+        bound_kind = _SPARK_KIND.get(dict(df.dtypes).get(real))
+    else:
+        bound_kind = "string"  # tags-map access
+    val, lit_kind = lit.value, lit.kind
+    if lit.kind == "time":
+        # RFC3339 time literal: compare on the exact-ns column
+        # (canonical frames always carry time_ns; the µs timestamp
+        # column would silently truncate sub-µs bounds)
+        val, lit_kind = _time_to_ns(lit.value, 0), None
+        if _colname(df, name) == "time":
+            if "time_ns" in df.columns:
+                c = F.col("time_ns")
+            elif "time" in df.columns:
+                # keep()/drop() may have pruned time_ns; re-derive it
+                # from the µs timestamp rather than comparing a
+                # timestamp column against an epoch-ns long
+                c = F.unix_micros(F.col("time")) * F.lit(1000)
             else:
-                _reject_nonnum(op, kind, r_kind)
-                e = e + r if op == "+" else e - r
-                kind = "num"
-        return e, kind
-
-    out, _ = expr()
-    if pos[0] != len(tokens):
-        raise FluxError(f"trailing tokens in map expression {s!r}")
-    return out
-
-
-def _split_additive(src: str) -> list[tuple[str, str]]:
-    """Split an arithmetic expression into top-level signed additive
-    terms: ``"a + b*c - d"`` → ``[("+","a"), ("+","b*c"), ("-","d")]``.
-    Respects parens/brackets/strings; used to detect the linear-fold
-    shape of reduce() field updates."""
-    terms: list[tuple[str, str]] = []
-    sign, depth, instr, buf = "+", 0, False, []
-    for c in src:
-        if instr:
-            buf.append(c)
-            if c == '"':
-                instr = False
-            continue
-        if c == '"':
-            instr = True
-            buf.append(c)
-        elif c in "([{":
-            depth += 1
-            buf.append(c)
-        elif c in ")]}":
-            depth -= 1
-            buf.append(c)
-        elif c in "+-" and depth == 0 and "".join(buf).strip():
-            terms.append((sign, "".join(buf).strip()))
-            sign, buf = c, []
-        elif c in "+-" and depth == 0:
-            # leading/unary sign folds into the pending sign
-            sign = "-" if (sign == "-") != (c == "-") else "+"
-        else:
-            buf.append(c)
-    if "".join(buf).strip():
-        terms.append((sign, "".join(buf).strip()))
-    return terms
+                raise FluxError(
+                    "time comparison requires a _time column in the frame"
+                )
+    elif lit.kind in ("string", "bool", "regex"):
+        # _value compared to a string/bool literal binds that typed slot
+        # (stock Flux's _value is typed per table); a regex on _value
+        # can only match the string slot. Join-suffixed _value_<side>
+        # binds its side's slot.
+        slot = "f_bool" if lit.kind == "bool" else "f_str"
+        if lit.kind != "regex" or op in ("=~", "!~"):
+            sfx = (real[len("f_float"):]
+                   if real == "f_float" or real.startswith("f_float_") else None)
+            if sfx is not None and slot + sfx in df.columns:
+                c = F.col(slot + sfx)
+                bound_kind = "bool" if lit.kind == "bool" else "string"
+    elif name == "_value" or COLMAP.get(name) == "f_float":
+        val, lit_kind = float(val), "float"
+    # cross-type comparison rules (stock Flux): a comparison whose
+    # operand types conflict is a runtime "type conflict" error, never
+    # an ANSI cast failure or a read of the dead float slot. Applied
+    # only when the bound column's kind is KNOWABLE: single-typed
+    # frames (live-slot resolution above) and tag accesses. Mixed
+    # frames keep the documented lenient slot binding — stock accepts
+    # the common `r._field == "x" and r._value == <lit>` idiom through
+    # and-short-circuiting, which the slot binding reproduces without
+    # per-row type dispatch.
+    if bound_kind and lit_kind:
+        if lit_kind == "regex":
+            if op in ("=~", "!~") and bound_kind != "string":
+                raise FluxError(f"type conflict: {bound_kind} {op} regexp")
+        elif not (bound_kind == lit_kind
+                  or {bound_kind, lit_kind} <= {"int", "float"}):
+            raise FluxError(f"type conflict: {bound_kind} {op} {lit_kind}")
+    return _COMPARE[op](c, val)
 
 
-def _linear_increment(df: DataFrame, key: str, src: str) -> Column | None:
-    """If the reduce() field update ``src`` has the associative shape
+def _number(node) -> float | None:
+    """A numeric literal's value as a float, else None."""
+    v = const(node)
+    return float(v) if isinstance(v, (int, float)) and not isinstance(v, bool) else None
+
+
+def _geo_region(node) -> dict:
+    """A Flux geo region record → dict: box {minLat,...}, circle {lat,
+    lon, radius}, polygon {points: [{lat, lon}, ...]}, or a bare point
+    {lat, lon} (the ST_* geometry form)."""
+    if not isinstance(node, Record):
+        raise FluxError("geo region must be a record literal")
+    fields = dict(node.fields)
+    if "points" not in fields:
+        out = {k: _number(v) for k, v in fields.items()}
+        bad = [k for k, v in out.items() if v is None]
+        if bad:
+            raise FluxError(f"geo region field {bad[0]} must be numeric")
+        return out
+    if not isinstance(fields["points"], Array):
+        raise FluxError("polygon region needs points: [{lat:, lon:}, ...]")
+    pts = []
+    for rec in fields["points"].items:
+        kv = dict(rec.fields) if isinstance(rec, Record) else {}
+        lat, lon = _number(kv.get("lat")), _number(kv.get("lon"))
+        if lat is None or lon is None:
+            raise FluxError("polygon point needs numeric lat:/lon:")
+        pts.append({"lat": lat, "lon": lon})
+    return {"points": pts}
+
+
+def _additive_terms(node) -> list[tuple[str, object]]:
+    """The signed top-level terms of an additive chain: ``a + b*c - d``
+    → ``[("+", a), ("+", b*c), ("-", d)]``."""
+    if isinstance(node, Binary) and node.op in ("+", "-"):
+        return [*_additive_terms(node.left), (node.op, node.right)]
+    return [("+", node)]
+
+
+def _negate_head(node):
+    """A leading ``-`` as Flux binds it: to the first factor of a
+    product."""
+    if isinstance(node, Binary) and node.op in ("*", "/", "%"):
+        return Binary(node.op, _negate_head(node.left), node.right)
+    return Unary("-", node)
+
+
+def _reads_accumulator(node) -> bool:
+    return any(ref.param == "accumulator" for ref in refs(node))
+
+
+def _linear_increment(cols: _Columns, key: str, node) -> Column | None:
+    """If the reduce() field update has the associative shape
     ``accumulator.key + f(r)`` (in any additive arrangement, incl.
-    conditional branches), return the per-row increment Column f(r);
-    else None (→ the general pandas fold runs instead)."""
-    src = src.strip()
-    acc_ref = f"accumulator.{key}"
-    if src == acc_ref:
+    conditional branches), the per-row increment Column f(r); else
+    None (→ the general sequential fold runs instead)."""
+    acc = Ref("accumulator", key)
+    if node == acc:
         return F.lit(0.0)
-    m = re.match(r"(?s)^if\s+(.+?)\s+then\s+(.+?)\s+else\s+(.+)$", src)
-    if m:
-        inc_t = _linear_increment(df, key, m.group(2))
-        inc_e = _linear_increment(df, key, m.group(3))
+    if isinstance(node, Cond):
+        inc_t = _linear_increment(cols, key, node.then)
+        inc_e = _linear_increment(cols, key, node.other)
         if inc_t is None or inc_e is None:
             return None
         try:
-            cond = _parse_predicate(df, m.group(1))
+            return F.when(cols.predicate(node.test), inc_t).otherwise(inc_e)
         except FluxError:
             return None
-        return F.when(cond, inc_t).otherwise(inc_e)
-    terms = _split_additive(src)
-    acc_terms = [(s, t) for s, t in terms if t == acc_ref]
-    if len(acc_terms) != 1 or acc_terms[0][0] != "+":
+    terms = _additive_terms(node)
+    rest = [(s, t) for s, t in terms if t != acc]
+    if ([s for s, t in terms if t == acc] != ["+"]
+            or any(_reads_accumulator(t) for _, t in rest)):
         return None
-    rest = [(s, t) for s, t in terms if t != acc_ref]
-    if any("accumulator." in t for _, t in rest):
-        return None
-    if not rest:
-        return F.lit(0.0)
-    expr = " ".join(
-        (f"- {t}" if s == "-" else (t if i == 0 else f"+ {t}"))
-        for i, (s, t) in enumerate(rest)
-    )
+    (sign, inc), *tail = rest
+    inc = _negate_head(inc) if sign == "-" else inc
+    for sign, t in tail:
+        inc = Binary(sign, inc, t)
     try:
-        return _parse_map_value(df, expr)
+        return cols.value(inc)[0]
     except FluxError:
         return None
 
 
-_MINMAX_FOLD_RX = re.compile(
-    r"^math\.(mMax|mMin)\(\s*(x|y):\s*(.+?)\s*,\s*(x|y):\s*(.+?)\s*\)$", re.DOTALL
-)
+def _fold_term(cols: _Columns, key: str, node, identity):
+    """The fast-path ``(increment, op)`` of one accumulator field, or
+    None when the field must fold sequentially."""
+    acc = Ref("accumulator", key)
+    if node == acc:
+        return None, "const"
+    if isinstance(node, Call) and node.name in ("math.mMax", "math.mMin"):
+        a = dict(node.args)
+        other = (a.get("y") if a.get("x") == acc
+                 else a.get("x") if a.get("y") == acc else None)
+        if other is not None and not _reads_accumulator(other):
+            return (cols.value(other)[0],
+                    "max" if node.name == "math.mMax" else "min")
+    # the "sum" fast path is only valid for numeric accumulators: a
+    # string identity (e.g. {s: ""} built via accumulator.s + r.host)
+    # matches the same shape but must fold sequentially
+    if isinstance(identity, (int, float)) and not isinstance(identity, bool):
+        inc = _linear_increment(cols, key, node)
+        if inc is not None:
+            return inc, "sum"
+    return None
 
 
 def _reduce_stage(pipe, df, args, call):
@@ -1654,52 +1396,36 @@ def _reduce_stage(pipe, df, args, call):
     Fallback: any non-associative field (products, string builds,
     order-dependent logic) sends the WHOLE fold to
     ``operators.fold.pandas_fold`` — a literal sequential fold of each
-    group in pipeline order.
+    group in pipeline order, through the closure walk of the same tree.
     """
     from ..operators import fold as _fold
 
     if "fn" not in args or "identity" not in args:
         raise FluxError("reduce() requires fn: and identity:")
-    identity = {k: _lit(v) for k, v in _record_refs(args["identity"])}
-    fn_body = args["fn"].partition("=>")[2].strip()
-    m = re.match(r"^\(?\s*\{(.*)\}\s*\)?$", fn_body, re.DOTALL)
-    if not m:
-        raise FluxError(f"cannot parse reduce fn {fn_body!r}")
-    updates = _split_args(m.group(1).strip())
-    unknown = set(updates) - set(identity)
+    ident = parse_expr(args["identity"], ())
+    identity = ({k: const(v) for k, v in ident.fields}
+                if isinstance(ident, Record) and ident.base is None else None)
+    if identity is None or None in identity.values():
+        raise FluxError(f"reduce identity must be a record of literals, "
+                        f"got {args['identity']!r}")
+    body = parse_fn(args["fn"]).body
+    if not isinstance(body, Record) or body.base is not None:
+        raise FluxError(f"cannot parse reduce fn {args['fn']!r}")
+    fields = dict(body.fields)
+    unknown = set(fields) - set(identity)
     if unknown:
         raise FluxError(f"reduce fn writes fields missing from identity: {unknown}")
+    updates = {k: fields.get(k, Ref("accumulator", k)) for k in identity}
 
     by = list(pipe.group_key)
-    terms: dict = {}
-    for k in identity:
-        src = updates.get(k)
-        if src is None or src.strip() == f"accumulator.{k}":
-            terms[k] = (identity[k], None, "const")
-            continue
-        mm = _MINMAX_FOLD_RX.match(src.strip())
-        if mm:
-            a = {mm.group(2): mm.group(3), mm.group(4): mm.group(5)}
-            acc_ref = f"accumulator.{k}"
-            other = a["y"] if a.get("x") == acc_ref else (
-                a["x"] if a.get("y") == acc_ref else None
-            )
-            if other is not None and "accumulator." not in other:
-                op = "max" if mm.group(1) == "mMax" else "min"
-                terms[k] = (identity[k], _parse_map_value(df, other), op)
-                continue
-        # the "sum" fast path is only valid for numeric accumulators:
-        # a string identity (e.g. {s: ""} built via accumulator.s + r.host)
-        # matches the same syntactic shape but must fold sequentially
-        inc = None
-        if isinstance(identity[k], (int, float)) and not isinstance(identity[k], bool):
-            inc = _linear_increment(df, k, src)
-        if inc is None:
-            terms = None  # type: ignore[assignment]
+    cols = _Columns(df, call.name)
+    terms = {}
+    for k, ident in identity.items():
+        term = _fold_term(cols, k, updates[k], ident)
+        if term is None:
             break
-        terms[k] = (identity[k], inc, "sum")
-
-    if terms is not None:
+        terms[k] = (ident, *term)
+    else:
         return pipe._with(_fold.linear_fold(df, by, terms))
 
     # general sequential fold (pandas_fold). r._value resolves to
@@ -1712,22 +1438,17 @@ def _reduce_stage(pipe, df, args, call):
         c = _colname(df, n)
         return vslot if c == "f_float" else c
 
-    steps = {
-        k: _fold.compile_scalar(updates.get(k, f"accumulator.{k}"), _resolve)
-        for k in identity
-    }
+    steps = {k: compile_scalar(node, _resolve) for k, node in updates.items()}
 
     def step(acc: dict, row: dict) -> dict:
         return {k: fn(row, acc) for k, fn in steps.items()}
 
+    read = {_resolve(ref.field) for node in updates.values()
+            for ref in refs(node) if ref.param != "accumulator" and ref.field}
     needed = by + sorted(
         {c for c in df.columns
          if c in (vslot, "f_float", "time_ns", "ingest_seq")}
-        | {_resolve(n[2:]) for src in updates.values()
-           for n in re.findall(r"r\.\w+", src) if _resolve(n[2:]) in df.columns}
-        # compile_scalar also accepts r["..."] bracket field references
-        | {_resolve(n) for src in updates.values()
-           for n in re.findall(r'r\["([^"]+)"\]', src) if _resolve(n) in df.columns}
+        | (read & set(df.columns))
     )
     pruned = df.select(*dict.fromkeys(needed))
     return pipe._with(
@@ -1851,21 +1572,17 @@ def _schema_fn(points: DataFrame, fn: str, args: dict, tag_cols) -> DataFrame:
     return out.orderBy("_value")
 
 
-_COL_PRED_RX = re.compile(
-    r'^\(?\s*column\s*\)?\s*=>\s*column\s*(=~|!~|==|!=)\s*(/[^/]*/|"[^"]*")\s*$'
-)
-
-
 def _predicate_columns(df: DataFrame, fn_src: str) -> list[str]:
-    """Columns of ``df`` matched by a ``(column) => column <op> lit``
-    predicate (the keep/drop fn: form). Column names are plan-time
-    metadata, so this is evaluated in Python, not per row. Matching is
-    done on the FLUX-visible name (f_float ↔ _value etc.) so
-    ``column =~ /^_/`` selects what a Flux user expects."""
-    m = _COL_PRED_RX.match(fn_src.strip())
-    if not m:
+    """Columns of ``df`` matched by a ``(column) => <predicate on
+    column>`` function (the keep/drop fn: form). Column names are
+    plan-time metadata, so the predicate runs in Python (the closure
+    walk), not per row. Matching is done on the FLUX-visible name
+    (f_float ↔ _value etc.) so ``column =~ /^_/`` selects what a Flux
+    user expects."""
+    fn = parse_fn(fn_src)
+    if len(fn.params) != 1 or any(ref.field for ref in refs(fn.body)):
         raise FluxError(f"unsupported keep/drop fn predicate {fn_src!r}")
-    op, lit = m.group(1), m.group(2)
+    test = compile_scalar(fn.body, str)
     rev = {real: flux for flux, real in COLMAP.items()}
     # engine plumbing a Flux user never sees — not part of the visible
     # column set the predicate ranges over
@@ -1874,15 +1591,9 @@ def _predicate_columns(df: DataFrame, fn_src: str) -> list[str]:
     for c in df.columns:
         if c in internal:
             continue
-        vis = rev.get(c, c)
-        if lit.startswith("/"):
-            hit = re.search(lit[1:-1], vis) is not None
-            hit = hit if op == "=~" else (not hit)
-            if op not in ("=~", "!~"):
-                raise FluxError("regex literal needs =~ or !~")
-        else:
-            eq = vis == lit[1:-1]
-            hit = eq if op == "==" else (not eq)
+        hit = test(rev.get(c, c), None)
+        if not isinstance(hit, bool):
+            raise FluxError(f"unsupported keep/drop fn predicate {fn_src!r}")
         if hit:
             out.append(c)
     return out
@@ -2359,21 +2070,16 @@ def _join_package(kind: str, args: dict, env: dict) -> Pipeline:
         ) else "time"
         pairs = [(tcol, tcol)]
     else:
-        on_body = args["on"].partition("=>")[2]
-        for part in re.split(r"\band\b", on_body):
-            m2 = re.match(
-                r'\s*l(?:\.(\w+)|\["([^"]+)"\])\s*==\s*'
-                r'r(?:\.(\w+)|\["([^"]+)"\])\s*\)?\s*$',
-                part.strip().lstrip("("),
-            )
-            if not m2:
-                raise FluxError(
-                    f"join.{kind} on: must be l.<col> == r.<col> "
-                    f"equalities, got {part.strip()!r}"
-                )
-            lc = _colname(left.df, m2.group(1) or m2.group(2))
-            rc = _colname(right.df, m2.group(3) or m2.group(4))
-            pairs.append((lc, rc))
+        for part in conjuncts(parse_fn(args["on"]).body):
+            match part:
+                case Binary("==", Ref("l", lname), Ref("r", rname)) if (
+                        lname and rname):
+                    pairs.append((_colname(left.df, lname),
+                                  _colname(right.df, rname)))
+                case _:
+                    raise FluxError(
+                        f"join.{kind} on: must be l.<col> == r.<col> "
+                        "equalities")
     for (lc, rc) in pairs:
         if lc not in left.df.columns:
             raise FluxError(f"join.{kind}: left has no column {lc!r}")
@@ -2388,39 +2094,33 @@ def _join_package(kind: str, args: dict, env: dict) -> Pipeline:
         cond = c if cond is None else cond & c
     joined = ldf.join(rdf, cond, how)
 
-    def _rewrite(side_expr: str) -> str:
-        """``l.x`` / ``r["x"]`` refs → the prefixed joined columns,
-        resolving Flux names against the owning side's frame."""
-        def _sub(mo: re.Match) -> str:
-            side = mo.group(1)
-            nm = mo.group(2) or mo.group(3)
-            frame = left.df if side == "l" else right.df
-            # l._value on a string/bool side binds ITS live slot, as
-            # the join-suffixed binding does
-            real = _value_slot_runtime(frame, _colname(frame, nm))
-            return f'r["{side}_{real}"]'
-
-        return re.sub(r'\b([lr])(?:\.(\w+)|\["([^"]+)"\])', _sub, side_expr)
-
     if "as" not in args:
         args["as"]  # typed missing-argument error
-    as_body = args["as"].partition("=>")[2].strip()
-    m3 = re.match(r"^\(?\s*\{(.*)\}\s*\)?$", as_body, re.DOTALL)
-    if not m3:
+    as_fn = parse_fn(args["as"])
+    record = as_fn.body
+    if not isinstance(record, Record) or len(as_fn.params) != 2:
         raise FluxError(f"join.{kind} as: must return a record literal")
-    inner = m3.group(1).strip()
+    side = dict(zip(as_fn.params, ("l", "r")))
+    frames = {"l": left.df, "r": right.df}
+
+    class _SideColumns(_Columns):
+        def name_of(self, ref: Ref) -> str:
+            """``l.x`` / ``r["x"]`` → the prefixed joined column,
+            resolving the Flux name against the owning side's frame:
+            l._value on a string/bool side binds ITS live slot, as the
+            join-suffixed binding does."""
+            s = side[ref.param]
+            real = _colname(frames[s], super().name_of(ref))
+            return f"{s}_{_value_slot_runtime(frames[s], real)}"
+
     sel: dict[str, Column] = {}
-    base = None
-    bm = re.match(r"^([lr])\s+with\b(.*)$", inner, re.DOTALL)
-    if bm:
-        base = bm.group(1)
-        inner = bm.group(2).strip()
-        base_pipe = left if base == "l" else right
-        for c in base_pipe.df.columns:
+    base = side.get(record.base)
+    if base:
+        for c in frames[base].columns:
             sel[c] = F.col(f"{base}_{c}")
-    for k, expr_src in (_split_args(inner) if inner else {}).items():
-        target = COLMAP.get(k, k)
-        sel[target] = _parse_map_value(joined, _rewrite(expr_src))
+    cols = _SideColumns(joined, f"join.{kind}")
+    for k, node in record.fields:
+        sel[COLMAP.get(k, k)] = cols.value(node)[0]
     if not sel:
         raise FluxError(f"join.{kind} as: record is empty")
     out = joined.select([c.alias(n) for n, c in sel.items()])
@@ -2576,18 +2276,12 @@ def _range_stage(pipe, df, args, call):
 def _filter_stage(pipe, df, args, call):
     # args["fn"], not the raw argstr: sibling args like onEmpty: stay
     # out of the predicate text
-    fn_src = args["fn"] if "fn" in args else call.argstr
-    pred_src = fn_src.partition("=>")[2].strip()
-    gm = _GEO_ST_RX.match(pred_src)
-    if gm and gm.group(1) in ("ST_Contains", "ST_DWithin"):
-        # a boolean geo predicate as the whole body (geofencing);
-        # ST_Distance needs a comparison, which belongs in map()
-        return pipe.filter(_geo_st_fn(df, gm.group(1), gm.group(2)))
-    out = pipe.filter(_parse_predicate(df, pred_src))
+    body = parse_fn(args["fn"] if "fn" in args else call.argstr).body
+    out = pipe.filter(_Columns(df, call.name).predicate(body))
     # measurement/field equality filters narrow the catalog pins and the
     # live-slot superset: a single-class measurement in a multi-class
     # bucket keeps zero-probe plans downstream
-    _narrow_catalog_on_filter(df, out.df, pred_src)
+    _narrow_catalog_on_filter(df, out.df, body)
     return out
 
 
@@ -3094,22 +2788,19 @@ def _pivot_stage(pipe, df, args, call):
 
 
 def _map_stage(pipe, df, args, call):
-    fn_body = call.argstr.partition("=>")[2].strip()
-    m = re.match(r"^\(?\s*\{(.*)\}\s*\)?$", fn_body, re.DOTALL)
-    if not m:
-        raise FluxError(f"cannot parse map fn {fn_body!r}")
-    inner = m.group(1).strip()
-    extension = inner.startswith("r with")
-    if extension:
-        inner = inner[len("r with"):].strip()
+    record = parse_fn(args["fn"]).body
+    if not isinstance(record, Record):
+        raise FluxError(f"cannot parse map fn {args['fn']!r}")
+    extension = record.base is not None
     # every field expression sees the original record r (Flux record
     # extension), hence one withColumns call
+    cols = _Columns(df, call.name)
     updates: dict[str, Column] = {}
     retype_ftype = None
     value_dest = None
-    for k, expr_src in _split_args(inner).items():
+    for k, node in record.fields:
         target = _colname(df, k)
-        expr_col = _parse_map_value(df, expr_src)
+        expr_col = cols.value(node)[0]
         if target == "f_float" and "ftype" in df.columns:
             # a _value write on a slot-typed frame lands in the slot of
             # the expression's type (stock map may retype a table); the
@@ -3158,7 +2849,7 @@ def _monitor_check_stage(pipe, df, args, call):
     # batch twin of streaming/tasks.py ThresholdCheck: _level from the
     # crit/warn/info predicates (crit wins), data: keys become literal
     # columns, messageFn compiles through the map scalar compiler
-    levels = [(lvl, _parse_predicate(df, args[lvl].partition("=>")[2]))
+    levels = [(lvl, _Columns(df, call.name).predicate(parse_fn(args[lvl]).body))
               for lvl in ("crit", "warn", "info") if lvl in args]
     if not levels:
         raise FluxError(
@@ -3172,8 +2863,8 @@ def _monitor_check_stage(pipe, df, args, call):
         for k, v in _record_refs(args["data"]):
             out = out.withColumn(k, F.lit(_lit(v)))
     if "messageFn" in args:
-        msg_src = args["messageFn"].partition("=>")[2].strip()
-        out = out.withColumn("_message", _parse_map_value(out, msg_src))
+        msg = parse_fn(args["messageFn"]).body
+        out = out.withColumn("_message", _Columns(out, call.name).value(msg)[0])
     return pipe._with(out)
 
 
@@ -3421,7 +3112,7 @@ def _integral_stage(pipe, df, args, call):
 def _state_stage(pipe, df, args, call):
     from ..operators import analytics as _an
 
-    pred = _parse_predicate(df, args["fn"].partition("=>")[2])
+    pred = _Columns(df, call.name).predicate(parse_fn(args["fn"]).body)
     # column: names the output (default: the stage name)
     out_col = _lit(args.get("column", f'"{call.name}"'))
     if call.name == "stateCount":
@@ -3438,7 +3129,7 @@ def _state_tracking_stage(pipe, df, args, call):
     # the legacy combined form of stateCount/stateDuration
     from ..operators import analytics as _an
 
-    pred = _parse_predicate(df, args["fn"].partition("=>")[2])
+    pred = _Columns(df, call.name).predicate(parse_fn(args["fn"]).body)
     count_col = args.get("countColumn")
     dur_col = args.get("durationColumn")
     if count_col is None and dur_col is None:
@@ -3653,10 +3344,9 @@ def _extract_stage(pipe, df, args, call):
     # row) comes back as a frame (same values)
     name = call.name
     if name in ("findColumn", "findRecord", "tableFind"):
-        key_body = args["fn"].partition("=>")[2].strip()
-        if key_body not in ("true", "(true)"):
-            df = df.filter(_parse_predicate(
-                df, re.sub(r"\bkey(?=[.\[])", "r", key_body)))
+        body = parse_fn(args["fn"]).body
+        if body != Lit("bool", True):
+            df = df.filter(_Columns(df, name).predicate(body))
     if name in ("getColumn", "findColumn"):
         col = _value_slot_runtime(
             df, _colname(df, _lit(args.get("column", '"_value"'))))
@@ -3671,35 +3361,6 @@ def _extract_stage(pipe, df, args, call):
             df = df.orderBy(*order_cols)
         return pipe._with(df.offset(idx).limit(1), group_key=())
     return pipe._with(df)  # tableFind: the filtered tables themselves
-
-
-def _parse_geo_region(src: str) -> dict:
-    """A Flux geo region record literal → dict: box {minLat,...},
-    circle {lat, lon, radius}, polygon {points: [{lat, lon}, ...]},
-    or a bare point {lat, lon} (the ST_* geometry form)."""
-    s = src.strip()
-    if not (s.startswith("{") and s.endswith("}")):
-        raise FluxError(f"geo region must be a record literal, got {src!r}")
-    args = _split_args(s[1:-1])
-    if "points" in args:
-        pts_src = args["points"].strip()
-        if not (pts_src.startswith("[") and pts_src.endswith("]")):
-            raise FluxError("polygon region needs points: [{lat:, lon:}, ...]")
-        pts = []
-        for rec in _split_toplevel_records(pts_src):
-            kv = {k: v for k, v in _record_refs(rec)}
-            try:
-                pts.append({"lat": float(kv["lat"]), "lon": float(kv["lon"])})
-            except (KeyError, ValueError):
-                raise FluxError(f"polygon point needs numeric lat:/lon:, got {rec!r}")
-        return {"points": pts}
-    out = {}
-    for k, v in args.items():
-        try:
-            out[k] = float(v)
-        except ValueError:
-            raise FluxError(f"geo region field {k} must be numeric, got {v!r}")
-    return out
 
 
 def _geo_stage(pipe, df, args, call):
@@ -3743,7 +3404,7 @@ def _geo_stage(pipe, df, args, call):
         )
     if "region" not in args:
         raise FluxError(f"{name}() requires region:")
-    region = _parse_geo_region(args["region"])
+    region = _geo_region(parse_expr(args["region"], ()))
     shaped = _shaped()
     lat, lon = F.col("lat"), F.col("lon")
     try:

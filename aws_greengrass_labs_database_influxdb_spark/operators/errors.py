@@ -4,8 +4,8 @@ The frontends convert :class:`OperatorValidationError` — and ONLY it —
 into their user-facing query errors (``FluxError`` / ``InfluxQLError``).
 A plain ``ValueError`` escaping an operator is therefore an ENGINE BUG
 and surfaces as one, instead of being misreported as a user query
-error (r14, ADVICE #1: the blanket ``except ValueError`` in
-``_execute_flux_script`` hid stray internal errors).
+error (a blanket ``except ValueError`` at the frontend boundary would
+hide stray internal errors).
 
 Subclasses ``ValueError`` so direct DSL callers' existing
 ``except ValueError`` handling keeps working.

@@ -26,7 +26,6 @@ accumulator fields.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -244,137 +243,3 @@ def fold_series(df, by, order, keep, value, alias, fn) -> DataFrame:
         )
 
     return _map_groups(df, by, order, keep, schema, emit)
-
-
-# ---------------------------------------------------------------------------
-# scalar expression compiler for the pandas_fold fallback: mirrors the
-# Flux map()/reduce() arithmetic grammar but produces a Python closure
-# evaluated against {"r": row, "acc": accumulator} — used only off the
-# fast path, so per-row Python cost is confined to folds that are
-# sequential by nature.
-
-_SCALAR_TOKEN_RX = re.compile(
-    r'accumulator\.\w+|r\.\w+|r\["[^"]+"\]'
-    r"|\d+(?:\.\d+)?(?:[eE][+-]?\d+)?"  # incl. scientific notation
-    r'|"(?:[^"\\]|\\.)*"'
-    r"|==|!=|>=|<=|>|<|\b(?:if|then|else|and|or)\b|[(),+\-*/%]"
-)
-
-
-def compile_scalar(src: str, colname: Callable[[str], str]):
-    """Compile a Flux scalar expression (arithmetic, comparisons,
-    if/then/else) to ``fn(row: dict, acc: dict) -> value``. ``colname``
-    maps Flux record field names (``_value``) to physical columns."""
-    src = src.strip()
-    m = re.match(r"(?s)^if\s+(.+?)\s+then\s+(.+?)\s+else\s+(.+)$", src)
-    if m:
-        cond = compile_scalar(m.group(1), colname)
-        then = compile_scalar(m.group(2), colname)
-        other = compile_scalar(m.group(3), colname)
-        return lambda row, acc: then(row, acc) if cond(row, acc) else other(row, acc)
-
-    tokens = _SCALAR_TOKEN_RX.findall(src)
-    if not tokens:
-        raise OperatorValidationError(f"cannot parse reduce expression {src!r}")
-    pos = [0]
-
-    def peek():
-        return tokens[pos[0]] if pos[0] < len(tokens) else None
-
-    def eat():
-        t = tokens[pos[0]]
-        pos[0] += 1
-        return t
-
-    def factor():
-        t = peek()
-        if t is None:
-            raise OperatorValidationError(f"truncated reduce expression {src!r}")
-        if t == "(":
-            eat()
-            e = disj()
-            if peek() != ")":
-                raise OperatorValidationError(f"unbalanced parens in {src!r}")
-            eat()
-            return e
-        if t == "-":
-            eat()
-            f = factor()
-            return lambda row, acc: -f(row, acc)
-        eat()
-        if t.startswith("accumulator."):
-            k = t[len("accumulator."):]
-            return lambda row, acc: acc[k]
-        if t.startswith('r["'):
-            c = colname(t[3:-2])
-            return lambda row, acc: row[c]
-        if t.startswith("r."):
-            c = colname(t[2:])
-            return lambda row, acc: row[c]
-        if t.startswith('"'):
-            v = t[1:-1]
-            return lambda row, acc: v
-        v = float(t) if ("." in t or "e" in t or "E" in t) else int(t)
-        return lambda row, acc: v
-
-    def term():
-        e = factor()
-        while peek() in ("*", "/", "%"):
-            op = eat()
-            r = factor()
-            if op == "*":
-                e = (lambda a, b: lambda row, acc: a(row, acc) * b(row, acc))(e, r)
-            elif op == "/":
-                e = (lambda a, b: lambda row, acc: a(row, acc) / b(row, acc))(e, r)
-            else:
-                e = (lambda a, b: lambda row, acc: a(row, acc) % b(row, acc))(e, r)
-        return e
-
-    def arith():
-        e = term()
-        while peek() in ("+", "-"):
-            op = eat()
-            r = term()
-            if op == "+":
-                e = (lambda a, b: lambda row, acc: a(row, acc) + b(row, acc))(e, r)
-            else:
-                e = (lambda a, b: lambda row, acc: a(row, acc) - b(row, acc))(e, r)
-        return e
-
-    _CMP = {
-        "==": lambda a, b: a == b,
-        "!=": lambda a, b: a != b,
-        ">=": lambda a, b: a >= b,
-        "<=": lambda a, b: a <= b,
-        ">": lambda a, b: a > b,
-        "<": lambda a, b: a < b,
-    }
-
-    def cmp():
-        e = arith()
-        if peek() in _CMP:
-            op = _CMP[eat()]
-            r = arith()
-            e = (lambda a, b, o: lambda row, acc: o(a(row, acc), b(row, acc)))(e, r, op)
-        return e
-
-    def conj():
-        e = cmp()
-        while peek() == "and":
-            eat()
-            r = cmp()
-            e = (lambda a, b: lambda row, acc: a(row, acc) and b(row, acc))(e, r)
-        return e
-
-    def disj():
-        e = conj()
-        while peek() == "or":
-            eat()
-            r = conj()
-            e = (lambda a, b: lambda row, acc: a(row, acc) or b(row, acc))(e, r)
-        return e
-
-    out = disj()
-    if pos[0] != len(tokens):
-        raise OperatorValidationError(f"trailing tokens in reduce expression {src!r}")
-    return out

@@ -1,8 +1,8 @@
 """Physical-plan fingerprints: environment-independent plan-shape
 descriptors for regression defense.
 
-The bench gate (VERDICT r5 item 1) needs to distinguish "this query
-got slower because the plan regressed" from "the VM was loaded".
+A bench gate needs to distinguish "this query got slower because the
+plan regressed" from "the VM was loaded".
 Timings can't answer that; the *plan shape* can. A fingerprint captures
 exactly the signals that determine scale behavior — the ordered
 physical operator sequence, exchange/codegen/Python-eval counts,

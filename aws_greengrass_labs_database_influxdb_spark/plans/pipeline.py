@@ -66,8 +66,8 @@ class Pipeline:
     # union()/join(), read back from env bindings by the bounds
     # consumers (aggregateWindow createEmpty spine, interpolate.linear,
     # events.duration tail close). None start = no range() ran; None
-    # stop = range defaulted its stop to the query's now() (r14 — the
-    # _run_pipeline-local list lost bounds through variable bindings).
+    # stop = range defaulted its stop to the query's now(). The bounds
+    # live on the Pipeline so they survive variable bindings.
     range_bounds: tuple = (None, None)
 
     # ------------------------------------------------------------- plumbing
@@ -157,11 +157,11 @@ class Pipeline:
                 "f_float", "f_int", "f_uint", "f_str", "f_bool",
                 "time", "time_ns", "ingest_seq", "_ts_raw", "props",
                 # storage internals, not Flux columns: the tags MAP is
-                # not orderable (sorting a key containing it was an
-                # AnalysisException — r11 fuzz), and ftype is the slot
+                # not orderable (sorting a key containing it is an
+                # AnalysisException), and ftype is the slot
                 # discriminator, never a user-visible group key
                 "tags", "ftype",
-                # per-branch range bounds stamped by union() (r15)
+                # per-branch range bounds stamped by union()
                 "_rb_start_ns", "_rb_stop_ns",
             }
             key = tuple(
@@ -290,8 +290,7 @@ class Pipeline:
         # Flux sort() re-orders each table AND establishes the order
         # that downstream presentation stages consume — sort |> limit
         # is the canonical Flux top-N idiom (limit takes the first n
-        # rows of the CURRENT order, not first-n-by-time; caught by a
-        # live-probe divergence in r5)
+        # rows of the CURRENT order, not first-n-by-time)
         return self._with(
             ops.sort(self.df_, list(columns), desc),
             order=tuple(columns), order_desc=desc,
@@ -332,11 +331,11 @@ class Pipeline:
         ``_rb_stop_ns`` columns (zero runtime cost: constants folded
         into the scan projection). ``aggregate_window(createEmpty:)``
         consumes them to build a per-branch spine and ``group(mode:
-        except)`` / the wire facade treat them as internals (r15 —
-        the r14 union probe got null spine windows for the shorter
-        branch beyond its own stop). Only fully int-bounded branches
-        stamp; an unbounded branch drops the mechanism for the whole
-        union (merged-bounds behavior, documented in COVERAGE.md).
+        except)`` / the wire facade treat them as internals, so the
+        shorter branch gets no null spine windows beyond its own stop.
+        Only fully int-bounded branches stamp; an unbounded branch
+        drops the mechanism for the whole union (merged-bounds
+        behavior, documented in COVERAGE.md).
         """
         a, b = self.range_bounds, other.range_bounds
         ldf, rdf = self.df_, other.df_
@@ -401,8 +400,8 @@ def from_bucket(store, org: str, bucket: str,
     """Flux ``from(bucket:)`` — scan a bucket (LWW-resolved).
 
     Seeds the live-slot and catalog class caches from the bucket's
-    field-type pins (r14: DSL callers get the same zero-probe plans
-    the HTTP facade does)."""
+    field-type pins, so DSL callers get the same zero-probe plans as
+    the HTTP facade."""
     points = store.read_points(org, bucket)
     cat = store.field_types(org, bucket)
     if cat:

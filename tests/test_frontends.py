@@ -3563,6 +3563,17 @@ def test_flux_mixed_union_map_value_read_is_type_conflict(mixed_pts):
                 _MIXED_UNION_PRE + "union(tables: [a, b]) "
                 f"|> map(fn: (r) => ({{r with _value: {expr}}}))",
             )
+
+
+def test_flux_mixed_union_value_read_names_its_stage(mixed_pts):
+    """The same mixed-frame read of r._value in another stage names
+    that stage, not map()."""
+    with pytest.raises(FluxError, match=r"type conflict in filter\(\)"):
+        execute_flux(
+            mixed_pts,
+            _MIXED_UNION_PRE + "union(tables: [a, b]) "
+            "|> filter(fn: (r) => r._value * 2.0 > 1.0)",
+        )
     # literal writes (no read) keep the r12 retype-all-tables path
     out = execute_flux(
         mixed_pts,
@@ -4249,3 +4260,38 @@ def test_flux_fields_as_cols_mixed_types_per_type(mixed_pts):
     assert [r["status"] for r in out] == ["ok", "ok"]
     assert [r["temp"] for r in out] == [1.5, 3.5]
     assert [r["ok"] for r in out] == [True, True]
+
+
+_HOST_VALUES = [("h1 then x", 0.5), ("h2", 1.5), ("h1 then x", 2.5), ("h2", 3.5)]
+
+
+@pytest.mark.parametrize("stage, want", [
+    ('map(fn: (r) => ({r with x: "v>" + string(v: r._value)}))',
+     lambda h, v: "v>" + str(v)),
+    ('map(fn: (r) => ({r with x: if r.host == "h1 then x" then 1.0 else 2.0}))',
+     lambda h, v: 1.0 if h == "h1 then x" else 2.0),
+    ("map(fn: (r) => ({r with x: if r._value > 1.0 then if r._value > 3.0 "
+     'then "big" else "mid" else "small"}))',
+     lambda h, v: ("big" if v > 3.0 else "mid") if v > 1.0 else "small"),
+    ("filter(fn: (r) => r._value * 2.0 > 4.0)", lambda h, v: v * 2.0 > 4.0),
+    ("filter(fn: (r) => (r._value + 1.0) > 2.0)", lambda h, v: (v + 1.0) > 2.0),
+    ("filter(fn: (r) => r._value > r._value)", lambda h, v: v > v),
+])
+def test_flux_expressions_parse_as_one_grammar(spark, stage, want):
+    """Expressions that a comparison character inside a string, a
+    `then` inside a string, a nested `if`, or a comparison over
+    arithmetic or two columns used to send to the wrong parser: each
+    answer matches plain Python."""
+    df = spark.createDataFrame(
+        [("m", "v", h, (i + 1) * 10**9, i, v)
+         for i, (h, v) in enumerate(_HOST_VALUES)],
+        "measurement string, field string, host string, time_ns long, "
+        "ingest_seq long, f_float double",
+    )
+    out = execute_flux(df, f'from(bucket:"b") |> {stage}').collect()
+    if stage.startswith("map"):
+        assert sorted((r.host, r.f_float, r.x) for r in out) == sorted(
+            (h, v, want(h, v)) for h, v in _HOST_VALUES)
+    else:
+        assert sorted(r.f_float for r in out) == sorted(
+            v for h, v in _HOST_VALUES if want(h, v))

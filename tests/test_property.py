@@ -10,6 +10,7 @@ inputs, not just the fixtures.
 
 from __future__ import annotations
 
+import operator
 import re
 
 import pytest
@@ -338,18 +339,22 @@ def test_redact_pii_idempotent_and_counts(spark):
 
 # --------------------------------------------------------- reduce grammar
 
-# random Flux scalar expression TREES rendered to source, evaluated two
-# ways: by operators.fold.compile_scalar (the production parser for the
-# reduce() pandas fallback) and by direct tree walking — they must agree
-# for every generated expression.
+# random Flux scalar expression TREES rendered to source, evaluated
+# three ways: by the closure walk (frontends.flux_expr.compile_scalar,
+# the reduce() sequential fold), by the Column walk (the Spark fast
+# path), and by direct tree walking — they must agree for every
+# generated expression.
 
 _R_FIELDS = ("v", "w")
 _ACC_FIELDS = ("s", "n")
+_PY_OPS = {"+": operator.add, "-": operator.sub, "*": operator.mul,
+           "==": operator.eq, "!=": operator.ne, "<": operator.lt,
+           "<=": operator.le, ">": operator.gt, ">=": operator.ge}
 
 
-def _leaf():
+def _leaf(max_int=99):
     return st.one_of(
-        st.integers(min_value=0, max_value=99).map(lambda x: ("num", x)),
+        st.integers(min_value=0, max_value=max_int).map(lambda x: ("num", x)),
         st.floats(min_value=0.0, max_value=9.0, allow_nan=False).map(
             lambda x: ("num", round(x, 3))
         ),
@@ -358,16 +363,32 @@ def _leaf():
     )
 
 
-def _expr_tree(depth=3):
+def _expr_tree(depth=3, max_int=99):
+    """A numeric tree: arithmetic and if/then/else over leaves."""
     if depth == 0:
-        return _leaf()
+        return _leaf(max_int)
+    sub = st.deferred(lambda: _expr_tree(depth - 1, max_int))
     return st.one_of(
-        _leaf(),
-        st.tuples(
-            st.sampled_from("+-*"),
-            st.deferred(lambda: _expr_tree(depth - 1)),
-            st.deferred(lambda: _expr_tree(depth - 1)),
-        ).map(lambda t: ("bin", *t)),
+        _leaf(max_int),
+        st.tuples(st.sampled_from("+-*"), sub, sub).map(lambda t: ("bin", *t)),
+        st.tuples(_bool_tree(depth - 1, max_int), sub, sub).map(
+            lambda t: ("if", *t)),
+    )
+
+
+def _bool_tree(depth=2, max_int=99):
+    """A boolean tree: comparisons of numeric trees under not/and/or."""
+    num = st.deferred(lambda: _expr_tree(max(depth - 1, 0), max_int))
+    cmp = st.tuples(st.sampled_from(["==", "!=", "<", "<=", ">", ">="]),
+                    num, num).map(lambda t: ("bin", *t))
+    if depth == 0:
+        return cmp
+    sub = st.deferred(lambda: _bool_tree(depth - 1, max_int))
+    return st.one_of(
+        cmp,
+        sub.map(lambda b: ("not", b)),
+        st.tuples(st.sampled_from(["and", "or"]), sub, sub).map(
+            lambda t: ("bin", *t)),
     )
 
 
@@ -379,6 +400,10 @@ def _render(t) -> str:
         return f"r.{t[1]}"
     if kind == "acc":
         return f"accumulator.{t[1]}"
+    if kind == "not":
+        return f"(not {_render(t[1])})"
+    if kind == "if":
+        return f"(if {_render(t[1])} then {_render(t[2])} else {_render(t[3])})"
     _, op, a, b = t
     return f"({_render(a)} {op} {_render(b)})"
 
@@ -391,9 +416,15 @@ def _eval(t, row, acc):
         return row[t[1]]
     if kind == "acc":
         return acc[t[1]]
+    if kind == "not":
+        return not _eval(t[1], row, acc)
+    if kind == "if":
+        return _eval(t[2] if _eval(t[1], row, acc) else t[3], row, acc)
     _, op, a, b = t
     x, y = _eval(a, row, acc), _eval(b, row, acc)
-    return x + y if op == "+" else (x - y if op == "-" else x * y)
+    if op in ("and", "or"):
+        return (x and y) if op == "and" else (x or y)
+    return _PY_OPS[op](x, y)
 
 
 @given(
@@ -403,7 +434,7 @@ def _eval(t, row, acc):
 )
 @settings(max_examples=300, deadline=None)
 def test_reduce_scalar_compiler_matches_tree_eval(tree, row, acc):
-    from aws_greengrass_labs_database_influxdb_spark.operators.fold import compile_scalar
+    from aws_greengrass_labs_database_influxdb_spark.frontends.flux_expr import compile_scalar
 
     fn = compile_scalar(_render(tree), lambda n: n)
     assert fn(row, acc) == _eval(tree, row, acc)
@@ -419,12 +450,47 @@ def test_reduce_scalar_compiler_matches_tree_eval(tree, row, acc):
 )
 @settings(max_examples=200, deadline=None)
 def test_reduce_scalar_compiler_if_then_else(cond_field, thr, then_t, else_t, row, acc):
-    from aws_greengrass_labs_database_influxdb_spark.operators.fold import compile_scalar
+    from aws_greengrass_labs_database_influxdb_spark.frontends.flux_expr import compile_scalar
 
     src = f"if r.{cond_field} > {thr!r} then {_render(then_t)} else {_render(else_t)}"
     fn = compile_scalar(src, lambda n: n)
     want = _eval(then_t if row[cond_field] > thr else else_t, row, acc)
     assert fn(row, acc) == want
+
+
+_FIELD_VALUE = st.floats(-5, 5, allow_nan=False)
+
+
+@given(
+    trees=st.lists(st.one_of(_expr_tree(max_int=9), _bool_tree(max_int=9)),
+                   min_size=1, max_size=12),
+    row=st.fixed_dictionaries({f: _FIELD_VALUE for f in _R_FIELDS}),
+    acc=st.fixed_dictionaries({f: _FIELD_VALUE for f in _ACC_FIELDS}),
+)
+@settings(max_examples=25, deadline=None)
+def test_column_walk_matches_closure_walk(spark, trees, row, acc):
+    """The Spark Column walk (the reduce() sum path, filter, map) and
+    the Python closure walk (the sequential fold) of one parsed tree
+    agree, so the two reduce() paths cannot disagree. The Column walk
+    reads row members only, so the accumulator's fields sit in the row
+    here. Small integer literals keep Spark's 32-bit integer arithmetic
+    exact."""
+    from aws_greengrass_labs_database_influxdb_spark.frontends.flux import _Columns
+    from aws_greengrass_labs_database_influxdb_spark.frontends.flux_expr import (
+        compile_scalar,
+        parse_expr,
+    )
+
+    df = spark.createDataFrame([{**row, **acc}], "v double, w double, s double, n double")
+    nodes = [parse_expr(_render(t).replace("accumulator.", "r."), ("r",))
+             for t in trees]
+    cols = _Columns(df, "map")
+    got = df.select(*[cols.value(n)[0].alias(f"e{i}")
+                      for i, n in enumerate(nodes)]).collect()[0]
+    for i, n in enumerate(nodes):
+        want = compile_scalar(n, lambda f: f)({**row, **acc}, {})
+        assert got[i] == want, _render(trees[i])
+        assert want == _eval(trees[i], row, acc)
 
 
 # ------------------------------------------------------- frontend fuzzing
@@ -470,6 +536,24 @@ def test_flux_statement_split_total(q):
             _parse_stage(stmt)
         except FluxError:
             pass
+
+
+@pytest.mark.parametrize("kind, src", [
+    ("flux", "map(fn: (r) => ({r with x: ! r._value}))"),
+    ("flux", "map(fn: (r) => ({r with x: r._value * 2.0 !}))"),
+    ("fold", "accumulator.s + r.v !"),
+])
+def test_flux_stray_characters_are_typed_errors(points, kind, src):
+    """Text that no token consumes is a FluxError, never skipped: a
+    dropped `!` once compiled `! r._value` as `r._value`."""
+    from aws_greengrass_labs_database_influxdb_spark.frontends import FluxError, execute_flux
+    from aws_greengrass_labs_database_influxdb_spark.frontends.flux_expr import compile_scalar
+
+    with pytest.raises(FluxError, match="fragment"):
+        if kind == "flux":
+            execute_flux(points, f'from(bucket:"b") |> {src}')
+        else:
+            compile_scalar(src, lambda f: f)
 
 
 # --------------------------------------------------- InfluxQL parser fuzz

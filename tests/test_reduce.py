@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from aws_greengrass_labs_database_influxdb_spark.frontends.flux import execute_flux
-from aws_greengrass_labs_database_influxdb_spark.operators import fold as fold_mod
+from aws_greengrass_labs_database_influxdb_spark.frontends import flux_expr
 
 
 def _flux_reduce(points, fn_body: str, identity: str) -> "DataFrame":
@@ -111,7 +111,7 @@ def test_identity_only_field_is_constant(points):
 
 
 def test_compile_scalar_if_and_cmp():
-    fn = fold_mod.compile_scalar(
+    fn = flux_expr.compile_scalar(
         "if r.v > 10.0 and accumulator.s < 100.0 then accumulator.s + r.v else accumulator.s",
         lambda n: n,
     )
@@ -174,3 +174,77 @@ def test_general_fold_reads_non_identifier_columns(spark):
         ' ({p: accumulator.p * r["dev-rate"]}), identity: {p: 1.0})',
     ).collect()
     assert {r.host: r.p for r in out} == {"a": 3.0, "b": 12.0}
+
+
+def _five_values(spark):
+    """One series, host "h1", ``_value`` = 0.0 .. 4.0 in time order."""
+    return spark.createDataFrame(
+        [("m", "v", "h1", (i + 1) * 10**9, i, float(i)) for i in range(5)],
+        "measurement string, field string, host string, time_ns long, "
+        "ingest_seq long, f_float double",
+    )
+
+
+def _reduce_p(df, update: str) -> float:
+    out = execute_flux(
+        df,
+        'from(bucket:"b") |> reduce(fn: (r, accumulator) =>'
+        f" ({{p: {update}}}), identity: {{p: 1.0}})",
+    ).collect()
+    assert len(out) == 1
+    return out[0].p
+
+
+@pytest.mark.parametrize("update, want", [
+    # a product folds sequentially; `not` selects _value 0 and 1 (2 rows)
+    ("if not r._value > 1.0 then accumulator.p * 2.0 else accumulator.p", 4.0),
+    # the same condition on the one-shuffle sum path
+    ("if not r._value > 1.0 then accumulator.p + 2.0 else accumulator.p", 5.0),
+    ("if r.host =~ /h/ then accumulator.p * 2.0 else accumulator.p", 32.0),
+    ("if r.host !~ /h/ then accumulator.p * 2.0 else accumulator.p", 1.0),
+    ("if r.host == \"h1\" and not r._value == 0.0 then accumulator.p * 2.0"
+     " else accumulator.p", 16.0),
+])
+def test_sequential_fold_honours_not_and_regex(spark, update, want):
+    """The sequential fold and the sum path walk one parsed tree, so
+    `not` and `=~` / `!~` mean the same on both."""
+    assert _reduce_p(_five_values(spark), update) == want
+
+
+def test_condition_on_the_accumulator_folds_sequentially(spark):
+    """A condition that reads the accumulator is order-dependent, so it
+    is no conditional increment of a sum: over 60, 60, 60 the capped
+    fold stops adding once the total passes 100 (120), where
+    ``sum(r._value where r._value <= 100)`` would give 180."""
+    df = spark.createDataFrame(
+        [("m", "v", "h1", (i + 1) * 10**9, i, 60.0) for i in range(3)],
+        "measurement string, field string, host string, time_ns long, "
+        "ingest_seq long, f_float double",
+    )
+    out = execute_flux(
+        df,
+        'from(bucket:"b") |> reduce(fn: (r, accumulator) => ({_value:'
+        " if accumulator._value > 100.0 then accumulator._value"
+        " else accumulator._value + r._value}), identity: {_value: 0.0})",
+    ).collect()
+    assert [r._value for r in out] == [120.0]
+
+
+def test_identity_literals_parse_as_flux(spark):
+    """The identity record is read by the expression parser: ``1e3`` is
+    a float, and a non-literal value is a typed error."""
+    from aws_greengrass_labs_database_influxdb_spark.frontends.flux import FluxError
+
+    assert _reduce_p(_five_values(spark), "accumulator.p * 2.0") == 32.0
+    out = execute_flux(
+        _five_values(spark),
+        'from(bucket:"b") |> reduce(fn: (r, accumulator) =>'
+        " ({p: accumulator.p * 2.0}), identity: {p: 1e3})",
+    ).collect()
+    assert [r.p for r in out] == [32000.0]
+    with pytest.raises(FluxError, match="identity"):
+        execute_flux(
+            _five_values(spark),
+            'from(bucket:"b") |> reduce(fn: (r, accumulator) =>'
+            " ({p: accumulator.p}), identity: {p: 1.0 + 1.0})",
+        )
